@@ -108,7 +108,11 @@ def _lines_sql(ws: str) -> str:
 
 
 def _c4_keep_sql(line: str) -> str:
-    """c4_line_keep_expr over a line expression, as SQL text."""
+    """C4 §2.2 line-retention predicate over one derived line, as SQL
+    text: the line ends in terminal punctuation, carries at least
+    C4_MIN_LINE_WORDS alphabetic words (the bullet dash is not a
+    word), and contains none of the boilerplate markers ("javascript",
+    "lorem ipsum", a curly brace)."""
     return (
         f"({line} RLIKE '[.!?]$'"
         f" AND size(filter(split({line}, ' '),"
@@ -230,26 +234,6 @@ def _col_name(col) -> str:
             "column name instead"
         )
     return name
-
-
-def c4_line_keep_expr(line: Column) -> Column:
-    """C4 §2.2 line-retention predicate over one derived line.
-
-    Retained iff the line ends in terminal punctuation, carries at
-    least C4_MIN_LINE_WORDS alphabetic words (the bullet dash is not a
-    word), and contains none of the boilerplate markers ("javascript",
-    "lorem ipsum", a curly brace).
-    """
-    n_words = F.size(
-        F.filter(F.split(line, " "), lambda t: t.rlike("[a-z]"))
-    )
-    return (
-        line.rlike("[.!?]$")
-        & (n_words >= C4_MIN_LINE_WORDS)
-        & ~line.contains("javascript")
-        & ~line.contains("lorem ipsum")
-        & ~line.contains("{")
-    )
 
 
 def kept_lines_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -713,14 +697,6 @@ def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             .alias("n_dup_spans"),
         )
     )
-
-
-def c4_page_keep_expr(lns: Column) -> Column:
-    """C4's page-keep gate over a staged derived-lines column: at
-    least C4_MIN_KEPT_LINES retained lines ("pages with fewer than 3
-    sentences were removed"). Shared by c4_clean's summary and the
-    pipeline_web_curation composition."""
-    return F.size(F.filter(lns, c4_line_keep_expr)) >= C4_MIN_KEPT_LINES
 
 
 def _gopher_metrics(ws: Column, lines: Column) -> dict[str, Column]:

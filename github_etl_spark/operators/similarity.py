@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_det
+from ..sinks.snapshot import publish_batch_partition
 from .partitioning import ensure_parallelism
 
 
@@ -686,16 +687,13 @@ def ivf_index_append(
             f"IVF index at {path!r} has no centroids (empty-corpus "
             "build) — appends cannot be assigned; rebuild with data"
         )
-    assigned = (
-        ivf_assign(new_vectors, centroids, id_col, vec_col, arrow=arrow)
-        .withColumn("build_id", F.lit(build_id))
-        .withColumn("ingest_batch", F.lit(int(ingest_batch)).cast("long"))
-    )
-    (
-        assigned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(path)
+    publish_batch_partition(
+        ivf_assign(
+            new_vectors, centroids, id_col, vec_col, arrow=arrow
+        ).withColumn("build_id", F.lit(build_id)),
+        path,
+        ingest_batch,
+        "cell",
     )
 
 

@@ -221,6 +221,18 @@ def scoped_checkpoint_dir(spark: SparkSession, path: str | None):
                 )
 
 
+@contextmanager
+def persisted(df):
+    """Persist ``df`` for the block and unpersist it on the way out,
+    raised or not — the one release idiom for frames a block consumes
+    more than once. Stack several with ``contextlib.ExitStack``; they
+    are released in reverse order."""
+    try:
+        yield df.persist()
+    finally:
+        df.unpersist()
+
+
 def drop_checkpoint_files(df) -> None:
     """Best-effort deterministic deletion of a reliably-checkpoint()ed
     DataFrame's files — iterative operators (BPE learn, connected

@@ -114,17 +114,13 @@ def compact_partitions(
     # partitions of DIFFERENT keys into one task (harmless for
     # correctness, but it would serialize the parquet encoding).
     out = fragmented.repartition(len(frag), *[F.col(c) for c in part_cols])
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.write.mode("overwrite")
-            .option("maxRecordsPerFile", max_records)
-            .partitionBy(*part_cols)
-            .parquet(table_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", max_records)
+        .partitionBy(*part_cols)
+        .parquet(table_path)
+    )
     return frag
 
 

@@ -78,6 +78,24 @@ def write_snapshot(df: DataFrame, table_path: str) -> None:
     )
 
 
+def publish_batch_partition(
+    df: DataFrame, path: str, batch_id: int, *partition_cols: str
+) -> None:
+    """Publish micro-batch ``batch_id``'s rows as the table's
+    ``(*partition_cols, ingest_batch=batch_id)`` partitions with a
+    dynamic partition overwrite: a replayed batch replaces its own
+    partitions and touches no other, so at-least-once delivery
+    republishes instead of double-appending (the exactly-once argument
+    in streaming/pipeline.stream_files)."""
+    (
+        df.withColumn("ingest_batch", F.lit(int(batch_id)).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols, "ingest_batch")
+        .parquet(path)
+    )
+
+
 def snapshot_exists(
     spark: SparkSession,
     table_path: str,

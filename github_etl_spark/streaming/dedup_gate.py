@@ -5,26 +5,12 @@ in a directory; each micro-batch is classified against the
 materialized dedup index, survivors (verdict == 'new') are published
 to the output table AND to the index, so later micro-batches dedup
 against everything already admitted — the continuous form of the
-crawl-ingest dedup loop.
-
-Exactly-once argument (foreachBatch alone is at-least-once — a crash
-between the sink write and the checkpoint commit replays the batch):
-
-1. every write is a DYNAMIC partition overwrite of the batch's OWN
-   partition — `ingest_batch=N` in the output table and in both index
-   stores — so a replay republishes rather than double-appends;
-2. the replayed check excludes the index's `ingest_batch=N` rows
-   (`exclude_batch=N`, a partition-pruned filter), so a crashed
-   attempt's half-published index rows cannot flip the replay's
-   verdicts (without the mask, survivors of the first attempt would
-   re-classify exact_dup against *themselves* and the replay would
-   overwrite partition N with an empty set — data loss).
-
-Together: replayed batch N recomputes the same verdicts, rewrites the
-same output partition, rewrites the same index partitions. Idempotent
-end to end, on plain parquet, no transactional table format needed —
-the same per-batch-partition trick `stream_landing` uses for the
-snapshot tables (streaming/pipeline.py).
+crawl-ingest dedup loop. Runs on `streaming.pipeline.stream_files`,
+whose docstring holds the exactly-once argument; the own-partition
+mask here is the index check's `exclude_batch=N` (without it, a
+crashed attempt's survivors would re-classify exact_dup against
+*themselves* and the replay would overwrite partition N with an empty
+set — data loss).
 """
 
 from __future__ import annotations
@@ -33,18 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.incremental import dedup_index_append, dedup_index_check
+from ..session import persisted
+from ..sinks.snapshot import publish_batch_partition
+from .pipeline import DOC_SCHEMA, stream_files
 
-DOC_SCHEMA = "doc_id long, text string"
 
-
-def make_dedup_gate(
-    spark: SparkSession,
-    index_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-):
+def make_dedup_gate(spark: SparkSession, index_path: str, out_path: str):
     """The foreachBatch body, exposed for direct (test) invocation:
     classify → publish survivors to `out_path/ingest_batch=N` →
     publish survivors' fingerprints/bands to the index's batch-N
@@ -52,37 +32,17 @@ def make_dedup_gate(
     no-op the second time (asserted in tests)."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            verdicts = dedup_index_check(
-                spark, index_path, batch_df,
-                text_col=text_col, id_col=id_col,
-                threshold=threshold, exclude_batch=batch_id,
+        verdicts = dedup_index_check(
+            spark, index_path, batch_df, exclude_batch=batch_id
+        )
+        new_ids = verdicts.filter(F.col("verdict") == "new").select("doc_id")
+        # Consumed three times (output + two index stores): compute
+        # the verdict pipeline once.
+        with persisted(batch_df.join(F.broadcast(new_ids), "doc_id")) as survivors:
+            publish_batch_partition(survivors, out_path, batch_id)
+            dedup_index_append(
+                spark, index_path, survivors, ingest_batch=int(batch_id)
             )
-            new_ids = verdicts.filter(F.col("verdict") == "new").select(id_col)
-            survivors = batch_df.join(F.broadcast(new_ids), id_col)
-            # Consumed three times (output + two index stores): compute
-            # the verdict pipeline once.
-            survivors.persist()
-            try:
-                (
-                    survivors.withColumn(
-                        "ingest_batch", F.lit(int(batch_id)).cast("long")
-                    )
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_batch")
-                    .parquet(out_path)
-                )
-                dedup_index_append(
-                    spark, index_path, survivors,
-                    text_col=text_col, id_col=id_col,
-                    ingest_batch=int(batch_id),
-                )
-            finally:
-                survivors.unpersist()
-        finally:
-            batch_df.unpersist()
 
     return _gate
 
@@ -93,31 +53,11 @@ def stream_dedup_gated(
     index_path: str,
     out_path: str,
     checkpoint_dir: str,
-    doc_schema: str = DOC_SCHEMA,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
-    """Start the dedup-gated ingest stream over JSON document files.
-    `maxFilesPerTrigger` is the chunk-size knob;
-    `trigger(availableNow=True)` drains the backlog and stops (the
-    reference's chunked-batch semantics with streaming machinery)."""
-    reader = spark.readStream.schema(doc_schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(landing_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_dedup_gate(
-                spark, index_path, out_path,
-                text_col=text_col, id_col=id_col, threshold=threshold,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    """Start the dedup-gated ingest stream over JSON document files."""
+    return stream_files(
+        spark, landing_dir, DOC_SCHEMA,
+        make_dedup_gate(spark, index_path, out_path),
+        checkpoint_dir, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -9,15 +9,18 @@ micro-batch, sink-side idempotence via the snapshot writer, and
 checkpointed offsets replacing the reference's "re-run the whole day"
 recovery story with exactly-once per batch.
 
-Two entry points:
+Entry points:
 - `run_batch`: the whole DAG as one batch job (connector scan →
   transform → dynamic-partition-overwrite load). The reference's
   `_main` shape.
-- `stream_landing`: landing-zone streaming — enriched-PR JSON files
-  land in a directory; each micro-batch is transformed and appended to
-  the four tables. `trigger(availableNow=True)` drains the backlog and
-  stops, giving the reference's chunked batch semantics with streaming
-  machinery (checkpoint = resumability).
+- `stream_files`: the one file-landing stream skeleton (readStream →
+  foreachBatch → checkpoint → availableNow) that `stream_landing` and
+  the four document gates run on; its docstring holds the
+  exactly-once argument they all rely on.
+- `stream_landing`: enriched-PR JSON files land in a directory; each
+  micro-batch is transformed and published to the four tables.
+- `stream_github`: the same per-batch load behind the live GitHub
+  source, with a continuous trigger.
 """
 
 from __future__ import annotations
@@ -26,10 +29,19 @@ import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..etl.transform import RAW_PR_SCHEMA, transform
-from ..sinks.snapshot import SnapshotSink, stamp
+from ..session import persisted
+from ..sinks.snapshot import (
+    PARTITION_COLS,
+    SnapshotSink,
+    publish_batch_partition,
+    stamp,
+)
+
+# The landing-file schema of the four document gates.
+DOC_SCHEMA = "doc_id long, text string"
 
 
 def run_batch(
@@ -78,29 +90,86 @@ def run_batch(
 
 
 def _make_batch_loader(sink_base: str, repo: str, snapshot_date: str | _dt.date):
-    """foreachBatch body shared by the streaming pipelines: transform +
-    stamp + per-`ingest_batch` dynamic partition overwrite (idempotent
-    under batch replay). The batch is persisted once so the four table
-    writes don't each re-read the micro-batch's input; no take(1)
+    """foreachBatch body of the two snapshot streams: transform, stamp,
+    and publish each table's `ingest_batch=N` partition. No take(1)
     guard — an empty frame under dynamic overwrite touches nothing."""
 
     def _load_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            for name, df in transform(batch_df, repo).items():
-                out = stamp(df, repo, snapshot_date).withColumn(
-                    "ingest_batch", F.lit(batch_id)
-                )
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("target_repository", "snapshot_date", "ingest_batch")
-                    .parquet(os.path.join(sink_base, name))
-                )
-        finally:
-            batch_df.unpersist()
+        for name, df in transform(batch_df, repo).items():
+            publish_batch_partition(
+                stamp(df, repo, snapshot_date),
+                os.path.join(sink_base, name),
+                batch_id,
+                *PARTITION_COLS,
+            )
 
     return _load_batch
+
+
+def _persisting(body):
+    """``body`` with its micro-batch persisted for the call (the body's
+    writes re-read it) and released after, raised or not."""
+
+    def _run(batch_df: DataFrame, batch_id: int) -> None:
+        with persisted(batch_df):
+            body(batch_df, batch_id)
+
+    return _run
+
+
+def _batch_writer(stream: DataFrame, body, checkpoint_dir: str) -> DataStreamWriter:
+    """The writer half every stream here shares: ``body(batch_df,
+    batch_id)`` runs once per micro-batch under `_persisting`, with
+    offsets checkpointed at ``checkpoint_dir``."""
+    return (
+        stream.writeStream.foreachBatch(_persisting(body))
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+
+
+def stream_files(
+    spark: SparkSession,
+    landing_dir: str,
+    schema: str,
+    body,
+    checkpoint_dir: str,
+    max_files_per_trigger: int | None = None,
+) -> StreamingQuery:
+    """Start the one file-landing stream: JSON files of ``schema``
+    landing in ``landing_dir``, each micro-batch handed to ``body``,
+    `trigger(availableNow=True)` so the query drains the backlog and
+    stops — the reference's chunked batch semantics with streaming
+    machinery, the checkpoint being the resume point.
+    `maxFilesPerTrigger` is the chunk-size knob (the reference's
+    100-PR chunk, main.py:875). `stream_landing` and the four gates
+    (streaming/{dedup,span,vector,pretrain}_gate.py) are this function
+    with their own body.
+
+    Exactly-once, on plain parquet: `foreachBatch` alone is
+    at-least-once — a crash between a batch's writes and the checkpoint
+    commit replays the batch under the same id. Every body therefore
+    (1) writes only through `sinks.snapshot.publish_batch_partition` or
+    a store append keyed by the same id, i.e. a dynamic overwrite of
+    the batch's OWN `ingest_batch=N` partitions, so the replay
+    republishes instead of double-appending; (2) masks its own
+    partition out of every store it reads (`exclude_batch=N`, a
+    partition-pruned filter), so a crashed attempt's half-published
+    rows cannot flip the replay's verdicts; (3) writes its output
+    table first and its stores after, so a visible output row's store
+    rows either exist or are recreated bit-identically by the replay;
+    and (4) validates every store it reads before the first write, so
+    a missing or mis-keyed store fails before anything is published.
+    A replayed batch N therefore recomputes the same rows and rewrites
+    the same partitions."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return (
+        _batch_writer(reader.json(landing_dir), body, checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def stream_landing(
@@ -111,40 +180,18 @@ def stream_landing(
     snapshot_date: str | _dt.date,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
-    """Streaming ingest of enriched-PR JSON files → four snapshot tables.
-
-    `foreachBatch` writes each micro-batch (S7's streaming-insert
-    analog) into a per-batch sub-partition with dynamic partition
-    overwrite: `foreachBatch` alone is only at-least-once (a crash
-    between the table write and the checkpoint commit replays the
-    batch), but since batch N always overwrites exactly partition
-    `ingest_batch=N`, the replay is idempotent — effective
-    exactly-once without a transactional table format.
-    `maxFilesPerTrigger` is the chunk-size knob (the reference's
-    100-PR chunk, main.py:875); compaction
+    """Streaming ingest of enriched-PR JSON files → four snapshot
+    tables, one `ingest_batch` sub-partition per micro-batch (S7's
+    streaming-insert analog); compaction
     (`sinks.snapshot.compact_snapshot`) later collapses the per-batch
-    dirs.
-    """
-    sink = SnapshotSink(sink_base)
-
-    reader = spark.readStream.schema(RAW_PR_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.json(landing_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(
-            _make_batch_loader(sink_base, repo, snapshot_date)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    dirs."""
+    query = stream_files(
+        spark, landing_dir, RAW_PR_SCHEMA,
+        _make_batch_loader(sink_base, repo, snapshot_date),
+        checkpoint_dir, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return query, sink
+    return query, SnapshotSink(sink_base)
 
 
 def stream_github(
@@ -156,19 +203,17 @@ def stream_github(
     checkpoint_dir: str,
     token: str | None = None,
     with_children: bool = True,
-    available_now: bool = False,
 ):
     """LIVE end-to-end ETL: streaming GitHub source → transform →
     per-batch append into the four snapshot tables.
 
     The full reference DAG as one continuous query: the source's
     PR-number cursor (sources.github.GithubStreamReader) resumes after
-    a crash instead of refetching the day, and each batch overwrites
-    its own `ingest_batch` partition (dynamic overwrite), so batch
-    replay is idempotent — effective exactly-once end to end, strictly
-    better than the reference's probe→delete→reload recovery. Run
-    compaction (`sinks.snapshot.compact_snapshot`) when the date
-    closes.
+    a crash instead of refetching the day, and each batch is published
+    the way `stream_files` publishes, so batch replay is idempotent —
+    effective exactly-once end to end, strictly better than the
+    reference's probe→delete→reload recovery. Run compaction
+    (`sinks.snapshot.compact_snapshot`) when the date closes.
     """
     from ..sources.github import register
 
@@ -182,15 +227,6 @@ def stream_github(
     )
     if token:
         reader = reader.option("token", token)
-    stream = reader.load()
-
-    writer = (
-        stream.writeStream.foreachBatch(
-            _make_batch_loader(sink_base, repo, snapshot_date)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start(), SnapshotSink(sink_base)
+    loader = _make_batch_loader(sink_base, repo, snapshot_date)
+    query = _batch_writer(reader.load(), loader, checkpoint_dir).start()
+    return query, SnapshotSink(sink_base)

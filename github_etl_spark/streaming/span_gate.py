@@ -6,18 +6,12 @@ each micro-batch's three-sentence spans are classified against the
 store, per-doc verdict summaries are published to the output table,
 and the batch's NEW span keys are appended to the store — so later
 micro-batches dedup against every span already admitted. The span-
-family twin of streaming/dedup_gate.py (document-level MinHash gate);
-same exactly-once argument on plain parquet:
-
-1. every write is a DYNAMIC partition overwrite of the batch's OWN
-   partition — `ingest_batch=N` in the output table and in the span
-   store — so a replay republishes rather than double-appends;
-2. the replayed check excludes the store's `ingest_batch=N` rows
-   (`exclude_batch=N`, a partition-pruned filter), so a crashed
-   attempt's half-published span keys cannot flip the replay's
-   verdicts (without the mask, the first attempt's new spans would
-   re-classify dup_corpus against *themselves* and the replay would
-   publish different counts and an empty append — state divergence).
+family twin of streaming/dedup_gate.py (document-level MinHash gate).
+Runs on `streaming.pipeline.stream_files`, whose docstring holds the
+exactly-once argument; the own-partition mask here is the store
+read's `exclude_batch=N` (without it, the first attempt's new spans
+would re-classify dup_corpus against *themselves* and the replay
+would publish different counts and an empty append).
 
 No reference analog (the reference is a GitHub REST ETL,
 /root/reference/main.py); EXT north-star surface.
@@ -37,17 +31,12 @@ from ..operators.curation import (
     span_index_append,
     span_verdict_rows,
 )
+from ..session import persisted
+from ..sinks.snapshot import publish_batch_partition
+from .pipeline import DOC_SCHEMA, stream_files
 
-DOC_SCHEMA = "doc_id long, text string"
 
-
-def make_span_gate(
-    spark: SparkSession,
-    store_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def make_span_gate(spark: SparkSession, store_path: str, out_path: str):
     """The foreachBatch body, exposed for direct (test) invocation:
     classify spans → publish per-doc summaries to
     `out_path/ingest_batch=N` → publish the batch's new span keys to
@@ -62,41 +51,24 @@ def make_span_gate(
         # Validate the store's keying BEFORE classifying — without
         # this, a store built under older keying constants would
         # mis-classify every span and durably PUBLISH the wrong
-        # summary before span_index_append finally raised
-        # (review-caught: the check path validates, the gate must
-        # too).
+        # summary before span_index_append finally raised.
         _read_span_meta(spark, store_path)
-        batch_df.persist()
-        try:
-            bstats = c4_kept_lines(batch_df, text_col, id_col)
-            bspans = c4_spans_from(bstats, id_col)
-            rows = span_verdict_rows(
-                bspans,
-                _span_store(spark, store_path, exclude_batch=int(batch_id)),
-                id_col,
+        bstats = c4_kept_lines(batch_df, "text", "doc_id")
+        rows = span_verdict_rows(
+            c4_spans_from(bstats, "doc_id"),
+            _span_store(spark, store_path, exclude_batch=int(batch_id)),
+            "doc_id",
+        )
+        with persisted(rows):
+            publish_batch_partition(
+                _span_doc_summary(bstats, rows, "doc_id"), out_path, batch_id
             )
-            rows.persist()
-            try:
-                (
-                    _span_doc_summary(bstats, rows, id_col)
-                    .withColumn(
-                        "ingest_batch", F.lit(int(batch_id)).cast("long")
-                    )
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_batch")
-                    .parquet(out_path)
-                )
-                span_index_append(
-                    spark,
-                    store_path,
-                    rows.where(F.col("verdict") == "new").select("span_key"),
-                    ingest_batch=int(batch_id),
-                )
-            finally:
-                rows.unpersist()
-        finally:
-            batch_df.unpersist()
+            span_index_append(
+                spark,
+                store_path,
+                rows.where(F.col("verdict") == "new").select("span_key"),
+                ingest_batch=int(batch_id),
+            )
 
     return _gate
 
@@ -107,31 +79,12 @@ def stream_span_gated(
     store_path: str,
     out_path: str,
     checkpoint_dir: str,
-    doc_schema: str = DOC_SCHEMA,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
     """Start the span-dedup-gated ingest stream over JSON document
-    files; `trigger(availableNow=True)` drains the backlog and stops
-    (the chunked-batch semantics with streaming machinery)."""
-    reader = spark.readStream.schema(doc_schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.json(landing_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_span_gate(
-                spark, store_path, out_path,
-                text_col=text_col, id_col=id_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    files."""
+    return stream_files(
+        spark, landing_dir, DOC_SCHEMA,
+        make_span_gate(spark, store_path, out_path),
+        checkpoint_dir, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

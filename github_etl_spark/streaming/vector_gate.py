@@ -13,16 +13,11 @@ appended to the materialized IVF index with
 operators/similarity.ivf_index_append — the stale-centroid regime
 whose recall price `sim_ivf_append_recall` pins.
 
-Exactly-once argument (simpler than the membership gates, and that is
-the point): per-batch verdicts here depend on NOTHING accreted — the
-gate is per-document, and cell assignment uses the index's FROZEN
-sidecar centroids — so a replayed batch recomputes identical rows with
-no own-partition exclusion mask needed. Both writes (the per-cell
-admission summary, the index rows) are dynamic overwrites of the
-batch's `ingest_batch=N` partitions: replay republishes, never
-double-appends. Summary-first write order: if the summary row is
-visible, the index rows it implies either exist or will be recreated
-bit-identically by the replay.
+Runs on `streaming.pipeline.stream_files`, whose docstring holds the
+exactly-once argument. What differs here: per-batch verdicts depend on
+NOTHING accreted — the gate is per-document, and cell assignment uses
+the index's FROZEN sidecar centroids — so a replayed batch recomputes
+identical rows with no own-partition exclusion mask.
 
 `vector_fold_verdicts` is the DETERMINISTIC fold of the same chain
 (portable md5 seed centroids over the seed corpus' derived vectors, no
@@ -46,22 +41,16 @@ from ..operators.similarity import (
     ivf_assign,
     ivf_index_append,
 )
-from ..session import eager_checkpoint
-
-DOC_SCHEMA = "doc_id long, text string"
+from ..session import eager_checkpoint, persisted
+from ..sinks.snapshot import publish_batch_partition
+from .pipeline import DOC_SCHEMA, stream_files
 
 # Summary bucket for documents the web gate rejected (they never reach
 # the encoder or the index).
 REJECTED_CELL = -1
 
 
-def make_vector_gate(
-    spark: SparkSession,
-    index_path: str,
-    out_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
+def make_vector_gate(spark: SparkSession, index_path: str, out_path: str):
     """The foreachBatch body, exposed for direct (test) invocation:
     gate → encode → publish the per-(batch, cell) admission summary to
     `out_path/ingest_batch=N` → append the derived vectors to the
@@ -79,41 +68,35 @@ def make_vector_gate(
                 f"IVF index at {index_path!r} has no centroids — "
                 "build it from a seed corpus before streaming appends"
             )
-        batch_df.persist()
-        try:
-            keep = batch_df.where(web_gate_expr(F.col(text_col)))
-            # Two consumers (summary assignment + index append) of the
-            # encoder output → materialize once; batch-sized.
-            vecs = eager_checkpoint(embed_text_vec(keep, text_col, id_col))
-            n_rej = batch_df.count() - vecs.count()
+        keep = batch_df.where(web_gate_expr(F.col("text")))
+        n = F.count(F.lit(1)).cast("long")
+        # Two consumers (summary + index append) of the encoder
+        # output; batch-sized.
+        with persisted(embed_text_vec(keep, "text", "doc_id")) as vecs:
             cells = (
-                ivf_assign(vecs, centroids, id_col, "vec")
+                ivf_assign(vecs, centroids, "doc_id", "vec")
                 .groupBy("cell")
-                .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+                .agg(n.alias("n_docs"))
             )
-            summary = cells.unionByName(
-                spark.createDataFrame(
-                    [(REJECTED_CELL, n_rej)], "cell int, n_docs long"
-                )
-            ).withColumn(
-                "ingest_batch", F.lit(int(batch_id)).cast("long")
+            # Rejected = batch rows the encoder never saw, counted
+            # inside the summary write rather than by two side actions.
+            rejected = batch_df.agg(n.alias("n_in")).crossJoin(
+                vecs.agg(n.alias("n_vec"))
+            ).select(
+                F.lit(REJECTED_CELL).alias("cell"),
+                (F.col("n_in") - F.col("n_vec")).alias("n_docs"),
             )
-            (
-                summary.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .parquet(out_path)
+            publish_batch_partition(
+                cells.unionByName(rejected), out_path, batch_id
             )
             ivf_index_append(
                 spark,
                 index_path,
                 vecs,
                 ingest_batch=int(batch_id),
-                id_col=id_col,
+                id_col="doc_id",
                 vec_col="vec",
             )
-        finally:
-            batch_df.unpersist()
 
     return _gate
 
@@ -124,33 +107,14 @@ def stream_vector_gated(
     index_path: str,
     out_path: str,
     checkpoint_dir: str,
-    doc_schema: str = DOC_SCHEMA,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
 ):
-    """Start the gated vector-ingest stream over JSON document files;
-    `trigger(availableNow=True)` drains the backlog and stops."""
-    reader = spark.readStream.schema(doc_schema)
-    if max_files_per_trigger:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.json(landing_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            make_vector_gate(
-                spark, index_path, out_path,
-                text_col=text_col, id_col=id_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    """Start the gated vector-ingest stream over JSON document files."""
+    return stream_files(
+        spark, landing_dir, DOC_SCHEMA,
+        make_vector_gate(spark, index_path, out_path),
+        checkpoint_dir, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def portable_vector_seeds(
