@@ -39,6 +39,7 @@ cannot recurse).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -281,6 +282,50 @@ def main() -> None:
     sys.exit(1 if failures else 0)
 
 
+def _names_hash(names) -> str:
+    """Short hash of a sorted query-name list: the key that says which
+    names a per-query encoding lists, in which order."""
+    return hashlib.sha1("\n".join(names).encode()).hexdigest()[:8]
+
+
+def encode_query_times(times: dict) -> dict:
+    """Per-query seconds packed for the compact line: centiseconds,
+    comma-joined in sorted-name order, plus `_names_hash` of that
+    order. 53 queries take about 250 bytes; the names themselves live
+    in the code and in the detail file."""
+    names = sorted(times)
+    return {
+        "names": _names_hash(names),
+        "cs": ",".join(str(round(times[n] * 100)) for n in names),
+    }
+
+
+def decode_query_times(encoded: dict, names) -> dict:
+    """Inverse of `encode_query_times` given the query names (e.g.
+    ``headline_queries()`` at the measured commit, minus failures);
+    raises ValueError if they are not the encoded list."""
+    names = sorted(names)
+    if _names_hash(names) != encoded["names"]:
+        raise ValueError("query names do not match the encoded list")
+    cs = encoded["cs"].split(",") if encoded["cs"] else []
+    return {n: int(c) / 100 for n, c in zip(names, cs)}
+
+
+def _detail_name() -> str:
+    """BENCH_DETAIL.json at the host's core count, and
+    BENCH_DETAIL_c<N>.json for a run at another ``SPARK_GRAFT_CPUS``
+    (e.g. the 8-core run), so the two never overwrite each other."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    host = (
+        len(os.sched_getaffinity(0))
+        if hasattr(os, "sched_getaffinity")
+        else os.cpu_count()
+    )
+    if cpus and int(cpus) != host:
+        return f"BENCH_DETAIL_c{int(cpus)}.json"
+    return "BENCH_DETAIL.json"
+
+
 def _emit(result: dict, timings: dict, failures: list, repo: str) -> None:
     """Write BENCH_DETAIL.json and print the full-detail line plus the
     compact totals-only LAST line. Called twice: once with the primary
@@ -292,7 +337,11 @@ def _emit(result: dict, timings: dict, failures: list, repo: str) -> None:
     full detail goes to a durable file + a PRECEDING line, and the
     final line is a compact summary guaranteed to fit the tail
     window."""
-    detail_path = os.path.join(repo, "BENCH_DETAIL.json")
+    # The compact line also carries the per-query times, packed by
+    # `encode_query_times` ("q", and "control"."q"); at another core
+    # count the detail file is BENCH_DETAIL_c<N>.json (`_detail_name`).
+    detail_name = _detail_name()
+    detail_path = os.path.join(repo, detail_name)
     try:
         with open(detail_path, "w") as f:
             json.dump(result, f, indent=1, sort_keys=True)
@@ -306,7 +355,8 @@ def _emit(result: dict, timings: dict, failures: list, repo: str) -> None:
         "unit": result["unit"],
         "sf": result["sf"],
         "n_queries": len(timings),
-        "detail": "BENCH_DETAIL.json",
+        "detail": detail_name,
+        "q": encode_query_times(timings),
     }
     if failures:
         # The compact line must fit the tail window even when EVERY
@@ -320,6 +370,7 @@ def _emit(result: dict, timings: dict, failures: list, repo: str) -> None:
             "ref": control.get("ref"),
             "value": control.get("value"),
             "n_queries": len(control.get("queries", {})),
+            "q": encode_query_times(control.get("queries", {})),
         }
         if control.get("failed"):
             compact["control"]["failed"] = control["failed"]
@@ -337,7 +388,7 @@ def _emit(result: dict, timings: dict, failures: list, repo: str) -> None:
         # Shed optional fields until it fits (they all live in the
         # detail file); an assert would skip the line and the exit
         # code exactly in the mass-failure case where it matters.
-        for key in ("control_error", "control", "carried_ratio", "failed", "detail"):
+        for key in ("control_error", "control", "carried_ratio", "failed", "detail", "q"):
             compact.pop(key, None)
             line = json.dumps(compact)
             if len(line) < 1024:

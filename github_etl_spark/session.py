@@ -233,6 +233,33 @@ def persisted(df):
         df.unpersist()
 
 
+def run_concurrently(fns, max_workers: int) -> list:
+    """Call every ``fn`` in ``fns`` on its own driver thread, at most
+    ``max_workers`` at a time, and return their results in order.
+
+    Spark runs jobs submitted from separate threads side by side, so
+    independent small jobs overlap instead of queueing behind each
+    other's fixed cost. Each call runs through
+    `pyspark.util.inheritable_thread_target` with its own copy of the
+    caller's local properties and tags: the job group, description and
+    tags reach every thread (so `cancelJobGroup` and `interruptTag`
+    still stop the work), and a thread that sets its own job group
+    leaves the others' alone.
+
+    Every call finishes before this returns; the first failure in
+    submission order is then re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=max(1, max_workers)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(session)(fn)) for fn in fns
+        ]
+    return [f.result() for f in futures]
+
+
 def drop_checkpoint_files(df) -> None:
     """Best-effort deterministic deletion of a reliably-checkpoint()ed
     DataFrame's files — iterative operators (BPE learn, connected

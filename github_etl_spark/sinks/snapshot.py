@@ -25,10 +25,13 @@ with a partition predicate prune to the single partition
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 # The reference's four output tables (data.yml:6-86).
 SNAPSHOT_TABLES = ("pull_requests", "commits", "reviewers", "comments")
@@ -165,6 +168,21 @@ class SnapshotSink:
         lock: bool = True,
         lock_timeout: float = 600.0,
     ) -> None:
+        """Write every table's `(repo, snapshot_date)` partition.
+
+        The table writes are independent, so they run concurrently
+        through `session.run_concurrently` (one driver thread per
+        table). The partition lock is taken before the first write and
+        released only after the last one has finished, raised or not,
+        so a still-running write of one load never overlaps another
+        load of the same `(repo, date)`. If a write fails, the others
+        still finish and the first failure in table order is raised;
+        a re-run replaces the partial snapshot. API concurrency: a
+        table whose plan reads an unpersisted GitHub scan re-runs that
+        scan, now alongside the other tables' writes, so callers
+        persist the scan first (`streaming.pipeline.run_batch` does);
+        the writes then make no API call.
+        """
         from .locking import PartitionLock
 
         # Each table write is atomic per partition, but the SNAPSHOT
@@ -176,17 +194,23 @@ class SnapshotSink:
         plock = (
             PartitionLock(self.base_dir, repo, snapshot_date) if lock else None
         )
+
+        def write(name: str, df: DataFrame) -> None:
+            # No emptiness probe: take(1) would execute each table's
+            # full transform DAG once just to check, and dynamic
+            # partition overwrite of an empty frame replaces nothing —
+            # the reference's skip-empty semantics for free.
+            write_snapshot(stamp(df, repo, snapshot_date), self.path(name))
+            if plock:
+                plock.touch()  # long multi-table loads stay fresh
+
         if plock:
             plock.acquire(timeout=lock_timeout)
         try:
-            for name, df in tables.items():
-                # No emptiness probe: take(1) would execute each table's
-                # full transform DAG once just to check, and dynamic
-                # partition overwrite of an empty frame replaces nothing —
-                # the reference's skip-empty semantics for free.
-                write_snapshot(stamp(df, repo, snapshot_date), self.path(name))
-                if plock:
-                    plock.touch()  # long multi-table loads stay fresh
+            run_concurrently(
+                [functools.partial(write, name, df) for name, df in tables.items()],
+                len(tables),
+            )
         finally:
             if plock:
                 plock.release()

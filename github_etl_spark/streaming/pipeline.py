@@ -26,13 +26,14 @@ Entry points:
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..etl.transform import RAW_PR_SCHEMA, transform
-from ..session import persisted
+from ..session import persisted, run_concurrently
 from ..sinks.snapshot import (
     PARTITION_COLS,
     SnapshotSink,
@@ -59,14 +60,36 @@ def run_batch(
     Mirrors the reference driver (main.py:829-895): skip a repo whose
     snapshot already exists unless `force` — with dynamic partition
     overwrite the skip is an optimization, not a correctness need.
+
+    Concurrency: the repos' chains (skip probe → API scan → persist +
+    count → transform → `SnapshotSink.load` → unpersist) are
+    independent, so they run through `session.run_concurrently`, at
+    most ``sc.defaultParallelism`` at a time. At this scale each chain
+    is a handful of small fixed-cost jobs, and overlapping them keeps
+    the task slots busy where the reference's serial loop idles them.
+    The API concurrency bound is unchanged: page and child fetches run
+    inside scan tasks, so at most one scan task per task slot is in
+    flight however many chains run — the same bound one multi-page
+    repo's page-parallel scan already has — plus each running chain's
+    one first-page probe when its scan is planned on the driver.
+
+    Failure semantics: every repo's chain runs to the end even if
+    another fails, and then the first failure in ``repos`` order is
+    raised (the serial loop never attempted the repos after a failing
+    one). The chains that succeeded have landed whole per-`(repo,
+    date)` snapshots, so a non-forced re-run skips them and retries
+    only the others. A chain that failed inside its load may have
+    landed some of its tables, which `SnapshotSink.exists` reads as
+    present: re-run that repo with ``force``, as with the serial loop.
     """
     from ..sources.github import register
 
     register(spark)
     sink = SnapshotSink(sink_base)
-    for repo in repos:
+
+    def chain(repo: str) -> None:
         if not force and sink.exists(spark, repo, snapshot_date):
-            continue
+            return
         reader = (
             spark.read.format("github")
             .option("repo", repo)
@@ -80,12 +103,14 @@ def run_batch(
         # table's take(1) + write re-executes the whole custom-source
         # read (~8 scans), racing upstream changes into inconsistent
         # tables and multiplying the rate-limit spend.
-        prs = reader.load().persist()
-        try:
+        with persisted(reader.load()) as prs:
             prs.count()  # materialize the scan once
             sink.load(transform(prs, repo), repo, snapshot_date)
-        finally:
-            prs.unpersist()
+
+    run_concurrently(
+        [functools.partial(chain, repo) for repo in repos],
+        min(len(repos), spark.sparkContext.defaultParallelism),
+    )
     return sink
 
 

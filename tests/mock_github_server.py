@@ -133,7 +133,7 @@ class _Handler(BaseHTTPRequestHandler):
         if len(parts) >= 4 and parts[0] == "repos":
             sub = parts[3]
             if sub == "pulls" and len(parts) == 4:
-                return self._pulls(q)
+                return self._pulls(parsed.path, q)
             if sub == "pulls" and len(parts) == 6 and parts[5] == "commits":
                 n = int(parts[4])
                 if n in _Handler.gone_prs:  # vanished PR: children 404
@@ -159,7 +159,7 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._send(_commit_detail(sha))
         return self._send({"message": "not found"}, status=404)
 
-    def _pulls(self, q):
+    def _pulls(self, path, q):
         page = int(q.get("page", "1"))
         per_page = int(q.get("per_page", str(PER_PAGE_DEFAULT)))
         if page == 2 and self._trip_once("ratelimit"):
@@ -182,7 +182,7 @@ class _Handler(BaseHTTPRequestHandler):
         start, end = (page - 1) * per_page, page * per_page
         last = max((len(prs) + per_page - 1) // per_page, 1)
         links = []
-        base = f"http://{self.headers['Host']}/repos/acme/widgets/pulls"
+        base = f"http://{self.headers['Host']}{path}"
         common = f"state={state}&per_page={per_page}"
         if page < last:
             links.append(f'<{base}?{common}&page={page + 1}>; rel="next"')

@@ -190,3 +190,28 @@ def test_concurrent_same_partition_loads_never_tear(spark, tmp_path):
 
     lock_dir = os.path.join(str(tmp_path / "wh"), "_locks")
     assert os.listdir(lock_dir) == []
+
+
+def test_load_with_a_failing_table_lands_the_others_and_unlocks(spark, tmp_path):
+    """The table writes run concurrently: one failing write fails the
+    load, but only after the other three have landed, and the
+    partition lock is released."""
+    import os
+
+    import pytest
+
+    sink = SnapshotSink(str(tmp_path / "wh"))
+    good = _rows(spark, [1, 2, 3])
+    bad = good.withColumn(
+        "pull_request_id",
+        F.when(F.col("pull_request_id") > 0, F.raise_error(F.lit("boom"))).otherwise(
+            F.col("pull_request_id")
+        ),
+    )
+    tables = {"pull_requests": good, "commits": bad, "reviewers": good, "comments": good}
+    with pytest.raises(Exception, match="boom"):
+        sink.load(tables, "acme/widgets", "2026-01-15")
+    for name in ("pull_requests", "reviewers", "comments"):
+        assert read_snapshot(spark, sink.path(name), "acme/widgets", "2026-01-15").count() == 3
+    assert not snapshot_exists(spark, sink.path("commits"), "acme/widgets", "2026-01-15")
+    assert os.listdir(os.path.join(str(tmp_path / "wh"), "_locks")) == []

@@ -14,7 +14,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from github_etl_spark.sinks.snapshot import read_snapshot
+from github_etl_spark.session import run_concurrently
+from github_etl_spark.sinks.snapshot import SNAPSHOT_TABLES, SnapshotSink, read_snapshot
 from github_etl_spark.streaming import (
     dedup_within_watermark,
     run_batch,
@@ -74,6 +75,120 @@ def test_run_batch_e2e_and_skip(spark, tmp_path):
             per_page=3, force=True,
         )
         assert read_snapshot(spark, sink.path("pull_requests")).count() == N_PRS
+
+
+def _table_rows(spark, sink, repo):
+    """Per snapshot table: the sorted rows of ``repo``'s partition."""
+    return {
+        t: sorted(repr(r) for r in read_snapshot(spark, sink.path(t), repo).collect())
+        for t in SNAPSHOT_TABLES
+    }
+
+
+def _partition_files(sink_base, repo):
+    """Every file under ``repo``'s partition dirs, across the tables."""
+    out = set()
+    for t in SNAPSHOT_TABLES:
+        d = os.path.join(sink_base, t, f"target_repository={repo.replace('/', '%2F')}")
+        for root, _dirs, files in os.walk(d):
+            out.update(os.path.join(root, f) for f in files)
+    return out
+
+
+def test_run_concurrently_isolates_job_groups_and_raises_first_failure(spark):
+    """More threads than cores, each setting its own job group while
+    the others run: every thread starts in the caller's group and
+    keeps its own (the caller's properties are copied per call, not
+    shared), results come back in submission order, and after every
+    call has run the first failure in that order is raised."""
+    import sys
+
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    ran = []
+
+    def task(i, fail=False):
+        def _run():
+            inherited = sc.getLocalProperty("spark.jobGroup.id")
+            sc.setJobGroup(f"group-{i}", f"task {i}")
+            time.sleep(0.01)
+            ran.append(i)
+            if fail:
+                raise ValueError(f"task {i}")
+            return inherited, sc.getLocalProperty("spark.jobGroup.id")
+
+        return _run
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        assert run_concurrently([task(i) for i in range(16)], 8) == [
+            ("caller-group", f"group-{i}") for i in range(16)
+        ]
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        ran.clear()
+        with pytest.raises(ValueError, match="task 5"):
+            run_concurrently([task(i, fail=i in (5, 9)) for i in range(16)], 8)
+        assert sorted(ran) == list(range(16))
+    finally:
+        sys.setswitchinterval(old)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_run_batch_multi_repo_matches_single_repo_runs(spark, tmp_path):
+    """Repos run concurrently: each repo's tables equal its own
+    single-repo run, a landed snapshot is skipped without a rewrite,
+    the caller's job group reaches the worker threads' jobs, and no
+    persisted scan outlives the call."""
+    repos = ["acme/widgets", "acme/gadgets"]
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext
+    with MockGithub() as mock:
+        single = {}
+        for repo in repos:
+            sink = run_batch(spark, [repo], mock.url, str(tmp_path / repo), "2026-01-15", per_page=3)
+            single[repo] = _table_rows(spark, sink, repo)
+
+        sc.setJobGroup("multi-repo-run", "two repos")
+        try:
+            multi = run_batch(spark, repos, mock.url, str(tmp_path / "multi"), "2026-01-15", per_page=3)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sc.statusTracker().getJobIdsForGroup("multi-repo-run")
+        for repo in repos:
+            assert _table_rows(spark, multi, repo) == single[repo]
+            assert len(single[repo]["pull_requests"]) == N_PRS
+        assert cm.isEmpty(), "run_batch left a persisted scan behind"
+
+        # widgets has landed in its single-repo sink: a non-forced run
+        # of both lands gadgets there and leaves widgets' files alone.
+        base = str(tmp_path / "acme/widgets")
+        before = _partition_files(base, "acme/widgets")
+        assert before
+        sink = run_batch(spark, list(reversed(repos)), mock.url, base, "2026-01-15", per_page=3)
+        assert _partition_files(base, "acme/widgets") == before
+        assert _table_rows(spark, sink, "acme/gadgets") == single["acme/gadgets"]
+
+
+def test_run_batch_failing_repo_still_lands_the_others(spark, tmp_path):
+    """A malformed repo (a 404 when the scan is planned) fails the run,
+    but only after the good repo's chain has landed its snapshot;
+    nothing stays persisted."""
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    with MockGithub() as mock:
+        sink_base = str(tmp_path / "wh")
+        with pytest.raises(Exception, match="404"):
+            run_batch(spark, ["acme", "acme/widgets"], mock.url, sink_base, "2026-01-15", per_page=3)
+        sink = SnapshotSink(sink_base)
+        assert sink.exists(spark, "acme/widgets", "2026-01-15")
+        rows = _table_rows(spark, sink, "acme/widgets")
+        assert len(rows["pull_requests"]) == N_PRS
+        assert len(rows["commits"]) == N_PRS * 2 * 2
+    assert cm.isEmpty(), "a failed run_batch left a persisted scan behind"
 
 
 def test_stream_landing_incremental(spark, tmp_path):
