@@ -1,7 +1,7 @@
 """Dependency-free FLAC codec (xiph.org free lossless audio codec).
 
 The compressed-AUDIO branch made real: FLAC was a declared
-`_HAVE_REAL_CODECS` seam ("needs soundfile"); this module closes it
+library seam ("needs soundfile"); this module closes it
 with a pure numpy + shared-bit-I/O implementation of the published
 bitstream format (https://xiph.org/flac/format.html — an open,
 patent-free spec).  Being lossless, encode→decode roundtrips are

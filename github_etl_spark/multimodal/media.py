@@ -6,19 +6,16 @@ struct — the lakehouse-native layout for images/audio/video at 100 TB
 without touching payloads; Parquet stores the binary column contiguously
 so a metadata-only query never reads it).
 
-All media operators are Arrow-batched `mapInPandas` transforms: Spark
-hands each task an iterator of pandas batches, the codec runs
-vectorized per batch, and output schemas are declared up front so
-Catalyst plans around them. No row-at-a-time Python anywhere.
+Every per-row media operator goes through ONE kernel, `_per_row`:
+an Arrow-batched `mapInPandas` that hands each input row to a row
+function returning 0..N output tuples in schema order, and emits the
+operator's quarantine row when that function raises ValueError. The
+output schema is declared up front so Catalyst plans around it. The
+kernel is the one seam a native codec binds to: swapping in a native
+decoder changes only the row function, never the schema, batching or
+quarantine contract.
 
-Codec layer: the real decoders (PIL / soundfile / av) are not in this
-container. `_HAVE_REAL_CODECS` gates them; the deterministic fallback
-"codec" interprets the raw bytes themselves as samples/pixels
-(`uint8`), which keeps every byte of the Spark-side plumbing — schema,
-batch shape, partitioning, null handling — real and testable. Swapping
-in a real codec changes ONLY the inside of the per-batch function.
-
-SCOPE NOTE: nine real, dependency-free codecs cover all three media
+Codec layer: nine real, dependency-free codecs cover all three media
 branches — images: 24-bit uncompressed BMP
 (`encode_bmp24`/`decode_bmp24`), zlib-compressed PNG
 (`encode_png`/`decode_png`), QOI (`encode_qoi`/`decode_qoi`) and
@@ -30,17 +27,16 @@ Rice + predictors, CRC/MD5-verified); video: YUV4MPEG2
 — pure numpy/stdlib, each exercised end-to-end by an oracle-checked
 roundtrip catalog query (`mm_{bmp,png,qoi,jpeg,wav,mulaw,flac}_
 roundtrip_stats`, `mm_y4m_frame_stats`, `mm_mjpeg_frame_stats`) and
-byte-level tests. What remains behind
-`_HAVE_REAL_CODECS` are the codec branches whose decoders genuinely
-cannot be stdlib-only (inter-frame H.264-family video and
-full-profile JPEG need av/libjpeg, neither installable here —
-`pip install` unavailable): dormant by design, only exercised by deployments that
-ship a codec library. The contract a real codec must satisfy is
-exactly the fallback's: consume `payload` bytes per batch row, honor
-NULL/empty payloads (emit NULL stats, never raise), and emit the
-declared output schema — the fallback-path tests in
-tests/test_multimodal.py are the executable specification of that
-contract.
+byte-level tests. The `raw-u8` operators (`decode_stats`,
+`resize_images`, `sample_frames`) interpret the payload bytes
+themselves as samples/pixels; that is their defined behaviour, and
+each has a real-format sibling. Inter-frame (H.264-family) video is
+the one branch that needs a codec library; it binds at
+`video_frame_stats`' ``interframe_decoder`` and quarantines when
+unbound. The contract any decoder must satisfy: consume `payload`
+bytes per row, honor NULL/empty payloads (quarantine or NULL stats,
+never a batch failure), and emit the declared output schema — the
+tests in tests/test_multimodal.py are the executable specification.
 
 Scale notes:
 - Payload skew is the hazard: a 4 GB video next to 4 KB thumbnails.
@@ -61,14 +57,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - real codecs absent in this environment
-    import PIL.Image  # noqa: F401
-
-    _HAVE_REAL_CODECS = True
-except ImportError:
-    _HAVE_REAL_CODECS = False
-
 
 MEDIA_META = T.StructType(
     [
@@ -142,47 +130,96 @@ def _nn_index(src_n: int, out_n: int) -> np.ndarray:
     )
 
 
+# ---------------------------------------------------------- per-row kernel
+
+_MEDIA_IN = ("media_id", "content")
+
+
+def _row_batches(cols, names, row_fn, error_row=None):
+    """The batch function `_per_row` hands to mapInPandas, separate so
+    it can be driven with plain pandas frames. For each input row,
+    ``row_fn(*values of cols)`` returns a list of 0..N output tuples in
+    ``names`` order. When it raises ValueError and ``error_row`` is
+    given, the row quarantines as ``(int(first value), *error_row,
+    message)`` — the media_id first, the decode_error last — instead
+    of failing the batch; without ``error_row`` the error propagates."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = []
+            for vals in zip(*(pdf[c] for c in cols)):
+                try:
+                    out += row_fn(*vals)
+                except ValueError as e:
+                    if error_row is None:
+                        raise
+                    out.append((int(vals[0]), *error_row, str(e)))
+            yield pd.DataFrame(
+                {n: [r[i] for r in out] for i, n in enumerate(names)}
+            )
+
+    return batches
+
+
+def _per_row(df: DataFrame, cols, schema: str, row_fn, error_row=None) -> DataFrame:
+    """THE per-row media kernel: ``df.select(*cols)`` mapped through
+    `_row_batches` into ``schema`` (a flat DDL string, so the output
+    column names are its comma-separated heads)."""
+    names = [f.split()[0] for f in schema.split(",")]
+    return df.select(*cols).mapInPandas(
+        _row_batches(cols, names, row_fn, error_row), schema
+    )
+
+
+def _payload(content) -> bytes:
+    return bytes(content) if content is not None else b""
+
+
+def _tiled_text(text, n: int) -> np.ndarray:
+    """The pixel/sample rule every fixture synthesizer shares: ``n``
+    uint8 bytes tiling the UTF-8 text (byte j = text_byte[j mod len]),
+    all zero for empty or NULL text. SQL-replayable, so the DuckDB
+    oracles verify each encode→decode roundtrip without parsing the
+    format."""
+    tb = np.frombuffer(
+        (text if isinstance(text, str) else "").encode("utf-8"), dtype=np.uint8
+    )
+    return tb[np.arange(n) % len(tb)] if len(tb) else np.zeros(n, dtype=np.uint8)
+
+
+def _synthesize(docs: DataFrame, cols, encode) -> DataFrame:
+    """Fixture media: one (media_id, content) row per document with
+    content = ``encode(int(id), *other cols)``; ``cols[0]`` is the id."""
+    return _per_row(
+        docs, cols, "media_id long, content binary",
+        lambda mid, *rest: [(int(mid), encode(int(mid), *rest))],
+    )
+
+
 # --------------------------------------------------------------- operators
 
 
 def decode_stats(media: DataFrame) -> DataFrame:
     """Per-item decode + summary stats (the "can we read it" pass every
-    media pipeline runs first). Fake codec: bytes are the samples."""
-    schema = (
+    media pipeline runs first). Fake codec: bytes are the samples.
+    Empty payloads report honestly: n_bytes=0 and NULL stats (the
+    zeros(1) pad of `_as_u8` is only for operators that need a
+    non-empty sample array, not for integrity reporting)."""
+
+    def row(mid, meta, content):
+        raw = _payload(content)
+        if not raw:
+            return [(mid, meta["media_type"], 0, None, None, None)]
+        a = _as_u8(raw)
+        return [(mid, meta["media_type"], len(raw), float(a.mean()),
+                 int(a.min()), int(a.max()))]
+
+    return _per_row(
+        media, ("media_id", "meta", "content"),
         "media_id long, media_type string, n_bytes long, "
-        "mean_value double, min_value int, max_value int"
+        "mean_value double, min_value int, max_value int",
+        row,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if _HAVE_REAL_CODECS:  # pragma: no cover
-            raise NotImplementedError(
-                "real codec path not wired: decode via PIL/soundfile here"
-            )
-        for pdf in it:
-            # Empty payloads report honestly: n_bytes=0 and NULL stats
-            # (the zeros(1) pad is only for operators that need a
-            # non-empty sample array, not for integrity reporting).
-            raw = [bytes(c) if c is not None else b"" for c in pdf["content"]]
-            arrs = [_as_u8(c) for c in raw]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": [m["media_type"] for m in pdf["meta"]],
-                    "n_bytes": [len(r) for r in raw],
-                    "mean_value": [
-                        float(a.mean()) if len(r) else None
-                        for a, r in zip(arrs, raw)
-                    ],
-                    "min_value": [
-                        int(a.min()) if len(r) else None for a, r in zip(arrs, raw)
-                    ],
-                    "max_value": [
-                        int(a.max()) if len(r) else None for a, r in zip(arrs, raw)
-                    ],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def resize_images(media: DataFrame, out_width: int, out_height: int) -> DataFrame:
@@ -190,58 +227,36 @@ def resize_images(media: DataFrame, out_width: int, out_height: int) -> DataFram
     bytes (nearest-neighbor over the fake 1-D pixel space). Output keeps
     the media schema shape with updated metadata + payload. For actual
     image files use the real-path sibling `resize_bmp`."""
-    schema = "media_id long, width int, height int, content binary"
     target = out_width * out_height
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if _HAVE_REAL_CODECS:  # pragma: no cover
-            raise NotImplementedError("real codec path: PIL Image.resize here")
-        for pdf in it:
-            out = []
-            for c in pdf["content"]:
-                a = _as_u8(c)
-                idx = np.linspace(0, len(a) - 1, num=target).astype(np.int64)
-                out.append(a[idx].tobytes())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": out_width,
-                    "height": out_height,
-                    "content": out,
-                }
-            )
+    def row(mid, content):
+        a = _as_u8(content)
+        idx = np.linspace(0, len(a) - 1, num=target).astype(np.int64)
+        return [(mid, out_width, out_height, a[idx].tobytes())]
 
-    return media.mapInPandas(batches, schema=schema)
+    return _per_row(
+        media, _MEDIA_IN, "media_id long, width int, height int, content binary", row
+    )
 
 
 def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     """Frame sampling for video rows: split the payload into
     `meta.n_frames` equal frames, keep every `every_n`-th — a 1→N
-    mapInPandas (output rows ≠ input rows), the shape a real
+    operator (output rows ≠ input rows), the shape a real
     keyframe-extractor has. For actual video files use the real-path
     siblings `y4m_frame_stats` / `y4m_frames_to_bmp`."""
-    schema = "media_id long, frame_index int, frame bytes".replace("bytes", "binary")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if _HAVE_REAL_CODECS:  # pragma: no cover
-            raise NotImplementedError("real codec path: av keyframe demux here")
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, meta, c in zip(pdf["media_id"], pdf["meta"], pdf["content"]):
-                if meta["media_type"] != "video":
-                    continue
-                a = _as_u8(c)
-                n = max(int(meta["n_frames"] or 1), 1)
-                for i, frame in enumerate(np.array_split(a, n)):
-                    if i % every_n == 0:
-                        ids.append(mid)
-                        idxs.append(i)
-                        frames.append(frame.tobytes())
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_index": idxs, "frame": frames}
-            )
+    def row(mid, meta, content):
+        if meta["media_type"] != "video":
+            return []
+        n = max(int(meta["n_frames"] or 1), 1)
+        frames = np.array_split(_as_u8(content), n)
+        return [(mid, i, f.tobytes()) for i, f in enumerate(frames) if i % every_n == 0]
 
-    return media.mapInPandas(batches, schema=schema)
+    return _per_row(
+        media, ("media_id", "meta", "content"),
+        "media_id long, frame_index int, frame binary", row,
+    )
 
 
 def torch_feature_encoder(model_path: str):
@@ -485,8 +500,8 @@ def repartition_by_payload(media: DataFrame, target_bytes: int = 128 << 20) -> D
 # uncompressed BMP (BITMAPINFOHEADER, BI_RGB) is a fixed 54-byte header
 # plus bottom-up, 4-byte-padded BGR rows — parseable with numpy alone.
 # This is the production image branch of the codec layer: any 24-bit
-# BMP from any producer decodes here; the fake `raw-u8` codec remains
-# for the formats whose decoders genuinely need PIL/av.
+# BMP from any producer decodes here (the `raw-u8` operators keep
+# reading bytes as pixels; `resize_bmp` etc. are their real siblings).
 
 _BMP_HEADER = 54
 
@@ -558,28 +573,12 @@ def synthesize_bmp_media(
     text). The pixel rule is SQL-replayable, so a DuckDB oracle can
     verify the full encode→decode roundtrip without ever parsing BMP —
     geometry and channel order included (see mm_bmp_roundtrip_stats)."""
-    schema = "media_id long, content binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                w, h = mid % 5 + 2, mid % 3 + 2
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                n = w * h * 3
-                if len(tb):
-                    px = tb[np.arange(n) % len(tb)]
-                else:
-                    px = np.zeros(n, dtype=np.uint8)
-                ids.append(mid)
-                payloads.append(encode_bmp24(px.reshape(h, w, 3)))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
+    def encode(mid, text):
+        w, h = mid % 5 + 2, mid % 3 + 2
+        return encode_bmp24(_tiled_text(text, w * h * 3).reshape(h, w, 3))
 
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col, text_col), encode)
 
 
 def bmp_decode_stats(media: DataFrame) -> DataFrame:
@@ -590,41 +589,7 @@ def bmp_decode_stats(media: DataFrame) -> DataFrame:
     (a mean alone would hide both). Malformed payloads surface as NULL
     stats with an error string rather than failing the batch — the
     quarantine contract of `parse_json_quarantine`, applied to media."""
-    schema = (
-        "media_id long, width int, height int, n_pixel_bytes long, "
-        "mean_value double, min_value int, max_value int, "
-        "corner_value int, decode_error string"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "width", "height", "n_pixel_bytes", "mean_value",
-                "min_value", "max_value", "corner_value", "decode_error",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(int(mid))
-                try:
-                    px = decode_bmp24(content if content is not None else b"")
-                except ValueError as e:
-                    for k in ("width", "height", "n_pixel_bytes", "mean_value",
-                              "min_value", "max_value", "corner_value"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-                    continue
-                h, w = px.shape[:2]
-                flat = px.reshape(-1)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixel_bytes"].append(int(flat.size))
-                rows["mean_value"].append(float(flat.mean()))
-                rows["min_value"].append(int(flat.min()))
-                rows["max_value"].append(int(flat.max()))
-                rows["corner_value"].append(int(px[0, 0, 0]))
-                rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
+    return _image_decode_stats(media, decode_bmp24).drop("channels", "last_value")
 
 
 # ----------------------------------------------------------- real codec: WAV
@@ -796,27 +761,12 @@ def synthesize_mulaw_media(
     integer math, so a DuckDB oracle replays it value-for-value
     (mm_mulaw_roundtrip_stats) — putting the G.711 expansion inside
     decode_wav16 under the driver's hash gate, not just pytest."""
-    schema = "media_id long, content binary"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                n = mid % 50 + 10
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                if len(tb):
-                    codes = tb[np.arange(n) % len(tb)]
-                else:
-                    codes = np.zeros(n, dtype=np.uint8)
-                ids.append(mid)
-                payloads.append(encode_wav_mulaw(mulaw_decode(codes), 8000))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
-
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(
+        docs, (id_col, text_col),
+        lambda mid, text: encode_wav_mulaw(
+            mulaw_decode(_tiled_text(text, mid % 50 + 10)), 8000
+        ),
+    )
 
 
 def synthesize_wav_media(
@@ -829,31 +779,22 @@ def synthesize_wav_media(
     to -32768 exactly). The sample rule is SQL-replayable, so a DuckDB
     oracle verifies the encode→decode roundtrip without parsing WAV
     (see mm_wav_roundtrip_stats)."""
-    schema = "media_id long, content binary"
+    return _synthesize(
+        docs, (id_col, text_col),
+        lambda mid, text: encode_wav16(*_fixture_pcm(mid, text)),
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                n = mid % 50 + 10
-                rate = 8000 + (mid % 3) * 4000
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                if len(tb):
-                    samples = (
-                        (tb[np.arange(n) % len(tb)].astype(np.int32) - 128)
-                        * 256
-                    ).astype(np.int16)
-                else:
-                    samples = np.zeros(n, dtype=np.int16)
-                ids.append(mid)
-                payloads.append(encode_wav16(samples, rate))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
 
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+def _fixture_pcm(mid: int, text) -> tuple[np.ndarray, int]:
+    """The WAV/FLAC fixture rule: mono, (id%50+10) samples at
+    8/12/16 kHz (id%3), sample j = (text_byte[j mod len] - 128) * 256,
+    all zero for empty text."""
+    n = mid % 50 + 10
+    rate = 8000 + (mid % 3) * 4000
+    if not (isinstance(text, str) and text):
+        return np.zeros(n, dtype=np.int16), rate
+    tiled = _tiled_text(text, n).astype(np.int32)
+    return ((tiled - 128) * 256).astype(np.int16), rate
 
 
 def wav_decode_stats(media: DataFrame) -> DataFrame:
@@ -862,48 +803,33 @@ def wav_decode_stats(media: DataFrame) -> DataFrame:
     positional probe (an endianness or interleave bug changes it).
     Malformed payloads quarantine as decode_error rows — same contract
     as `bmp_decode_stats`."""
-    schema = (
+    return _audio_decode_stats(media, decode_wav16).drop("last_sample")
+
+
+def _audio_decode_stats(media: DataFrame, decode_fn) -> DataFrame:
+    """Shared decode-stats kernel for the audio decoders (WAV, FLAC):
+    parsed rate/shape, value stats, first/last sample probes (NULL for
+    a zero-sample payload), NULL row + error string on ValueError."""
+
+    def row(mid, content):
+        arr, rate = decode_fn(_payload(content))
+        if arr.ndim == 1:
+            arr = arr[:, None]
+        flat = arr.reshape(-1)
+        probes = (
+            (float(flat.mean()), int(flat.min()), int(flat.max()),
+             int(flat[0]), int(flat[-1]))
+            if flat.size else (None,) * 5
+        )
+        return [(int(mid), rate, int(arr.shape[0]), int(arr.shape[1]), *probes, None)]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, sample_rate int, n_samples long, channels int, "
         "mean_value double, min_value int, max_value int, "
-        "first_sample int, decode_error string"
+        "first_sample int, last_sample int, decode_error string",
+        row, (None,) * 8,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "sample_rate", "n_samples", "channels",
-                "mean_value", "min_value", "max_value", "first_sample",
-                "decode_error",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(int(mid))
-                try:
-                    arr, rate = decode_wav16(
-                        content if content is not None else b""
-                    )
-                except ValueError as e:
-                    for k in ("sample_rate", "n_samples", "channels",
-                              "mean_value", "min_value", "max_value",
-                              "first_sample"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-                    continue
-                flat = arr.reshape(-1)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(int(arr.shape[0]))
-                rows["channels"].append(int(arr.shape[1]))
-                rows["mean_value"].append(
-                    float(flat.mean()) if flat.size else None
-                )
-                rows["min_value"].append(int(flat.min()) if flat.size else None)
-                rows["max_value"].append(int(flat.max()) if flat.size else None)
-                rows["first_sample"].append(
-                    int(flat[0]) if flat.size else None
-                )
-                rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ----------------------------------------------------------- real codec: Y4M
@@ -913,8 +839,8 @@ def wav_decode_stats(media: DataFrame) -> DataFrame:
 # write it): an ASCII parameter header, then per-frame "FRAME\n"
 # markers followed by raw planar pixel data. Dependency-free by
 # construction — with this, all three media branches (image/audio/
-# video) run real formats; the PIL/av seams remain only for
-# COMPRESSED codecs.
+# video) run real formats; only inter-frame compressed video still
+# needs a codec library.
 
 
 def encode_y4m(
@@ -1016,80 +942,54 @@ def synthesize_y4m_media(
     concatenated frame data = text_byte[j mod len]; zeros for empty
     text). SQL-replayable, so a DuckDB oracle verifies the
     encode→decode roundtrip (see mm_y4m_frame_stats)."""
-    schema = "media_id long, content binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                nf, w, h = mid % 4 + 1, mid % 5 + 2, mid % 3 + 2
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                total = nf * h * w
-                if len(tb):
-                    px = tb[np.arange(total) % len(tb)]
-                else:
-                    px = np.zeros(total, dtype=np.uint8)
-                ids.append(mid)
-                payloads.append(encode_y4m(px.reshape(nf, h, w)))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
+    def encode(mid, text):
+        nf, w, h = mid % 4 + 1, mid % 5 + 2, mid % 3 + 2
+        return encode_y4m(_tiled_text(text, nf * h * w).reshape(nf, h, w))
 
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col, text_col), encode)
 
 
 def y4m_frame_stats(media: DataFrame, every_n: int = 1) -> DataFrame:
     """REAL frame sampling: decode each Y4M payload, keep every
     ``every_n``-th frame, emit one row per KEPT frame with its luma
-    stats — the 1→N mapInPandas fan-out a production keyframe pass
-    has, running an actual container parse. `first_pixel` is the
+    stats — the 1→N fan-out a production keyframe pass has, running
+    an actual container parse. `first_pixel` is the
     frame's (0,0) luma: positionally sensitive to frame-boundary bugs.
     Malformed payloads emit a single frame_index=-1 row with
     decode_error set (the quarantine contract — corrupt clips must
     be visible, not vanish from a 1→N operator)."""
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    schema = (
+    return _frame_stats_op(media, lambda b: decode_y4m(b)[0], every_n, -1)
+
+
+def _frame_stats(luma: np.ndarray) -> tuple:
+    """(width, height, mean_value, first_pixel) of one (h, w) luma
+    frame — the per-frame stats every frame-stats operator emits;
+    first_pixel rounds half-up (exact for integer lumas)."""
+    h, w = luma.shape
+    return w, h, float(luma.mean()), int(np.floor(luma[0, 0] + 0.5))
+
+
+def _frame_stats_op(media: DataFrame, decode_lumas, every_n: int, bad_index) -> DataFrame:
+    """One `_frame_stats` row per kept frame of the (n, h, w) luma
+    stack ``decode_lumas(payload)`` returns; a clip that fails to
+    decode quarantines as ONE row with frame_index ``bad_index``."""
+
+    def row(mid, content):
+        lumas = decode_lumas(_payload(content))
+        return [
+            (int(mid), i, *_frame_stats(lumas[i]), None)
+            for i in range(0, len(lumas), every_n)
+        ]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, frame_index int, width int, height int, "
-        "mean_value double, first_pixel int, decode_error string"
+        "mean_value double, first_pixel int, decode_error string",
+        row, (bad_index, None, None, None, None),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "frame_index", "width", "height",
-                "mean_value", "first_pixel", "decode_error",
-            )}
-
-            def emit(mid, idx, w, h, mean, fp, err):
-                rows["media_id"].append(mid)
-                rows["frame_index"].append(idx)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_value"].append(mean)
-                rows["first_pixel"].append(fp)
-                rows["decode_error"].append(err)
-
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                try:
-                    frames, _fps = decode_y4m(
-                        content if content is not None else b""
-                    )
-                except ValueError as e:
-                    emit(mid, -1, None, None, None, None, str(e))
-                    continue
-                for i in range(0, frames.shape[0], every_n):
-                    fr = frames[i]
-                    emit(
-                        mid, i, fr.shape[1], fr.shape[0],
-                        float(fr.mean()), int(fr[0, 0]), None,
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def resize_bmp(media: DataFrame, out_width: int, out_height: int) -> DataFrame:
@@ -1102,29 +1002,18 @@ def resize_bmp(media: DataFrame, out_width: int, out_height: int) -> DataFrame:
     mirroring `bmp_decode_stats`."""
     if out_width <= 0 or out_height <= 0:
         raise ValueError(f"bad target size {out_width}x{out_height}")
-    schema = "media_id long, width int, height int, content binary, decode_error string"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, outs, errs = [], [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                ids.append(int(mid))
-                try:
-                    px = decode_bmp24(content if content is not None else b"")
-                except ValueError as e:
-                    ws.append(None); hs.append(None)
-                    outs.append(None); errs.append(str(e))
-                    continue
-                h, w = px.shape[:2]
-                resized = px[_nn_index(h, out_height)][:, _nn_index(w, out_width)]
-                ws.append(out_width); hs.append(out_height)
-                outs.append(encode_bmp24(resized)); errs.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "width": ws, "height": hs,
-                 "content": outs, "decode_error": errs}
-            )
+    def row(mid, content):
+        px = decode_bmp24(_payload(content))
+        h, w = px.shape[:2]
+        resized = px[_nn_index(h, out_height)][:, _nn_index(w, out_width)]
+        return [(int(mid), out_width, out_height, encode_bmp24(resized), None)]
 
-    return media.mapInPandas(batches, schema=schema)
+    return _per_row(
+        media, _MEDIA_IN,
+        "media_id long, width int, height int, content binary, decode_error string",
+        row, (None, None, None),
+    )
 
 
 def resample_wav(media: DataFrame, target_rate: int) -> DataFrame:
@@ -1136,39 +1025,25 @@ def resample_wav(media: DataFrame, target_rate: int) -> DataFrame:
     for feature pipelines that only need a uniform rate."""
     if target_rate <= 0:
         raise ValueError(f"bad target_rate {target_rate}")
-    schema = (
+
+    def row(mid, content):
+        arr, rate = decode_wav16(_payload(content))
+        n = arr.shape[0]
+        # floor(x + 0.5) half-up, NOT Python round(): banker's
+        # rounding diverges from SQL engines on exact .5 ties
+        # (round(10.5) = 10 vs DuckDB/Spark 11), and the output
+        # length must be oracle-replayable cross-engine.
+        out_n = int(n * target_rate / rate + 0.5) if n else 0
+        res = arr[_nn_index(n, out_n)] if out_n else arr[:0]
+        return [(int(mid), target_rate, int(res.shape[0]),
+                 encode_wav16(res, target_rate), None)]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, sample_rate int, n_samples long, content binary, "
-        "decode_error string"
+        "decode_error string",
+        row, (None, None, None),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, rates, ns, outs, errs = [], [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                ids.append(int(mid))
-                try:
-                    arr, rate = decode_wav16(
-                        content if content is not None else b""
-                    )
-                except ValueError as e:
-                    rates.append(None); ns.append(None)
-                    outs.append(None); errs.append(str(e))
-                    continue
-                n = arr.shape[0]
-                # floor(x + 0.5) half-up, NOT Python round(): banker's
-                # rounding diverges from SQL engines on exact .5 ties
-                # (round(10.5) = 10 vs DuckDB/Spark 11), and the output
-                # length must be oracle-replayable cross-engine.
-                out_n = int(n * target_rate / rate + 0.5) if n else 0
-                res = arr[_nn_index(n, out_n)] if out_n else arr[:0]
-                rates.append(target_rate); ns.append(int(res.shape[0]))
-                outs.append(encode_wav16(res, target_rate)); errs.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "sample_rate": rates, "n_samples": ns,
-                 "content": outs, "decode_error": errs}
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def _frames_to_bmp(media: DataFrame, every_n: int, decode_fn, to_rgb) -> DataFrame:
@@ -1181,44 +1056,21 @@ def _frames_to_bmp(media: DataFrame, every_n: int, decode_fn, to_rgb) -> DataFra
     quarantine contract can never diverge between formats."""
     if every_n < 1:
         raise ValueError(f"every_n must be >= 1, got {every_n}")
-    schema = (
+
+    def row(mid, content):
+        frames, _fps = decode_fn(_payload(content))
+        rgbs = [(i, to_rgb(frames[i])) for i in range(0, frames.shape[0], every_n)]
+        return [
+            (int(mid), i, rgb.shape[1], rgb.shape[0], encode_bmp24(rgb), None)
+            for i, rgb in rgbs
+        ]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, frame_index int, width int, height int, "
-        "content binary, decode_error string"
+        "content binary, decode_error string",
+        row, (-1, None, None, None),
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "frame_index", "width", "height",
-                "content", "decode_error",
-            )}
-
-            def emit(mid, idx, w, h, content, err):
-                rows["media_id"].append(mid)
-                rows["frame_index"].append(idx)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["content"].append(content)
-                rows["decode_error"].append(err)
-
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                try:
-                    frames, _fps = decode_fn(
-                        content if content is not None else b""
-                    )
-                except ValueError as e:
-                    emit(mid, -1, None, None, None, str(e))
-                    continue
-                for i in range(0, frames.shape[0], every_n):
-                    rgb = to_rgb(frames[i])
-                    emit(
-                        mid, i, rgb.shape[1], rgb.shape[0],
-                        encode_bmp24(rgb), None,
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def y4m_frames_to_bmp(media: DataFrame, every_n: int = 1) -> DataFrame:
@@ -1444,28 +1296,12 @@ def synthesize_png_media(
     fixtures, so a DuckDB oracle verifies the full
     compress→chunk→inflate→unfilter roundtrip without parsing PNG
     (see mm_png_roundtrip_stats)."""
-    schema = "media_id long, content binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                w, h = mid % 4 + 2, mid % 3 + 2
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                n = w * h * 3
-                if len(tb):
-                    px = tb[np.arange(n) % len(tb)]
-                else:
-                    px = np.zeros(n, dtype=np.uint8)
-                ids.append(mid)
-                payloads.append(encode_png(px.reshape(h, w, 3)))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
+    def encode(mid, text):
+        w, h = mid % 4 + 2, mid % 3 + 2
+        return encode_png(_tiled_text(text, w * h * 3).reshape(h, w, 3))
 
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col, text_col), encode)
 
 
 def png_decode_stats(media: DataFrame) -> DataFrame:
@@ -1478,46 +1314,7 @@ def png_decode_stats(media: DataFrame) -> DataFrame:
     reconstruction upstream of it was). Malformed payloads surface as
     NULL stats with an error string (quarantine contract), never a
     batch failure."""
-    schema = (
-        "media_id long, width int, height int, channels int, "
-        "n_pixel_bytes long, mean_value double, min_value int, "
-        "max_value int, corner_value int, last_value int, "
-        "decode_error string"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "width", "height", "channels", "n_pixel_bytes",
-                "mean_value", "min_value", "max_value", "corner_value",
-                "last_value", "decode_error",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(int(mid))
-                try:
-                    px = decode_png(content if content is not None else b"")
-                except ValueError as e:
-                    for k in ("width", "height", "channels", "n_pixel_bytes",
-                              "mean_value", "min_value", "max_value",
-                              "corner_value", "last_value"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-                    continue
-                h, w, ch = px.shape
-                flat = px.reshape(-1)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(ch)
-                rows["n_pixel_bytes"].append(int(flat.size))
-                rows["mean_value"].append(float(flat.mean()))
-                rows["min_value"].append(int(flat.min()))
-                rows["max_value"].append(int(flat.max()))
-                rows["corner_value"].append(int(px[0, 0, 0]))
-                rows["last_value"].append(int(px[h - 1, w - 1, ch - 1]))
-                rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
+    return _image_decode_stats(media, decode_png)
 
 
 def transcode_image(media: DataFrame, target: str = "png") -> DataFrame:
@@ -1542,61 +1339,44 @@ def transcode_image(media: DataFrame, target: str = "png") -> DataFrame:
         )
     from .jpeg import encode_jpeg
 
-    schema = "media_id long, content binary, src_format string, decode_error string"
+    def row(mid, content):
+        src, px = _sniff_decode_image(_payload(content))
+        if target == "bmp":
+            if px.shape[2] == 1:
+                px = np.repeat(px, 3, axis=2)
+            elif px.shape[2] != 3:
+                raise ValueError(
+                    f"cannot transcode {px.shape[2]}-channel image "
+                    "to BMP24 without discarding alpha"
+                )
+            out = encode_bmp24(px)
+        elif target == "qoi":
+            if px.shape[2] == 1:
+                px = np.repeat(px, 3, axis=2)
+            elif px.shape[2] == 2:
+                px = np.concatenate(
+                    [np.repeat(px[:, :, :1], 3, axis=2), px[:, :, 1:]], axis=2
+                )
+            out = encode_qoi(px)
+        elif target == "jpeg":
+            # Lossy target: alpha has no JPEG representation —
+            # quarantine rather than silently dropping it (mirrors the
+            # BMP target's alpha contract).
+            if px.shape[2] not in (1, 3):
+                raise ValueError(
+                    f"cannot transcode {px.shape[2]}-channel "
+                    "image to JPEG without discarding alpha"
+                )
+            out = encode_jpeg(px)
+        else:
+            out = encode_png(px)
+        return [(int(mid), out, src, None)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, outs, srcs, errs = [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                ids.append(int(mid))
-                b = bytes(content) if content is not None else b""
-                try:
-                    src, px = _sniff_decode_image(b)
-                    if target == "bmp":
-                        if px.shape[2] == 1:
-                            px = np.repeat(px, 3, axis=2)
-                        elif px.shape[2] != 3:
-                            raise ValueError(
-                                f"cannot transcode {px.shape[2]}-channel image "
-                                "to BMP24 without discarding alpha"
-                            )
-                        out = encode_bmp24(px)
-                    elif target == "qoi":
-                        if px.shape[2] == 1:
-                            px = np.repeat(px, 3, axis=2)
-                        elif px.shape[2] == 2:
-                            px = np.concatenate(
-                                [np.repeat(px[:, :, :1], 3, axis=2),
-                                 px[:, :, 1:]],
-                                axis=2,
-                            )
-                        out = encode_qoi(px)
-                    elif target == "jpeg":
-                        # Lossy target: alpha has no JPEG representation —
-                        # quarantine rather than silently dropping it
-                        # (mirrors the BMP target's alpha contract).
-                        if px.shape[2] not in (1, 3):
-                            raise ValueError(
-                                f"cannot transcode {px.shape[2]}-channel "
-                                "image to JPEG without discarding alpha"
-                            )
-                        out = encode_jpeg(px)
-                    else:
-                        out = encode_png(px)
-                except ValueError as e:
-                    outs.append(None)
-                    srcs.append(None)
-                    errs.append(str(e))
-                    continue
-                outs.append(out)
-                srcs.append(src)
-                errs.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "content": outs, "src_format": srcs,
-                 "decode_error": errs}
-            )
-
-    return media.mapInPandas(batches, schema=schema)
+    return _per_row(
+        media, _MEDIA_IN,
+        "media_id long, content binary, src_format string, decode_error string",
+        row, (None, None),
+    )
 
 
 def _sniff_decode_image(b: bytes) -> tuple[str, np.ndarray]:
@@ -1623,28 +1403,18 @@ def _features_kernel(media: DataFrame, dim: int, decode_fn) -> DataFrame:
     L2-normalized bucket means as `array<float>`."""
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
-    schema = "media_id long, features array<float>, decode_error string"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, feats, errs = [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                ids.append(int(mid))
-                try:
-                    px = decode_fn(content if content is not None else b"")
-                except ValueError as e:
-                    feats.append(None)
-                    errs.append(str(e))
-                    continue
-                color = px[:, :, : min(3, px.shape[2])]
-                luma = color.astype(np.float32).mean(axis=2).reshape(-1)
-                feats.append(_bucket_features(luma, dim))
-                errs.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "features": feats, "decode_error": errs}
-            )
+    def row(mid, content):
+        px = decode_fn(_payload(content))
+        color = px[:, :, : min(3, px.shape[2])]
+        luma = color.astype(np.float32).mean(axis=2).reshape(-1)
+        return [(int(mid), _bucket_features(luma, dim), None)]
 
-    return media.mapInPandas(batches, schema=schema)
+    return _per_row(
+        media, _MEDIA_IN,
+        "media_id long, features array<float>, decode_error string",
+        row, (None,),
+    )
 
 
 def bmp_features(media: DataFrame, dim: int = 16) -> DataFrame:
@@ -1673,7 +1443,7 @@ def image_features(media: DataFrame, dim: int = 16) -> DataFrame:
     by test: a PNG and a BMP of one image featurize identically;
     JPEG's lossy pixels differ only by its decode error)."""
     return _features_kernel(
-        media, dim, lambda b: _sniff_decode_image(bytes(b))[1]
+        media, dim, lambda b: _sniff_decode_image(b)[1]
     )
 
 
@@ -1716,37 +1486,18 @@ def synthesize_feature_image_media(
     the pixels — the format-blindness the ANN front door needs."""
     from .jpeg import DC8_QTABLE, encode_jpeg
 
-    schema = "media_id long, content binary"
-    pairs = FEATURE_PAIRS
+    def encode(mid):
+        a, b = FEATURE_PAIRS[mid % 64]
+        gray = np.repeat(
+            np.array([[a], [b]], dtype=np.uint8), 8, axis=0
+        ).repeat(8, axis=1)  # (16, 8)
+        fmt = mid % 4
+        if fmt == 3:
+            return encode_jpeg(gray, qtables=(DC8_QTABLE, DC8_QTABLE))
+        rgb = np.repeat(gray[:, :, None], 3, axis=2)
+        return (encode_bmp24, encode_png, encode_qoi)[fmt](rgb)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid in pdf[id_col]:
-                mid = int(mid)
-                a, b = pairs[mid % 64]
-                gray = np.repeat(
-                    np.array([[a], [b]], dtype=np.uint8), 8, axis=0
-                ).repeat(8, axis=1)  # (16, 8)
-                fmt = mid % 4
-                if fmt == 3:
-                    payload = encode_jpeg(
-                        gray, qtables=(DC8_QTABLE, DC8_QTABLE)
-                    )
-                else:
-                    rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                    payload = (
-                        encode_bmp24(rgb)
-                        if fmt == 0
-                        else encode_png(rgb)
-                        if fmt == 1
-                        else encode_qoi(rgb)
-                    )
-                ids.append(mid)
-                payloads.append(payload)
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
-
-    return docs.select(id_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col,), encode)
 
 
 # ----------------------------------------------------------- real codec: QOI
@@ -1765,8 +1516,8 @@ def synthesize_feature_image_media(
 # Python loops (QOI's index/run state is inherently sequential), so
 # they are the semantic REFERENCE and fixture-scale verifier — roughly
 # two orders slower per byte than PNG's C-zlib path. A 100 TB corpus
-# of real QOI assets would bind a native kernel behind the exact same
-# mapInPandas seam (schema, batching, quarantine contract unchanged);
+# of real QOI assets would bind a native decoder as the row function
+# of the `_per_row` kernel (schema, batching, quarantine unchanged);
 # the oracle-checked roundtrip here is what makes that swap safe.
 
 _QOI_MAGIC = b"qoif"
@@ -1928,28 +1679,12 @@ def synthesize_qoi_media(
     the full encode→decode roundtrip without parsing QOI — while the
     bitstream itself exercises INDEX/DIFF/LUMA/RGB/RUN ops (tiled text
     repeats colors, so the index and run paths really fire)."""
-    schema = "media_id long, content binary"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                w, h = mid % 4 + 2, mid % 3 + 2
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                n = w * h * 3
-                if len(tb):
-                    px = tb[np.arange(n) % len(tb)]
-                else:
-                    px = np.zeros(n, dtype=np.uint8)
-                ids.append(mid)
-                payloads.append(encode_qoi(px.reshape(h, w, 3)))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
+    def encode(mid, text):
+        w, h = mid % 4 + 2, mid % 3 + 2
+        return encode_qoi(_tiled_text(text, w * h * 3).reshape(h, w, 3))
 
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col, text_col), encode)
 
 
 def qoi_decode_stats(media: DataFrame) -> DataFrame:
@@ -1962,49 +1697,28 @@ def qoi_decode_stats(media: DataFrame) -> DataFrame:
 
 def _image_decode_stats(media: DataFrame, decode_fn) -> DataFrame:
     """Shared decode-stats kernel for the (h, w, ch) image decoders
-    (QOI/JPEG; PNG keeps its own copy for its probe docstring): parsed
+    (PNG/QOI/JPEG; BMP drops `channels` and `last_value`): parsed
     geometry + value stats + first/last byte probes, NULL row + error
     string on ValueError (quarantine contract)."""
-    schema = (
+
+    def row(mid, content):
+        px = decode_fn(_payload(content))
+        h, w, ch = px.shape
+        flat = px.reshape(-1)
+        return [(
+            int(mid), w, h, ch, int(flat.size), float(flat.mean()),
+            int(flat.min()), int(flat.max()), int(px[0, 0, 0]),
+            int(flat[-1]), None,
+        )]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, width int, height int, channels int, "
         "n_pixel_bytes long, mean_value double, min_value int, "
         "max_value int, corner_value int, last_value int, "
-        "decode_error string"
+        "decode_error string",
+        row, (None,) * 9,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "width", "height", "channels", "n_pixel_bytes",
-                "mean_value", "min_value", "max_value", "corner_value",
-                "last_value", "decode_error",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(int(mid))
-                try:
-                    px = decode_fn(content if content is not None else b"")
-                except ValueError as e:
-                    for k in ("width", "height", "channels", "n_pixel_bytes",
-                              "mean_value", "min_value", "max_value",
-                              "corner_value", "last_value"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-                    continue
-                h, w, ch = px.shape
-                flat = px.reshape(-1)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(ch)
-                rows["n_pixel_bytes"].append(int(flat.size))
-                rows["mean_value"].append(float(flat.mean()))
-                rows["min_value"].append(int(flat.min()))
-                rows["max_value"].append(int(flat.max()))
-                rows["corner_value"].append(int(px[0, 0, 0]))
-                rows["last_value"].append(int(flat[-1]))
-                rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 # ---------------------------------------------------------- real codec: JPEG
@@ -2013,8 +1727,8 @@ def _image_decode_stats(media: DataFrame, decode_fn) -> DataFrame:
 # (DCT + Huffman, ITU-T T.81) in pure numpy + the shared bit I/O —
 # see jpeg.py for the codec itself and its supported slice (encode
 # 4:4:4/4:2:0 + restart markers; decode any baseline sampling
-# layout). JPEG was previously a declared `_HAVE_REAL_CODECS` seam
-# ("needs PIL"); it no longer is. Lossiness and oracles: a
+# layout). JPEG was previously a declared library seam ("needs
+# PIL"); it no longer is. Lossiness and oracles: a
 # block-constant image has only DC energy, and with a DC quant step
 # of 8 the roundtrip is BIT-EXACT (jpeg.DC8_QTABLE) — the catalog
 # fixture uses that regime so DuckDB can replay the full
@@ -2036,37 +1750,15 @@ def synthesize_jpeg_media(
     rule is SQL-replayable without parsing JPEG."""
     from .jpeg import DC8_QTABLE, encode_jpeg
 
-    schema = "media_id long, content binary"
+    def encode(mid, text):
+        bx, by = mid % 3 + 1, mid % 2 + 1
+        vals = _tiled_text(text, bx * by).reshape(by, bx)
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1)
+        return encode_jpeg(
+            img, qtables=(DC8_QTABLE, DC8_QTABLE), restart_interval=2
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                bx, by = mid % 3 + 1, mid % 2 + 1
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                nb = bx * by
-                if len(tb):
-                    vals = tb[np.arange(nb) % len(tb)]
-                else:
-                    vals = np.zeros(nb, dtype=np.uint8)
-                img = np.repeat(
-                    np.repeat(vals.reshape(by, bx), 8, axis=0), 8, axis=1
-                )
-                ids.append(mid)
-                payloads.append(
-                    encode_jpeg(
-                        img,
-                        qtables=(DC8_QTABLE, DC8_QTABLE),
-                        restart_interval=2,
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
-
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col, text_col), encode)
 
 
 def jpeg_decode_stats(media: DataFrame) -> DataFrame:
@@ -2085,8 +1777,8 @@ def jpeg_decode_stats(media: DataFrame) -> DataFrame:
 # predictors + Rice coding on encode; constant/verbatim/fixed/LPC
 # subframes, all stereo decorrelation modes, rice partitions and
 # CRC-8/CRC-16/MD5 verification on decode (see flac.py). FLAC was
-# previously a declared `_HAVE_REAL_CODECS` seam ("needs soundfile");
-# it no longer is. Unlike G.711 mu-law (compressed but lossy), FLAC
+# previously a declared library seam ("needs soundfile"); it no
+# longer is. Unlike G.711 mu-law (compressed but lossy), FLAC
 # roundtrips are bit-exact, so the catalog pins the full
 # predict→rice→CRC pipeline against the same SQL sample rule as the
 # PCM WAV path (mm_flac_roundtrip_stats).
@@ -2104,31 +1796,10 @@ def synthesize_flac_media(
     predict→rice→CRC→decode roundtrip without parsing FLAC."""
     from .flac import encode_flac
 
-    schema = "media_id long, content binary"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                n = mid % 50 + 10
-                rate = 8000 + (mid % 3) * 4000
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                if len(tb):
-                    samples = (
-                        (tb[np.arange(n) % len(tb)].astype(np.int32) - 128)
-                        * 256
-                    ).astype(np.int16)
-                else:
-                    samples = np.zeros(n, dtype=np.int16)
-                ids.append(mid)
-                payloads.append(encode_flac(samples, rate))
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
-
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(
+        docs, (id_col, text_col),
+        lambda mid, text: encode_flac(*_fixture_pcm(mid, text)),
+    )
 
 
 def transcode_audio(media: DataFrame, target: str = "wav") -> DataFrame:
@@ -2149,60 +1820,35 @@ def transcode_audio(media: DataFrame, target: str = "wav") -> DataFrame:
         raise ValueError(f"target must be 'wav' or 'flac', got {target!r}")
     from .flac import decode_flac, encode_flac
 
-    schema = (
+    def row(mid, content):
+        b = _payload(content)
+        if b[:4] == b"RIFF":
+            arr, rate = decode_wav16(b)
+            src = "wav"
+        elif b[:4] == b"fLaC":
+            arr, rate = decode_flac(b)
+            src = "flac"
+            if arr.dtype != np.int16:
+                # Both targets re-encode at 16 bits; a deeper source
+                # would silently change values (wav) or depth (flac) —
+                # quarantine
+                raise ValueError(
+                    "only 16-bit FLAC is supported in the "
+                    "PCM-16 audio pipeline"
+                )
+            if arr.ndim == 1:
+                arr = arr[:, None]
+        else:
+            raise ValueError("unknown audio format (not RIFF/WAVE or FLAC)")
+        out = encode_wav16(arr, rate) if target == "wav" else encode_flac(arr, rate)
+        return [(int(mid), out, src, int(rate), int(arr.shape[0]), None)]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, content binary, src_format string, "
-        "sample_rate int, n_samples long, decode_error string"
+        "sample_rate int, n_samples long, decode_error string",
+        row, (None,) * 4,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, outs, srcs, rates, ns, errs = [], [], [], [], [], []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                ids.append(int(mid))
-                b = bytes(content) if content is not None else b""
-                try:
-                    if b[:4] == b"RIFF":
-                        arr, rate = decode_wav16(b)
-                        src = "wav"
-                    elif b[:4] == b"fLaC":
-                        arr, rate = decode_flac(b)
-                        src = "flac"
-                        if arr.dtype != np.int16:
-                            # Both targets re-encode at 16 bits; a
-                            # deeper source would silently change
-                            # values (wav) or depth (flac) — quarantine
-                            raise ValueError(
-                                "only 16-bit FLAC is supported in the "
-                                "PCM-16 audio pipeline"
-                            )
-                        if arr.ndim == 1:
-                            arr = arr[:, None]
-                    else:
-                        raise ValueError(
-                            "unknown audio format (not RIFF/WAVE or FLAC)"
-                        )
-                    if target == "wav":
-                        out = encode_wav16(arr, rate)
-                    else:
-                        out = encode_flac(arr, rate)
-                except ValueError as e:
-                    outs.append(None)
-                    srcs.append(None)
-                    rates.append(None)
-                    ns.append(None)
-                    errs.append(str(e))
-                    continue
-                outs.append(out)
-                srcs.append(src)
-                rates.append(int(rate))
-                ns.append(int(arr.shape[0]))
-                errs.append(None)
-            yield pd.DataFrame(
-                {"media_id": ids, "content": outs, "src_format": srcs,
-                 "sample_rate": rates, "n_samples": ns, "decode_error": errs}
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def flac_decode_stats(media: DataFrame) -> DataFrame:
@@ -2213,53 +1859,7 @@ def flac_decode_stats(media: DataFrame) -> DataFrame:
     quarantine contract (ValueError -> NULL row + decode_error)."""
     from .flac import decode_flac
 
-    schema = (
-        "media_id long, sample_rate int, n_samples long, channels int, "
-        "mean_value double, min_value int, max_value int, "
-        "first_sample int, last_sample int, decode_error string"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "sample_rate", "n_samples", "channels",
-                "mean_value", "min_value", "max_value", "first_sample",
-                "last_sample", "decode_error",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                rows["media_id"].append(int(mid))
-                try:
-                    arr, rate = decode_flac(
-                        content if content is not None else b""
-                    )
-                except ValueError as e:
-                    for k in ("sample_rate", "n_samples", "channels",
-                              "mean_value", "min_value", "max_value",
-                              "first_sample", "last_sample"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-                    continue
-                if arr.ndim == 1:
-                    arr = arr[:, None]
-                flat = arr.reshape(-1)
-                rows["sample_rate"].append(rate)
-                rows["n_samples"].append(int(arr.shape[0]))
-                rows["channels"].append(int(arr.shape[1]))
-                rows["mean_value"].append(
-                    float(flat.mean()) if flat.size else None
-                )
-                rows["min_value"].append(int(flat.min()) if flat.size else None)
-                rows["max_value"].append(int(flat.max()) if flat.size else None)
-                rows["first_sample"].append(
-                    int(flat[0]) if flat.size else None
-                )
-                rows["last_sample"].append(
-                    int(flat[-1]) if flat.size else None
-                )
-                rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
+    return _audio_decode_stats(media, decode_flac)
 
 
 # --------------------------------------------------------- real codec: MJPEG
@@ -2267,7 +1867,7 @@ def flac_decode_stats(media: DataFrame) -> DataFrame:
 # The COMPRESSED video branch made real: Motion-JPEG in an AVI/RIFF
 # container (multimodal/mjpeg.py) — one complete baseline JPEG per
 # frame, so the in-tree JPEG codec carries the pixels and this layer
-# is a RIFF walk like WAV's. The remaining `_HAVE_REAL_CODECS` video
+# is a RIFF walk like WAV's. The remaining library-bound video
 # seam narrows to INTER-FRAME codecs (H.264-family): motion
 # compensation + CABAC genuinely need a codec library, and a partial
 # decoder would violate the never-wrong-pixels contract.
@@ -2285,35 +1885,15 @@ def synthesize_mjpeg_media(
     from .jpeg import DC8_QTABLE
     from .mjpeg import encode_mjpeg_avi
 
-    schema = "media_id long, content binary"
+    def encode(mid, text):
+        nf, bx = mid % 3 + 1, mid % 2 + 1
+        vals = _tiled_text(text, nf * bx).reshape(nf, 1, bx)
+        frames = np.repeat(np.repeat(vals, 8, axis=1), 8, axis=2)
+        return encode_mjpeg_avi(
+            frames, fps=10, qtables=(DC8_QTABLE, DC8_QTABLE)
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, payloads = [], []
-            for mid, text in zip(pdf[id_col], pdf[text_col]):
-                mid = int(mid)
-                nf, bx = mid % 3 + 1, mid % 2 + 1
-                tb = np.frombuffer(
-                    (text if isinstance(text, str) else "").encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                nb = nf * bx
-                if len(tb):
-                    vals = tb[np.arange(nb) % len(tb)]
-                else:
-                    vals = np.zeros(nb, dtype=np.uint8)
-                frames = np.repeat(
-                    np.repeat(vals.reshape(nf, 1, bx), 8, axis=1), 8, axis=2
-                )
-                ids.append(mid)
-                payloads.append(
-                    encode_mjpeg_avi(
-                        frames, fps=10, qtables=(DC8_QTABLE, DC8_QTABLE)
-                    )
-                )
-            yield pd.DataFrame({"media_id": ids, "content": payloads})
-
-    return docs.select(id_col, text_col).mapInPandas(batches, schema)
+    return _synthesize(docs, (id_col, text_col), encode)
 
 
 def mjpeg_frame_stats(media: DataFrame) -> DataFrame:
@@ -2329,44 +1909,12 @@ def mjpeg_frame_stats(media: DataFrame) -> DataFrame:
     failure."""
     from .mjpeg import decode_mjpeg_avi
 
-    schema = (
-        "media_id long, frame_index int, width int, height int, "
-        "mean_value double, first_pixel int, decode_error string"
+    return _frame_stats_op(
+        media,
+        lambda b: decode_mjpeg_avi(b)[0].astype(np.float64).mean(axis=3),
+        1,
+        None,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "media_id", "frame_index", "width", "height", "mean_value",
-                "first_pixel", "decode_error",
-            )}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    frames, _fps = decode_mjpeg_avi(
-                        content if content is not None else b""
-                    )
-                except ValueError as e:
-                    rows["media_id"].append(int(mid))
-                    for k in ("frame_index", "width", "height",
-                              "mean_value", "first_pixel"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-                    continue
-                n, h, w, _ch = frames.shape
-                for fi in range(n):
-                    luma = frames[fi].astype(np.float64).mean(axis=2)
-                    rows["media_id"].append(int(mid))
-                    rows["frame_index"].append(fi)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_value"].append(float(luma.mean()))
-                    rows["first_pixel"].append(
-                        int(np.floor(luma[0, 0] + 0.5))
-                    )
-                    rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 def mjpeg_frames_to_bmp(media: DataFrame, every_n: int = 1) -> DataFrame:
@@ -2481,7 +2029,7 @@ def resolve_interframe_decoder():
     """The deployment knob for the H.264 seam: returns ``pyav_decoder``
     when PyAV is importable, else None (quarantine branch). Resolved
     ONCE at plan-build time on the driver and captured into the
-    mapInPandas closure, so executors never re-probe imports."""
+    row function's closure, so executors never re-probe imports."""
     try:
         import av  # noqa: F401
 
@@ -2528,7 +2076,7 @@ def video_frame_stats(media: DataFrame, interframe_decoder=None) -> DataFrame:
     returning the SAME frame-stack contract the two built-in decoders
     produce — (n, h, w[, ch]) uint8 — and every downstream stage
     (these stats, `*_frames_to_bmp`, `image_features` → ANN) works
-    unchanged. The seam sits INSIDE this mapInPandas batch loop on
+    unchanged. The seam sits INSIDE this operator's row function on
     purpose: payloads never cross a shuffle, the binding runs
     executor-side per Arrow batch (resolved ONCE on the driver and
     closure-captured), and any decoder failure degrades to the same
@@ -2542,92 +2090,50 @@ def video_frame_stats(media: DataFrame, interframe_decoder=None) -> DataFrame:
     elif interframe_decoder is False:
         interframe_decoder = None
 
-    schema = (
+    def lumas_of(container, codec, payload):
+        if container == "y4m":
+            return decode_y4m(payload)[0].astype(np.float64)
+        if container == "avi" and codec.upper() == "MJPG":
+            # case-folded: decode_mjpeg_avi accepts b"mjpg" fccHandlers too
+            return decode_mjpeg_avi(payload)[0].astype(np.float64).mean(axis=3)
+        if interframe_decoder is None:
+            # >>> H.264 BINDING SEAM, unbound: quarantine.
+            raise ValueError(
+                f"unsupported video codec {codec!r} in "
+                f"{container!r} container (H.264-family "
+                "inter-frame codecs need a real decoder — "
+                "bind PyAV/ffmpeg at video_frame_stats' "
+                "interframe_decoder seam)"
+            )
+        # >>> H.264 BINDING SEAM, bound: the resolved decoder (PyAV or
+        # injected) returns the same frame-stack contract as the
+        # built-in codecs; _stack_to_lumas validates it so a misbehaving
+        # binding quarantines instead of corrupting. ANY binding
+        # exception quarantines — a flaky external lib must not become
+        # a task-retry storm.
+        try:
+            frames, _fps = interframe_decoder(payload)
+            return _stack_to_lumas(frames)
+        except Exception as e:
+            raise ValueError(f"bound inter-frame decoder failed: {e}") from e
+
+    def row(mid, content):
+        payload = _payload(content)
+        # an unrecognized container quarantines with NULL container/codec
+        container, codec = sniff_video_codec(payload)
+        try:
+            lumas = lumas_of(container, codec, payload)
+        except ValueError as e:
+            return [(int(mid), container, codec, *(None,) * 5, str(e))]
+        return [
+            (int(mid), container, codec, i, *_frame_stats(luma), None)
+            for i, luma in enumerate(lumas)
+        ]
+
+    return _per_row(
+        media, _MEDIA_IN,
         "media_id long, container string, codec string, frame_index int, "
         "width int, height int, mean_value double, first_pixel int, "
-        "decode_error string"
+        "decode_error string",
+        row, (None,) * 7,
     )
-    cols = (
-        "media_id", "container", "codec", "frame_index", "width",
-        "height", "mean_value", "first_pixel", "decode_error",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict[str, list] = {k: [] for k in cols}
-
-            def quarantine(mid, container, codec, msg):
-                rows["media_id"].append(mid)
-                rows["container"].append(container)
-                rows["codec"].append(codec)
-                for k in ("frame_index", "width", "height",
-                          "mean_value", "first_pixel"):
-                    rows[k].append(None)
-                rows["decode_error"].append(msg)
-
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                mid = int(mid)
-                payload = bytes(content) if content is not None else b""
-                try:
-                    container, codec = sniff_video_codec(payload)
-                except ValueError as e:
-                    quarantine(mid, None, None, str(e))
-                    continue
-                try:
-                    if container == "y4m":
-                        lumas, _fps = decode_y4m(payload)
-                        lumas = lumas.astype(np.float64)
-                    elif container == "avi" and codec.upper() == "MJPG":
-                        # case-folded: decode_mjpeg_avi accepts b"mjpg"
-                        # fccHandlers too
-                        frames, _fps2 = decode_mjpeg_avi(payload)
-                        lumas = frames.astype(np.float64).mean(axis=3)
-                    elif interframe_decoder is not None:
-                        # >>> H.264 BINDING SEAM, bound: the resolved
-                        # decoder (PyAV or injected) returns the same
-                        # frame-stack contract as the built-in codecs;
-                        # _stack_to_lumas validates it so a misbehaving
-                        # binding quarantines instead of corrupting.
-                        # ANY binding exception quarantines — a flaky
-                        # external lib must not become a task-retry
-                        # storm.
-                        try:
-                            frames, _fps3 = interframe_decoder(payload)
-                            lumas = _stack_to_lumas(frames)
-                        except Exception as e:
-                            quarantine(
-                                mid, container, codec,
-                                "bound inter-frame decoder failed: "
-                                f"{e}",
-                            )
-                            continue
-                    else:
-                        # >>> H.264 BINDING SEAM, unbound: quarantine.
-                        quarantine(
-                            mid, container, codec,
-                            f"unsupported video codec {codec!r} in "
-                            f"{container!r} container (H.264-family "
-                            "inter-frame codecs need a real decoder — "
-                            "bind PyAV/ffmpeg at video_frame_stats' "
-                            "interframe_decoder seam)",
-                        )
-                        continue
-                except ValueError as e:
-                    quarantine(mid, container, codec, str(e))
-                    continue
-                n, h, w = lumas.shape
-                for fi in range(n):
-                    rows["media_id"].append(mid)
-                    rows["container"].append(container)
-                    rows["codec"].append(codec)
-                    rows["frame_index"].append(fi)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_value"].append(float(lumas[fi].mean()))
-                    rows["first_pixel"].append(
-                        int(np.floor(lumas[fi][0, 0] + 0.5))
-                    )
-                    rows["decode_error"].append(None)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(batches, schema=schema)

@@ -10,7 +10,7 @@ inter-frame prediction, so every frame decodes independently with the
 existing JPEG machinery; the container layer (this module) is pure
 struct parsing in the same style as the WAV/Y4M walkers.
 
-This narrows the remaining `_HAVE_REAL_CODECS` video seam to
+This narrows the remaining library-bound video seam to
 INTER-FRAME codecs (H.264-family), which genuinely need a codec
 library: motion compensation + CABAC are out of scope for a
 dependency-free reference, and a silently partial H.264 would violate

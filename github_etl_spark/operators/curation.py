@@ -131,7 +131,10 @@ def _sql_round(expr: str, digits: int = 2) -> str:
 
 
 def _gopher_metrics_sql(ws: str, lns: str) -> dict[str, str]:
-    """_gopher_metrics as SQL text over word/line array expressions."""
+    """The Gopher rule metrics as SQL text over word/line array
+    expressions — ONE definition shared by `gopher_gate` (which emits
+    them as output columns) and `web_gate_sql` (which folds them
+    straight into the verdict), so the two can never drift."""
     r = f"concat_ws('\\n', {lns})"
     n_words = f"size({ws})"
     n_lines = f"greatest(size({lns}), 1)"
@@ -172,9 +175,11 @@ def _gopher_metrics_sql(ws: str, lns: str) -> dict[str, str]:
     }
 
 
-def _gopher_keep_sql(ws: str, lns: str) -> str:
-    """gopher_keep_expr as SQL text (same metric definitions)."""
-    m = _gopher_metrics_sql(ws, lns)
+def _gopher_keep_sql(m: dict[str, str]) -> str:
+    """The Gopher keep verdict: the threshold conjunction over a
+    metric-name → SQL map — the metric expressions themselves
+    (`web_gate_sql`) or the metric columns `gopher_gate` has already
+    projected."""
     return (
         f"({m['n_words']} >= {GOPHER_MIN_WORDS}"
         f" AND {m['n_words']} <= {GOPHER_MAX_WORDS}"
@@ -199,7 +204,7 @@ def web_gate_sql(text_col: str) -> str:
         f"size(filter(s.lns, l -> {_c4_keep_sql('l')}))"
         f" >= {C4_MIN_KEPT_LINES}"
     )
-    keep = _gopher_keep_sql("s.ws", "s.lns")
+    keep = _gopher_keep_sql(_gopher_metrics_sql("s.ws", "s.lns"))
     return (
         f"element_at(transform(array(struct({ws} AS ws, {lns} AS lns)),"
         f" s -> ({page}) AND {keep}), 1)"
@@ -699,77 +704,6 @@ def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _gopher_metrics(ws: Column, lines: Column) -> dict[str, Column]:
-    """The Gopher rule metrics from staged word/line array columns —
-    ONE definition shared by gopher_gate (which emits them as output
-    columns) and gopher_keep_expr (which folds them straight into the
-    verdict), so the two can never drift."""
-    rendered = F.concat_ws("\n", lines)
-    n_words = F.size(ws)
-    n_lines = F.greatest(F.size(lines), F.lit(1))
-    n_hash = F.length(rendered) - F.length(F.replace(rendered, F.lit("#")))
-    n_ellipsis = (
-        F.length(rendered) - F.length(F.replace(rendered, F.lit("...")))
-    ) / F.lit(3)
-    stops = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    return {
-        "n_words": n_words,
-        "mean_word_len": round_det(
-            F.aggregate(
-                ws, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-            )
-            / F.greatest(n_words, F.lit(1)).cast("double"),
-            4,
-        ),
-        "symbol_ratio": round_det(
-            (n_hash + n_ellipsis)
-            / F.greatest(n_words, F.lit(1)).cast("double"),
-            4,
-        ),
-        "bullet_frac": round_det(
-            F.size(F.filter(lines, lambda l: l.startswith("- ")))
-            / n_lines.cast("double"),
-            4,
-        ),
-        "ellipsis_frac": round_det(
-            F.size(F.filter(lines, lambda l: l.endswith("...")))
-            / n_lines.cast("double"),
-            4,
-        ),
-        "alpha_frac": round_det(
-            F.size(F.filter(ws, lambda x: x.rlike("[a-z]")))
-            / F.greatest(n_words, F.lit(1)).cast("double"),
-            4,
-        ),
-        "n_stop_distinct": F.size(
-            F.array_distinct(
-                F.filter(ws, lambda x: F.array_contains(stops, x))
-            )
-        ),
-    }
-
-
-def _gopher_keep_from(m: dict[str, Column]) -> Column:
-    return (
-        (m["n_words"] >= GOPHER_MIN_WORDS)
-        & (m["n_words"] <= GOPHER_MAX_WORDS)
-        & (m["mean_word_len"] >= GOPHER_MIN_MEAN_WORD_LEN)
-        & (m["mean_word_len"] <= GOPHER_MAX_MEAN_WORD_LEN)
-        & (m["symbol_ratio"] <= GOPHER_MAX_SYMBOL_RATIO)
-        & (m["bullet_frac"] <= GOPHER_MAX_BULLET_FRAC)
-        & (m["ellipsis_frac"] <= GOPHER_MAX_ELLIPSIS_FRAC)
-        & (m["alpha_frac"] >= GOPHER_MIN_ALPHA_FRAC)
-        & (m["n_stop_distinct"] >= GOPHER_MIN_STOPWORDS)
-    )
-
-
-def gopher_keep_expr(ws: Column, lines: Column) -> Column:
-    """The Gopher keep verdict as one expression over staged word/line
-    array columns (for compositions that only gate, never emit the
-    metrics). Identical rounded metrics to gopher_gate."""
-    return _gopher_keep_from(_gopher_metrics(ws, lines))
-
-
 def web_gate_expr(text_col) -> Column:
     """C4 page keep AND Gopher keep as ONE pushdown-proof expression.
 
@@ -811,13 +745,10 @@ def gopher_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     m = _gopher_metrics_sql("__ws", "__lns")
     out = staged.select(
         F.col(id_col),
-        *[F.expr(m[name]).alias(name) for name in (
-            "n_words", "mean_word_len", "symbol_ratio", "bullet_frac",
-            "ellipsis_frac", "alpha_frac", "n_stop_distinct",
-        )],
+        *[F.expr(sql).alias(name) for name, sql in m.items()],
     )
-    keep = _gopher_keep_from({name: F.col(name) for name in m})
-    return out.select("*", keep.alias("keep"))
+    keep = _gopher_keep_sql({name: name for name in m})
+    return out.select("*", F.expr(keep).alias("keep"))
 
 
 def ccnet_buckets(

@@ -48,7 +48,7 @@ _SQL_C4_KEEP = """
 # Gopher metric expressions over CTE columns (ws, lns, r, n_words) —
 # ONE definition composed by the gopher_quality_gate oracle and the
 # pipeline_web_curation oracle, mirroring operators/curation.
-# _gopher_metrics so neither engine's two consumers can drift.
+# _gopher_metrics_sql so neither engine's two consumers can drift.
 _SQL_GOPHER_M: dict[str, str] = {
     "mean_word_len": sql_round(
         "COALESCE(list_sum(list_transform(ws, x -> length(x))), 0)"

@@ -1572,7 +1572,7 @@ def mm_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the BMP/WAV/Y4M paths this one exercises REAL compression
     — with baseline JPEG (mm_jpeg_roundtrip_stats) and FLAC
     (mm_flac_roundtrip_stats) also real, the only remaining
-    `_HAVE_REAL_CODECS` seam is H.264."""
+    codec-library seam is H.264."""
     from ..multimodal.media import png_decode_stats, synthesize_png_media
 
     t = load_tables(spark, sf_dir)
