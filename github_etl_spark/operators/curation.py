@@ -614,14 +614,19 @@ def span_index_append(
     otherwise double-append the same keys with no replay mask to
     catch it; membership verdicts tolerate duplicates, storage does
     not). The anti-join's store scan is why streaming ingest should
-    always pass an `ingest_batch` id instead."""
-    _read_span_meta(spark, path)
+    always pass an `ingest_batch` id instead.
+
+    The store's keying is validated here only on the batchless path: a
+    streaming gate has already read the sidecar before its first write
+    (rule (4) in `streaming.pipeline.stream_files`), once per batch."""
     batch_id = -1 if ingest_batch is None else int(ingest_batch)
     mode = "append" if ingest_batch is None else "overwrite"
     if ingest_batch is None:
         from pyspark.errors import AnalysisException
 
         from ..session import eager_checkpoint
+
+        _read_span_meta(spark, path)
 
         try:
             existing = spark.read.parquet(f"{path}/spans").select("span_key")

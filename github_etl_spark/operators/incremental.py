@@ -15,7 +15,10 @@ Each new batch is then classified against the stores with the BATCH
 side broadcast: the store relations are scanned but never shuffled, so
 per-ingest cost is one pass over each store plus work proportional to
 the batch. Survivors append their own fingerprints/buckets, keeping
-the index current without rebuilds.
+the index current without rebuilds. The batch side of both relations
+is derived once (`dedup_batch_rows`): the check probes the stores with
+it and the append writes the survivors' slice of it, so no batch
+document is shingled or MinHashed twice.
 
 Verdicts per batch document:
 
@@ -43,20 +46,23 @@ which then DYNAMIC-OVERWRITES exactly partition `ingest_batch=N` —
 replaying a crashed batch rewrites its own store partition instead of
 double-appending, and `dedup_index_check(..., exclude_batch=N)` masks
 the failed attempt's rows so replayed verdicts are identical to the
-first attempt's (see streaming/dedup_gate.py for the full exactly-once
-argument). Batch-less appends land in partition −1 with plain append
-semantics; wrap those in the snapshot transaction log (sinks/txnlog.py)
-where a reader racing a crashed append matters.
+first attempt's (`streaming.pipeline.stream_files`' docstring holds
+the full exactly-once argument). Batch-less appends land in partition
+−1 with plain append semantics; wrap those in the snapshot transaction
+log (sinks/txnlog.py) where a reader racing a crashed append matters.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_expr
+from ..session import run_concurrently
 from .dedup import minhash_band_buckets, signature_agreement_expr
 
 _META_SUFFIX = "_meta"
@@ -260,6 +266,54 @@ def _read_meta(spark: SparkSession, path: str) -> dict:
     return {**_DEFAULT_META, **json.loads(row[0])}
 
 
+class BatchRows(NamedTuple):
+    """One batch's side of a dedup index, under the index's hash
+    parameters (``meta``): ``fingerprints`` (doc, fingerprint) and
+    ``bands`` (doc, signature, band, bucket; one row per document ×
+    band).
+    `dedup_index_check` probes the stores with them and
+    `dedup_index_append` writes them, so a gate derives them once per
+    batch."""
+
+    meta: dict
+    fingerprints: DataFrame
+    bands: DataFrame
+
+    def map(self, fn) -> BatchRows:
+        """Both relations passed through ``fn`` (e.g. a persist)."""
+        return self._replace(
+            fingerprints=fn(self.fingerprints), bands=fn(self.bands)
+        )
+
+    def of(self, ids: DataFrame, id_col: str = "doc_id") -> BatchRows:
+        """The rows of the documents in ``ids`` (an ``id_col`` frame):
+        a left-semi join with the ids broadcast."""
+        keep = F.broadcast(ids.select(F.col(id_col).alias("doc")))
+        return self.map(lambda df: df.join(keep, "doc", "left_semi"))
+
+
+def dedup_batch_rows(
+    spark: SparkSession,
+    path: str,
+    batch: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> BatchRows:
+    """Read the index's meta sidecar (raising ValueError when the index
+    is missing or incomplete) and derive ``batch``'s fingerprint and
+    band relations with its parameters. Both relations are lazy."""
+    meta = _read_meta(spark, path)
+    return BatchRows(
+        meta,
+        _fingerprints(batch, text_col, id_col),
+        minhash_band_buckets(
+            batch, text_col, id_col,
+            meta["num_hashes"], meta["bands"], meta["shingle"],
+            meta["hash_family"],
+        ),
+    )
+
+
 def dedup_index_check(
     spark: SparkSession,
     path: str,
@@ -268,17 +322,21 @@ def dedup_index_check(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     exclude_batch: int | None = None,
+    rows: BatchRows | None = None,
 ) -> DataFrame:
     """Classify a batch against a materialized index. Hash parameters
     come from the index's meta sidecar — check-time code cannot drift
-    from build-time bucketing.
+    from build-time bucketing. ``rows`` are the batch's relations from
+    `dedup_batch_rows` when the caller already derived them (to append
+    the survivors' slice afterwards); otherwise they are derived here.
 
     `exclude_batch` masks store rows from one `ingest_batch` partition
     (a partition-pruned filter, not a scan): a replayed streaming batch
     excludes its OWN id so a prior crashed attempt's half-published
-    rows can't flip its verdicts (streaming/dedup_gate.py).
+    rows can't flip its verdicts (`streaming.pipeline.stream_files`).
     """
-    meta = _read_meta(spark, path)
+    if rows is None:
+        rows = dedup_batch_rows(spark, path, batch, text_col, id_col)
     corpus_fp = spark.read.parquet(f"{path}/fingerprints")
     corpus_bands = spark.read.parquet(f"{path}/bands")
     if exclude_batch is not None:
@@ -286,28 +344,24 @@ def dedup_index_check(
         corpus_bands = corpus_bands.where(
             F.col("ingest_batch") != exclude_batch
         )
-    batch_fp = _fingerprints(batch, text_col, id_col)
-    batch_bands = minhash_band_buckets(
-        batch, text_col, id_col,
-        meta["num_hashes"], meta["bands"], meta["shingle"],
-        meta["hash_family"],
-    )
     return _verdicts(
-        batch, batch_fp, batch_bands, corpus_fp, corpus_bands,
-        id_col, meta["num_hashes"], threshold,
+        batch, rows.fingerprints, rows.bands, corpus_fp, corpus_bands,
+        id_col, rows.meta["num_hashes"], threshold,
     )
 
 
 def dedup_index_append(
     spark: SparkSession,
     path: str,
-    survivors: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    rows: BatchRows,
     ingest_batch: int | None = None,
 ) -> None:
-    """Append surviving (verdict == 'new') documents to both stores so
-    the next batch dedups against them.
+    """Append surviving (verdict == 'new') documents' ``rows`` — their
+    slice of the checked batch's `BatchRows` (``rows.of(new_ids)``) —
+    to both stores so the next batch dedups against them. The two
+    store writes are independent and run concurrently; both finish
+    before this returns, and the first failure (fingerprints before
+    bands) is then raised.
 
     With an `ingest_batch` id the write DYNAMIC-OVERWRITES exactly the
     `ingest_batch=N` partition of each store — a replayed streaming
@@ -320,7 +374,6 @@ def dedup_index_append(
     bounded because survivors are, by definition, not near-dups of
     existing members.
     """
-    meta = _read_meta(spark, path)
     batch_id = -1 if ingest_batch is None else int(ingest_batch)
     mode = "append" if ingest_batch is None else "overwrite"
 
@@ -333,14 +386,12 @@ def dedup_index_append(
             .parquet(f"{path}/{sub}")
         )
 
-    _write(_fingerprints(survivors, text_col, id_col), "fingerprints")
-    _write(
-        minhash_band_buckets(
-            survivors, text_col, id_col,
-            meta["num_hashes"], meta["bands"], meta["shingle"],
-            meta["hash_family"],
-        ),
-        "bands",
+    run_concurrently(
+        [
+            functools.partial(_write, rows.fingerprints, "fingerprints"),
+            functools.partial(_write, rows.bands, "bands"),
+        ],
+        2,
     )
 
 

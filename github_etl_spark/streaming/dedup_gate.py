@@ -15,10 +15,16 @@ set — data loss).
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.incremental import dedup_index_append, dedup_index_check
+from ..operators.incremental import (
+    dedup_batch_rows,
+    dedup_index_append,
+    dedup_index_check,
+)
 from ..session import persisted
 from ..sinks.snapshot import publish_batch_partition
 from .pipeline import DOC_SCHEMA, stream_files
@@ -27,21 +33,32 @@ from .pipeline import DOC_SCHEMA, stream_files
 def make_dedup_gate(spark: SparkSession, index_path: str, out_path: str):
     """The foreachBatch body, exposed for direct (test) invocation:
     classify → publish survivors to `out_path/ingest_batch=N` →
-    publish survivors' fingerprints/bands to the index's batch-N
-    partitions. Calling it twice with the same batch id must be a
-    no-op the second time (asserted in tests)."""
+    publish survivors' fingerprints and bands to the index's batch-N
+    partitions, the two store writes concurrently and only after the
+    output. The batch's fingerprint and band relations are derived
+    once (`incremental.dedup_batch_rows`, the batch's one sidecar
+    read): the check probes with them and the append writes the
+    survivors' slice. Calling it twice with the same batch id must be
+    a no-op the second time (asserted in tests)."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        verdicts = dedup_index_check(
-            spark, index_path, batch_df, exclude_batch=batch_id
-        )
-        new_ids = verdicts.filter(F.col("verdict") == "new").select("doc_id")
-        # Consumed three times (output + two index stores): compute
-        # the verdict pipeline once.
-        with persisted(batch_df.join(F.broadcast(new_ids), "doc_id")) as survivors:
-            publish_batch_partition(survivors, out_path, batch_id)
+        with ExitStack() as held:
+
+            def hold(df: DataFrame) -> DataFrame:
+                return held.enter_context(persisted(df))
+
+            rows = dedup_batch_rows(spark, index_path, batch_df).map(hold)
+            verdicts = dedup_index_check(
+                spark, index_path, batch_df, exclude_batch=batch_id, rows=rows
+            )
+            new_ids = hold(
+                verdicts.filter(F.col("verdict") == "new").select("doc_id")
+            )
+            publish_batch_partition(
+                batch_df.join(F.broadcast(new_ids), "doc_id"), out_path, batch_id
+            )
             dedup_index_append(
-                spark, index_path, survivors, ingest_batch=int(batch_id)
+                spark, index_path, rows.of(new_ids), ingest_batch=int(batch_id)
             )
 
     return _gate

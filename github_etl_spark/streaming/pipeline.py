@@ -182,9 +182,14 @@ def stream_files(
     partition-pruned filter), so a crashed attempt's half-published
     rows cannot flip the replay's verdicts; (3) writes its output
     table first and its stores after, so a visible output row's store
-    rows either exist or are recreated bit-identically by the replay;
-    and (4) validates every store it reads before the first write, so
-    a missing or mis-keyed store fails before anything is published.
+    rows either exist or are recreated bit-identically by the replay
+    (the store writes only read frames the batch already computed and
+    are independent of each other, so the dedup and pretrain gates run
+    them concurrently through `session.run_concurrently` once the
+    output is published, and release their persisted frames after the
+    last one finished); and (4) validates every store it reads before
+    the first write, so a missing or mis-keyed store fails before
+    anything is published.
     A replayed batch N therefore recomputes the same rows and rewrites
     the same partitions."""
     reader = spark.readStream.schema(schema)

@@ -10,15 +10,20 @@ C4-page + Gopher gate (operators/curation.web_gate_expr — map-only),
 (operators/incremental.dedup_index_check), survivors (verdict ==
 'new') admitted, (3) the survivors' spans classified against the
 materialized span store (operators/curation.span_verdict_rows), and
-(4) three publishes: the per-doc verdict table, the survivors'
-fingerprints/bands, and the new span keys. Composition is where this
-codebase keeps finding bugs, so the chain itself — gate feeding the fp
-probe feeding the span probe, and the three-write publish order — is
-what this module pins.
+(4) the publishes: first the per-doc verdict table, then, concurrently,
+the three store appends — the survivors' fingerprints, their bands and
+the new span keys. Composition is where this codebase keeps finding
+bugs, so the chain itself — gate feeding the fp probe feeding the span
+probe, and the publish order (output before any store) — is what this
+module pins.
 
 Runs on `streaming.pipeline.stream_files`, whose docstring holds the
 exactly-once argument. What differs here: the chain has TWO store
-probes, and each masks the batch's own partition (`exclude_batch=N`).
+probes, each masks the batch's own partition (`exclude_batch=N`), and
+both stores' sidecars are read once per batch, before any write. The
+gated documents' fingerprint and band relations are derived once
+(`incremental.dedup_batch_rows`): the fp probe reads them and the
+index append writes the survivors' slice of them.
 
 `pretrain_fold_verdicts` is the DETERMINISTIC batch fold of the same
 chain (inline store derivation, no disk) — the oracle-visible sibling
@@ -32,6 +37,7 @@ No reference analog (the reference is a GitHub REST ETL,
 
 from __future__ import annotations
 
+import functools
 from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,11 +55,12 @@ from ..operators.curation import (
     web_gate_expr,
 )
 from ..operators.incremental import (
+    dedup_batch_rows,
     dedup_index_append,
     dedup_index_check,
     incremental_dedup_verdicts,
 )
-from ..session import persisted
+from ..session import persisted, run_concurrently
 from ..sinks.snapshot import publish_batch_partition
 from .pipeline import DOC_SCHEMA, stream_files
 
@@ -110,45 +117,64 @@ def make_pretrain_gate(
     Calling it twice with the same batch id must be a no-op the second
     time (asserted in tests/test_streaming_pretrain.py). The store
     probes and appends are looked up as this module's globals at call
-    time."""
+    time. The output table is published first; the fingerprint, band
+    and span-key appends then run concurrently, and the first of their
+    failures (in that order) is raised once all have finished."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        # Validate the SPAN store's keying before any durable write —
-        # the span append at the END would raise, but by then the
-        # output table and fp index would hold rows derived under the
-        # wrong keying.
-        _read_span_meta(spark, span_store_path)
         with ExitStack() as held:
 
             def hold(df: DataFrame) -> DataFrame:
                 return held.enter_context(persisted(df))
 
             gated = hold(batch_df.where(web_gate_expr(F.col("text"))))
+            # Both sidecars are read here, once and side by side, before
+            # any durable write: a missing or mis-keyed store fails
+            # before the output table or the other store holds a row of
+            # this batch.
+            rows, _ = run_concurrently(
+                [
+                    functools.partial(dedup_batch_rows, spark, index_path, gated),
+                    functools.partial(_read_span_meta, spark, span_store_path),
+                ],
+                2,
+            )
+            rows = rows.map(hold)
             # output row + survivor filter
             fp = hold(dedup_index_check(
-                spark, index_path, gated, exclude_batch=int(batch_id)
+                spark, index_path, gated,
+                exclude_batch=int(batch_id), rows=rows,
             ))
             new_ids = fp.where(F.col("verdict") == "new").select("doc_id")
             survivors = hold(gated.join(F.broadcast(new_ids), "doc_id"))
             bstats = c4_kept_lines(survivors, "text", "doc_id")
             # summary + span append
-            rows = hold(span_verdict_rows(
+            spans = hold(span_verdict_rows(
                 c4_spans_from(bstats, "doc_id"),
                 _span_store(spark, span_store_path, exclude_batch=int(batch_id)),
                 "doc_id",
             ))
             out = _compose_out(
                 batch_df, gated, fp,
-                _span_doc_summary(bstats, rows, "doc_id"), "doc_id",
+                _span_doc_summary(bstats, spans, "doc_id"), "doc_id",
             )
             publish_batch_partition(out, out_path, batch_id)
-            dedup_index_append(
-                spark, index_path, survivors, ingest_batch=int(batch_id)
-            )
-            span_index_append(
-                spark, span_store_path,
-                rows.where(F.col("verdict") == "new").select("span_key"),
-                ingest_batch=int(batch_id),
+            # The store appends read only persisted frames and write
+            # disjoint tables: run them side by side, all finishing
+            # before the frames are released.
+            run_concurrently(
+                [
+                    functools.partial(
+                        dedup_index_append, spark, index_path,
+                        rows.of(new_ids), ingest_batch=int(batch_id),
+                    ),
+                    functools.partial(
+                        span_index_append, spark, span_store_path,
+                        spans.where(F.col("verdict") == "new").select("span_key"),
+                        ingest_batch=int(batch_id),
+                    ),
+                ],
+                2,
             )
 
     return _gate

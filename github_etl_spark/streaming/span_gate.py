@@ -48,10 +48,10 @@ def make_span_gate(spark: SparkSession, store_path: str, out_path: str):
     never store-sized."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        # Validate the store's keying BEFORE classifying — without
-        # this, a store built under older keying constants would
-        # mis-classify every span and durably PUBLISH the wrong
-        # summary before span_index_append finally raised.
+        # Validate the store's keying BEFORE classifying — the batch's
+        # one sidecar read: without it, a store built under older
+        # keying constants would mis-classify every span and durably
+        # PUBLISH the wrong summary.
         _read_span_meta(spark, store_path)
         bstats = c4_kept_lines(batch_df, "text", "doc_id")
         rows = span_verdict_rows(

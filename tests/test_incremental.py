@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from github_etl_spark.operators.incremental import (
+    dedup_batch_rows,
     dedup_index_append,
     dedup_index_build,
     dedup_index_check,
@@ -61,7 +62,7 @@ def test_append_survivors_then_recheck(spark, tmp_path):
     survivors = batch.join(
         F.broadcast(first.filter("verdict = 'new'").select("doc_id")), "doc_id"
     )
-    dedup_index_append(spark, path, survivors)
+    dedup_index_append(spark, path, dedup_batch_rows(spark, path, survivors))
     second = {r.doc_id: r.verdict for r in dedup_index_check(spark, path, batch).collect()}
     for i in new_ids:
         assert second[i] == "exact_dup", (i, second[i])
@@ -214,7 +215,9 @@ def test_dedup_index_fold_preserves_verdicts(spark, tmp_path):
         F.broadcast(first.filter("verdict = 'new'").select("doc_id")),
         "doc_id",
     )
-    dedup_index_append(spark, path, survivors, ingest_batch=5)
+    dedup_index_append(
+        spark, path, dedup_batch_rows(spark, path, survivors), ingest_batch=5
+    )
     before = sorted(
         (r.doc_id, r.verdict, r.n_near)
         for r in dedup_index_check(spark, path, batch).collect()
@@ -232,3 +235,50 @@ def test_dedup_index_fold_preserves_verdicts(spark, tmp_path):
             .select("ingest_batch").distinct().collect()
         }
         assert parts == {-2}, (sub, parts)
+
+
+def test_gate_appends_equal_the_from_text_derivation(spark, tmp_path):
+    """The gate appends its survivors' slice of the batch relations it
+    checked with. Those `ingest_batch=N` store rows must equal the
+    fingerprints and band buckets derived afresh from the survivors'
+    text with the sidecar's parameters, including a survivor too short
+    to shingle (a fingerprint row, no band rows)."""
+    from github_etl_spark.operators.dedup import minhash_band_buckets
+    from github_etl_spark.operators.incremental import _fingerprints, _read_meta
+    from github_etl_spark.streaming.dedup_gate import make_dedup_gate
+
+    corpus, batch = _split(spark)
+    index = str(tmp_path / "index")
+    dedup_index_build(corpus, index)
+    out = str(tmp_path / "admitted")
+    short = spark.createDataFrame([(9001, "too short")], "doc_id long, text string")
+    make_dedup_gate(spark, index, out)(
+        batch.select("doc_id", "text").unionByName(short), 3
+    )
+
+    survivors = spark.read.parquet(out).drop("ingest_batch")
+    assert 9001 in {r.doc_id for r in survivors.select("doc_id").collect()}
+    meta = _read_meta(spark, index)
+
+    def rows(df):
+        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+    def appended(sub):
+        return rows(
+            spark.read.parquet(f"{index}/{sub}")
+            .where(F.col("ingest_batch") == 3)
+            .drop("ingest_batch")
+        )
+
+    fps = appended("fingerprints")
+    assert fps == rows(_fingerprints(survivors, "text", "doc_id"))
+    bands = appended("bands")
+    assert bands == rows(
+        minhash_band_buckets(
+            survivors, "text", "doc_id",
+            meta["num_hashes"], meta["bands"], meta["shingle"],
+            meta["hash_family"],
+        )
+    )
+    assert 9001 in {r[0] for r in fps}
+    assert 9001 not in {r[2] for r in bands}  # sorted columns: band, bucket, doc, signature

@@ -168,3 +168,73 @@ def test_pretrain_gate_idempotent_replay(spark, tmp_path):
     gate(b0, 0)  # replay after a "crash" post-publish
     assert sorted(map(tuple, spark.read.parquet(out).collect())) == first
     assert _store_state(spark, index, span_store) == state
+
+
+def _batch_partitions(index, span_store, batch_id):
+    """The store tables that hold an ``ingest_batch=<batch_id>``
+    partition directory."""
+    return {
+        name
+        for name, table in (
+            ("fingerprints", f"{index}/fingerprints"),
+            ("bands", f"{index}/bands"),
+            ("spans", f"{span_store}/spans"),
+        )
+        if os.path.isdir(os.path.join(table, f"ingest_batch={batch_id}"))
+    }
+
+
+def test_failed_output_publish_lands_no_store_partition(spark, tmp_path):
+    """The output table is published before the concurrent store
+    appends start: when that publish fails, no store holds a partition
+    of the batch."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    from github_etl_spark.streaming.pipeline import _persisting
+
+    seed, batches = _doc_batches(spark)
+    index = str(tmp_path / "fp_index")
+    span_store = str(tmp_path / "span_store")
+    _build_stores(seed, index, span_store)
+    # A regular file where the output table belongs fails its write.
+    blocked = str(tmp_path / "blocked")
+    open(blocked, "w").close()
+    gate = make_pretrain_gate(spark, index, span_store, blocked)
+    with pytest.raises(Py4JJavaError):
+        _persisting(gate)(batches[0][1], 4)
+    assert _batch_partitions(index, span_store, 4) == set()
+
+
+def test_failing_span_append_still_lands_the_index_appends(
+    spark, tmp_path, monkeypatch
+):
+    """A failing span-key append does not stop the concurrent index
+    appends: the batch's fingerprint and band partitions land, the
+    span append's error is raised, and every persisted frame is
+    released."""
+    import pytest
+
+    from github_etl_spark.streaming import pretrain_gate
+    from github_etl_spark.streaming.pipeline import _persisting
+
+    class SpanAppendFailed(RuntimeError):
+        pass
+
+    def failing_append(*args, **kwargs):
+        raise SpanAppendFailed("span store unavailable")
+
+    monkeypatch.setattr(pretrain_gate, "span_index_append", failing_append)
+    seed, batches = _doc_batches(spark)
+    index = str(tmp_path / "fp_index")
+    span_store = str(tmp_path / "span_store")
+    _build_stores(seed, index, span_store)
+    out = str(tmp_path / "published")
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    gate = make_pretrain_gate(spark, index, span_store, out)
+    with pytest.raises(SpanAppendFailed):
+        _persisting(gate)(batches[0][1], 4)
+    assert _batch_partitions(index, span_store, 4) == {"fingerprints", "bands"}
+    assert spark.read.parquet(out).where("ingest_batch = 4").count() > 0
+    assert cm.isEmpty(), "a failed span append leaked a CacheManager entry"
