@@ -1,7 +1,8 @@
 """Streaming pretraining composite (streaming/pretrain_gate.py): the
 live foreachBatch chain ≡ the deterministic fold the oracle checks
 (`pretrain_gate_replay`), store convergence with the direct batch
-fold, checkpoint-wipe replay, and per-batch idempotence. The fold's
+fold, checkpoint-wipe replay, per-batch idempotence, and the publish
+order and failure handling of the concurrent store appends. The fold's
 VALUES are oracle-checked by the driver; these tests pin the live
 machinery around it.
 """
@@ -12,10 +13,14 @@ import json
 import os
 import shutil
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from github_etl_spark.operators.curation import span_index_build
 from github_etl_spark.operators.incremental import dedup_index_build
+from github_etl_spark.streaming import pretrain_gate
+from github_etl_spark.streaming.pipeline import _persisting
 from github_etl_spark.streaming.pretrain_gate import (
     make_pretrain_gate,
     pretrain_fold_verdicts,
@@ -188,11 +193,6 @@ def test_failed_output_publish_lands_no_store_partition(spark, tmp_path):
     """The output table is published before the concurrent store
     appends start: when that publish fails, no store holds a partition
     of the batch."""
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    from github_etl_spark.streaming.pipeline import _persisting
-
     seed, batches = _doc_batches(spark)
     index = str(tmp_path / "fp_index")
     span_store = str(tmp_path / "span_store")
@@ -213,11 +213,6 @@ def test_failing_span_append_still_lands_the_index_appends(
     appends: the batch's fingerprint and band partitions land, the
     span append's error is raised, and every persisted frame is
     released."""
-    import pytest
-
-    from github_etl_spark.streaming import pretrain_gate
-    from github_etl_spark.streaming.pipeline import _persisting
-
     class SpanAppendFailed(RuntimeError):
         pass
 
