@@ -133,9 +133,13 @@ def _make_batch_loader(sink_base: str, repo: str, snapshot_date: str | _dt.date)
 
 def _persisting(body):
     """``body`` with its micro-batch persisted for the call (the body's
-    writes re-read it) and released after, raised or not."""
+    writes re-read it) and released after, raised or not. The stream
+    thread inherits `start()`'s call site, which would name every job
+    of the body `start at …`; it is cleared first, so the body's jobs
+    carry their own call sites in the UI and the event log."""
 
     def _run(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.sparkSession.sparkContext.setLocalProperty("callSite.short", None)
         with persisted(batch_df):
             body(batch_df, batch_id)
 

@@ -23,6 +23,7 @@ from github_etl_spark.streaming import (
     stream_landing,
     tumbling_counts,
 )
+from github_etl_spark.streaming.pipeline import _persisting
 from tests.mock_github_server import N_PRS, MockGithub
 
 EVENT_SCHEMA = "event_id long, user_id long, ts timestamp, event_type string"
@@ -134,6 +135,22 @@ def test_run_concurrently_isolates_job_groups_and_raises_first_failure(spark):
         sys.setswitchinterval(old)
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_batch_body_runs_without_the_inherited_start_call_site(spark):
+    """A stream thread inherits `start()`'s call site, which would name
+    every job of a foreachBatch body `start at …`; `_persisting` clears
+    it before the body runs."""
+    sc = spark.sparkContext
+    seen = []
+    sc.setLocalProperty("callSite.short", "start at NativeMethodAccessorImpl.java:0")
+    try:
+        _persisting(lambda df, i: seen.append(sc.getLocalProperty("callSite.short")))(
+            spark.range(1), 0
+        )
+    finally:
+        sc.setLocalProperty("callSite.short", None)
+    assert seen == [None]
 
 
 def test_run_batch_multi_repo_matches_single_repo_runs(spark, tmp_path):
