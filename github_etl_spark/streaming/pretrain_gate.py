@@ -159,9 +159,9 @@ def make_pretrain_gate(
                 _span_doc_summary(bstats, spans, "doc_id"), "doc_id",
             )
             publish_batch_partition(out, out_path, batch_id)
-            # The store appends read only persisted frames and write
-            # disjoint tables: run them side by side, all finishing
-            # before the frames are released.
+            # The store appends derive only from persisted frames and
+            # write disjoint tables: run them side by side, all
+            # finishing before the frames are released.
             run_concurrently(
                 [
                     functools.partial(
