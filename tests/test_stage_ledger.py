@@ -20,12 +20,10 @@ def _plan(name, *children):
     return {"nodeName": name, "simpleString": name, "children": list(children)}
 
 
-def _job(jid, t, group, execution, stages, site=None):
+def _job(jid, t, group, execution, stages):
     props = {"spark.jobGroup.id": group}
     if execution is not None:
         props["spark.sql.execution.id"] = str(execution)
-    if site:
-        props["callSite.short"] = site
     return [
         {"Event": "SparkListenerJobStart", "Job ID": jid, "Submission Time": t,
          "Stage Infos": [{"Stage ID": sid, "Stage Name": name} for sid, name in stages],
@@ -44,8 +42,7 @@ def _events():
     return [
         {"Event": "SparkListenerLogStart", "Spark Version": "4.1.2"},
         {"Event": _SQL + "Start", "executionId": 7, "time": 1000, "sparkPlanInfo": meta_read},
-        *_job(0, 1005, "batch0", 7, [(0, "call at py4j/clientserver.py:644")],
-              site="call at py4j/clientserver.py:644"),
+        *_job(0, 1005, "batch0", 7, [(0, "call at py4j/clientserver.py:644")]),
         {"Event": _SQL + "End", "executionId": 7, "time": 1030},
         {"Event": _SQL + "Start", "executionId": 8, "time": 1100, "sparkPlanInfo": write},
         *_job(1, 1110, "batch0", 8, [(1, _AQE)]),

@@ -19,9 +19,10 @@ execution (execution ``-``), with:
 - ``sites``: job counts by call-site name — the function in the job's
   result-stage name (``parquet``, ``javaToPython``, ``text`` …), or
   ``AQE stage`` for stages that adaptive execution submits from its
-  own threads (query stages, broadcasts). A job called from a Python
-  callback thread (a ``foreachBatch`` body) has no JVM call site; it
-  is named by its execution's root node (e.g. ``CollectLimit``).
+  own threads (query stages, broadcasts). A job whose stage PySpark
+  named after a Python frame (a collect in a ``foreachBatch`` body or
+  on a worker thread) is named by its execution's root node instead
+  (e.g. ``CollectLimit``).
 
 Usage: python tools/stage_ledger.py EVENT_LOG_DIR [--group PREFIX]
 """
@@ -54,9 +55,12 @@ def _writes(plan: dict) -> bool:
     )
 
 
-def _site(stage_name: str) -> str:
-    fn = stage_name.split(" at ", 1)[0]
-    return AQE_STAGE if fn.startswith("$anonfun$withThreadLocalCaptured") else fn
+def _site(stage_name: str) -> str | None:
+    """The call-site name in a stage name; None for a Python frame."""
+    fn, _, where = stage_name.partition(" at ")
+    if fn.startswith("$anonfun$withThreadLocalCaptured"):
+        return AQE_STAGE
+    return None if ".py:" in where else fn
 
 
 def read_events(lines) -> list[dict]:
@@ -85,7 +89,6 @@ def read_events(lines) -> list[dict]:
                 "exec": int(exe) if exe is not None else None,
                 "submit": ev["Submission Time"], "end": None,
                 "site": _site(result["Stage Name"]) if result else "(no stages)",
-                "callback": "py4j" in (props.get("callSite.short") or ""),
             }
         elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
             jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
@@ -108,10 +111,7 @@ def read_events(lines) -> list[dict]:
         row["jobs"] += 1
         row["job_ms"] += end - j["submit"]
         row["last"] = max(row["last"], end)
-        site = j["site"]
-        if j["callback"] or site == "call":
-            site = row["root"] or site
-        row["sites"][site] += 1
+        row["sites"][j["site"] or row["root"] or "python"] += 1
     out = []
     for row in rows.values():
         ex = row.pop("_exec")
