@@ -285,10 +285,10 @@ class BatchRows(NamedTuple):
             fingerprints=fn(self.fingerprints), bands=fn(self.bands)
         )
 
-    def of(self, ids: DataFrame, id_col: str = "doc_id") -> BatchRows:
-        """The rows of the documents in ``ids`` (an ``id_col`` frame):
-        a left-semi join with the ids broadcast."""
-        keep = F.broadcast(ids.select(F.col(id_col).alias("doc")))
+    def of(self, ids: DataFrame) -> BatchRows:
+        """The rows of the documents in ``ids`` (a ``doc_id`` frame): a
+        left-semi join with the ids broadcast."""
+        keep = F.broadcast(ids.select(F.col("doc_id").alias("doc")))
         return self.map(lambda df: df.join(keep, "doc", "left_semi"))
 
 

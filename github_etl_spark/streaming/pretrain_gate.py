@@ -128,18 +128,11 @@ def make_pretrain_gate(
                 return held.enter_context(persisted(df))
 
             gated = hold(batch_df.where(web_gate_expr(F.col("text"))))
-            # Both sidecars are read here, once and side by side, before
-            # any durable write: a missing or mis-keyed store fails
-            # before the output table or the other store holds a row of
-            # this batch.
-            rows, _ = run_concurrently(
-                [
-                    functools.partial(dedup_batch_rows, spark, index_path, gated),
-                    functools.partial(_read_span_meta, spark, span_store_path),
-                ],
-                2,
-            )
-            rows = rows.map(hold)
+            # Both sidecars are read here, once each, before any durable
+            # write: a missing or mis-keyed store fails before the output
+            # table or the other store holds a row of this batch.
+            _read_span_meta(spark, span_store_path)
+            rows = dedup_batch_rows(spark, index_path, gated).map(hold)
             # output row + survivor filter
             fp = hold(dedup_index_check(
                 spark, index_path, gated,
