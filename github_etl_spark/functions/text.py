@@ -69,9 +69,9 @@ def _stop_hits(text_col, stops):
     return F.size(F.filter(words_expr(text_col), lambda w: w.isin(*stops)))
 
 
-def stopword_ratio_expr(text_col, stops=EN_STOPWORDS):
+def stopword_ratio_expr(text_col):
     """Fraction of tokens that are stopwords (fluency signal)."""
-    return _stop_hits(text_col, stops) / F.greatest(
+    return _stop_hits(text_col, EN_STOPWORDS) / F.greatest(
         token_count_expr(text_col), F.lit(1)
     ).cast("double")
 

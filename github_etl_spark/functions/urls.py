@@ -100,7 +100,7 @@ CANONICALIZE_URL_SQL_CTES = """
 """
 
 
-def synthesize_urls(docs, id_col: str = "doc_id") -> "F.DataFrame":  # type: ignore[name-defined]
+def synthesize_urls(docs) -> "F.DataFrame":  # type: ignore[name-defined]
     """Deterministic URL fixtures over `documents`: each doc gets a URL
     whose NOISE varies by id residue (scheme casing / schemeless,
     `WWW.`/`www.`/bare, mixed-case host, utm params in first and last
@@ -109,7 +109,7 @@ def synthesize_urls(docs, id_col: str = "doc_id") -> "F.DataFrame":  # type: ign
     canonicalization provably collapses variant groups. Pure column
     expressions, replayed verbatim by the DuckDB oracle
     (see SYNTHESIZE_URLS_SQL / dedup_url_canonical)."""
-    i = F.col(id_col)
+    i = F.col("doc_id")
     scheme = (
         F.when(i % 3 == 0, F.lit("https://"))
         .when(i % 3 == 1, F.lit("HTTP://"))

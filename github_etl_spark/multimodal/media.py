@@ -78,26 +78,26 @@ MEDIA_SCHEMA = T.StructType(
 )
 
 
-def synthesize_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def synthesize_media(docs: DataFrame) -> DataFrame:
     """Deterministic media fixtures from the `documents` table: the
     UTF-8 bytes of the text become the payload; metadata is derived
     from the id. Pure column ops — no UDF, reproducible at any SF."""
-    n = F.coalesce(F.length(text_col).cast("int"), F.lit(0))
+    n = F.coalesce(F.length("text").cast("int"), F.lit(0))
     width = (n / F.lit(8)).cast("int") + F.lit(1)
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         F.struct(
             F.element_at(
                 F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-                (F.col(id_col) % 3 + 1).cast("int"),
+                (F.col("doc_id") % 3 + 1).cast("int"),
             ).alias("media_type"),
             width.alias("width"),
             F.lit(8).alias("height"),
             F.lit(16000).alias("sample_rate"),
-            (F.col(id_col) % 7 + 1).cast("int").alias("n_frames"),
+            (F.col("doc_id") % 7 + 1).cast("int").alias("n_frames"),
             F.lit("raw-u8").alias("codec"),
         ).alias("meta"),
-        F.encode(F.coalesce(F.col(text_col), F.lit("")), "UTF-8").alias("content"),
+        F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8").alias("content"),
     )
 
 
@@ -438,11 +438,7 @@ def embed_text_vec(
     return staged.select(id_col, *extra, vec.alias("vec"))
 
 
-def embed_text_linear(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def embed_text_linear(df: DataFrame) -> DataFrame:
     """Documents → embedding vectors as a VERIFIED derivation: a
     frozen integer-quantized linear encoder over hash-bucketed
     bag-of-words counts. f_j = count of words whose portable md5
@@ -460,8 +456,8 @@ def embed_text_linear(
     UDF, no model on the driver. Emits the vector as a space-joined
     string (catalog-wide complex-cell ban) plus integer checksums."""
     vec = F.col("vec")
-    return embed_text_vec(df, text_col, id_col).select(
-        id_col,
+    return embed_text_vec(df, "text", "doc_id").select(
+        "doc_id",
         F.array_join(vec, " ").alias("embedding"),
         F.aggregate(vec, F.lit(0).cast("long"), lambda a, x: a + x).alias(
             "sum_e"
@@ -564,9 +560,7 @@ def decode_bmp24(content: bytes | bytearray | memoryview) -> np.ndarray:
     return bgr[:, :, ::-1].copy()
 
 
-def synthesize_bmp_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-format image fixtures: each document becomes
     a (id%5+2) × (id%3+2) 24-bit BMP whose RGB bytes tile the UTF-8
     text (byte j = text_byte[j mod len]; all-zero pixels for empty
@@ -578,7 +572,7 @@ def synthesize_bmp_media(
         w, h = mid % 5 + 2, mid % 3 + 2
         return encode_bmp24(_tiled_text(text, w * h * 3).reshape(h, w, 3))
 
-    return _synthesize(docs, (id_col, text_col), encode)
+    return _synthesize(docs, ("doc_id", "text"), encode)
 
 
 def bmp_decode_stats(media: DataFrame) -> DataFrame:
@@ -747,9 +741,7 @@ def encode_wav_mulaw(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
     return header + data
 
 
-def synthesize_mulaw_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_mulaw_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL compressed-audio fixtures: each document
     becomes a mono G.711 mu-law WAV (format tag 7, 8 kHz) of
     (id%50+10) samples, sample j = mulaw_decode(text_byte[j mod len])
@@ -762,16 +754,14 @@ def synthesize_mulaw_media(
     (mm_mulaw_roundtrip_stats) — putting the G.711 expansion inside
     decode_wav16 under the driver's hash gate, not just pytest."""
     return _synthesize(
-        docs, (id_col, text_col),
+        docs, ("doc_id", "text"),
         lambda mid, text: encode_wav_mulaw(
             mulaw_decode(_tiled_text(text, mid % 50 + 10)), 8000
         ),
     )
 
 
-def synthesize_wav_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_wav_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-format audio fixtures: each document becomes
     a mono PCM-16 WAV of (id%50+10) samples at 8/12/16 kHz (id%3),
     sample j = (text_byte[j mod len] - 128) * 256 (all-zero for empty
@@ -780,7 +770,7 @@ def synthesize_wav_media(
     oracle verifies the encode→decode roundtrip without parsing WAV
     (see mm_wav_roundtrip_stats)."""
     return _synthesize(
-        docs, (id_col, text_col),
+        docs, ("doc_id", "text"),
         lambda mid, text: encode_wav16(*_fixture_pcm(mid, text)),
     )
 
@@ -933,9 +923,7 @@ def decode_y4m(
     )
 
 
-def synthesize_y4m_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_y4m_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-format video fixtures: each document becomes
     a (id%4+1)-frame mono Y4M clip of (id%5+2) × (id%3+2) pixels whose
     luma tiles the UTF-8 text across ALL frames (byte j of the
@@ -947,7 +935,7 @@ def synthesize_y4m_media(
         nf, w, h = mid % 4 + 1, mid % 5 + 2, mid % 3 + 2
         return encode_y4m(_tiled_text(text, nf * h * w).reshape(nf, h, w))
 
-    return _synthesize(docs, (id_col, text_col), encode)
+    return _synthesize(docs, ("doc_id", "text"), encode)
 
 
 def y4m_frame_stats(media: DataFrame, every_n: int = 1) -> DataFrame:
@@ -1127,7 +1115,7 @@ def _paeth_predict(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
-def encode_png(pixels: np.ndarray, level: int = 6) -> bytes:
+def encode_png(pixels: np.ndarray) -> bytes:
     """Serialize a (h, w) or (h, w, c) uint8 array (c = 1/2/3/4 →
     color type 0/4/2/6) as a real non-interlaced 8-bit PNG. The
     per-row filter type is chosen deterministically as
@@ -1174,7 +1162,7 @@ def encode_png(pixels: np.ndarray, level: int = 6) -> bytes:
     return (
         _PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(out), level))
+        + _png_chunk(b"IDAT", zlib.compress(bytes(out), 6))
         + _png_chunk(b"IEND", b"")
     )
 
@@ -1286,9 +1274,7 @@ def decode_png(content: bytes | bytearray | memoryview) -> np.ndarray:
     return recon.reshape(h, w, ch)
 
 
-def synthesize_png_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_png_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-compressed-format image fixtures: each
     document becomes a (id%4+2) × (id%3+2) 8-bit RGB PNG whose pixel
     bytes tile the UTF-8 text (byte j = text_byte[j mod len]; zeros
@@ -1301,7 +1287,7 @@ def synthesize_png_media(
         w, h = mid % 4 + 2, mid % 3 + 2
         return encode_png(_tiled_text(text, w * h * 3).reshape(h, w, 3))
 
-    return _synthesize(docs, (id_col, text_col), encode)
+    return _synthesize(docs, ("doc_id", "text"), encode)
 
 
 def png_decode_stats(media: DataFrame) -> DataFrame:
@@ -1471,9 +1457,7 @@ FEATURE_PAIRS: tuple[tuple[int, int], ...] = (
 )
 
 
-def synthesize_feature_image_media(
-    docs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def synthesize_feature_image_media(docs: DataFrame) -> DataFrame:
     """Deterministic MIXED-FORMAT image fixtures for the media→ANN
     composition: each document becomes a 16x8 grayscale image whose
     top 8 rows hold gray ``a`` and bottom 8 rows gray ``b`` with
@@ -1497,7 +1481,7 @@ def synthesize_feature_image_media(
         rgb = np.repeat(gray[:, :, None], 3, axis=2)
         return (encode_bmp24, encode_png, encode_qoi)[fmt](rgb)
 
-    return _synthesize(docs, (id_col,), encode)
+    return _synthesize(docs, ("doc_id",), encode)
 
 
 # ----------------------------------------------------------- real codec: QOI
@@ -1670,9 +1654,7 @@ def decode_qoi(content: bytes | bytearray | memoryview) -> np.ndarray:
     return out.reshape(h, w, 4)[:, :, :ch].copy()
 
 
-def synthesize_qoi_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_qoi_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-format QOI fixtures: each document becomes a
     (id%4+2) × (id%3+2) RGB QOI image whose pixel bytes tile the UTF-8
     text (same rule as the PNG fixtures), so the SQL oracle can verify
@@ -1684,7 +1666,7 @@ def synthesize_qoi_media(
         w, h = mid % 4 + 2, mid % 3 + 2
         return encode_qoi(_tiled_text(text, w * h * 3).reshape(h, w, 3))
 
-    return _synthesize(docs, (id_col, text_col), encode)
+    return _synthesize(docs, ("doc_id", "text"), encode)
 
 
 def qoi_decode_stats(media: DataFrame) -> DataFrame:
@@ -1737,9 +1719,7 @@ def _image_decode_stats(media: DataFrame, decode_fn) -> DataFrame:
 # the pytest suite.
 
 
-def synthesize_jpeg_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_jpeg_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-JPEG fixtures in the bit-exact regime: each
     document becomes a ((id%3+1)*8) × ((id%2+1)*8) grayscale baseline
     JPEG whose aligned 8x8 blocks are CONSTANT — block k (row-major)
@@ -1758,7 +1738,7 @@ def synthesize_jpeg_media(
             img, qtables=(DC8_QTABLE, DC8_QTABLE), restart_interval=2
         )
 
-    return _synthesize(docs, (id_col, text_col), encode)
+    return _synthesize(docs, ("doc_id", "text"), encode)
 
 
 def jpeg_decode_stats(media: DataFrame) -> DataFrame:
@@ -1784,9 +1764,7 @@ def jpeg_decode_stats(media: DataFrame) -> DataFrame:
 # PCM WAV path (mm_flac_roundtrip_stats).
 
 
-def synthesize_flac_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_flac_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-FLAC fixtures: the SAME sample rule as the
     WAV fixtures — mono, (id%50+10) samples at 8/12/16 kHz (id%3),
     sample j = (text_byte[j mod len] - 128) * 256 — losslessly
@@ -1797,7 +1775,7 @@ def synthesize_flac_media(
     from .flac import encode_flac
 
     return _synthesize(
-        docs, (id_col, text_col),
+        docs, ("doc_id", "text"),
         lambda mid, text: encode_flac(*_fixture_pcm(mid, text)),
     )
 
@@ -1873,9 +1851,7 @@ def flac_decode_stats(media: DataFrame) -> DataFrame:
 # decoder would violate the never-wrong-pixels contract.
 
 
-def synthesize_mjpeg_media(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def synthesize_mjpeg_media(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-MJPEG fixtures in the bit-exact JPEG regime:
     each document becomes an AVI clip of (id%3+1) grayscale frames of
     (id%2+1)x1 constant 8x8 blocks — frame f, block k holds text byte
@@ -1893,7 +1869,7 @@ def synthesize_mjpeg_media(
             frames, fps=10, qtables=(DC8_QTABLE, DC8_QTABLE)
         )
 
-    return _synthesize(docs, (id_col, text_col), encode)
+    return _synthesize(docs, ("doc_id", "text"), encode)
 
 
 def mjpeg_frame_stats(media: DataFrame) -> DataFrame:

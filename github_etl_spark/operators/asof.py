@@ -28,12 +28,11 @@ def asof_join(
     on: str,
     left_time: str,
     right_time: str,
-    prefix: str = "right_",
 ) -> DataFrame:
     """For each left row, attach the latest right row with
     ``right[right_time] <= left[left_time]``, matched on ``on``.
 
-    Right columns (except the key) come back ``prefix``-renamed; left
+    Right columns (except the key) come back ``right_``-prefixed; left
     rows with no prior right row get NULLs (left-outer semantics).
     Ties on time resolve to "right row at the same instant matches"
     (inclusive), mirroring pandas merge_asof and DuckDB ASOF. Multiple
@@ -78,7 +77,7 @@ def asof_join(
             F.col(on),
             F.col("_asof_time").alias(left_time),
             *[F.col(c) for c in lcols],
-            *[F.col("_asof_payload")[c].alias(prefix + c) for c in rcols],
+            *[F.col("_asof_payload")[c].alias("right_" + c) for c in rcols],
         )
     )
 

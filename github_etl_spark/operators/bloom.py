@@ -179,8 +179,6 @@ def bloom_prefilter_join(
     probe_key: str,
     how: str = "inner",
     num_bits: int | None = None,
-    num_hashes: int = 5,
-    fpp: float = 0.03,
     max_literal_words: int = MAX_LITERAL_WORDS,
 ) -> DataFrame:
     """Exact equi-join with a bloom pre-filter on the fact side.
@@ -204,16 +202,16 @@ def bloom_prefilter_join(
         )
     if num_bits is None:
         n = probe.select(probe_key).distinct().count()
-        num_bits = optimal_bits(n, fpp)
+        num_bits = optimal_bits(n, 0.03)
     if num_bits // 64 <= max_literal_words:
-        words = build_bloom(probe, probe_key, num_bits, num_hashes)
+        words = build_bloom(probe, probe_key, num_bits, 5)
         pruned = fact.where(
-            bloom_might_contain(F.col(fact_key), words, num_hashes)
+            bloom_might_contain(F.col(fact_key), words, 5)
         )
     else:
-        words_df = build_bloom_df(probe, probe_key, num_bits, num_hashes)
+        words_df = build_bloom_df(probe, probe_key, num_bits, 5)
         pruned = bloom_broadcast_filter(
-            fact, fact_key, words_df, num_bits, num_hashes
+            fact, fact_key, words_df, num_bits, 5
         )
     if how in ("semi", "left_semi", "leftsemi"):
         return pruned.join(

@@ -473,10 +473,7 @@ def _span_meta() -> dict:
     }
 
 
-def span_index_build(
-    corpus: DataFrame, path: str, text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
+def span_index_build(corpus: DataFrame, path: str) -> None:
     """Materialize the span store: the corpus's DISTINCT
     three-sentence-span keys at `{path}/spans` (partitioned by
     `ingest_batch`, build rows in partition −1), keying parameters at
@@ -497,7 +494,7 @@ def span_index_build(
         [(_json.dumps(_span_meta()),)], "value string"
     ).coalesce(1).write.mode("overwrite").text(path + _SPAN_META_SUFFIX)
     (
-        c4_spans_from(c4_kept_lines(corpus, text_col, id_col), id_col)
+        c4_spans_from(c4_kept_lines(corpus, "text", "doc_id"), "doc_id")
         .select("span_key")
         .distinct()
         .withColumn("ingest_batch", F.lit(-1).cast("long"))
@@ -550,8 +547,6 @@ def span_index_check(
     spark: SparkSession,
     path: str,
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     exclude_batch: int | None = None,
 ) -> DataFrame:
     """Classify a batch against a MATERIALIZED span store — same
@@ -560,12 +555,12 @@ def span_index_check(
     per-ingest cost is one store-parquet scan (span keys only, no
     text) plus batch-sized work."""
     _read_span_meta(spark, path)
-    bstats = c4_kept_lines(batch, text_col, id_col)
-    bspans = c4_spans_from(bstats, id_col)
+    bstats = c4_kept_lines(batch, "text", "doc_id")
+    bspans = c4_spans_from(bstats, "doc_id")
     rows = span_verdict_rows(
-        bspans, _span_store(spark, path, exclude_batch), id_col
+        bspans, _span_store(spark, path, exclude_batch), "doc_id"
     )
-    return _span_doc_summary(bstats, rows, id_col)
+    return _span_doc_summary(bstats, rows, "doc_id")
 
 
 def span_index_fold(spark: SparkSession, path: str) -> int:
@@ -822,7 +817,6 @@ BLOCKLIST_PHRASES = ("slow query", "big table", "merge join", "drop table")
 
 def blocklist_gate(
     df: DataFrame, text_col: str, id_col: str,
-    phrases: tuple[str, ...] = BLOCKLIST_PHRASES,
 ) -> DataFrame:
     """Phrase-blocklist page filter (the C4 "bad words" gate shape):
     per document, total occurrence count across the pinned phrases on
@@ -848,7 +842,7 @@ def blocklist_gate(
     terms = " + ".join(
         f"((length(__norm) - length(replace(__norm, ' {ph} ', '')))"
         f" / {len(ph) + 2})"
-        for ph in phrases
+        for ph in BLOCKLIST_PHRASES
     )
     hits = F.expr(terms)
     return staged.select(

@@ -213,7 +213,6 @@ def minhash_lsh_candidates(
     id_col: str,
     num_hashes: int = 32,
     bands: int = 8,
-    shingle: int = 3,
     max_bucket_size: int = 64,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -261,7 +260,7 @@ def minhash_lsh_candidates(
     max_bucket_size = max(2, int(max_bucket_size))
     sigs = eager_checkpoint(
         minhash_signatures(
-            df, text_col, id_col, num_hashes, shingle, hash_family=hash_family
+            df, text_col, id_col, num_hashes, 3, hash_family=hash_family
         )
     )
     band_cols = _band_bucket_structs(num_hashes, bands, hash_family)
@@ -391,7 +390,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     shingle: int = 3,
     max_df: int | None = None,
-    persist: bool = False,
     tokens_path: str | None = None,
 ) -> DataFrame:
     """Exact n-gram-shingle-set Jaccard over blocked candidate pairs.
@@ -435,16 +433,12 @@ def ngram_jaccard_pairs(
     The (filtered) token relation feeds three consumers — sizes and
     both join sides — and Spark re-derives it per consumer (no
     automatic subplan reuse), so the corpus is scanned and
-    re-tokenized up to 3× (plus the hot-gram count). `persist=True`
-    caches the token relation (MEMORY_AND_DISK) so the corpus is
-    scanned once; use it when the tokenized intermediate fits the
-    cluster's storage tier — at extreme scale prefer materializing
-    tokens as a staging table instead: ``tokens_path`` writes the
-    exploded token relation to parquet ONCE (the only corpus scan)
-    and feeds the hot-gram count and both join sides from the staging
-    table, so the downstream plan never touches the corpus again and
-    survives executor loss (unlike persist/localCheckpoint blocks).
-    ``tokens_path`` takes precedence over ``persist``.
+    re-tokenized up to 3× (plus the hot-gram count). ``tokens_path``
+    writes the exploded token relation to parquet ONCE (the only corpus
+    scan) and feeds the hot-gram count and both join sides from that
+    staging table, so the downstream plan never touches the corpus
+    again and survives executor loss (unlike persist/localCheckpoint
+    blocks).
     """
     grams = _shingles(F.col(text_col), shingle) if shingle > 1 else F.array_distinct(
         tokens_expr(F.col(text_col))
@@ -461,10 +455,6 @@ def ngram_jaccard_pairs(
         # the parquet staging table instead of re-deriving the tokens.
         toks.write.mode("overwrite").parquet(tokens_path)
         toks = df.sparkSession.read.parquet(tokens_path)
-    elif persist:
-        from pyspark import StorageLevel
-
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
     if max_df is not None:
         hot = (
             toks.groupBy(*block_cols, "tok")

@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 def funnel_stages(
     events: DataFrame,
     steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Per-user ordered-funnel timestamps: one output row per user who
     emitted at least one step event, with ``t1..tN`` = the time each
@@ -48,13 +45,13 @@ def funnel_stages(
     if n == 0:
         raise ValueError("empty funnel")
     evs = (
-        events.where(F.col(type_col).isin(list(steps)))
-        .groupBy(user_col)
+        events.where(F.col("event_type").isin(list(steps)))
+        .groupBy("user_id")
         .agg(
             F.array_sort(
                 F.collect_list(
                     F.struct(
-                        F.col(ts_col).alias("ts"), F.col(type_col).alias("et")
+                        F.col("ts"), F.col("event_type").alias("et")
                     )
                 )
             ).alias("evs")
@@ -78,12 +75,12 @@ def funnel_stages(
             )
         return F.struct(*fields)
 
-    folded = evs.select(user_col, F.aggregate("evs", init, step_fn).alias("f"))
+    folded = evs.select("user_id", F.aggregate("evs", init, step_fn).alias("f"))
     stage = F.lit(0)
     for i in range(n):  # deepest non-NULL step wins
         stage = F.when(folded["f"][f"t{i + 1}"].isNotNull(), i + 1).otherwise(stage)
     return folded.select(
-        user_col,
+        "user_id",
         *[folded["f"][f"t{i + 1}"].alias(f"t{i + 1}") for i in range(n)],
         stage.cast("int").alias("funnel_stage"),
     )
@@ -92,9 +89,6 @@ def funnel_stages(
 def cohort_retention(
     events: DataFrame,
     cohort_event: str = "signup",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """(cohort_week, week_offset, n_active) — classic retention
     triangle: users cohorted by the ISO week of their FIRST
@@ -107,17 +101,17 @@ def cohort_retention(
     map-side partial combine — and a broadcast-joinable cohort table.
     """
     first = (
-        events.where(F.col(type_col) == cohort_event)
-        .groupBy(user_col)
-        .agg(F.date_trunc("week", F.min(ts_col)).alias("cohort_week"))
+        events.where(F.col("event_type") == cohort_event)
+        .groupBy("user_id")
+        .agg(F.date_trunc("week", F.min("ts")).alias("cohort_week"))
     )
     active = events.select(
-        user_col, F.date_trunc("week", ts_col).alias("week")
+        "user_id", F.date_trunc("week", "ts").alias("week")
     ).distinct()
     return (
-        active.join(first, user_col)
+        active.join(first, "user_id")
         .select(
-            user_col,
+            "user_id",
             "cohort_week",
             (
                 F.datediff(F.col("week"), F.col("cohort_week")) / 7
@@ -125,5 +119,5 @@ def cohort_retention(
         )
         .where(F.col("week_offset") >= 0)
         .groupBy("cohort_week", "week_offset")
-        .agg(F.countDistinct(user_col).alias("n_active"))
+        .agg(F.countDistinct("user_id").alias("n_active"))
     )

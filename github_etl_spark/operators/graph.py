@@ -179,20 +179,14 @@ def connected_components(
     set actually shrinks under the bound (GraphFrames/GraphX apply the
     same small-graph cutover). 0 disables.
 
-    ``checkpoint_dir``: by default each round localCheckpoints the edge
-    set — executor-local blocks, so an executor loss mid-job kills the
-    computation (acceptable for an O(log n)-round job at moderate
-    scale). Passing a cluster-visible directory — or setting one on
-    the session up front via ``sparkContext.setCheckpointDir`` /
-    the ``spark.checkpoint.dir`` conf, which this operator picks up
-    automatically — switches every round to a RELIABLE checkpoint()
-    written there, making the iteration survive executor loss at the
-    cost of a filesystem round-trip per round; files persist under the
-    directory until the application exits (set
-    spark.cleaner.referenceTracking.cleanCheckpoints to reap them
-    eagerly on a long-running driver). On a production cluster the
-    session-level checkpoint dir should be set, so localCheckpoint is
-    the local-mode fast path, not the default at scale.
+    ``checkpoint_dir``: each round eagerly checkpoints the edge set
+    through ``session.eager_checkpoint`` — executor-local blocks unless
+    the session has a checkpoint dir, in which case every round writes
+    a RELIABLE checkpoint there and the iteration survives executor
+    loss at the cost of a filesystem round-trip per round. At scale set
+    the session-level ``spark.checkpoint.dir`` (docs/RUNBOOK_100TB.md)
+    rather than this per-call directory; each dead round's blocks and
+    files are freed as soon as the next round is materialized.
     """
     from ..session import scoped_checkpoint_dir
 
@@ -215,7 +209,7 @@ def _connected_components_run(
 ) -> DataFrame:
     # Reliable-vs-local selection lives in session.eager_checkpoint
     # (session checkpoint dir => reliable; executor-local otherwise).
-    from ..session import drop_checkpoint_files, eager_checkpoint as _ckpt
+    from ..session import eager_checkpoint as _ckpt, release
 
     from pyspark.storagelevel import StorageLevel
 
@@ -225,8 +219,7 @@ def _connected_components_run(
         if local_finish_edges and sig[0] <= local_finish_edges:
             rows = [(r["src"], r["dst"]) for r in e.collect()]
             spark = e.sparkSession
-            e.unpersist()  # drop the checkpoint blocks we just drained
-            drop_checkpoint_files(e)  # …and the reliable on-disk copy
+            release(e)  # the checkpoint blocks and files just drained
             return _local_components(spark, rows)
         # Each star consumes its edge relation TWICE (neighborhood-min
         # groupBy + probe join, both keyed on src). Hash-partition the
@@ -258,13 +251,12 @@ def _connected_components_run(
         nbrs.unpersist()
         oriented.unpersist()
         sig2 = _signature(e2)
-        # Drop the previous round's blocks AND reliable-checkpoint
-        # files now — unpersist alone leaves one full edge-set copy on
-        # disk per round in reliable mode. The FINAL round's files must
-        # stay: the returned DataFrame reads them lazily (they fall to
-        # the cleaner / app end — one copy, not one per round).
-        e.unpersist()
-        drop_checkpoint_files(e)
+        # Free the previous round's checkpoint blocks and files now —
+        # unpersist alone frees neither, leaving one full edge-set copy
+        # per round. The FINAL round's checkpoint must stay: the
+        # returned DataFrame reads it lazily (it falls to the cleaner /
+        # app end — one copy, not one per round).
+        release(e)
         e = e2
         if sig2 == sig:
             break
@@ -285,10 +277,7 @@ def cluster_assignment(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     broadcast_components: bool = True,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Canonical-document assignment for EVERY row of ``df`` given
     near-dup ``pairs``: docs in some pair get their component's min id,
@@ -302,10 +291,14 @@ def cluster_assignment(
     pathological corpus where most docs near-dup (components ~ corpus
     size), pass ``broadcast_components=False`` to fall back to a
     shuffle join instead of forcing an over-sized broadcast.
+
+    The component rounds checkpoint reliably under the session-level
+    ``spark.checkpoint.dir`` when one is set (docs/RUNBOOK_100TB.md),
+    executor-locally otherwise.
     """
-    comp = connected_components(
-        pairs, src=id_a, dst=id_b, checkpoint_dir=checkpoint_dir
-    ).withColumnRenamed("node", id_col)
+    comp = connected_components(pairs, src="id_a", dst="id_b").withColumnRenamed(
+        "node", id_col
+    )
     if broadcast_components:
         comp = F.broadcast(comp)
     return df.join(comp, id_col, "left").select(
@@ -319,9 +312,6 @@ def cluster_assignment(
 
 def triangle_count(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_degrees: bool = True,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """Global triangle count of the undirected graph (one row:
@@ -347,9 +337,8 @@ def triangle_count(
     cost is quadratic in out-degree, the same AQE byte-sizing trap as
     the span-dedup gram window.
 
-    ``broadcast_degrees``: the degree table is node-sized (usually ≪
-    edges) and feeds two equi-joins; broadcast by default, pass False
-    for graphs whose node table alone exceeds executor memory.
+    The degree table is node-sized (usually ≪ edges) and feeds two
+    equi-joins, so both are broadcast.
 
     ``edges_canonical``: the input is already distinct (src < dst)
     long pairs with no nulls/self-loops — e.g. straight out of
@@ -361,10 +350,10 @@ def triangle_count(
 
     Executes EAGERLY: the result is a single row, so it is materialized
     (checkpointed) before returning and the oriented-edge cache is
-    unpersisted — a long-lived session calling this in a loop no
-    longer accumulates a permanent CacheManager entry per call (r14;
-    VERDICT r13 item 3). The canonical-edge localCheckpoint blocks
-    are GC-bounded, not permanent.
+    unpersisted and the canonical-edge checkpoint released — a
+    long-lived session calling this in a loop accumulates neither a
+    CacheManager entry nor checkpoint blocks per call (r14; VERDICT r13
+    item 3).
     """
     # The canonical edge set feeds three consumers (degrees, ranking,
     # the n_edges stat); localCheckpoint it once instead of re-running
@@ -374,19 +363,17 @@ def triangle_count(
     # persisted frame is recomputed by every consumer that starts
     # before the first finishes caching (the degree broadcasts launch
     # async), and even pre-populated, the columnar cache write+read
-    # measured ~1.5 s slower than row-block checkpoint scans at sf0.1;
-    # its blocks are GC-reclaimed (ContextCleaner), unlike the
-    # CacheManager entry `fwd` leaked below.
+    # measured ~1.5 s slower than row-block checkpoint scans at sf0.1.
     from pyspark.storagelevel import StorageLevel
 
     if edges_canonical:
-        _require_integral(edges, src, dst)
+        _require_integral(edges, "src", "dst")
         e = edges.select(
-            F.col(src).cast("long").alias("src"),
-            F.col(dst).cast("long").alias("dst"),
+            F.col("src").cast("long").alias("src"),
+            F.col("dst").cast("long").alias("dst"),
         ).localCheckpoint()
     else:
-        e = _canonical_edges(edges, src, dst).localCheckpoint()
+        e = _canonical_edges(edges, "src", "dst").localCheckpoint()
     deg = (
         e.select(F.col("src").alias("v"))
         .unionAll(e.select(F.col("dst").alias("v")))
@@ -395,9 +382,7 @@ def triangle_count(
     )
     da = deg.select(F.col("v").alias("src"), F.col("deg").alias("deg_src"))
     db = deg.select(F.col("v").alias("dst"), F.col("deg").alias("deg_dst"))
-    if broadcast_degrees:
-        da, db = F.broadcast(da), F.broadcast(db)
-    ranked = e.join(da, "src").join(db, "dst")
+    ranked = e.join(F.broadcast(da), "src").join(F.broadcast(db), "dst")
     fwd = ranked.select(
         F.when(
             (F.col("deg_src") < F.col("deg_dst"))
@@ -439,16 +424,17 @@ def triangle_count(
         .crossJoin(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
     )
     # Materialize the 1-row result, then RELEASE the oriented-edge
-    # cache: pre-r14 `fwd` stayed persisted forever (one leaked
-    # MEMORY_AND_DISK CacheManager entry per call in a long-lived
-    # session — VERDICT r13 item 3; the pagerank release idiom, guide
-    # §5). The returned frame reads only its own 1-row snapshot, so
-    # the caller's plan never re-touches the dropped cache; `e`'s
-    # localCheckpoint blocks fall to the ContextCleaner as before.
-    from ..session import eager_checkpoint
+    # cache and the canonical-edge checkpoint: pre-r14 `fwd` stayed
+    # persisted forever (one leaked MEMORY_AND_DISK CacheManager entry
+    # per call in a long-lived session — VERDICT r13 item 3; the
+    # pagerank release idiom, guide §5). The returned frame reads only
+    # its own 1-row snapshot, so the caller's plan never re-touches
+    # either.
+    from ..session import eager_checkpoint, release
 
     out = eager_checkpoint(out)
     fwd.unpersist()
+    release(e)
     return out
 
 
@@ -565,7 +551,7 @@ def pagerank_fixed_point(
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     _require_integral(edges, src, dst)
-    from ..session import drop_checkpoint_files, eager_checkpoint as _ckpt
+    from ..session import eager_checkpoint as _ckpt, release
 
     spark = edges.sparkSession
 
@@ -661,8 +647,7 @@ def pagerank_fixed_point(
         if (it + 1) % checkpoint_interval == 0 or it == iterations - 1:
             nxt = _ckpt(nxt)
             if last_ckpt is not None:
-                last_ckpt.unpersist()
-                drop_checkpoint_files(last_ckpt)
+                release(last_ckpt)
             last_ckpt = nxt
         ranks = nxt
     if last_ckpt is None:

@@ -155,11 +155,6 @@ def _verdicts(
 def incremental_dedup_verdicts(
     corpus: DataFrame,
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle: int = 3,
     threshold: float = 0.5,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -172,17 +167,17 @@ def incremental_dedup_verdicts(
     Corpus/batch ids are assumed disjoint (they are different tables in
     any real ingest); overlapping ids would self-match.
     """
-    corpus_fp = _fingerprints(corpus, text_col, id_col)
-    batch_fp = _fingerprints(batch, text_col, id_col)
+    corpus_fp = _fingerprints(corpus, "text", "doc_id")
+    batch_fp = _fingerprints(batch, "text", "doc_id")
     corpus_bands = minhash_band_buckets(
-        corpus, text_col, id_col, num_hashes, bands, shingle, hash_family
+        corpus, "text", "doc_id", hash_family=hash_family
     )
     batch_bands = minhash_band_buckets(
-        batch, text_col, id_col, num_hashes, bands, shingle, hash_family
+        batch, "text", "doc_id", hash_family=hash_family
     )
     return _verdicts(
         batch, batch_fp, batch_bands, corpus_fp, corpus_bands,
-        id_col, num_hashes, threshold,
+        "doc_id", _DEFAULT_META["num_hashes"], threshold,
     )
 
 
@@ -206,12 +201,6 @@ def _capped_bands(bands_df: DataFrame, max_bucket_size: int) -> DataFrame:
 def dedup_index_build(
     corpus: DataFrame,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle: int = 3,
-    hash_family: str = "xxhash64",
     max_bucket_size: int = 64,
 ) -> None:
     """Materialize the dedup index: fingerprint store at
@@ -225,24 +214,16 @@ def dedup_index_build(
     hash family.
     """
     spark = corpus.sparkSession
-    meta = {
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle": shingle,
-        "hash_family": hash_family,
-        "max_bucket_size": max_bucket_size,
-    }
+    meta = {**_DEFAULT_META, "max_bucket_size": max_bucket_size}
     spark.createDataFrame(
         [(json.dumps(meta),)], "value string"
     ).coalesce(1).write.mode("overwrite").text(path + _META_SUFFIX)
-    _fingerprints(corpus, text_col, id_col).withColumn(
+    _fingerprints(corpus, "text", "doc_id").withColumn(
         "ingest_batch", F.lit(-1).cast("long")
     ).write.mode("overwrite").partitionBy("ingest_batch").parquet(
         f"{path}/fingerprints"
     )
-    bands_df = minhash_band_buckets(
-        corpus, text_col, id_col, num_hashes, bands, shingle, hash_family
-    )
+    bands_df = minhash_band_buckets(corpus, "text", "doc_id")
     _capped_bands(bands_df, max_bucket_size).withColumn(
         "ingest_batch", F.lit(-1).cast("long")
     ).write.mode("overwrite").partitionBy("ingest_batch").parquet(
@@ -318,9 +299,6 @@ def dedup_index_check(
     spark: SparkSession,
     path: str,
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
     exclude_batch: int | None = None,
     rows: BatchRows | None = None,
 ) -> DataFrame:
@@ -336,7 +314,7 @@ def dedup_index_check(
     rows can't flip its verdicts (`streaming.pipeline.stream_files`).
     """
     if rows is None:
-        rows = dedup_batch_rows(spark, path, batch, text_col, id_col)
+        rows = dedup_batch_rows(spark, path, batch, "text", "doc_id")
     corpus_fp = spark.read.parquet(f"{path}/fingerprints")
     corpus_bands = spark.read.parquet(f"{path}/bands")
     if exclude_batch is not None:
@@ -346,7 +324,7 @@ def dedup_index_check(
         )
     return _verdicts(
         batch, rows.fingerprints, rows.bands, corpus_fp, corpus_bands,
-        id_col, rows.meta["num_hashes"], threshold,
+        "doc_id", rows.meta["num_hashes"], 0.5,
     )
 
 

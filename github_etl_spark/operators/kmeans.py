@@ -135,7 +135,7 @@ def _floordiv(s: int, n: int) -> int:
     return s // n
 
 
-def _sums_struct_expr(dim: int, arr: str = "qv", prefix: str = ""):
+def _sums_struct_expr(dim: int, prefix: str = ""):
     """``struct(sum(qv[0]) AS s0, ...)`` as ONE parsed expression.
 
     Built as a SQL string because the per-dim Column form costs ~5 py4j
@@ -147,25 +147,22 @@ def _sums_struct_expr(dim: int, arr: str = "qv", prefix: str = ""):
     if prefix:
         fields = ", ".join(f"sum({prefix}.s{j}) AS s{j}" for j in range(dim))
     else:
-        fields = ", ".join(f"sum({arr}[{j}]) AS s{j}" for j in range(dim))
+        fields = ", ".join(f"sum(qv[{j}]) AS s{j}" for j in range(dim))
     return F.expr(f"struct({fields})")
 
 
-def _lut_expr(vals, cell: str = "cell"):
+def _lut_expr(vals):
     """``element_at(array(<long literals>), cell + 1)`` as one parsed
     expression — same py4j-chatter avoidance as ``_sums_struct_expr``
     (the Column form is 3 round-trips per element)."""
     lits = ", ".join(f"{int(x)}L" for x in vals)
-    return F.expr(f"element_at(array({lits}), {cell} + 1)")
+    return F.expr(f"element_at(array({lits}), cell + 1)")
 
 
 def lloyd_centroids(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    quant: int = 1000,
 ) -> tuple[list[list[int]], DataFrame]:
     """Run `iters` full-corpus Lloyd iterations from the portable md5
     seeds; returns (final integer centroids, the checkpointed quantized
@@ -179,10 +176,10 @@ def lloyd_centroids(
     partition; the only driver crossing is the k aggregated rows.
     """
     q = corpus.where(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+        F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
     ).select(
-        F.col(id_col).alias("i"),
-        quantize_expr(F.col(vec_col), quant).alias("qv"),
+        F.col("vec_id").alias("i"),
+        quantize_expr(F.col("embedding")).alias("qv"),
     )
     # Widen a narrow scan before checkpointing: a small parquet corpus
     # arrives as ONE split, which would serialize every iteration's
@@ -228,11 +225,8 @@ def lloyd_centroids(
 
 def kmeans_cell_stats(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 3,
-    quant: int = 1000,
 ) -> DataFrame:
     """The oracle-checkable fixed-point summary: one row per non-empty
     cell under the FINAL centroids — member count, exact integer
@@ -241,7 +235,7 @@ def kmeans_cell_stats(
     n·dim·quant² and is documented rather than silently wrapped), and
     the centroid checksums (Σ mᵢ, Σ mᵢ²) that pin every component of
     the trained model."""
-    cents, q = lloyd_centroids(corpus, id_col, vec_col, k, iters, quant)
+    cents, q = lloyd_centroids(corpus, k=k, iters=iters)
     if not cents:
         return corpus.sparkSession.createDataFrame(
             [],
@@ -270,11 +264,8 @@ def kmeans_cell_stats(
 
 def kmeans_minibatch_merge(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     n_batches: int = 3,
-    quant: int = 1000,
 ) -> DataFrame:
     """The MERGEABILITY contract behind incremental centroid
     maintenance: split the corpus into `n_batches` ingest batches
@@ -293,9 +284,7 @@ def kmeans_minibatch_merge(
     incrementally: per-ingest cost is one batch-sized assignment into
     a k·(dim+1)-long summary, stored per batch and merged on demand —
     no full-corpus rescan per model refresh."""
-    cents, q = lloyd_centroids(
-        corpus, id_col, vec_col, k, iters=0, quant=quant
-    )
+    cents, q = lloyd_centroids(corpus, k=k, iters=0)
     empty = (
         "cell int, n_members long, m_sum long, m_l2 long, "
         "matches_full int"
@@ -327,9 +316,7 @@ def kmeans_minibatch_merge(
         ]
         for r in rows
     }
-    full, _ = lloyd_centroids(
-        corpus, id_col, vec_col, k, iters=1, quant=quant
-    )
+    full, _ = lloyd_centroids(corpus, k=k, iters=1)
     m_sum = [sum(mc.get(c, [0])) for c in range(k)]
     m_l2 = [sum(x * x for x in mc.get(c, [0])) for c in range(k)]
     match = [int(c in mc and mc[c] == full[c]) for c in range(k)]

@@ -108,11 +108,11 @@ def ngrams_expr(toks: Column, n: int) -> Column:
     return F.when(n_grams > 0, out).otherwise(F.array().cast("array<string>"))
 
 
-def winnow_fingerprints_expr(text_col, k: int = 3, w: int = 4) -> Column:
+def winnow_fingerprints_expr(text_col) -> Column:
     """MOSS winnowing fingerprints (Schleimer et al., SIGMOD'03): hash
-    every word k-gram, select the minimum hash in each sliding window
-    of ``w`` consecutive gram hashes, fingerprint = sorted distinct
-    selected minima.
+    every word k-gram (k = 3), select the minimum hash in each sliding
+    window of w = 4 consecutive gram hashes, fingerprint = sorted
+    distinct selected minima.
 
     Guarantee: any run of ≥ w+k-1 shared tokens between two documents
     contributes at least one SHARED fingerprint, while only ~2/(w+1)
@@ -133,12 +133,12 @@ def winnow_fingerprints_expr(text_col, k: int = 3, w: int = 4) -> Column:
     """
     from ..functions.text import dedup_tokens_expr
 
-    grams = ngrams_expr(dedup_tokens_expr(text_col), k)
+    grams = ngrams_expr(dedup_tokens_expr(text_col), 3)
     hs = F.transform(grams, lambda g: F.substring(F.md5(g), 1, 16))
     n = F.size(hs)
-    n_wins = n - (w - 1)
+    n_wins = n - (4 - 1)
     mins = F.slice(hs, 1, n_wins)
-    for i in range(1, w):
+    for i in range(1, 4):
         mins = F.zip_with(mins, F.slice(hs, i + 1, n_wins), lambda a, b: F.least(a, b))
     wins = (
         F.when(n_wins > 0, mins)
@@ -186,7 +186,6 @@ def bigram_logprob(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    alpha: float = 0.5,
 ) -> DataFrame:
     """Per-document average INTERPOLATED bigram log-probability under
     the corpus's own n-gram model — one rung up the KenLM ladder from
@@ -265,8 +264,8 @@ def bigram_logprob(
             "w1",
             "w2",
             F.log(
-                F.lit(float(alpha)) * F.col("cb") / F.col("c1")
-                + F.lit(1.0 - float(alpha)) * F.col("c2") / F.col("n").cast("double")
+                F.lit(0.5) * F.col("cb") / F.col("c1")
+                + F.lit(0.5) * F.col("c2") / F.col("n").cast("double")
             ).alias("logp"),
         )
     )
@@ -282,7 +281,6 @@ def repetition_metrics(
     text_col: str,
     id_col: str,
     n: int = 2,
-    distributed: bool = False,
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document.
 
@@ -294,34 +292,11 @@ def repetition_metrics(
     Documents shorter than n tokens yield no grams and are absent from
     the result (same as the oracle's range() semantics).
 
-    Default shape is ZERO-SHUFFLE: per-row array_sort + aggregate()
-    run-length fold over the gram array — O(L log L) per document, all
-    JVM-side, no exchange at any scale (verified equal output to the
-    distributed shape). ``distributed=True`` switches to explode →
-    groupBy(id, gram) → groupBy(id) (two shuffles with map-side partial
-    combine) for corpora whose single documents are too large to sort
-    in a task's row budget.
+    ZERO-SHUFFLE: per-row array_sort + aggregate() run-length fold
+    over the gram array — O(L log L) per document, all JVM-side, no
+    exchange at any scale.
     """
     grams = ngrams_expr(words_expr(F.col(text_col)), n)
-    if distributed:
-        exploded = df.select(F.col(id_col), F.explode(grams).alias("g"))
-        per_gram = exploded.groupBy(id_col, "g").agg(F.count("*").alias("c"))
-        return (
-            per_gram.groupBy(id_col)
-            .agg(
-                F.sum("c").alias("n_grams"),
-                F.max("c").alias("_top"),
-                F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(F.lit(0))).alias(
-                    "_dup"
-                ),
-            )
-            .select(
-                F.col(id_col),
-                F.col("n_grams"),
-                round_det(F.col("_top") / F.col("n_grams"), 4).alias("top_gram_frac"),
-                round_det(F.col("_dup") / F.col("n_grams"), 4).alias("dup_gram_frac"),
-            )
-        )
     sorted_g = F.array_sort(grams)
     zero = F.struct(
         F.lit("").alias("prev"),
@@ -371,7 +346,6 @@ def contamination_overlap(
     text_col: str,
     id_col: str,
     n: int = 3,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Benchmark-contamination check: per-document fraction of distinct
     word n-grams that also occur anywhere in a benchmark/eval corpus.
@@ -409,7 +383,7 @@ def contamination_overlap(
             F.col("n_grams"),
             F.col("n_hit"),
             round_det(F.col("n_hit") / F.col("n_grams"), 4).alias("overlap_frac"),
-            (F.col("n_hit") / F.col("n_grams") >= F.lit(threshold)).alias(
+            (F.col("n_hit") / F.col("n_grams") >= F.lit(0.5)).alias(
                 "contaminated"
             ),
         )
@@ -422,7 +396,6 @@ def mixture_sample(
     id_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
-    n_buckets: int = 10_000,
 ) -> DataFrame:
     """Per-source weighted downsampling — the domain-mixture step that
     reweights corpora (web vs code vs books) toward a target token
@@ -437,6 +410,7 @@ def mixture_sample(
     Rates are clamped to [0, 1]; unseen sources fall to
     ``default_rate``.
     """
+    n_buckets = 10_000
     bucket = portable_hash_bucket(F.col(id_col), n_buckets)
     cut = F.lit(int(max(0.0, min(1.0, default_rate)) * n_buckets))
     for src, rate in sorted(rates.items()):
@@ -667,10 +641,9 @@ def tokenize_encode(
     id_col: str,
     k: int = 200,
     min_df: int = 2,
-    unk_id: int = 0,
 ) -> DataFrame:
     """Token-id encoding: map each document to its ``array<long>`` of
-    vocabulary ids (out-of-vocabulary tokens → ``unk_id``) — the final
+    vocabulary ids (out-of-vocabulary tokens → id 0) — the final
     text→ids step before sequence packing in a training-data pipeline.
 
     Scale shape: the vocabulary (≤ k rows) is broadcast, so encoding
@@ -694,7 +667,7 @@ def tokenize_encode(
         F.col(id_col),
         F.posexplode(words_expr(F.col(text_col))).alias("pos", "tok"),
     )
-    return _assemble_input_ids(toks, vocab, id_col, unk_id)
+    return _assemble_input_ids(toks, vocab, id_col, 0)
 
 
 def tokenize_encode_stats(
@@ -703,7 +676,6 @@ def tokenize_encode_stats(
     id_col: str,
     k: int = 200,
     min_df: int = 2,
-    unk_id: int = 0,
 ) -> DataFrame:
     """(id, n_tokens, sum_tid) per document — the ORDER-INDEPENDENT
     reductions of ``tokenize_encode``'s output, computed without ever
@@ -730,7 +702,7 @@ def tokenize_encode_stats(
     )
     enc = toks.join(F.broadcast(vocab), "tok", "left").select(
         id_col,
-        F.coalesce(F.col("vocab_id"), F.lit(unk_id)).cast("long").alias("tid"),
+        F.coalesce(F.col("vocab_id"), F.lit(0)).cast("long").alias("tid"),
     )
     return enc.groupBy(id_col).agg(
         F.count("*").alias("n_tokens"),
@@ -738,7 +710,7 @@ def tokenize_encode_stats(
     )
 
 
-def compression_ratio_col(text_col: str = "text", level: int = 6) -> Column:
+def compression_ratio_col(text_col: str = "text") -> Column:
     """zlib-compressed-size / raw-size of the UTF-8 text — the classic
     corpus-quality signal (Gopher/RefinedWeb family): templated or
     repetitive documents compress far below ~0.4, high-entropy junk
@@ -763,7 +735,7 @@ def compression_ratio_col(text_col: str = "text", level: int = 6) -> Column:
             b = t.encode("utf-8")
             if not b:
                 return None
-            return len(zlib.compress(b, level)) / len(b)
+            return len(zlib.compress(b, 6)) / len(b)
 
         return texts.map(one)
 
@@ -871,7 +843,7 @@ def bpe_learn_merges(
     # eager checkpoint: materializes AND truncates lineage, so the
     # next round's plan is a scan of this round's result — not the
     # whole merge history re-analyzed by Catalyst every iteration.
-    from ..session import drop_checkpoint_files, eager_checkpoint as _ckpt
+    from ..session import eager_checkpoint as _ckpt, release
 
     vocab = _ckpt(vocab)
     merges: list[tuple] = []
@@ -898,14 +870,12 @@ def bpe_learn_merges(
                     "symstr", F.regexp_replace("symstr", pattern, replacement)
                 )
             )
-            vocab.unpersist()  # drop the previous round's blocks now
-            drop_checkpoint_files(vocab)  # …and its on-disk copy
+            release(vocab)  # the previous round's blocks and files
             vocab = nxt
     finally:
         # The merge table is already driver-side — the last working
         # table (blocks AND reliable-checkpoint files) is dead too.
-        vocab.unpersist()
-        drop_checkpoint_files(vocab)
+        release(vocab)
     return spark.createDataFrame(merges, schema)
 
 
@@ -1056,15 +1026,14 @@ def bpe_tokenize_encode(
     merges,
     k: int = 200,
     min_df: int = 2,
-    unk_id: int = 0,
 ) -> DataFrame:
     """End-to-end SUBWORD tokenization — the full production text→ids
     path: BPE-encode every document under ``merges`` (``bpe_apply``'s
     map-only chain), induce the top-``k`` piece vocabulary with dense
     ids (min_df floor, count-then-lexicographic rank — the same total
     order as ``vocab_induce``), and emit each document's
-    ``array<long>`` of piece ids with out-of-vocabulary pieces →
-    ``unk_id``. This supersedes ``tokenize_encode``'s whitespace-word
+    ``array<long>`` of piece ids with out-of-vocabulary pieces → id 0.
+    This supersedes ``tokenize_encode``'s whitespace-word
     ids for any real training pipeline: the unit is the learned
     subword, so the id space is closed and OOV mass collapses into
     actually-shared pieces.
@@ -1085,13 +1054,14 @@ def bpe_tokenize_encode(
         F.col(id_col), F.posexplode("__pieces").alias("pos", "tok")
     )
     vocab = _vocab_rank(toks, id_col, k, min_df).select("tok", "vocab_id")
-    return _assemble_input_ids(toks, vocab, id_col, unk_id)
+    return _assemble_input_ids(toks, vocab, id_col, 0)
 
 
 # --------------------------------------------------------------------- DSIR
 
 
 DSIR_BUCKETS = 1024
+DSIR_DRAW_BITS = 16
 
 
 def dsir_features_expr(text_col) -> Column:
@@ -1301,9 +1271,7 @@ def dsir_resample(
     text_col: str,
     id_col: str,
     target_col: str,
-    n_buckets: int = DSIR_BUCKETS,
     temp: int = 4,
-    draw_bits: int = 16,
 ) -> DataFrame:
     """DSIR end-to-end: learn weights, score every document, then
     importance-RESAMPLE with acceptance probability
@@ -1331,10 +1299,10 @@ def dsir_resample(
     # the per-row cost, so the second pass was nearly a full re-run).
     bf = eager_checkpoint(
         dsir_bucket_frame(
-            df, text_col, n_buckets, id_col=id_col, target_col=target_col
+            df, text_col, DSIR_BUCKETS, id_col=id_col, target_col=target_col
         )
     )
-    weights = _dsir_weights_from_buckets(bf, n_buckets)
+    weights = _dsir_weights_from_buckets(bf, DSIR_BUCKETS)
     # Materialize the scored table once: the max_lw aggregate AND the
     # accept/reject tail both read it, and without a checkpoint each
     # would re-run the weight fold over the bucket frame. The frame is
@@ -1346,11 +1314,11 @@ def dsir_resample(
     ).cast("int")
     draw = portable_hash_bucket(
         F.concat(F.lit("dsir:"), F.col(id_col).cast("string")),
-        1 << draw_bits,
+        1 << DSIR_DRAW_BITS,
     )
-    threshold = F.when(e <= -draw_bits, F.lit(0).cast("long")).otherwise(
+    threshold = F.when(e <= -DSIR_DRAW_BITS, F.lit(0).cast("long")).otherwise(
         F.call_function(
-            "shiftleft", F.lit(1).cast("long"), (F.lit(draw_bits) + e)
+            "shiftleft", F.lit(1).cast("long"), (F.lit(DSIR_DRAW_BITS) + e)
         )
     )
     return (

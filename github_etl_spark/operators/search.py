@@ -38,6 +38,10 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_det
+
+# The BM25 saturation and length-normalization constants (Lucene's).
+K1 = 1.2
+B = 0.75
 from ..functions.text import dedup_tokens_expr as tokens_expr
 
 
@@ -76,11 +80,7 @@ def _doc_base(
 def bm25_topk(
     docs: DataFrame,
     terms: list[str],
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Top-k documents for a bag-of-terms query under BM25.
 
@@ -94,14 +94,14 @@ def bm25_topk(
     programmatic term sets use ``bm25_multi_topk``, which derives the
     term set from a queries DataFrame.
     """
-    base = _doc_base(docs, text_col, id_col, list(dict.fromkeys(terms)))
+    base = _doc_base(docs, "text", "doc_id", list(dict.fromkeys(terms)))
     stats = base.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
     postings = base.select(
-        F.col(id_col), "dl", F.explode("qtoks").alias("term")
+        F.col("doc_id"), "dl", F.explode("qtoks").alias("term")
     )
-    tf = postings.groupBy(id_col, "dl", "term").agg(
+    tf = postings.groupBy("doc_id", "dl", "term").agg(
         F.count("*").alias("tf")
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -110,20 +110,20 @@ def bm25_topk(
         + (F.col("n_docs") - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
     )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
+    tf_part = (F.col("tf") * (K1 + 1.0)) / (
         F.col("tf")
-        + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.col("avgdl"))
+        + K1 * (F.lit(1.0) - B + B * F.col("dl") / F.col("avgdl"))
     )
     scored = (
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(idf * tf_part).alias("score_raw"))
-        .select(F.col(id_col), round_det("score_raw", 4).alias("score"))
+        .select(F.col("doc_id"), round_det("score_raw", 4).alias("score"))
     )
-    top = scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    top = scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
     # Rank over the k surviving rows only (single tiny partition).
-    w = W.orderBy(F.col("score").desc(), F.col(id_col).asc())
+    w = W.orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return top.withColumn("rank", F.row_number().over(w).cast("int"))
 
 
@@ -132,15 +132,12 @@ def hybrid_rrf_topk(
     embeddings: DataFrame,
     terms: list[str],
     query_vec_id: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 10,
     k_each: int = 20,
-    c: int = 60,
 ) -> DataFrame:
     """Hybrid lexical+semantic retrieval fused with Reciprocal Rank
     Fusion (Cormack et al., SIGIR'09): each retriever contributes
-    1/(c + rank), documents missing from one list contribute 0 from
+    1/(60 + rank), documents missing from one list contribute 0 from
     it. RRF is the standard production hybrid because it needs no
     score calibration between BM25 and cosine — only ranks.
 
@@ -158,29 +155,29 @@ def hybrid_rrf_topk(
     """
     from .similarity import brute_force_topk
 
-    lex = bm25_topk(docs, terms, text_col, id_col, k=k_each).select(
-        F.col(id_col), F.col("rank").alias("rank_lex")
+    lex = bm25_topk(docs, terms, k=k_each).select(
+        F.col("doc_id"), F.col("rank").alias("rank_lex")
     )
     sem = brute_force_topk(
         corpus=embeddings,
         queries=embeddings.filter(F.col("vec_id") == query_vec_id),
         k=k_each,
     ).select(
-        F.col("neighbor_id").alias(id_col),
+        F.col("neighbor_id").alias("doc_id"),
         F.col("rank").cast("int").alias("rank_sem"),
     )
     contrib = lambda r: F.coalesce(  # noqa: E731
-        F.lit(1.0) / (F.lit(float(c)) + r), F.lit(0.0)
+        F.lit(1.0) / (F.lit(60.0) + r), F.lit(0.0)
     )
-    fused = lex.join(sem, id_col, "full_outer").select(
-        F.col(id_col),
+    fused = lex.join(sem, "doc_id", "full_outer").select(
+        F.col("doc_id"),
         "rank_lex",
         "rank_sem",
         round_det(
             contrib(F.col("rank_lex")) + contrib(F.col("rank_sem")), 6
         ).alias("rrf_score"),
     )
-    order = [F.col("rrf_score").desc(), F.col(id_col).asc()]
+    order = [F.col("rrf_score").desc(), F.col("doc_id").asc()]
     top = fused.orderBy(*order).limit(k)
     return top.withColumn(
         "rank", F.row_number().over(W.orderBy(*order)).cast("int")
@@ -218,18 +215,14 @@ def bm25_multi_topk(
     queries: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    qid_col: str = "query_id",
-    qtext_col: str = "qtext",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     doc_base: DataFrame | None = None,
     max_inset_terms: int = 10_000,
 ) -> DataFrame:
     """Top-k documents PER QUERY under BM25 — the multi-query
     generalization of ``bm25_topk`` (same Lucene idf, same rounding
     and tie rules): each query row's term set is its tokenized
-    ``qtext_col`` (distinct terms — BM25 is a bag-of-TERMS model over
+    ``qtext`` (distinct terms — BM25 is a bag-of-TERMS model over
     the query).
 
     Scale shape: ONE corpus tokenization pass serves every query. The
@@ -273,9 +266,9 @@ def bm25_multi_topk(
     """
     qterms = (
         queries.select(
-            F.col(qid_col),
+            F.col("query_id"),
             F.explode(
-                F.array_distinct(tokens_expr(F.col(qtext_col)))
+                F.array_distinct(tokens_expr(F.col("qtext")))
             ).alias("term"),
         )
     )
@@ -324,24 +317,24 @@ def bm25_multi_topk(
         + (F.col("n_docs") - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
     )
-    tf_part = (F.col("tf") * (k1 + 1.0)) / (
+    tf_part = (F.col("tf") * (K1 + 1.0)) / (
         F.col("tf")
-        + k1 * (F.lit(1.0) - b + b * F.col("dl") / F.col("avgdl"))
+        + K1 * (F.lit(1.0) - B + B * F.col("dl") / F.col("avgdl"))
     )
     scored = (
         F.broadcast(qterms)
         .join(tf, "term")
         .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
-        .groupBy(qid_col, id_col)
+        .groupBy("query_id", id_col)
         .agg(F.sum(idf * tf_part).alias("score_raw"))
         .select(
-            F.col(qid_col),
+            F.col("query_id"),
             F.col(id_col),
             round_det("score_raw", 4).alias("score"),
         )
     )
-    w = W.partitionBy(qid_col).orderBy(
+    w = W.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col(id_col).asc()
     )
     return scored.withColumn(

@@ -42,9 +42,7 @@ def shard_assignment(
 def write_shuffled_shards(
     docs: DataFrame,
     path: str,
-    id_col: str = "doc_id",
     n_shards: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Write `docs` as `path/shard=K/` directories, globally shuffled,
     deterministically ordered within each shard.
@@ -57,11 +55,11 @@ def write_shuffled_shards(
     a shard's files lexicographically streams the canonical order
     without any sort of its own.
     """
-    sharded = shard_assignment(docs, id_col, n_shards)
+    sharded = shard_assignment(docs, "doc_id", n_shards)
     (
         sharded.repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", SHUFFLE_KEY)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(path)
     )

@@ -69,8 +69,6 @@ def _topk_per_query(scored, k: int):
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
@@ -81,12 +79,12 @@ def brute_force_topk(
     i.e. parallelism = #queries. Self-matches are excluded.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
+        F.col("vec_id").alias("query_id"), _as_double(F.col("embedding")).alias("q_vec")
     )
     # Per-row cost is O(dim × #queries) — widen a narrow corpus scan
     # (no-op at scale, where the corpus arrives in many partitions).
     c = ensure_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
+        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("c_vec")
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -156,21 +154,21 @@ def md5_int_planes(
     ]
 
 
-def portable_bucket_expr(vec, planes: list[list[int]], quant: int = 1000):
+def portable_bucket_expr(vec, planes: list[list[int]]):
     """Cross-engine-exact LSH bucket id.
 
     The float-hyperplane path (`signs_expr`) is unverifiable across
     engines: a dot product near zero can flip sign under a different
     float summation order, silently moving a vector to another bucket.
-    This path quantizes the vector to integers (floor(v*quant + 0.5) —
+    This path quantizes the vector to integers (floor(v*1000 + 0.5) —
     one double multiply + add, bit-identical under IEEE in any engine)
     and dots it against INTEGER plane components, so the sign decision
     is exact integer arithmetic: associativity-free, overflow-safe
-    (|component| < 2^15, |qv_i| ~ quant, dims ~ 10^2 → sums ≪ 2^63),
+    (|component| < 2^15, |qv_i| ~ 1000, dims ~ 10^2 → sums ≪ 2^63),
     and reproducible in plain SQL.
     """
     qv = F.transform(
-        vec, lambda x: F.floor(x.cast("double") * quant + F.lit(0.5))
+        vec, lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5))
     )
     bits = []
     for p_idx, p in enumerate(planes):
@@ -189,15 +187,10 @@ def portable_bucket_expr(vec, planes: list[list[int]], quant: int = 1000):
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 4,
-    dim: int = 64,
-    seed: int = 42,
     n_tables: int = 1,
     hash_family: str = "lcg",
-    quant: int = 1000,
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors sharing a query's LSH
     bucket are scored. 2^n_planes buckets → expected candidate fraction
@@ -225,17 +218,17 @@ def lsh_bucketed_topk(
     """
     if hash_family == "md5_portable":
         int_tables = [
-            md5_int_planes(dim, n_planes, table=t) for t in range(n_tables)
+            md5_int_planes(64, n_planes, table=t) for t in range(n_tables)
         ]
         bucket_arr = lambda vec: F.array(  # noqa: E731
-            *[portable_bucket_expr(vec, planes, quant) for planes in int_tables]
+            *[portable_bucket_expr(vec, planes) for planes in int_tables]
         )
-        valid = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+        valid = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
         corpus = corpus.where(valid)
         queries = queries.where(valid)
     elif hash_family == "lcg":
         tables = [
-            random_hyperplanes(dim, n_planes, seed + 7919 * t)
+            random_hyperplanes(64, n_planes, 42 + 7919 * t)
             for t in range(n_tables)
         ]
         bucket_arr = lambda vec: F.array(  # noqa: E731
@@ -244,12 +237,12 @@ def lsh_bucketed_topk(
     else:
         raise ValueError(f"unknown LSH hash family: {hash_family!r}")
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("q_vec"),
     ).withColumn("q_buckets", bucket_arr(F.col("q_vec")))
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("c_vec"),
     ).withColumn("c_buckets", bucket_arr(F.col("c_vec")))
 
     if n_tables == 1:
@@ -280,8 +273,6 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     sample_size: int = 4096,
-    iters: int = 8,
-    seed: int = 42,
 ) -> list[list[float]]:
     """Coarse quantizer for IVF: k-means over a bounded, deterministic
     corpus sample, run driver-side with numpy.
@@ -326,7 +317,7 @@ def train_ivf_centroids(
         chosen.append(nxt)
         best_sim = np.maximum(best_sim, x @ x[nxt])
     cent = x[chosen].copy()
-    for _ in range(iters):
+    for _ in range(8):
         sims = x @ cent.T
         assign = sims.argmax(axis=1)
         for c in range(len(cent)):
@@ -436,13 +427,9 @@ def ivf_assign(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
-    sample_size: int = 4096,
-    seed: int = 42,
     arrow: bool = True,
     train_on: DataFrame | None = None,
 ) -> DataFrame:
@@ -471,11 +458,10 @@ def ivf_topk(
     Pre-filter and fail upstream if that should be a hard error.
     """
     centroids = train_ivf_centroids(
-        corpus if train_on is None else train_on,
-        vec_col, n_centroids, sample_size, seed=seed,
+        corpus if train_on is None else train_on, n_centroids=n_centroids
     )
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col, arrow=arrow)
-    q = _probed_queries(queries, centroids, id_col, vec_col, nprobe, arrow)
+    assigned = ivf_assign(corpus, centroids, arrow=arrow)
+    q = _probed_queries(queries, centroids, "vec_id", "embedding", nprobe, arrow)
     return _score_probed(assigned, q, k)
 
 
@@ -552,9 +538,6 @@ def ivf_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int = 16,
-    sample_size: int = 4096,
-    seed: int = 42,
-    arrow: bool = True,
     centroids: list[list[float]] | None = None,
 ) -> list[list[float]]:
     """Materialize the IVF index `ivf_topk` computes inline: cell
@@ -586,14 +569,12 @@ def ivf_build_index(
     import json
 
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, vec_col, n_centroids, sample_size, seed=seed
-        )
+        centroids = train_ivf_centroids(corpus, vec_col, n_centroids)
     build_id = hashlib.md5(
         json.dumps(centroids).encode("utf-8")
     ).hexdigest()
     assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+        ivf_assign(corpus, centroids, id_col, vec_col)
         .withColumn("build_id", F.lit(build_id))
         # Build rows live in ingest_batch −1; `ivf_index_append` adds
         # later vectors under their own batch partition (second
@@ -618,7 +599,7 @@ def ivf_build_index(
     return centroids
 
 
-def _read_ivf_sidecar(spark, path: str) -> tuple[list, str | None]:
+def _read_ivf_sidecar(spark, path: str) -> tuple[list, str]:
     """(centroids, build_id) from the `ivf_build_index` sidecar —
     shared by the query and append paths so a missing/partial build
     fails identically everywhere."""
@@ -638,9 +619,13 @@ def _read_ivf_sidecar(spark, path: str) -> tuple[list, str | None]:
             "partial/failed ivf_build_index write; rebuild the index."
         )
     meta = json.loads(head[0])
-    if isinstance(meta, dict):
-        return meta["centroids"], meta.get("build_id")
-    return meta, None  # legacy bare-list sidecar (pre-fingerprint builds)
+    if not (isinstance(meta, dict) and {"build_id", "centroids"} <= meta.keys()):
+        raise ValueError(
+            f"IVF centroid sidecar at {sidecar_path!r} is not a "
+            "{build_id, centroids} object — not written by "
+            "ivf_build_index; rebuild the index."
+        )
+    return meta["centroids"], meta["build_id"]
 
 
 def ivf_index_append(
@@ -650,7 +635,6 @@ def ivf_index_append(
     ingest_batch: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> None:
     """Incremental IVF maintenance: assign NEW vectors to the
     EXISTING index's cells (sidecar centroids — no retraining) and
@@ -688,9 +672,9 @@ def ivf_index_append(
             "build) — appends cannot be assigned; rebuild with data"
         )
     publish_batch_partition(
-        ivf_assign(
-            new_vectors, centroids, id_col, vec_col, arrow=arrow
-        ).withColumn("build_id", F.lit(build_id)),
+        ivf_assign(new_vectors, centroids, id_col, vec_col).withColumn(
+            "build_id", F.lit(build_id)
+        ),
         path,
         ingest_batch,
         "cell",
@@ -779,11 +763,8 @@ def ivf_query_index(
     spark,
     path: str,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 4,
-    arrow: bool = True,
 ) -> DataFrame:
     """Top-k cosine against a materialized `ivf_build_index` layout.
 
@@ -816,7 +797,7 @@ def ivf_query_index(
     # join — and would otherwise re-run the centroid-scoring UDF per
     # consumer.
     q = _probed_queries(
-        queries, centroids, id_col, vec_col, nprobe, arrow
+        queries, centroids, "vec_id", "embedding", nprobe, True
     ).localCheckpoint(eager=True)
     # Bounded driver transfer: queries×nprobe ints. A static IN-filter
     # guarantees directory-level pruning (dynamic partition pruning
@@ -827,7 +808,7 @@ def ivf_query_index(
         # Batch identity is append-bookkeeping (idempotent replay),
         # not scoring input.
         assigned = assigned.drop("ingest_batch")
-    if build_id is not None and "build_id" in assigned.columns:
+    if "build_id" in assigned.columns:
         # One tiny limit(1) probe per query batch (reads a single row
         # group): assignments and sidecar must come from the SAME
         # training run, else the probed cells are meaningless.
@@ -976,8 +957,6 @@ def _top_cell_expr(qv, centroids: list[list[int]]):
 def ivf_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
@@ -997,29 +976,29 @@ def ivf_topk_portable(
     """
     cents = ivf_portable_seed_centroids(
         corpus if train_on is None else train_on,
-        id_col, vec_col, n_centroids, quant,
+        "vec_id", "embedding", n_centroids, quant,
     )
     if not cents:
-        return ivf_assign(corpus, [], id_col, vec_col).select(
+        return ivf_assign(corpus, []).select(
             F.col("neighbor_id").alias("query_id"),
             "neighbor_id",
             F.lit(0).alias("rank"),
             F.lit(None).cast("double").alias("cosine"),
         )
-    live = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+    live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
     ranked = _int_cell_rank_expr(
-        quantize_expr(F.col(vec_col), quant), cents
+        quantize_expr(F.col("embedding"), quant), cents
     )
     assigned = corpus.where(live).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("c_vec"),
-        _top_cell_expr(quantize_expr(F.col(vec_col), quant), cents).alias(
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("c_vec"),
+        _top_cell_expr(quantize_expr(F.col("embedding"), quant), cents).alias(
             "cell"
         ),
     )
     q = queries.where(live).select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("q_vec"),
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("q_vec"),
         F.explode(
             F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
         ).alias("cell"),
@@ -1029,11 +1008,8 @@ def ivf_topk_portable(
 
 def semantic_neardup_pairs(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     n_centroids: int = 16,
-    quant: int = 1000,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al.,
     arXiv:2303.09540): cluster embeddings with the coarse quantizer,
@@ -1051,14 +1027,12 @@ def semantic_neardup_pairs(
     feed operators/graph.cluster_assignment for canonical keepers,
     exactly like the Jaccard pair family.
     """
-    cents = ivf_portable_seed_centroids(
-        corpus, id_col, vec_col, n_centroids, quant
-    )
-    live = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+    cents = ivf_portable_seed_centroids(corpus, n_centroids=n_centroids)
+    live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
     if not cents:
         return corpus.where(F.lit(False)).select(
-            F.col(id_col).alias("id_a"),
-            F.col(id_col).alias("id_b"),
+            F.col("vec_id").alias("id_a"),
+            F.col("vec_id").alias("id_b"),
             F.lit(None).cast("double").alias("cosine"),
         )
     # Norms are per-ROW, computed before the join: inlining cosine_expr
@@ -1075,9 +1049,9 @@ def semantic_neardup_pairs(
     # over the cluster: measured 4.4 s → 2.8 s at sf0.1, identical
     # rows; no-op when the input is already wide (the 100 TB case).
     assigned = ensure_parallelism(corpus.where(live)).select(
-        F.col(id_col).alias("vid"),
-        _as_double(F.col(vec_col)).alias("v"),
-        _top_cell_expr(quantize_expr(F.col(vec_col), quant), cents).alias(
+        F.col("vec_id").alias("vid"),
+        _as_double(F.col("embedding")).alias("v"),
+        _top_cell_expr(quantize_expr(F.col("embedding")), cents).alias(
             "cell"
         ),
     ).withColumn("nrm", norm_expr(F.col("v")))
@@ -1113,11 +1087,8 @@ def semantic_neardup_pairs(
 
 def pq_codebooks_portable(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int = 8,
     ksub: int = 16,
-    quant: int = 1000,
 ) -> list[list[list[int]]]:
     """codebooks[s][j] = integer-quantized codeword j of subspace s —
     the portable-seed PQ codebook (Jégou et al., "Product Quantization
@@ -1131,7 +1102,7 @@ def pq_codebooks_portable(
     k-means on a sample instead (swap this function; everything
     downstream is codebook-agnostic).
     """
-    seeds = ivf_portable_seed_centroids(corpus, id_col, vec_col, ksub, quant)
+    seeds = ivf_portable_seed_centroids(corpus, n_centroids=ksub)
     if not seeds:
         return []
     dim = len(seeds[0])
@@ -1145,9 +1116,6 @@ def pq_codebooks_portable(
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    quant: int = 1000,
     extra: dict | None = None,
 ) -> DataFrame:
     """(id, codes array<int>[m]) — each vector compressed to m nibble
@@ -1157,11 +1125,11 @@ def pq_encode(
     ~4 bytes of index payload — the memory trade that makes
     billion-vector serving fit on a cluster.
     """
-    live = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+    live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
     if _pq_is_int_family(codebooks):
-        vv = quantize_expr(F.col(vec_col), quant)
+        vv = quantize_expr(F.col("embedding"))
     else:  # trained float codebooks — same shape, float arithmetic
-        vv = _as_double(F.col(vec_col))
+        vv = _as_double(F.col("embedding"))
 
     # `extra` carries additional per-row expressions through the same
     # pass (e.g. the IVF cell in ivfpq_topk) — one corpus scan instead
@@ -1174,7 +1142,7 @@ def pq_encode(
     # vector is derived once per row regardless of how many subspace
     # slices reference it.
     staged = corpus.where(live).select(
-        F.col(id_col).alias("neighbor_id"),
+        F.col("vec_id").alias("neighbor_id"),
         vv.alias("__vv"),
         *[expr.alias(name) for name, expr in (extra or {}).items()],
     )
@@ -1245,12 +1213,7 @@ def _pq_lut_sql(codebooks, quant: int) -> str:
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
-    quant: int = 1000,
     codebooks: list | None = None,
     rerank: int | None = None,
 ) -> DataFrame:
@@ -1275,24 +1238,22 @@ def pq_topk(
     codes-only) to 0.74 (trained, ksub=64, rerank=20).
     """
     if codebooks is None:
-        codebooks = pq_codebooks_portable(
-            corpus, id_col, vec_col, m, ksub, quant
-        )
+        codebooks = pq_codebooks_portable(corpus)
     if not codebooks:
         return corpus.where(F.lit(False)).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.lit(0).alias("rank"),
             F.lit(None).cast("double").alias("score"),
         )
-    codes = pq_encode(corpus, codebooks, id_col, vec_col, quant)
-    live = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
-    qf = _as_double(F.col(vec_col))
+    codes = pq_encode(corpus, codebooks)
+    live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
+    qf = _as_double(F.col("embedding"))
     q = queries.where(live).select(
-        F.col(id_col).alias("query_id"), qf.alias("__qf")
+        F.col("vec_id").alias("query_id"), qf.alias("__qf")
     ).select(
         "query_id",
-        F.expr(_pq_lut_sql(codebooks, quant)).alias("lut"),
+        F.expr(_pq_lut_sql(codebooks, 1000)).alias("lut"),
         F.col("__qf").alias("q_vec"),
     )
     score = F.aggregate(
@@ -1322,22 +1283,17 @@ def pq_topk(
         .filter(F.col("rank") <= (rerank if rerank else k))
     )
     if rerank:
-        return pq_rerank_exact(corpus, topped, id_col, vec_col, k)
+        return pq_rerank_exact(corpus, topped, k=k)
     return topped.select("query_id", "neighbor_id", "rank", "score")
 
 
 def pq_train_codebooks(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
     ksub: int = 16,
-    sample_size: int = 4096,
-    iters: int = 8,
 ) -> list[list[list[float]]]:
     """Production PQ codebooks: per-subspace L2 k-means over the same
     bounded, hash-selected corpus sample `train_ivf_centroids` uses
-    (one corpus top-k, driver transfer ≤ sample_size rows), with the
+    (one corpus top-k, driver transfer ≤ 4096 rows), with the
     deterministic farthest-first init — no RNG anywhere. Returns FLOAT
     codewords; `pq_encode`/`pq_topk` accept either family (trained
     floats for recall, portable ints for oracle replay — same split as
@@ -1345,16 +1301,17 @@ def pq_train_codebooks(
     import numpy as np
 
     sample = (
-        corpus.select(_as_double(F.col(vec_col)).alias("v"))
+        corpus.select(_as_double(F.col("embedding")).alias("v"))
         .where(F.size("v") > 0)
         .orderBy(F.xxhash64(F.col("v")))
-        .limit(sample_size)
+        .limit(4096)
         .collect()
     )
     if not sample:
         return []
     x = np.array([r.v for r in sample], dtype=np.float64)
     dim = x.shape[1]
+    m, iters = 8, 8  # subspaces; Lloyd rounds per subspace
     sub = dim // m
     assert sub * m == dim, f"dim {dim} not divisible by m={m}"
     books: list[list[list[float]]] = []
@@ -1385,8 +1342,6 @@ def _pq_is_int_family(codebooks) -> bool:
 def pq_rerank_exact(
     corpus: DataFrame,
     shortlist: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
 ) -> DataFrame:
     """Exact-cosine re-rank of a PQ shortlist (the FAISS two-stage
@@ -1395,8 +1350,8 @@ def pq_rerank_exact(
     only for shortlisted ids and the exact cosine runs on ≤ queries×R
     rows. Expects the shortlist to carry `q_vec` (the query vectors)."""
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("c_vec"),
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("c_vec"),
     )
     scored = c.join(
         F.broadcast(shortlist.select("query_id", "neighbor_id", "q_vec")),
@@ -1412,14 +1367,9 @@ def pq_rerank_exact(
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    m: int = 8,
-    ksub: int = 16,
     n_centroids: int = 16,
     nprobe: int = 4,
-    quant: int = 1000,
     codebooks: list | None = None,
     rerank: int | None = None,
 ) -> DataFrame:
@@ -1437,36 +1387,32 @@ def ivfpq_topk(
     nprobe == n_centroids this reduces exactly to `pq_topk` (asserted
     in tests).
     """
-    cents = ivf_portable_seed_centroids(
-        corpus, id_col, vec_col, n_centroids, quant
-    )
+    cents = ivf_portable_seed_centroids(corpus, n_centroids=n_centroids)
     if codebooks is None:
-        codebooks = pq_codebooks_portable(
-            corpus, id_col, vec_col, m, ksub, quant
-        )
+        codebooks = pq_codebooks_portable(corpus)
     if not cents or not codebooks:
         return corpus.where(F.lit(False)).select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.lit(0).cast("int").alias("rank"),
             F.lit(None).cast("double").alias("score"),
         )
-    live = F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
-    ranked = _int_cell_rank_expr(quantize_expr(F.col(vec_col), quant), cents)
+    live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
+    ranked = _int_cell_rank_expr(quantize_expr(F.col("embedding")), cents)
     codes = pq_encode(
-        corpus, codebooks, id_col, vec_col, quant,
+        corpus, codebooks,
         extra={"cell": ranked[0]["cell"]},
     )
-    qf = _as_double(F.col(vec_col))
+    qf = _as_double(F.col("embedding"))
     q = queries.where(live).select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         qf.alias("__qf"),
         F.explode(
             F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
         ).alias("cell"),
     ).select(
         "query_id",
-        F.expr(_pq_lut_sql(codebooks, quant)).alias("lut"),
+        F.expr(_pq_lut_sql(codebooks, 1000)).alias("lut"),
         F.col("__qf").alias("q_vec"),
         "cell",
     )
@@ -1496,20 +1442,14 @@ def ivfpq_topk(
         "rank", F.row_number().over(w).cast("int")
     ).filter(F.col("rank") <= (rerank if rerank else k))
     if rerank:
-        return pq_rerank_exact(corpus, topped, id_col, vec_col, k)
+        return pq_rerank_exact(corpus, topped, k=k)
     return topped.select("query_id", "neighbor_id", "rank", "score")
 
 
-def rp_distortion(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    table: int = 7,
-) -> DataFrame:
+def rp_distortion(emb: DataFrame) -> DataFrame:
     """Johnson-Lindenstrauss random-projection DISTORTION contract:
     for consecutive-id vector pairs, the squared L2 distance in the
-    k=``n_planes``-dimensional md5-portable projection (the same
+    k=16-dimensional md5-portable projection (the same
     integer plane family the LSH bucketer uses, `md5_int_planes`)
     versus the true squared distance — the "pairwise distances survive
     projection" guarantee a 100 TB user relies on when they shrink
@@ -1532,23 +1472,23 @@ def rp_distortion(
     Scale shape: map-only per-pair arithmetic after ONE sorted
     equi-self-join on (id, id+1); the plane table rides in the plan as
     literals (bounded by k*dim)."""
-    planes = md5_int_planes(dim=64, n_planes=n_planes, table=table)
+    planes = md5_int_planes(dim=64, n_planes=16, table=7)
     s_total = sum(c * c for p in planes for c in p)
     dim = len(planes[0])
 
     qv = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda v: F.floor(v.cast("double") * 1000 + F.lit(0.5)).cast("long"),
     )
     base = emb.where(
-        F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
-    ).select(F.col(id_col), qv.alias("qv"))
+        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
+    ).select(F.col("vec_id"), qv.alias("qv"))
     a = base.select(
-        F.col(id_col).alias("vec_id_a"), F.col("qv").alias("qa")
+        F.col("vec_id").alias("vec_id_a"), F.col("qv").alias("qa")
     )
     b = base.select(
-        (F.col(id_col) - 1).alias("vec_id_a"),
-        F.col(id_col).alias("vec_id_b"),
+        (F.col("vec_id") - 1).alias("vec_id_a"),
+        F.col("vec_id").alias("vec_id_b"),
         F.col("qv").alias("qb"),
     )
     pairs = a.join(b, "vec_id_a")

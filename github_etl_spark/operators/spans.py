@@ -53,8 +53,6 @@ def _positioned_grams(
 
 def duplicated_spans(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
     keep_first: bool = True,
     hash_grams: bool = False,
@@ -67,7 +65,7 @@ def duplicated_spans(
     (doc, pos) order — the Lee et al. policy (one copy survives);
     `False` flags every occurrence (strip boilerplate everywhere).
     """
-    grams = _positioned_grams(ensure_parallelism(docs), text_col, id_col, k, hash_grams)
+    grams = _positioned_grams(ensure_parallelism(docs), "text", "doc_id", k, hash_grams)
     # One gram-keyed window (shuffle + sort, ONE corpus pass). Two
     # measured-and-rejected alternatives at sf0.1: (a) groupBy gram
     # stats + join back re-executes the gram pipeline for both sides
@@ -126,11 +124,8 @@ def duplicated_spans(
 
 def remove_duplicated_spans(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 8,
     keep_first: bool = True,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Documents with duplicated spans cut out: adds `clean_text`
     (surviving tokens re-joined) and `n_tokens_removed`.
@@ -142,15 +137,15 @@ def remove_duplicated_spans(
     join), tokenized-rejoined for representation consistency.
     """
     spans = (
-        duplicated_spans(docs, text_col, id_col, k, keep_first, hash_grams)
+        duplicated_spans(docs, k=k, keep_first=keep_first, hash_grams=True)
         .groupBy("doc")
         .agg(
             F.collect_list(F.struct("span_start", "span_end")).alias("spans")
         )
     )
-    toks = tokens_expr(F.col(text_col))
+    toks = tokens_expr(F.col("text"))
     with_spans = docs.join(
-        spans, F.col(id_col) == spans["doc"], "left"
+        spans, F.col("doc_id") == spans["doc"], "left"
     ).drop("doc")
     kept = F.filter(
         F.zip_with(
@@ -164,8 +159,8 @@ def remove_duplicated_spans(
         ),
     )
     return with_spans.select(
-        F.col(id_col),
-        F.col(text_col),
+        F.col("doc_id"),
+        F.col("text"),
         F.array_join(F.transform(kept, lambda s: s["t"]), " ").alias("clean_text"),
         (F.size(toks) - F.size(kept)).cast("long").alias("n_tokens_removed"),
     )

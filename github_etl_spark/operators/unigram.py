@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import drop_checkpoint_files, eager_checkpoint
+from ..session import eager_checkpoint, release
 
 # Pinned piece vocabulary: (piece, integer score). Single characters
 # score 10 (so every [a-z0-9]+ token is segmentable); multi-char
@@ -125,12 +125,11 @@ def unigram_segment_kernel(
     df: DataFrame,
     text_col: str,
     vocab: list[tuple[str, int]] | None = None,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Segment every token of ``text_col`` with the unigram Viterbi DP
     and emit flat per-document stats:
 
-    (id_col, n_tokens, n_pieces, total_score, pieces_digest)
+    (doc_id, n_tokens, n_pieces, total_score, pieces_digest)
 
     where pieces_digest = md5 of the full segmentation rendered as
     pieces joined by '|' within a token and tokens joined by ' ' —
@@ -145,7 +144,7 @@ def unigram_segment_kernel(
         raise ValueError("duplicate piece in vocab")
     plens = tuple(sorted({len(p) for p in vmap}, reverse=True))
     schema = (
-        f"{id_col} long, n_tokens long, n_pieces long, "
+        "doc_id long, n_tokens long, n_pieces long, "
         "total_score long, pieces_digest string"
     )
 
@@ -172,16 +171,16 @@ def unigram_segment_kernel(
 
         for pdf in batches:
             out = {k: [] for k in
-                   (id_col, "n_tokens", "n_pieces", "total_score",
+                   ("doc_id", "n_tokens", "n_pieces", "total_score",
                     "pieces_digest")}
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf[text_col]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower())
                         if t]
                 if not toks:
                     continue
                 segs = [word_seg(t) for t in toks]
                 rendered = " ".join(s[1] for s in segs)
-                out[id_col].append(did)
+                out["doc_id"].append(did)
                 out["n_tokens"].append(len(toks))
                 out["n_pieces"].append(sum(s[2] for s in segs))
                 out["total_score"].append(sum(s[0] for s in segs))
@@ -190,7 +189,7 @@ def unigram_segment_kernel(
                 )
             yield pd.DataFrame(out)
 
-    return df.select(id_col, text_col).mapInPandas(run, schema)
+    return df.select("doc_id", text_col).mapInPandas(run, schema)
 
 
 def sql_vocab_values(vocab: list[tuple[str, int]] | None = None) -> str:
@@ -384,8 +383,7 @@ def learn_vocab(
 
     # The result is driver-side (the bounded vocab); release the
     # distinct-token blocks/files instead of holding them to app end.
-    drop_checkpoint_files(toks)
-    toks.unpersist()
+    release(toks)
     return vocab
 
 
@@ -413,11 +411,7 @@ def unigram_learn(
 def unigram_tokenize_encode(
     df: DataFrame,
     text_col: str,
-    id_col: str = "doc_id",
     rounds: int = 3,
-    max_piece_len: int = 4,
-    min_count: int = 2,
-    max_vocab: int = 100,
 ) -> DataFrame:
     """END-TO-END unigram tokenization — the unigram sibling of
     ``bpe_tokenize_encode``: learn the vocabulary by hard EM
@@ -427,7 +421,7 @@ def unigram_tokenize_encode(
     FINAL vocabulary's bit-cost scores and emit per-document id
     sequences:
 
-        (id_col, n_tokens, n_pieces, input_ids)
+        (doc_id, n_tokens, n_pieces, input_ids)
 
     with ``input_ids`` the space-joined piece ids in document order
     (complex outputs are banned catalog-wide). Documents with zero
@@ -436,10 +430,7 @@ def unigram_tokenize_encode(
     Scale shape = learn's (corpus never leaves the cluster; bounded
     vocab to the driver) + one extra Arrow-batched map-only encode
     pass with the vocab/ids as a closure."""
-    vocab = learn_vocab(
-        df, text_col, rounds=rounds, max_piece_len=max_piece_len,
-        min_count=min_count, max_vocab=max_vocab,
-    )
+    vocab = learn_vocab(df, text_col, rounds=rounds)
     total_bits = sum(vocab.values()).bit_length()
     scores = {p: bitlen_score(c, total_bits) for p, c in vocab.items()}
     ids = {
@@ -450,7 +441,7 @@ def unigram_tokenize_encode(
     }
     plens = tuple(sorted({len(p) for p in vocab}, reverse=True))
     schema = (
-        f"{id_col} long, n_tokens long, n_pieces long, input_ids string"
+        "doc_id long, n_tokens long, n_pieces long, input_ids string"
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -472,17 +463,17 @@ def unigram_tokenize_encode(
 
         for pdf in batches:
             out = {k: [] for k in
-                   (id_col, "n_tokens", "n_pieces", "input_ids")}
-            for did, text in zip(pdf[id_col], pdf[text_col]):
+                   ("doc_id", "n_tokens", "n_pieces", "input_ids")}
+            for did, text in zip(pdf["doc_id"], pdf[text_col]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower())
                         if t]
                 if not toks:
                     continue
                 encoded = [word_ids(t) for t in toks]
-                out[id_col].append(did)
+                out["doc_id"].append(did)
                 out["n_tokens"].append(len(toks))
                 out["n_pieces"].append(sum(n for _, n in encoded))
                 out["input_ids"].append(" ".join(s for s, _ in encoded))
             yield pd.DataFrame(out)
 
-    return df.select(id_col, text_col).mapInPandas(run, schema)
+    return df.select("doc_id", text_col).mapInPandas(run, schema)

@@ -138,7 +138,7 @@ def wordpiece_learn(
         "pair_count long, left_count long, right_count long, "
         "score_scaled long"
     )
-    from ..session import drop_checkpoint_files, eager_checkpoint as _ckpt
+    from ..session import eager_checkpoint as _ckpt, release
 
     vocab = _ckpt(
         word_freq_table(df, text_col).select(
@@ -207,12 +207,10 @@ def wordpiece_learn(
                     F.regexp_replace("symstr", pattern, replacement),
                 )
             )
-            vocab.unpersist()
-            drop_checkpoint_files(vocab)
+            release(vocab)
             vocab = nxt
     finally:
-        vocab.unpersist()
-        drop_checkpoint_files(vocab)
+        release(vocab)
     return spark.createDataFrame(merges, schema)
 
 
@@ -317,7 +315,6 @@ def wordpiece_tokenize_encode(
     min_count: int = 2,
     k: int = 200,
     min_df: int = 2,
-    unk_id: int = 0,
 ) -> DataFrame:
     """End-to-end WordPiece tokenization — the full production
     text→ids path, the trio-completing sibling of bpe_tokenize_encode
@@ -328,8 +325,7 @@ def wordpiece_tokenize_encode(
     greedy-encode every document (broadcast Arrow kernel), induce the
     top-``k`` PIECE vocabulary with dense ids (`_vocab_rank`'s
     count-then-lexicographic order, min_df floor) and emit per-doc
-    ``array<long>`` piece-id sequences with sub-top-k pieces →
-    ``unk_id``.
+    ``array<long>`` piece-id sequences with sub-top-k pieces → id 0.
 
     Scale shape: learn rounds are vocabulary-sized aggs; the alphabet
     and merge table are the only driver-side lists (both bounded);
@@ -347,4 +343,4 @@ def wordpiece_tokenize_encode(
         F.col(id_col), F.posexplode("__pieces").alias("pos", "tok")
     )
     ids = _vocab_rank(toks, id_col, k, min_df).select("tok", "vocab_id")
-    return _assemble_input_ids(toks, ids, id_col, unk_id)
+    return _assemble_input_ids(toks, ids, id_col, 0)

@@ -56,7 +56,6 @@ def write_zordered(
     cols: tuple[str, str],
     bits: int = Z_BITS,
     n_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Write `df` clustered by the Morton key of two integer columns.
 
@@ -72,6 +71,6 @@ def write_zordered(
         .repartitionByRange(n_files, F.col("_z"))
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

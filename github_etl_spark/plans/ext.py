@@ -4055,7 +4055,7 @@ def streaming_mg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import dedup_tokens_expr
     from ..operators.pipeline import portable_hash_bucket
     from ..operators.sketches import mg_batch_fragments, mg_fold_sharded
-    from ..session import drop_checkpoint_files, eager_checkpoint
+    from ..session import eager_checkpoint, release
 
     t = load_tables(spark, sf_dir)
     toks = (
@@ -4082,7 +4082,7 @@ def streaming_mg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev = state
         state = eager_checkpoint(mg_fold_sharded(parts, counters=_MG_K))
         if prev is not None:
-            drop_checkpoint_files(prev)
+            release(prev)
         prev = None
     truth = toks.groupBy("shard", "tok").agg(
         F.count(F.lit(1)).alias("true_count")

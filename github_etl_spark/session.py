@@ -36,21 +36,6 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def _extra_confs() -> dict[str, str]:
-    """Operator-independent conf overrides from the environment —
-    ``SPARK_GRAFT_CONFS="k=v;k=v"``. The A/B lever for configuration
-    experiments (optimization guide §1: measure first): the same query
-    code runs under candidate confs in separate processes without
-    editing source. Production values belong in RUNTIME_CONFS once
-    measured; this hook is for measuring them."""
-    out: dict[str, str] = {}
-    for item in os.environ.get("SPARK_GRAFT_CONFS", "").split(";"):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            out[k.strip()] = v.strip()
-    return out
-
-
 # Sessions we've already shipped the package zip to, keyed by
 # (applicationId, startTime) — never by object id, which CPython
 # recycles across garbage-collected contexts.
@@ -130,7 +115,7 @@ def tune(spark: SparkSession) -> SparkSession:
     (most importantly UTC timestamps for oracle parity — SURVEY.md
     §7.4 risk 1).
     """
-    for k, v in {**RUNTIME_CONFS, **_extra_confs()}.items():
+    for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -260,38 +245,47 @@ def run_concurrently(fns, max_workers: int) -> list:
     return [f.result() for f in futures]
 
 
-def drop_checkpoint_files(df) -> None:
-    """Best-effort deterministic deletion of a reliably-checkpoint()ed
-    DataFrame's files — iterative operators (BPE learn, connected
-    components) otherwise leave one full working-table copy on disk
-    PER ROUND: ``unpersist()`` is a no-op for reliable checkpoints and
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` defaults to
-    false, so a 32k-round production run would accumulate 32k copies.
+def release(df) -> None:
+    """Free everything ``df`` holds: its CacheManager entry, the blocks
+    of the RDD an eager checkpoint materialized, and the files of a
+    reliable checkpoint. The one release call for dead frames.
 
-    Call it only once the checkpointed data is truly dead (the next
-    round's checkpoint is materialized, or the result was collected) —
-    the caller's result must not read through ``df`` lazily.
+    ``unpersist()`` alone frees none of a checkpoint's storage: the
+    CacheManager holds no entry for it, so a localCheckpoint's blocks
+    stay in ``getPersistentRDDs`` until JVM garbage collection wakes
+    the ContextCleaner, and a reliable checkpoint's files stay on disk
+    (``spark.cleaner.referenceTracking.cleanCheckpoints`` defaults to
+    false) — one full working-table copy per round of an iterative
+    operator.
 
-    Reaches the checkpoint path through py4j
-    (LogicalRDD → rdd → getCheckpointFile) and deletes via the Hadoop
-    FileSystem; any failure — plan shape changed in a Spark upgrade,
-    local-mode quirks, permission — degrades to the documented
-    cleaner-or-app-end leak with a warning, never an error (same
-    degrade contract as scoped_checkpoint_dir's restore)."""
+    Call it only once ``df`` is truly dead (the next round's checkpoint
+    is materialized, or the result was collected): a frame that still
+    reads it would lose its blocks.
+
+    Reaches the checkpointed RDD through py4j (LogicalRDD → rdd) and
+    deletes files via the Hadoop FileSystem; any failure there — plan
+    shape changed in a Spark upgrade, local-mode quirks, permission —
+    degrades to the cleaner-or-app-end leak with a warning, never an
+    error (same degrade contract as scoped_checkpoint_dir's restore)."""
+    df.unpersist()
     try:
-        sc = df.sparkSession.sparkContext
-        opt = df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "LogicalRDD":
+            return
+        rdd = plan.rdd()
+        rdd.unpersist(False)
+        opt = rdd.getCheckpointFile()
         if not opt.isDefined():
             return
+        sc = df.sparkSession.sparkContext
         jpath = sc._jvm.org.apache.hadoop.fs.Path(opt.get())
-        fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        jpath.getFileSystem(sc._jsc.hadoopConfiguration()).delete(jpath, True)
     except Exception as e:  # noqa: BLE001 — py4j raises broadly
         import warnings
 
         warnings.warn(
-            f"drop_checkpoint_files: could not delete checkpoint data "
-            f"({e}); files remain until the cleaner or app end",
+            f"release: could not free checkpoint data ({e}); it remains "
+            "until the cleaner or app end",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -303,9 +297,8 @@ def eager_checkpoint(df):
     the production default), executor-local blocks otherwise — the ONE
     implementation of the selection idiom every iterative operator
     uses (connected components, PageRank, BPE learn, surrogate keys);
-    policy changes (e.g. cleanup interaction with
-    ``drop_checkpoint_files``) belong here, not in per-operator
-    copies."""
+    policy changes (e.g. cleanup interaction with ``release``) belong
+    here, not in per-operator copies."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)

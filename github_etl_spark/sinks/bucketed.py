@@ -23,27 +23,28 @@ def write_bucketed(
     table: str,
     key: str,
     buckets: int = 16,
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist `df` as a managed table bucketed (and optionally sorted)
-    on `key`. Bucket count must match across tables that will be
+    """Persist `df` as a managed table bucketed and sorted on `key`,
+    replacing any table of that name. Bucket count must match across tables that will be
     co-join'd; pick it from target bucket size (~128-512 MB each at
     scale), not core count."""
     # One file per bucket: without this repartition each task writes
     # its own file into every bucket, and the scan only exposes the
     # sortBy ordering when a bucket is a single file — multi-file
     # buckets silently re-sort in the join.
-    writer = df.repartition(buckets, df[key]).write.mode(mode).bucketBy(buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
+    (
+        df.repartition(buckets, df[key])
+        .write.mode("overwrite")
+        .bucketBy(buckets, key)
+        .sortBy(key)
+        .saveAsTable(table)
+    )
 
 
 def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, key: str
 ) -> DataFrame:
-    """Join two same-key, same-bucket-count tables. With bucketing
+    """Inner-join two same-key, same-bucket-count tables. With bucketing
     metadata present Catalyst plans a shuffle-free (and with sorted
     buckets, sort-free) sort-merge join.
 
@@ -55,5 +56,5 @@ def colocated_join(
     return (
         spark.table(left_table)
         .hint("merge")
-        .join(spark.table(right_table), key, how)
+        .join(spark.table(right_table), key)
     )

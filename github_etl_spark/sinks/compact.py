@@ -129,7 +129,6 @@ def fold_partitions(
     table_path: str,
     part_col: str,
     into_value: int,
-    dedupe: bool = True,
     fold_single: bool = False,
 ) -> list[dict]:
     """Fold EVERY partition of a Hive-partitioned parquet table into
@@ -185,11 +184,10 @@ def fold_partitions(
         return []
     df = spark.read.parquet(table_path)
     data_cols = [c for c in df.columns if c != part_col]
-    merged = df.select(*data_cols)
-    if dedupe:
-        merged = merged.distinct()
     (
-        merged.withColumn(
+        df.select(*data_cols)
+        .distinct()
+        .withColumn(
             part_col,
             F.lit(int(into_value)).cast(dict(df.dtypes)[part_col]),
         )

@@ -61,7 +61,6 @@ class PartitionLock:
         repo: str,
         snapshot_date,
         stale_after: float = 3600.0,
-        poll: float = 0.05,
     ):
         date = (
             snapshot_date.isoformat()
@@ -72,7 +71,7 @@ class PartitionLock:
             base_dir, "_locks", f"{_escape(repo)}__{date}.lock"
         )
         self.stale_after = stale_after
-        self.poll = poll
+        self.poll = 0.05
         self.token = uuid.uuid4().hex
         self._held = False
 

@@ -121,13 +121,12 @@ class GithubClient:
         self,
         api_url: str,
         token: str | None = None,
-        timeout: float = 30.0,
         auth=None,
         budget=None,
     ):
         self.api_url = api_url.rstrip("/")
         self.token = token
-        self.timeout = timeout
+        self.timeout = 30.0
         # Optional provider with .headers() — e.g. sources.auth
         # .InstallationAuth (GitHub App flow, refreshed per request: the
         # reference's refresh_auth closure, main.py:843-869 / T3).

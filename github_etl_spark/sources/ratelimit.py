@@ -130,8 +130,8 @@ class TokenBucketServer:
     def url_for(self, host: str) -> str:
         return f"http://{host}:{self.port}"
 
-    def client(self, host: str, max_wait: float = 900.0) -> "BudgetClient":
-        return BudgetClient(self.url_for(host), secret=self.secret, max_wait=max_wait)
+    def client(self, host: str) -> "BudgetClient":
+        return BudgetClient(self.url_for(host), secret=self.secret)
 
     def close(self) -> None:
         self.server.shutdown()
@@ -147,10 +147,10 @@ class BudgetClient:
     executor on a dead coordinator would be worse.
     """
 
-    def __init__(self, url: str, secret: str = "", max_wait: float = 900.0):
+    def __init__(self, url: str, secret: str = ""):
         self.url = url.rstrip("/")
         self.secret = secret
-        self.max_wait = max_wait
+        self.max_wait = 900.0
 
     def acquire(self) -> None:
         deadline = time.monotonic() + self.max_wait

@@ -20,26 +20,23 @@ from pyspark.sql import functions as F
 
 def tumbling_counts(
     events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "1 hour",
     watermark: str = "10 minutes",
-    key: str = "event_type",
 ) -> DataFrame:
-    """Watermarked tumbling-window counts per key (T5).
+    """Watermarked 1-hour tumbling-window counts per ``event_type`` (T5).
 
-    Late rows beyond `watermark` are dropped; each (window, key) row is
+    Late rows beyond `watermark` are dropped; each (window, type) row is
     emitted exactly once in append mode when the watermark passes the
     window end. Partial (map-side) aggregation still applies before the
     keyed-state shuffle.
     """
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col(key))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), "1 hour").alias("win"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("win.start").alias("window_start"),
             F.col("win.end").alias("window_end"),
-            key,
+            "event_type",
             "n_events",
         )
     )
@@ -47,22 +44,20 @@ def tumbling_counts(
 
 def session_counts(
     events: DataFrame,
-    ts_col: str = "ts",
     gap: str = "30 minutes",
     watermark: str = "10 minutes",
-    key: str = "user_id",
 ) -> DataFrame:
     """Session windows per user: a session closes after `gap` of
     inactivity (the streaming form of the batch w4_sessionize query,
     which computes the same thing with lag + cumulative sum)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("sess"), F.col(key))
+        events.withWatermark("ts", watermark)
+        .groupBy(F.session_window(F.col("ts"), gap).alias("sess"), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("sess.start").alias("session_start"),
             F.col("sess.end").alias("session_end"),
-            key,
+            "user_id",
             "n_events",
         )
     )
@@ -71,7 +66,6 @@ def session_counts(
 def dedup_within_watermark(
     events: DataFrame,
     keys: list[str] | None = None,
-    ts_col: str = "ts",
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Stateful streaming dedup on event ids, state bounded by the
@@ -79,14 +73,12 @@ def dedup_within_watermark(
     exact dedup: at-least-once upstream → effectively-once downstream
     without unbounded state."""
     keys = keys or ["event_id"]
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
 def clicks_to_purchases_join(
     clicks: DataFrame,
     purchases: DataFrame,
-    ts_col: str = "ts",
-    key: str = "user_id",
     within: str = "1 hour",
     watermark: str = "10 minutes",
 ) -> DataFrame:
@@ -100,15 +92,15 @@ def clicks_to_purchases_join(
     stream-stream join viable on an unbounded stream. Without the time
     bound Spark would have to keep every row forever.
     """
-    c = clicks.withWatermark(ts_col, watermark).select(
-        F.col(key).alias("c_user"),
+    c = clicks.withWatermark("ts", watermark).select(
+        F.col("user_id").alias("c_user"),
         F.col("event_id").alias("click_id"),
-        F.col(ts_col).alias("click_ts"),
+        F.col("ts").alias("click_ts"),
     )
-    p = purchases.withWatermark(ts_col, watermark).select(
-        F.col(key).alias("p_user"),
+    p = purchases.withWatermark("ts", watermark).select(
+        F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
-        F.col(ts_col).alias("purchase_ts"),
+        F.col("ts").alias("purchase_ts"),
     )
     return c.join(
         p,
@@ -239,8 +231,6 @@ def interval_join_replay(
     clicks: DataFrame,
     purchases: DataFrame,
     batch_col: str,
-    ts_col: str = "ts",
-    key: str = "user_id",
     within: str = "1 hour",
     delay: str = "2 hours",
     batch_ids: list[int] | None = None,
@@ -265,7 +255,7 @@ def interval_join_replay(
     inner join.
 
     Scale shape: the watermark table is one row per batch, broadcast
-    into each side's filter; the pair join is an EQUI-join on ``key``
+    into each side's filter; the pair join is an EQUI-join on ``user_id``
     with the time band as a residual filter — it shuffles on the key
     like any stream-stream join, never a cartesian.
     """
@@ -273,7 +263,7 @@ def interval_join_replay(
 
     def _bmax(df, name):
         return df.groupBy(F.col(batch_col).alias("__b")).agg(
-            F.max(ts_col).alias(name)
+            F.max("ts").alias(name)
         )
 
     # Per-SOURCE running max over prior batches, THEN min across
@@ -323,19 +313,19 @@ def interval_join_replay(
         return (
             df.withColumn("__b", F.col(batch_col))
             .join(F.broadcast(wm), "__b")
-            .where(F.col("__wm").isNull() | (F.col(ts_col) >= F.col("__wm")))
+            .where(F.col("__wm").isNull() | (F.col("ts") >= F.col("__wm")))
             .drop("__wm")
         )
 
     c = _kept(clicks).select(
-        F.col(key).alias("user_id"),
+        F.col("user_id"),
         F.col("event_id").alias("click_id"),
-        F.col(ts_col).alias("click_ts"),
+        F.col("ts").alias("click_ts"),
     )
     p = _kept(purchases).select(
-        F.col(key).alias("p_user"),
+        F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
-        F.col(ts_col).alias("purchase_ts"),
+        F.col("ts").alias("purchase_ts"),
     )
     return c.join(
         p,

@@ -213,7 +213,6 @@ def stream_landing(
     sink_base: str,
     snapshot_date: str | _dt.date,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ):
     """Streaming ingest of enriched-PR JSON files → four snapshot
     tables, one `ingest_batch` sub-partition per micro-batch (S7's
@@ -223,7 +222,7 @@ def stream_landing(
     query = stream_files(
         spark, landing_dir, RAW_PR_SCHEMA,
         _make_batch_loader(sink_base, repo, snapshot_date),
-        checkpoint_dir, max_files_per_trigger,
+        checkpoint_dir,
     )
     return query, SnapshotSink(sink_base)
 
@@ -236,7 +235,6 @@ def stream_github(
     snapshot_date: str | _dt.date,
     checkpoint_dir: str,
     token: str | None = None,
-    with_children: bool = True,
 ):
     """LIVE end-to-end ETL: streaming GitHub source → transform →
     per-batch append into the four snapshot tables.
@@ -257,7 +255,6 @@ def stream_github(
         .option("repo", repo)
         .option("url", api_url)
         .option("state", "all")
-        .option("with_children", "true" if with_children else "false")
     )
     if token:
         reader = reader.option("token", token)

@@ -194,9 +194,6 @@ def stream_pretrain_gated(
 def pretrain_fold_verdicts(
     seed: DataFrame,
     batches: list[tuple[str, DataFrame]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic replay of the streaming composite as an N-ingest
@@ -224,22 +221,19 @@ def pretrain_fold_verdicts(
     from ..session import eager_checkpoint
 
     outs: list[DataFrame] = []
-    corpus = seed.select(id_col, text_col)
+    corpus = seed.select("doc_id", "text")
     for tag, b in batches:
-        gated = b.where(web_gate_expr(F.col(text_col)))
-        fp = incremental_dedup_verdicts(
-            corpus, gated, text_col, id_col,
-            threshold=threshold, hash_family=hash_family,
-        )
-        new_ids = fp.where(F.col("verdict") == "new").select(id_col)
+        gated = b.where(web_gate_expr(F.col("text")))
+        fp = incremental_dedup_verdicts(corpus, gated, hash_family=hash_family)
+        new_ids = fp.where(F.col("verdict") == "new").select("doc_id")
         survivors = eager_checkpoint(
-            gated.select(id_col, text_col).join(F.broadcast(new_ids), id_col)
+            gated.select("doc_id", "text").join(F.broadcast(new_ids), "doc_id")
         )
         summary = span_incremental_verdicts(
-            corpus, survivors, text_col, id_col
+            corpus, survivors, "text", "doc_id"
         )
         outs.append(
-            _compose_out(b, gated, fp, summary, id_col).select(
+            _compose_out(b, gated, fp, summary, "doc_id").select(
                 F.lit(tag).alias("ingest"), "*"
             )
         )

@@ -75,9 +75,9 @@ _update_running_totals = _running_totals_fn(IDLE_EVICT_MS)
 
 
 def running_totals(
-    events: DataFrame, key: str = "user_id", idle_evict_ms: int | None = None
+    events: DataFrame, idle_evict_ms: int | None = None
 ) -> DataFrame:
-    """Per-key cumulative event counts across micro-batches.
+    """Per-``user_id`` cumulative event counts across micro-batches.
 
     Emits one row per key per micro-batch in which the key appears:
     (key, events this batch, events ever). State = one long per key.
@@ -91,7 +91,7 @@ def running_totals(
     an eviction actually fires.
     """
     evict = idle_evict_ms is not None
-    return events.groupBy(key).applyInPandasWithState(
+    return events.groupBy("user_id").applyInPandasWithState(
         _running_totals_fn(idle_evict_ms),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

@@ -137,12 +137,7 @@ def portable_vector_seeds(
     return [list(r[vec_col]) for r in rows]
 
 
-def vector_fold_verdicts(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_centroids: int = 8,
-) -> DataFrame:
+def vector_fold_verdicts(docs: DataFrame) -> DataFrame:
     """DETERMINISTIC fold of the gate chain, no disk: seed corpus =
     gated `id % 4 == 0` documents, centroids = the portable md5 seeds
     over the seed corpus' DERIVED vectors (the frozen-centroid regime
@@ -157,23 +152,23 @@ def vector_fold_verdicts(
     gate's replay story simpler than the membership gates'."""
     spark = docs.sparkSession
     seed = docs.where(
-        (F.pmod(F.col(id_col), F.lit(4)) == 0)
-        & web_gate_expr(F.col(text_col))
+        (F.pmod(F.col("doc_id"), F.lit(4)) == 0)
+        & web_gate_expr(F.col("text"))
     )
-    sv = eager_checkpoint(embed_text_vec(seed, text_col, id_col))
-    cents = portable_vector_seeds(sv, id_col, "vec", n_centroids)
+    sv = eager_checkpoint(embed_text_vec(seed, "text", "doc_id"))
+    cents = portable_vector_seeds(sv, "doc_id", "vec", 8)
     empty = "ingest_batch long, cell int, n_docs long"
     if not cents:
         return spark.createDataFrame([], empty)
-    ing = docs.where(F.pmod(F.col(id_col), F.lit(4)).isin([1, 2, 3]))
-    kept = ing.where(web_gate_expr(F.col(text_col)))
-    kv = eager_checkpoint(embed_text_vec(kept, text_col, id_col))
+    ing = docs.where(F.pmod(F.col("doc_id"), F.lit(4)).isin([1, 2, 3]))
+    kept = ing.where(web_gate_expr(F.col("text")))
+    kv = eager_checkpoint(embed_text_vec(kept, "text", "doc_id"))
     assigned = kv.select(
-        F.pmod(F.col(id_col), F.lit(4)).cast("long").alias("ingest_batch"),
+        F.pmod(F.col("doc_id"), F.lit(4)).cast("long").alias("ingest_batch"),
         _int_cell_rank_expr(F.col("vec"), cents)[0]["cell"].alias("cell"),
     )
-    rej = ing.where(~web_gate_expr(F.col(text_col))).select(
-        F.pmod(F.col(id_col), F.lit(4)).cast("long").alias("ingest_batch"),
+    rej = ing.where(~web_gate_expr(F.col("text"))).select(
+        F.pmod(F.col("doc_id"), F.lit(4)).cast("long").alias("ingest_batch"),
         F.lit(REJECTED_CELL).cast("int").alias("cell"),
     )
     return (

@@ -1,0 +1,59 @@
+"""Iterative operators free the checkpoints they are done with.
+
+``DataFrame.unpersist()`` does nothing for an eager checkpoint: the
+CacheManager holds no entry for it, so its blocks stay registered in
+the SparkContext's persistent RDDs until JVM garbage collection wakes
+the ContextCleaner. Each test counts the persistent RDDs that one call
+leaves registered (by id, so the cleaner freeing an earlier test's
+leftovers cannot hide a leak): only the checkpoints the returned frame
+still reads may remain.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+from github_etl_spark.operators.graph import connected_components, pagerank_fixed_point
+from github_etl_spark.operators.pipeline import bpe_learn_merges
+from github_etl_spark.operators.wordpiece import wordpiece_learn
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _docs(spark):
+    words = ["lower", "newest", "widest", "low", "new", "wide", "slow", "snow"]
+    rows = [(i, " ".join(words[(i + j) % len(words)] for j in range(5))) for i in range(40)]
+    return spark.createDataFrame(rows, "id long, text string")
+
+
+def _edges(spark):
+    pairs = [(1, 2), (2, 3), (3, 4), (5, 6), (6, 7), (2, 8), (8, 9)]
+    return spark.createDataFrame(pairs, "src long, dst long")
+
+
+@pytest.mark.parametrize(
+    "run, reads",
+    [
+        (lambda spark: bpe_learn_merges(_docs(spark), "text", n_merges=8).collect(), 0),
+        (lambda spark: wordpiece_learn(_docs(spark), "text", n_merges=8).collect(), 0),
+        (
+            lambda spark: connected_components(_edges(spark), local_finish_edges=0).collect(),
+            1,  # the final round's edge set
+        ),
+        (
+            lambda spark: pagerank_fixed_point(
+                _edges(spark), iterations=6, checkpoint_interval=1
+            ).collect(),
+            1,  # the last rank snapshot
+        ),
+    ],
+    ids=["bpe_learn", "wordpiece_learn", "connected_components", "pagerank"],
+)
+def test_checkpoints_released(spark, run, reads):
+    spark.catalog.clearCache()
+    before = _persistent_rdds(spark)
+    assert run(spark)
+    left = len(_persistent_rdds(spark) - before)
+    assert left <= reads, f"{left} persistent RDDs left, the result reads {reads}"
