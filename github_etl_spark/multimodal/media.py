@@ -456,7 +456,7 @@ def embed_text_linear(df: DataFrame) -> DataFrame:
     UDF, no model on the driver. Emits the vector as a space-joined
     string (catalog-wide complex-cell ban) plus integer checksums."""
     vec = F.col("vec")
-    return embed_text_vec(df, "text", "doc_id").select(
+    return embed_text_vec(df).select(
         "doc_id",
         F.array_join(vec, " ").alias("embedding"),
         F.aggregate(vec, F.lit(0).cast("long"), lambda a, x: a + x).alias(

@@ -202,17 +202,13 @@ def bloom_prefilter_join(
         )
     if num_bits is None:
         n = probe.select(probe_key).distinct().count()
-        num_bits = optimal_bits(n, 0.03)
+        num_bits = optimal_bits(n)
     if num_bits // 64 <= max_literal_words:
-        words = build_bloom(probe, probe_key, num_bits, 5)
-        pruned = fact.where(
-            bloom_might_contain(F.col(fact_key), words, 5)
-        )
+        words = build_bloom(probe, probe_key, num_bits)
+        pruned = fact.where(bloom_might_contain(F.col(fact_key), words))
     else:
-        words_df = build_bloom_df(probe, probe_key, num_bits, 5)
-        pruned = bloom_broadcast_filter(
-            fact, fact_key, words_df, num_bits, 5
-        )
+        words_df = build_bloom_df(probe, probe_key, num_bits)
+        pruned = bloom_broadcast_filter(fact, fact_key, words_df, num_bits)
     if how in ("semi", "left_semi", "leftsemi"):
         return pruned.join(
             probe.select(probe_key).distinct(),

@@ -260,7 +260,7 @@ def minhash_lsh_candidates(
     max_bucket_size = max(2, int(max_bucket_size))
     sigs = eager_checkpoint(
         minhash_signatures(
-            df, text_col, id_col, num_hashes, 3, hash_family=hash_family
+            df, text_col, id_col, num_hashes, hash_family=hash_family
         )
     )
     band_cols = _band_bucket_structs(num_hashes, bands, hash_family)

@@ -277,8 +277,6 @@ def dedup_batch_rows(
     spark: SparkSession,
     path: str,
     batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> BatchRows:
     """Read the index's meta sidecar (raising ValueError when the index
     is missing or incomplete) and derive ``batch``'s fingerprint and
@@ -286,9 +284,9 @@ def dedup_batch_rows(
     meta = _read_meta(spark, path)
     return BatchRows(
         meta,
-        _fingerprints(batch, text_col, id_col),
+        _fingerprints(batch, "text", "doc_id"),
         minhash_band_buckets(
-            batch, text_col, id_col,
+            batch, "text", "doc_id",
             meta["num_hashes"], meta["bands"], meta["shingle"],
             meta["hash_family"],
         ),
@@ -314,7 +312,7 @@ def dedup_index_check(
     rows can't flip its verdicts (`streaming.pipeline.stream_files`).
     """
     if rows is None:
-        rows = dedup_batch_rows(spark, path, batch, "text", "doc_id")
+        rows = dedup_batch_rows(spark, path, batch)
     corpus_fp = spark.read.parquet(f"{path}/fingerprints")
     corpus_bands = spark.read.parquet(f"{path}/bands")
     if exclude_batch is not None:

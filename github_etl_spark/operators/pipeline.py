@@ -133,12 +133,13 @@ def winnow_fingerprints_expr(text_col) -> Column:
     """
     from ..functions.text import dedup_tokens_expr
 
-    grams = ngrams_expr(dedup_tokens_expr(text_col), 3)
+    k, w = 3, 4
+    grams = ngrams_expr(dedup_tokens_expr(text_col), k)
     hs = F.transform(grams, lambda g: F.substring(F.md5(g), 1, 16))
     n = F.size(hs)
-    n_wins = n - (4 - 1)
+    n_wins = n - (w - 1)
     mins = F.slice(hs, 1, n_wins)
-    for i in range(1, 4):
+    for i in range(1, w):
         mins = F.zip_with(mins, F.slice(hs, i + 1, n_wins), lambda a, b: F.least(a, b))
     wins = (
         F.when(n_wins > 0, mins)
@@ -613,18 +614,16 @@ def _vocab_rank(toks: DataFrame, doc_col: str, k: int, min_df: int) -> DataFrame
     return top.withColumn("vocab_id", F.row_number().over(w).cast("long"))
 
 
-def _assemble_input_ids(
-    toks: DataFrame, vocab: DataFrame, id_col: str, unk_id: int
-) -> DataFrame:
+def _assemble_input_ids(toks: DataFrame, vocab: DataFrame, id_col: str) -> DataFrame:
     """Shared encode tail over a (id, pos, tok) frame: broadcast-join
-    the ≤k vocab (OOV → unk_id), reassemble per-document id arrays by
+    the ≤k vocab (OOV → id 0), reassemble per-document id arrays by
     in-array (pos, tid) sorting — one corpus-sized groupBy, no global
     sort. ONE definition shared by `tokenize_encode` and
     `bpe_tokenize_encode`."""
     enc = toks.join(F.broadcast(vocab), "tok", "left").select(
         id_col,
         "pos",
-        F.coalesce(F.col("vocab_id"), F.lit(unk_id)).cast("long").alias("tid"),
+        F.coalesce(F.col("vocab_id"), F.lit(0)).cast("long").alias("tid"),
     )
     return enc.groupBy(id_col).agg(
         F.count("*").alias("n_tokens"),
@@ -667,7 +666,7 @@ def tokenize_encode(
         F.col(id_col),
         F.posexplode(words_expr(F.col(text_col))).alias("pos", "tok"),
     )
-    return _assemble_input_ids(toks, vocab, id_col, 0)
+    return _assemble_input_ids(toks, vocab, id_col)
 
 
 def tokenize_encode_stats(
@@ -1054,7 +1053,7 @@ def bpe_tokenize_encode(
         F.col(id_col), F.posexplode("__pieces").alias("pos", "tok")
     )
     vocab = _vocab_rank(toks, id_col, k, min_df).select("tok", "vocab_id")
-    return _assemble_input_ids(toks, vocab, id_col, 0)
+    return _assemble_input_ids(toks, vocab, id_col)
 
 
 # --------------------------------------------------------------------- DSIR

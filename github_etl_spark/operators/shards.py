@@ -31,12 +31,12 @@ SHUFFLE_KEY = "_shuffle_key"
 
 
 def shard_assignment(
-    docs: DataFrame, id_col: str = "doc_id", n_shards: int = 8
+    docs: DataFrame, n_shards: int = 8
 ) -> DataFrame:
     """Input plus (shard, _shuffle_key) — pure narrow expressions."""
     return docs.withColumn(
-        SHUFFLE_KEY, F.md5(F.col(id_col).cast("string"))
-    ).withColumn("shard", portable_hash_bucket(F.col(id_col), n_shards))
+        SHUFFLE_KEY, F.md5(F.col("doc_id").cast("string"))
+    ).withColumn("shard", portable_hash_bucket(F.col("doc_id"), n_shards))
 
 
 def write_shuffled_shards(
@@ -55,7 +55,7 @@ def write_shuffled_shards(
     a shard's files lexicographically streams the canonical order
     without any sort of its own.
     """
-    sharded = shard_assignment(docs, "doc_id", n_shards)
+    sharded = shard_assignment(docs, n_shards=n_shards)
     (
         sharded.repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", SHUFFLE_KEY)

@@ -976,7 +976,7 @@ def ivf_topk_portable(
     """
     cents = ivf_portable_seed_centroids(
         corpus if train_on is None else train_on,
-        "vec_id", "embedding", n_centroids, quant,
+        n_centroids=n_centroids, quant=quant,
     )
     if not cents:
         return ivf_assign(corpus, []).select(

@@ -343,4 +343,4 @@ def wordpiece_tokenize_encode(
         F.col(id_col), F.posexplode("__pieces").alias("pos", "tok")
     )
     ids = _vocab_rank(toks, id_col, k, min_df).select("tok", "vocab_id")
-    return _assemble_input_ids(toks, ids, id_col, 0)
+    return _assemble_input_ids(toks, ids, id_col)

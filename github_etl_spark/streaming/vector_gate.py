@@ -155,14 +155,14 @@ def vector_fold_verdicts(docs: DataFrame) -> DataFrame:
         (F.pmod(F.col("doc_id"), F.lit(4)) == 0)
         & web_gate_expr(F.col("text"))
     )
-    sv = eager_checkpoint(embed_text_vec(seed, "text", "doc_id"))
-    cents = portable_vector_seeds(sv, "doc_id", "vec", 8)
+    sv = eager_checkpoint(embed_text_vec(seed))
+    cents = portable_vector_seeds(sv)
     empty = "ingest_batch long, cell int, n_docs long"
     if not cents:
         return spark.createDataFrame([], empty)
     ing = docs.where(F.pmod(F.col("doc_id"), F.lit(4)).isin([1, 2, 3]))
     kept = ing.where(web_gate_expr(F.col("text")))
-    kv = eager_checkpoint(embed_text_vec(kept, "text", "doc_id"))
+    kv = eager_checkpoint(embed_text_vec(kept))
     assigned = kv.select(
         F.pmod(F.col("doc_id"), F.lit(4)).cast("long").alias("ingest_batch"),
         _int_cell_rank_expr(F.col("vec"), cents)[0]["cell"].alias("cell"),
