@@ -4,7 +4,7 @@ A parameter with a default that no call in the tree ever passes is a
 configuration that no test or benchmark covers: the branch it selects
 is dead weight. This lint walks the AST (no Spark), collects every
 defaulted parameter of every function under ``github_etl_spark/``
-(outside ``plans/``, whose oracle builders are reference code), and
+(outside ``plans/``, whose oracle queries are reference code), and
 every call under the library, ``perfbench/``, ``tools/``, ``tests/``,
 ``bench.py`` and ``__spark_entry__.py``. A parameter counts as set when
 a call to a function of that name passes it by keyword, by position
