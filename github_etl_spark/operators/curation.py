@@ -46,6 +46,16 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import round_det
 from ..functions.text import EN_STOPWORDS
+from ..sinks.store import (
+    META,
+    append_batch,
+    batch_ids,
+    fold,
+    read_batches,
+    read_sidecar,
+    write_build,
+    write_sidecar,
+)
 
 # Derived-line rendering constants, shared verbatim with the oracle
 # SQL in plans/curation.py — change one, change both.
@@ -456,8 +466,6 @@ def _span_doc_summary(
 
 # ------------------------------------------------ materialized span store
 
-_SPAN_META_SUFFIX = "_meta"
-
 
 def _span_meta() -> dict:
     """Span-keying parameters pinned into the store's meta sidecar.
@@ -475,51 +483,29 @@ def _span_meta() -> dict:
 
 def span_index_build(corpus: DataFrame, path: str) -> None:
     """Materialize the span store: the corpus's DISTINCT
-    three-sentence-span keys at `{path}/spans` (partitioned by
-    `ingest_batch`, build rows in partition −1), keying parameters at
-    `{path}_meta` (one-line JSON via the Spark text writer).
+    three-sentence-span keys at `{path}/spans` (the ingest-batch layout
+    of `sinks/store.py`: build rows in partition −1), keying parameters
+    at `{path}_meta`.
 
-    The meta sidecar is written FIRST — the incremental.py
-    crash-ordering contract: a crash mid-build leaves a store the
-    check reads with the right parameters (possibly incomplete —
-    rebuild), never one silently probed with the wrong keying. The
-    build-time DISTINCT is the one corpus-wide shuffle the store ever
-    pays; every later ingest probes and appends batch-bounded sets
-    (span_index_check / span_index_append) without rescanning raw
-    corpus text — the whole point of the incremental form."""
-    import json as _json
-
-    spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(_json.dumps(_span_meta()),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(path + _SPAN_META_SUFFIX)
-    (
+    The meta sidecar is written FIRST — the store crash-ordering
+    contract: a crash mid-build leaves a store the check reads with the
+    right parameters (possibly incomplete — rebuild), never one
+    silently probed with the wrong keying. The build-time DISTINCT is
+    the one corpus-wide shuffle the store ever pays; every later ingest
+    probes and appends batch-bounded sets (span_index_check /
+    span_index_append) without rescanning raw corpus text — the whole
+    point of the incremental form."""
+    write_sidecar(corpus.sparkSession, path, META, _span_meta())
+    write_build(
         c4_spans_from(c4_kept_lines(corpus, "text", "doc_id"), "doc_id")
         .select("span_key")
-        .distinct()
-        .withColumn("ingest_batch", F.lit(-1).cast("long"))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(f"{path}/spans")
+        .distinct(),
+        f"{path}/spans",
     )
 
 
-def _read_span_meta(spark: SparkSession, path: str) -> dict:
-    import json as _json
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.text(path + _SPAN_META_SUFFIX).head()
-    except AnalysisException:  # path missing entirely
-        row = None
-    if row is None or not row[0]:
-        raise ValueError(
-            f"span store at {path!r} has no meta sidecar at "
-            f"{path + _SPAN_META_SUFFIX!r} — incomplete build? Rebuild "
-            "with span_index_build."
-        )
-    meta = _json.loads(row[0])
+def _check_span_keying(spark: SparkSession, path: str) -> None:
+    meta = read_sidecar(spark, path, META, "span_index_build")
     current = _span_meta()
     if meta != current:
         raise ValueError(
@@ -527,20 +513,23 @@ def _read_span_meta(spark: SparkSession, path: str) -> dict:
             f"this code keys with {current} — span keys would not "
             "match. Rebuild with span_index_build."
         )
-    return meta
 
 
-def _span_store(
+def span_index_store(
     spark: SparkSession, path: str, exclude_batch: int | None
 ) -> DataFrame:
-    store = spark.read.parquet(f"{path}/spans")
-    if exclude_batch is not None:
-        # Partition-pruned mask (not a scan): a replayed streaming
-        # batch excludes its OWN partition so a prior crashed attempt's
-        # half-published keys can't flip its verdicts
-        # (streaming/span_gate.py).
-        store = store.where(F.col("ingest_batch") != int(exclude_batch))
-    return store.select("span_key")
+    """The store's span keys (lazy), after checking the sidecar's
+    keying against this code's (`sinks.store.StoreMissing`, a
+    ValueError, for a missing store; ValueError naming the rebuild for
+    drifted keying). ``exclude_batch`` masks one ingest batch with a
+    partition filter: a replayed streaming batch excludes its OWN
+    partition so a prior crashed attempt's half-published keys can't
+    flip its verdicts. A gate calls this before its first write, once
+    per batch (rule (4) in `streaming.pipeline.stream_files`)."""
+    _check_span_keying(spark, path)
+    return read_batches(spark, f"{path}/spans", exclude_batch).select(
+        "span_key"
+    )
 
 
 def span_index_check(
@@ -554,95 +543,48 @@ def span_index_check(
     the roundtrip test) without rescanning the corpus's raw text:
     per-ingest cost is one store-parquet scan (span keys only, no
     text) plus batch-sized work."""
-    _read_span_meta(spark, path)
+    store = span_index_store(spark, path, exclude_batch)
     bstats = c4_kept_lines(batch, "text", "doc_id")
     bspans = c4_spans_from(bstats, "doc_id")
-    rows = span_verdict_rows(
-        bspans, _span_store(spark, path, exclude_batch), "doc_id"
-    )
+    rows = span_verdict_rows(bspans, store, "doc_id")
     return _span_doc_summary(bstats, rows, "doc_id")
 
 
 def span_index_fold(spark: SparkSession, path: str) -> int:
     """Fold the span store's per-ingest partitions into one fresh
-    partition (sinks/compact.fold_partitions — write-first crash-safe
-    ordering; every intermediate state is a duplicated superset, which
+    partition (`sinks.store.fold` — write-first crash-safe ordering;
+    every intermediate state is a duplicated superset, which
     membership semantics ignore). Returns the number of partitions
     folded (0 = nothing to do). Run on a QUIESCED stream only: folding
     erases batch identity, so a replayed micro-batch can no longer
-    exclude its own rows (the fold_partitions caveat). Verdicts are
-    invariant under folding — pinned in tests/test_span_index.py."""
-    from ..sinks.compact import fold_partitions, partition_stats
-
-    _read_span_meta(spark, path)
+    exclude its own rows. Verdicts are invariant under folding —
+    pinned in tests/test_span_index.py."""
+    _check_span_keying(spark, path)
     table = f"{path}/spans"
-    existing = [
-        int(p["partition"]["ingest_batch"]) for p in partition_stats(table)
-    ]
-    if len(existing) <= 1:
+    if len(batch_ids(table)) <= 1:
         return 0
-    return len(
-        fold_partitions(
-            spark, table, "ingest_batch", into_value=min(existing) - 1
-        )
-    )
+    return fold(spark, table)
 
 
 def span_index_append(
     spark: SparkSession,
     path: str,
     new_keys: DataFrame,
-    ingest_batch: int | None = None,
+    ingest_batch: int,
 ) -> None:
     """Append a batch's NEW span keys (the `verdict == 'new'` rows of
     `span_verdict_rows` — already distinct by the keeper rule, already
     disjoint from the store by the probe) so the next batch dedups
     against them.
 
-    With an `ingest_batch` id the write DYNAMIC-OVERWRITES exactly the
-    `ingest_batch=N` partition — a replayed streaming batch
-    republishes its own partition instead of double-appending
-    (idempotent under foreachBatch's at-least-once delivery). Without
-    one, rows land in the build partition (−1); that path is made
-    retry-idempotent by anti-joining the store's existing keys before
-    the append (ADVICE r12 — a crashed-then-rerun batchless call would
-    otherwise double-append the same keys with no replay mask to
-    catch it; membership verdicts tolerate duplicates, storage does
-    not). The anti-join's store scan is why streaming ingest should
-    always pass an `ingest_batch` id instead.
-
-    The store's keying is validated here only on the batchless path: a
-    streaming gate has already read the sidecar before its first write
-    (rule (4) in `streaming.pipeline.stream_files`), once per batch."""
-    batch_id = -1 if ingest_batch is None else int(ingest_batch)
-    mode = "append" if ingest_batch is None else "overwrite"
-    if ingest_batch is None:
-        from pyspark.errors import AnalysisException
-
-        from ..session import eager_checkpoint
-
-        _read_span_meta(spark, path)
-
-        try:
-            existing = spark.read.parquet(f"{path}/spans").select("span_key")
-        except AnalysisException:
-            existing = None  # empty/missing store: nothing to dedupe against
-        if existing is not None:
-            # Checkpoint breaks lineage so the write below never reads
-            # the path it is appending to.
-            new_keys = eager_checkpoint(
-                new_keys.select("span_key").join(
-                    existing, "span_key", "left_anti"
-                )
-            )
-    (
-        new_keys.select("span_key")
-        .withColumn("ingest_batch", F.lit(batch_id).cast("long"))
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(f"{path}/spans")
-    )
+    The write DYNAMIC-OVERWRITES exactly the `ingest_batch=N`
+    partition (`sinks.store.append_batch`) — a replayed streaming
+    batch republishes its own partition instead of double-appending
+    (idempotent under foreachBatch's at-least-once delivery). Negative
+    ids are reserved for the build and folds (ValueError). The store's
+    keying is not re-read here: the caller read it through
+    `span_index_store` before its first write."""
+    append_batch(new_keys.select("span_key"), f"{path}/spans", ingest_batch)
 
 
 def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

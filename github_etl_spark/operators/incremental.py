@@ -37,25 +37,23 @@ batch_bucket_size rows — bounded by the batch; the build path
 additionally applies the same deterministic `max_bucket_size` cap as
 `minhash_lsh_candidates` so no store bucket is unbounded either.
 
-Crash consistency: `dedup_index_build` stamps a JSON meta sidecar
-(hash parameters) that `dedup_index_check`/`dedup_index_append` reuse,
-so check-time parameters cannot drift from build-time. Both stores are
-partitioned by an `ingest_batch` column (build writes batch −1): a
-streaming ingest passes its micro-batch id to `dedup_index_append`,
-which then DYNAMIC-OVERWRITES exactly partition `ingest_batch=N` —
-replaying a crashed batch rewrites its own store partition instead of
-double-appending, and `dedup_index_check(..., exclude_batch=N)` masks
-the failed attempt's rows so replayed verdicts are identical to the
-first attempt's (`streaming.pipeline.stream_files`' docstring holds
-the full exactly-once argument). Batch-less appends land in partition
-−1 with plain append semantics; wrap those in the snapshot transaction
-log (sinks/txnlog.py) where a reader racing a crashed append matters.
+Crash consistency: both stores live in the ingest-batch layout of
+`sinks/store.py`. `dedup_index_build` writes the JSON meta sidecar
+(hash parameters) first and the build rows into batch −1;
+`dedup_index_check`/`dedup_index_append` reuse the sidecar, so
+check-time parameters cannot drift from build-time. Every append
+carries its micro-batch id and DYNAMIC-OVERWRITES exactly partition
+`ingest_batch=N` of each store — replaying a crashed batch rewrites
+its own store partition instead of double-appending, and
+`dedup_index_check(..., exclude_batch=N)` masks the failed attempt's
+rows so replayed verdicts are identical to the first attempt's
+(`streaming.pipeline.stream_files`' docstring holds the full
+exactly-once argument).
 """
 
 from __future__ import annotations
 
 import functools
-import json
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,9 +61,18 @@ from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_expr
 from ..session import run_concurrently
+from ..sinks.store import (
+    META,
+    append_batch,
+    batch_ids,
+    fold,
+    read_batches,
+    read_sidecar,
+    write_build,
+    write_sidecar,
+)
 from .dedup import minhash_band_buckets, signature_agreement_expr
 
-_META_SUFFIX = "_meta"
 _DEFAULT_META = {
     "num_hashes": 32,
     "bands": 8,
@@ -75,10 +82,10 @@ _DEFAULT_META = {
 }
 
 
-def _fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _fingerprints(df: DataFrame) -> DataFrame:
     return df.select(
-        F.col(id_col).alias("doc"),
-        fingerprint_expr(F.col(text_col)).alias("fingerprint"),
+        F.col("doc_id").alias("doc"),
+        fingerprint_expr(F.col("text")).alias("fingerprint"),
     )
 
 
@@ -167,8 +174,8 @@ def incremental_dedup_verdicts(
     Corpus/batch ids are assumed disjoint (they are different tables in
     any real ingest); overlapping ids would self-match.
     """
-    corpus_fp = _fingerprints(corpus, "text", "doc_id")
-    batch_fp = _fingerprints(batch, "text", "doc_id")
+    corpus_fp = _fingerprints(corpus)
+    batch_fp = _fingerprints(batch)
     corpus_bands = minhash_band_buckets(
         corpus, "text", "doc_id", hash_family=hash_family
     )
@@ -208,43 +215,23 @@ def dedup_index_build(
     parameters at `{path}_meta` (one-line JSON via the Spark text
     writer — works on any supported filesystem).
 
-    The meta sidecar is written FIRST: a crash mid-build leaves stores
-    that `dedup_index_check` reads with the right parameters (possibly
-    incomplete — rebuild), never stores silently probed with the wrong
-    hash family.
+    The meta sidecar is written FIRST (`sinks.store.write_sidecar`):
+    a crash mid-build leaves stores that `dedup_index_check` reads with
+    the right parameters (possibly incomplete — rebuild), never stores
+    silently probed with the wrong hash family.
     """
-    spark = corpus.sparkSession
     meta = {**_DEFAULT_META, "max_bucket_size": max_bucket_size}
-    spark.createDataFrame(
-        [(json.dumps(meta),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(path + _META_SUFFIX)
-    _fingerprints(corpus, "text", "doc_id").withColumn(
-        "ingest_batch", F.lit(-1).cast("long")
-    ).write.mode("overwrite").partitionBy("ingest_batch").parquet(
-        f"{path}/fingerprints"
-    )
+    write_sidecar(corpus.sparkSession, path, META, meta)
+    write_build(_fingerprints(corpus), f"{path}/fingerprints")
     bands_df = minhash_band_buckets(corpus, "text", "doc_id")
-    _capped_bands(bands_df, max_bucket_size).withColumn(
-        "ingest_batch", F.lit(-1).cast("long")
-    ).write.mode("overwrite").partitionBy("ingest_batch").parquet(
-        f"{path}/bands"
-    )
+    write_build(_capped_bands(bands_df, max_bucket_size), f"{path}/bands")
 
 
 def _read_meta(spark: SparkSession, path: str) -> dict:
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.text(path + _META_SUFFIX).head()
-    except AnalysisException:  # path missing entirely
-        row = None
-    if row is None or not row[0]:
-        raise ValueError(
-            f"dedup index at {path!r} has no meta sidecar at "
-            f"{path + _META_SUFFIX!r} — incomplete build? Rebuild with "
-            "dedup_index_build."
-        )
-    return {**_DEFAULT_META, **json.loads(row[0])}
+    return {
+        **_DEFAULT_META,
+        **read_sidecar(spark, path, META, "dedup_index_build"),
+    }
 
 
 class BatchRows(NamedTuple):
@@ -278,13 +265,14 @@ def dedup_batch_rows(
     path: str,
     batch: DataFrame,
 ) -> BatchRows:
-    """Read the index's meta sidecar (raising ValueError when the index
-    is missing or incomplete) and derive ``batch``'s fingerprint and
-    band relations with its parameters. Both relations are lazy."""
+    """Read the index's meta sidecar (raising
+    `sinks.store.StoreMissing`, a ValueError, when the index is missing
+    or incomplete) and derive ``batch``'s fingerprint and band
+    relations with its parameters. Both relations are lazy."""
     meta = _read_meta(spark, path)
     return BatchRows(
         meta,
-        _fingerprints(batch, "text", "doc_id"),
+        _fingerprints(batch),
         minhash_band_buckets(
             batch, "text", "doc_id",
             meta["num_hashes"], meta["bands"], meta["shingle"],
@@ -313,15 +301,10 @@ def dedup_index_check(
     """
     if rows is None:
         rows = dedup_batch_rows(spark, path, batch)
-    corpus_fp = spark.read.parquet(f"{path}/fingerprints")
-    corpus_bands = spark.read.parquet(f"{path}/bands")
-    if exclude_batch is not None:
-        corpus_fp = corpus_fp.where(F.col("ingest_batch") != exclude_batch)
-        corpus_bands = corpus_bands.where(
-            F.col("ingest_batch") != exclude_batch
-        )
     return _verdicts(
-        batch, rows.fingerprints, rows.bands, corpus_fp, corpus_bands,
+        batch, rows.fingerprints, rows.bands,
+        read_batches(spark, f"{path}/fingerprints", exclude_batch),
+        read_batches(spark, f"{path}/bands", exclude_batch),
         "doc_id", rows.meta["num_hashes"], 0.5,
     )
 
@@ -330,7 +313,7 @@ def dedup_index_append(
     spark: SparkSession,
     path: str,
     rows: BatchRows,
-    ingest_batch: int | None = None,
+    ingest_batch: int,
 ) -> None:
     """Append surviving (verdict == 'new') documents' ``rows`` — their
     slice of the checked batch's `BatchRows` (``rows.of(new_ids)``) —
@@ -339,33 +322,24 @@ def dedup_index_append(
     before this returns, and the first failure (fingerprints before
     bands) is then raised.
 
-    With an `ingest_batch` id the write DYNAMIC-OVERWRITES exactly the
-    `ingest_batch=N` partition of each store — a replayed streaming
-    batch republishes its own partition instead of double-appending
-    (idempotent under foreachBatch's at-least-once delivery). Without
-    one, rows land in the build partition (−1) with plain append
-    semantics — wrap in the snapshot transaction log (sinks/txnlog.py)
-    where a reader racing a crashed append matters. The append is NOT
-    re-capped: a cap is a per-build bound; appended buckets stay
-    bounded because survivors are, by definition, not near-dups of
-    existing members.
+    Each write DYNAMIC-OVERWRITES exactly the `ingest_batch=N`
+    partition of its store (`sinks.store.append_batch`) — a replayed
+    streaming batch republishes its own partition instead of
+    double-appending (idempotent under foreachBatch's at-least-once
+    delivery). Negative ids are reserved for the build and folds
+    (ValueError). The append is NOT re-capped: a cap is a per-build
+    bound; appended buckets stay bounded because survivors are, by
+    definition, not near-dups of existing members.
     """
-    batch_id = -1 if ingest_batch is None else int(ingest_batch)
-    mode = "append" if ingest_batch is None else "overwrite"
-
-    def _write(df: DataFrame, sub: str) -> None:
-        (
-            df.withColumn("ingest_batch", F.lit(batch_id).cast("long"))
-            .write.mode(mode)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(f"{path}/{sub}")
-        )
-
     run_concurrently(
         [
-            functools.partial(_write, rows.fingerprints, "fingerprints"),
-            functools.partial(_write, rows.bands, "bands"),
+            functools.partial(
+                append_batch, rows.fingerprints, f"{path}/fingerprints",
+                ingest_batch,
+            ),
+            functools.partial(
+                append_batch, rows.bands, f"{path}/bands", ingest_batch
+            ),
         ],
         2,
     )
@@ -373,46 +347,19 @@ def dedup_index_append(
 
 def dedup_index_fold(spark: SparkSession, path: str) -> int:
     """Fold BOTH dedup-index stores' per-ingest partitions into one
-    fresh partition each (sinks/compact.fold_partitions — write-first
-    crash-safe ordering; every intermediate state is a duplicated
-    superset, which the membership probe and the capped band-bucket
-    candidate screen both tolerate: duplicates add candidate pairs
-    that dropDuplicates collapses). The two stores fold to the SAME
-    fresh id so their partition layouts stay aligned. Returns the
-    total partitions folded. Run on a QUIESCED stream only — folding
-    erases batch identity, so `exclude_batch` replay masking no longer
-    sees a replayed batch's rows (the fold_partitions caveat).
-    Verdicts are invariant under folding — pinned in
-    tests/test_incremental.py."""
-    from ..sinks.compact import fold_partitions, partition_stats
-
+    fresh partition each (`sinks.store.fold` — write-first crash-safe
+    ordering; every intermediate state is a duplicated superset, which
+    the membership probe and the capped band-bucket candidate screen
+    both tolerate: duplicates add candidate pairs that dropDuplicates
+    collapses). The two stores fold to the SAME fresh id so their
+    partition layouts stay aligned: when either store has partitions
+    to consolidate, both fold, even one that ingested a single batch.
+    Returns the total partitions folded. Run on a QUIESCED stream only
+    — folding erases batch identity, so `exclude_batch` replay masking
+    no longer sees a replayed batch's rows. Verdicts are invariant
+    under folding — pinned in tests/test_incremental.py."""
     _read_meta(spark, path)  # store must exist with valid params
     tables = [f"{path}/fingerprints", f"{path}/bands"]
-    existing: list[int] = []
-    for t in tables:
-        existing += [
-            int(p["partition"]["ingest_batch"]) for p in partition_stats(t)
-        ]
-    if not existing:
+    if max(len(batch_ids(t)) for t in tables) <= 1:
         return 0
-    into = min(existing) - 1
-    # Fold only when SOME table actually has partitions to
-    # consolidate — but then fold BOTH tables (fold_single=True), so
-    # the "same fresh id, aligned layouts" invariant in the docstring
-    # holds even when one store ingested a single batch while the
-    # other ingested many (ADVICE r12: the old per-table ≤1 skip let
-    # fingerprints sit at batch −1 while bands folded to −2).
-    per_table = {
-        t: len({p["partition"]["ingest_batch"] for p in partition_stats(t)})
-        for t in tables
-    }
-    if max(per_table.values()) <= 1:
-        return 0
-    n = 0
-    for t in tables:
-        n += len(
-            fold_partitions(
-                spark, t, "ingest_batch", into_value=into, fold_single=True
-            )
-        )
-    return n
+    return fold(spark, *tables)

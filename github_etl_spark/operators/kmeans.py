@@ -42,25 +42,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import eager_checkpoint
+from ..session import eager_checkpoint, release
 from .partitioning import ensure_parallelism
 from .similarity import quantize_expr
 
-# Assignment representation switch (same idea as similarity.
-# _ARROW_ASSIGN_CELLS): the inlined-literal expression form is used at
-# or below this many cells, the Arrow int64 matmul above it (identical
-# values, tested). r13 OPTIMIZATION: default 0 — always the Arrow
-# matmul. The expression form inlines the centroids as literals, so
-# EVERY Lloyd iteration generates (and whole-stage-compiles) a fresh
-# O(k·dim) codegen unit; the matmul kernel is literal-free Python and
-# pays only the Arrow batch crossing (guide §4.2). Measured at sf0.1,
-# k=8/dim=64/iters=3: 4.9 s → 3.4 s warm, bit-identical output.
-_ARROW_ASSIGN_CELLS = 0
-
-
 def _sq_dist_rank_expr(qv, centroids: list[list[int]]):
     """array<struct<d:long, cell:int>> sorted ascending — cells ranked
-    by EXACT integer squared-L2 distance, lowest cell on ties."""
+    by EXACT integer squared-L2 distance, lowest cell on ties. Its
+    first element equals `_assignment` (tested); plans/ext.py ranks
+    query probe cells with it."""
     dists = F.array(
         *[
             F.aggregate(
@@ -112,20 +102,29 @@ def _sq_assign_arrow(qv, centroids: list[list[int]]):
 
 
 def _assignment(qv, centroids: list[list[int]]):
-    """struct<d, cell> for the nearest centroid, auto-switching
-    representation exactly like similarity._top_cell_expr."""
+    """struct<d, cell> for the nearest centroid, through the Arrow int64
+    matmul: the expression form inlines the centroids as literals, so
+    EVERY Lloyd iteration would generate (and whole-stage-compile) a
+    fresh O(k·dim) codegen unit, while the matmul kernel is
+    literal-free Python and pays only the Arrow batch crossing (guide
+    §4.2; measured at sf0.1, k=8/dim=64/iters=3: 4.9 s → 3.4 s warm,
+    bit-identical output)."""
     k = len(centroids)
-    if k > _ARROW_ASSIGN_CELLS:
-        packed = _sq_assign_arrow(qv, centroids)
-        cell = F.pmod(packed, F.lit(k))
+    if not k:
+        # No centroid (an empty corpus trains none) and the kernel
+        # needs one: NULLs of the kernel's types.
         return F.struct(
-            # (packed - cell) is an exact multiple of k and ≪ 2⁵³, so
-            # the double division is exact
-            ((packed - cell) / k).cast("long").alias("d"),
-            cell.cast("int").alias("cell"),
+            F.lit(None).cast("long").alias("d"),
+            F.lit(None).cast("int").alias("cell"),
         )
-    r = _sq_dist_rank_expr(qv, centroids)[0]
-    return F.struct(r["d"].alias("d"), r["cell"].alias("cell"))
+    packed = _sq_assign_arrow(qv, centroids)
+    cell = F.pmod(packed, F.lit(k))
+    return F.struct(
+        # (packed - cell) is an exact multiple of k and ≪ 2⁵³, so the
+        # double division is exact
+        ((packed - cell) / k).cast("long").alias("d"),
+        cell.cast("int").alias("cell"),
+    )
 
 
 def _floordiv(s: int, n: int) -> int:
@@ -316,7 +315,8 @@ def kmeans_minibatch_merge(
         ]
         for r in rows
     }
-    full, _ = lloyd_centroids(corpus, k=k, iters=1)
+    full, full_q = lloyd_centroids(corpus, k=k, iters=1)
+    release(full_q)
     m_sum = [sum(mc.get(c, [0])) for c in range(k)]
     m_l2 = [sum(x * x for x in mc.get(c, [0])) for c in range(k)]
     match = [int(c in mc and mc[c] == full[c]) for c in range(k)]

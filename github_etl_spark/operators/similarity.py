@@ -18,7 +18,16 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import round_det
-from ..sinks.snapshot import publish_batch_partition
+from ..sinks.store import (
+    BUILD_BATCH,
+    CENTROIDS,
+    append_batch,
+    batch_ids,
+    fold,
+    read_sidecar,
+    write_build,
+    write_sidecar,
+)
 from .partitioning import ensure_parallelism
 
 
@@ -336,24 +345,14 @@ def train_ivf_centroids(
     return cent.tolist()
 
 
-def _cell_sims_expr(vec, centroids: list[list[float]]):
-    """Array of cosine-ish scores of `vec` against each centroid.
-
-    Centroids are unit vectors, so dot(vec, centroid) ranks cells the
-    same as cosine for a fixed vec — no per-row norm needed.
-    """
-    return F.array(
-        *[dot_expr(vec, F.array(*[F.lit(x) for x in c])) for c in centroids]
-    )
-
-
 def _nearest_cells_udf(centroids: list[list[float]], nprobe: int | None):
     """Arrow-batched centroid scoring: rows × centroids as ONE numpy
-    matmul per batch. The per-centroid `aggregate(zip_with(...))`
-    expression tower is interpreted (off the codegen path) and measured
-    ~10× slower at 16×64; matrix work is the textbook Pandas-UDF case.
-    Ties resolve to the lowest cell id in both paths (np argmax /
-    stable argsort ↔ array_position-of-max / struct sort).
+    matmul per batch (a per-centroid `aggregate(zip_with(...))`
+    expression tower is interpreted, off the codegen path, and measured
+    ~10× slower at 16×64; matrix work is the textbook Pandas-UDF case).
+    Centroids are unit vectors, so dot(vec, centroid) ranks cells the
+    same as cosine for a fixed vec. Ties resolve to the lowest cell id
+    (np argmax / stable argsort).
     ``nprobe=None`` → int cell per row; else array of nprobe cells.
     """
     from pyspark.sql.functions import pandas_udf
@@ -383,19 +382,15 @@ def ivf_assign(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> DataFrame:
     """Assign every corpus vector to its nearest-centroid cell (the IVF
     "inverted list" id). At scale, write the result partitioned /
     bucketed BY CELL so probes prune to nprobe directories and the
     probe join needs no corpus shuffle.
 
-    ``arrow=True`` (default) scores rows×centroids as one numpy matmul
-    per Arrow batch — measured 10× faster than the pure-expression
-    path at 16 centroids × 64 dims with identical assignments (tested);
-    ``arrow=False`` keeps the dependency-free JVM expression form.
-    Vectors must be fixed-dimension and non-null (the embeddings
-    contract) on the arrow path.
+    Rows×centroids are scored as one numpy matmul per Arrow batch
+    (`_nearest_cells_udf`). Vectors must be fixed-dimension (the
+    embeddings contract); NULL / empty ones are dropped.
     """
     if not centroids:
         return corpus.select(
@@ -408,19 +403,12 @@ def ivf_assign(
     corpus = corpus.where(
         F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
     )
-    if arrow:
-        cell = _nearest_cells_udf(centroids, None)(
-            _as_double(F.col(vec_col))
-        ).alias("cell")
-    else:
-        sims = _cell_sims_expr(_as_double(F.col(vec_col)), centroids)
-        cell = (
-            (F.array_position(sims, F.array_max(sims)) - 1).cast("int").alias("cell")
-        )
     return corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("c_vec"),
-        cell,
+        _nearest_cells_udf(centroids, None)(
+            _as_double(F.col(vec_col))
+        ).alias("cell"),
     )
 
 
@@ -430,7 +418,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     nprobe: int = 4,
-    arrow: bool = True,
     train_on: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k cosine: score only corpus vectors whose
@@ -446,10 +433,10 @@ def ivf_topk(
     force; recall rises with nprobe (asserted in tests). The probed
     query set (query_id × nprobe cells) is broadcast, so the only wide
     operation is the final per-query top-k window. Centroid training is
-    sample-bounded; assignment is one corpus pass. Candidate scoring
-    stays a JVM expression in both modes (cosine_expr's NULL-for-
-    zero-norm ranking semantics); ``arrow`` only switches the
-    centroid-scoring step (see ivf_assign).
+    sample-bounded; assignment is one corpus pass. Centroid scoring is
+    an Arrow-batched matmul (see ivf_assign); candidate scoring stays a
+    JVM expression (cosine_expr's NULL-for-zero-norm ranking
+    semantics).
 
     Degenerate vectors (NULL / empty array) are silently dropped on
     BOTH sides: a corpus row without a vector can't be assigned a cell
@@ -460,62 +447,35 @@ def ivf_topk(
     centroids = train_ivf_centroids(
         corpus if train_on is None else train_on, n_centroids=n_centroids
     )
-    assigned = ivf_assign(corpus, centroids, arrow=arrow)
-    q = _probed_queries(queries, centroids, "vec_id", "embedding", nprobe, arrow)
+    assigned = ivf_assign(corpus, centroids)
+    q = _probed_queries(queries, centroids, nprobe)
     return _score_probed(assigned, q, k)
 
 
 def _probed_queries(
-    queries: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    nprobe: int,
-    arrow: bool,
+    queries: DataFrame, centroids: list[list[float]], nprobe: int
 ) -> DataFrame:
     """(query_id, q_vec, cell) — one row per query × probed cell.
 
     Shared by the inline and materialized-index paths so their probe
     selection cannot diverge (the index roundtrip test asserts exact
     equality of results)."""
+    vec = _as_double(F.col("embedding"))
     if not centroids:
         return queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("q_vec"),
+            F.col("vec_id").alias("query_id"),
+            vec.alias("q_vec"),
             F.lit(None).cast("int").alias("cell"),
         ).filter(F.lit(False))
     # A NULL/empty query vector can't rank cells — it contributes no
     # probes (mirrors the corpus-side degenerate-vector drop).
     queries = queries.where(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+        F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
     )
-    if arrow:
-        probe_cells = _nearest_cells_udf(centroids, nprobe)(
-            _as_double(F.col(vec_col))
-        )
-    else:
-        q_sims = _cell_sims_expr(_as_double(F.col(vec_col)), centroids)
-        # Rank cells per query: sort (-sim, cell) structs asc → sim
-        # desc with lowest-cell tie order (same as the arrow path).
-        probe_cells = F.transform(
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        q_sims,
-                        lambda s, i: F.struct(
-                            (-s).alias("neg_sim"), i.cast("int").alias("cell")
-                        ),
-                    )
-                ),
-                1,
-                nprobe,
-            ),
-            lambda s: s["cell"],
-        )
     return queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("q_vec"),
-        F.explode(probe_cells).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        vec.alias("q_vec"),
+        F.explode(_nearest_cells_udf(centroids, nprobe)(vec)).alias("cell"),
     )
 
 
@@ -557,7 +517,8 @@ def ivf_build_index(
 
     The two artifacts are stitched by a build fingerprint (md5 of the
     centroid list) embedded in BOTH: a `build_id` column in the
-    assignment parquet and a `build_id` field in the sidecar JSON.
+    assignment parquet and a `build_id` field in the sidecar JSON,
+    which is written first (`sinks.store.write_sidecar`).
     `ivf_query_index` asserts they match, so a crash between the two
     writes (or a rebuild racing a reader) surfaces as a clear error
     instead of silently probing the wrong cells. Degenerate corpus
@@ -573,59 +534,58 @@ def ivf_build_index(
     build_id = hashlib.md5(
         json.dumps(centroids).encode("utf-8")
     ).hexdigest()
-    assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col)
-        .withColumn("build_id", F.lit(build_id))
-        # Build rows live in ingest_batch −1; `ivf_index_append` adds
-        # later vectors under their own batch partition (second
-        # partition level, so `cell` directory pruning is unchanged)
-        # with dynamic-overwrite idempotence.
-        .withColumn("ingest_batch", F.lit(-1).cast("long"))
+    write_sidecar(
+        corpus.sparkSession, path, CENTROIDS,
+        {"build_id": build_id, "centroids": centroids},
     )
-    writer = assigned.write.mode("overwrite")
+    assigned = ivf_assign(corpus, centroids, id_col, vec_col).withColumn(
+        "build_id", F.lit(build_id)
+    )
     if centroids:
-        writer = writer.partitionBy("cell", "ingest_batch")
-    # Empty corpus → no centroids → skip partitionBy: a partitioned
-    # write of a 0-row frame emits only _SUCCESS (no parquet footer)
-    # and a later read fails UNABLE_TO_INFER_SCHEMA. Writing it
-    # unpartitioned keeps `cell` as a (schema-bearing) data column, so
-    # ivf_query_index still reads, filters and returns 0 rows cleanly.
-    writer.parquet(path)
-    spark = corpus.sparkSession
-    sidecar = json.dumps({"build_id": build_id, "centroids": centroids})
-    spark.createDataFrame([(sidecar,)], "value string").coalesce(
-        1
-    ).write.mode("overwrite").text(path + "_centroids")
+        # Build rows live in ingest_batch −1 under their cell;
+        # `ivf_index_append` adds later vectors under their own batch
+        # partition (second level, so `cell` pruning is unchanged).
+        write_build(assigned, path, "cell")
+    else:
+        # Empty corpus → no centroids → no cell partitions: a
+        # partitioned write of a 0-row frame emits only _SUCCESS (no
+        # parquet footer) and a later read fails
+        # UNABLE_TO_INFER_SCHEMA. Unpartitioned, `cell` and
+        # `ingest_batch` stay (schema-bearing) data columns, so
+        # ivf_query_index still reads, filters and returns 0 rows.
+        assigned.withColumn(
+            "ingest_batch", F.lit(BUILD_BATCH).cast("long")
+        ).write.mode("overwrite").parquet(path)
     return centroids
 
 
 def _read_ivf_sidecar(spark, path: str) -> tuple[list, str]:
     """(centroids, build_id) from the `ivf_build_index` sidecar —
-    shared by the query and append paths so a missing/partial build
-    fails identically everywhere."""
-    import json
-
-    sidecar_path = path + "_centroids"
-    try:
-        head = spark.read.text(sidecar_path).head()
-    except Exception as e:  # AnalysisException — sidecar dir missing
-        raise FileNotFoundError(
-            f"IVF centroid sidecar not found at {sidecar_path!r} — "
-            "was ivf_build_index run (and did it finish)?"
-        ) from e
-    if head is None:
-        raise ValueError(
-            f"IVF centroid sidecar at {sidecar_path!r} is empty — "
-            "partial/failed ivf_build_index write; rebuild the index."
-        )
-    meta = json.loads(head[0])
+    shared by the query, append and fold paths so a missing/partial
+    build fails identically everywhere (`sinks.store.StoreMissing`, a
+    FileNotFoundError naming the sidecar)."""
+    meta = read_sidecar(spark, path, CENTROIDS, "ivf_build_index")
     if not (isinstance(meta, dict) and {"build_id", "centroids"} <= meta.keys()):
         raise ValueError(
-            f"IVF centroid sidecar at {sidecar_path!r} is not a "
+            f"IVF centroid sidecar of {path!r} is not a "
             "{build_id, centroids} object — not written by "
             "ivf_build_index; rebuild the index."
         )
     return meta["centroids"], meta["build_id"]
+
+
+def ivf_index_centroids(spark, path: str) -> tuple[list, str]:
+    """(centroids, build_id) of an IVF index that can take appends:
+    `_read_ivf_sidecar`, plus a ValueError for an empty-corpus build,
+    whose index has no cell to assign a new vector to. A streaming gate
+    calls it before its first write."""
+    centroids, build_id = _read_ivf_sidecar(spark, path)
+    if not centroids:
+        raise ValueError(
+            f"IVF index at {path!r} has no centroids (empty-corpus "
+            "build) — appends cannot be assigned; rebuild with data"
+        )
+    return centroids, build_id
 
 
 def ivf_index_append(
@@ -639,12 +599,11 @@ def ivf_index_append(
     """Incremental IVF maintenance: assign NEW vectors to the
     EXISTING index's cells (sidecar centroids — no retraining) and
     dynamic-overwrite exactly the touched ``(cell, ingest_batch=N)``
-    partitions, the membership-store append discipline
-    (operators/incremental.dedup_index_append) applied to the vector
-    index. A replayed/retried append republishes its own partitions —
-    idempotent under at-least-once delivery; `cell`-level directory
-    pruning in `ivf_query_index` is untouched (ingest_batch is the
-    SECOND partition level).
+    partitions (`sinks.store.append_batch`, the append all three
+    stores share). A replayed/retried append republishes its own
+    partitions — idempotent under at-least-once delivery; `cell`-level
+    directory pruning in `ivf_query_index` is untouched (ingest_batch
+    is the SECOND partition level).
 
     The appended rows carry the sidecar's build fingerprint, so the
     build-vs-assignment consistency probe keeps working across
@@ -654,24 +613,15 @@ def ivf_index_append(
     Centroids go STALE as the corpus drifts — that is a measured
     contract, not a hope: `sim_ivf_append_recall` (plans/ext.py) pins
     recall@5 of stale-centroid retrieval against a fresh rebuild,
-    per query. Batch −1 is reserved for build rows (raises).
+    per query. Negative batch ids are reserved for build and folded
+    rows (raises).
 
     At 100 TB: per-ingest cost is one batch-sized assignment pass
     (centroid scoring is Arrow-batched, map-only) + a write touching
     ≤ min(|batch|, n_centroids) cell directories; the index is never
     rewritten and never shuffled."""
-    if int(ingest_batch) == -1:
-        raise ValueError(
-            "ingest_batch -1 is reserved for ivf_build_index rows; "
-            "use a non-negative batch id"
-        )
-    centroids, build_id = _read_ivf_sidecar(spark, path)
-    if not centroids:
-        raise ValueError(
-            f"IVF index at {path!r} has no centroids (empty-corpus "
-            "build) — appends cannot be assigned; rebuild with data"
-        )
-    publish_batch_partition(
+    centroids, build_id = ivf_index_centroids(spark, path)
+    append_batch(
         ivf_assign(new_vectors, centroids, id_col, vec_col).withColumn(
             "build_id", F.lit(build_id)
         ),
@@ -689,74 +639,40 @@ def ivf_index_fold(spark, path: str) -> int:
     """Collapse the per-append ``ingest_batch`` partitions into ONE
     fresh batch id per cell — the partition-count maintenance op for
     an appended IVF index (after thousands of `ivf_index_append`
-    micro-batches, scan cost is directory listing, not bytes), the
-    `fold_partitions` discipline with one crucial difference: a
-    half-folded VECTOR index is NOT a harmless superset. Duplicated
-    vectors change query results (the same neighbor scores twice and
-    occupies two top-k slots), so unlike the membership stores the
-    fold is guarded by a MARKER: written FIRST, removed LAST, and
-    `ivf_query_index` refuses to serve while it exists. A crash at
-    any point leaves the marker; re-running the fold converges (it
-    re-distincts every surviving row into a fresh batch id and
-    deletes the rest) and re-enables queries.
+    micro-batches, scan cost is directory listing, not bytes), through
+    the fold every store shares (`sinks.store.fold`) with one crucial
+    addition: a half-folded VECTOR index is NOT a harmless superset.
+    Duplicated vectors change query results (the same neighbor scores
+    twice and occupies two top-k slots), so unlike the membership
+    stores the fold is guarded by a MARKER: written FIRST, removed
+    LAST, and `ivf_query_index` refuses to serve while it exists. A
+    crash at any point leaves the marker; re-running the fold
+    converges (it re-distincts every surviving row into a fresh batch
+    id and deletes the rest) and re-enables queries.
 
     Returns the number of partitions folded (0 = nothing to do:
     a single batch id and no leftover marker). Run only with no
     in-flight append whose batch may replay — folding erases batch
     identity (the standard streaming-compaction caveat).
 
-    Local-filesystem marker/deletes (os/shutil), like the snapshot
-    retention sweep — at cloud scale swap for the Hadoop FileSystem
-    API."""
+    Local-filesystem marker (os/shutil), like the snapshot retention
+    sweep — at cloud scale swap for the Hadoop FileSystem API."""
     import shutil
-
-    from ..sinks.compact import partition_stats
 
     centroids, _bid = _read_ivf_sidecar(spark, path)
     if not centroids:
         return 0  # empty-corpus build: unpartitioned, nothing to fold
     marker = _ivf_fold_marker(path)
-    stats = partition_stats(path)
-    batches = {p["partition"].get("ingest_batch") for p in stats}
-    if len(batches) <= 1 and not os.path.exists(marker):
+    if len(batch_ids(path)) <= 1 and not os.path.exists(marker):
         return 0
-    existing = [int(b) for b in batches if b is not None]
-    into = min(existing + [-1]) - 1
     os.makedirs(marker, exist_ok=True)
     with open(os.path.join(marker, "MARKER"), "w") as f:
-        f.write(f"folding into ingest_batch={into}\n")
-    df = spark.read.parquet(path)
-    data_cols = [c for c in df.columns if c != "ingest_batch"]
-    (
-        df.select(*data_cols)
-        .distinct()
-        .withColumn("ingest_batch", F.lit(into).cast("long"))
-        .write.mode("append")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(path)
-    )
-    failed: list[str] = []
-    for p in stats:
-        src = os.path.join(
-            path,
-            f"cell={p['partition']['cell']}",
-            f"ingest_batch={p['partition']['ingest_batch']}",
-        )
-        try:
-            shutil.rmtree(src)
-        except OSError as e:
-            failed.append(f"{src}: {e}")
-    if failed:
-        # Marker stays — queries keep refusing until a re-run
-        # finishes the job.
-        raise RuntimeError(
-            f"ivf_index_fold: consolidated rows are written to "
-            f"ingest_batch={into} but {len(failed)} source partition(s) "
-            f"could not be deleted (marker left in place; re-run to "
-            f"converge): " + "; ".join(failed)
-        )
+        f.write("folding\n")
+    # A failed fold raises here and leaves the marker: queries keep
+    # refusing until a re-run finishes the job.
+    n = fold(spark, path)
     shutil.rmtree(marker)
-    return len(stats)
+    return n
 
 
 def ivf_query_index(
@@ -796,9 +712,9 @@ def ivf_query_index(
     # rows): it is consumed twice — the IN-list below and the scoring
     # join — and would otherwise re-run the centroid-scoring UDF per
     # consumer.
-    q = _probed_queries(
-        queries, centroids, "vec_id", "embedding", nprobe, True
-    ).localCheckpoint(eager=True)
+    q = _probed_queries(queries, centroids, nprobe).localCheckpoint(
+        eager=True
+    )
     # Bounded driver transfer: queries×nprobe ints. A static IN-filter
     # guarantees directory-level pruning (dynamic partition pruning
     # would also work but depends on join planning).

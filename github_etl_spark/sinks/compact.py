@@ -129,16 +129,20 @@ def fold_partitions(
     table_path: str,
     part_col: str,
     into_value: int,
-    fold_single: bool = False,
 ) -> list[dict]:
-    """Fold EVERY partition of a Hive-partitioned parquet table into
-    ONE fresh partition — the PARTITION-COUNT maintenance op for
-    per-ingest membership stores (the span store, the dedup index),
-    complementing `compact_partitions`' per-partition small-file
-    rewrite: a streaming gate adds one ``ingest_batch=N`` directory
-    per micro-batch, and after thousands of batches scan cost is
-    dominated by directory listing and per-partition footers, not
-    bytes.
+    """Fold EVERY ``part_col`` value of a Hive-partitioned parquet
+    table into ONE fresh value — the PARTITION-COUNT maintenance op
+    for per-ingest stores (sinks/store.fold), complementing
+    `compact_partitions`' per-partition small-file rewrite: a
+    streaming gate adds one ``ingest_batch=N`` directory per
+    micro-batch, and after thousands of batches scan cost is dominated
+    by directory listing and per-partition footers, not bytes.
+    ``part_col`` must be the last partition level; partition columns
+    above it (the IVF index's ``cell``) are kept, so each of their
+    values folds to its own ``(…, part_col=into_value)`` directory.
+    Returns the stats of the partitions folded (empty for a table with
+    no partitions); a table with a single value is folded too — whether
+    that is worth doing is the caller's decision.
 
     Crash-safe for SET-semantics tables with no transaction log, by
     write ordering alone: ``into_value`` must be a FRESH partition
@@ -162,37 +166,32 @@ def fold_partitions(
     import shutil
 
     stats = partition_stats(table_path)
-    if any(set(p["partition"]) != {part_col} for p in stats):
+    if not stats:
+        return []
+    levels = list(stats[0]["partition"])
+    if levels[-1] != part_col or any(
+        list(p["partition"]) != levels for p in stats
+    ):
         raise ValueError(
-            f"fold_partitions expects single-column {part_col!r} "
-            f"partitioning at {table_path!r}"
+            f"fold_partitions expects {part_col!r} as the last partition "
+            f"level of every partition at {table_path!r}"
         )
-    values = {p["partition"][part_col] for p in stats}
-    if str(into_value) in values:
+    if str(into_value) in {p["partition"][part_col] for p in stats}:
         raise ValueError(
             f"into_value {into_value} already exists at {table_path!r} — "
             "folding INTO a live partition is not crash-safe (a partial "
             "overwrite would lose its prior rows); pick a fresh value"
         )
-    if len(values) <= 1 and not fold_single:
-        # Nothing to consolidate. ``fold_single=True`` overrides for
-        # callers that fold SIBLING tables to one shared fresh id and
-        # need the partition LAYOUTS to stay aligned even when one
-        # sibling has a single (or zero) partition (dedup_index_fold).
-        return []
-    if not stats:
-        return []
     df = spark.read.parquet(table_path)
-    data_cols = [c for c in df.columns if c != part_col]
     (
-        df.select(*data_cols)
+        df.select(*[c for c in df.columns if c != part_col])
         .distinct()
         .withColumn(
             part_col,
             F.lit(int(into_value)).cast(dict(df.dtypes)[part_col]),
         )
         .write.mode("append")
-        .partitionBy(part_col)
+        .partitionBy(*levels)
         .parquet(table_path)
     )
     # Surface failed deletes instead of masking them (ADVICE r12):
@@ -203,7 +202,7 @@ def fold_partitions(
     failed: list[str] = []
     for p in stats:
         src = os.path.join(
-            table_path, f"{part_col}={p['partition'][part_col]}"
+            table_path, *(f"{k}={v}" for k, v in p["partition"].items())
         )
         try:
             shutil.rmtree(src)

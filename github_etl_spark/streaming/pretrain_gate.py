@@ -44,13 +44,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.curation import (
-    _read_span_meta,
     _span_doc_summary,
-    _span_store,
     c4_kept_lines,
     c4_spans_from,
     span_incremental_verdicts,
     span_index_append,
+    span_index_store,
     span_verdict_rows,
     web_gate_expr,
 )
@@ -131,7 +130,9 @@ def make_pretrain_gate(
             # Both sidecars are read here, once each, before any durable
             # write: a missing or mis-keyed store fails before the output
             # table or the other store holds a row of this batch.
-            _read_span_meta(spark, span_store_path)
+            span_store = span_index_store(
+                spark, span_store_path, int(batch_id)
+            )
             rows = dedup_batch_rows(spark, index_path, gated).map(hold)
             # output row + survivor filter
             fp = hold(dedup_index_check(
@@ -143,9 +144,7 @@ def make_pretrain_gate(
             bstats = c4_kept_lines(survivors, "text", "doc_id")
             # summary + span append
             spans = hold(span_verdict_rows(
-                c4_spans_from(bstats, "doc_id"),
-                _span_store(spark, span_store_path, exclude_batch=int(batch_id)),
-                "doc_id",
+                c4_spans_from(bstats, "doc_id"), span_store, "doc_id"
             ))
             out = _compose_out(
                 batch_df, gated, fp,

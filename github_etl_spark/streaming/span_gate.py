@@ -23,12 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.curation import (
-    _read_span_meta,
     _span_doc_summary,
-    _span_store,
     c4_kept_lines,
     c4_spans_from,
     span_index_append,
+    span_index_store,
     span_verdict_rows,
 )
 from ..session import persisted
@@ -48,16 +47,14 @@ def make_span_gate(spark: SparkSession, store_path: str, out_path: str):
     never store-sized."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        # Validate the store's keying BEFORE classifying — the batch's
-        # one sidecar read: without it, a store built under older
-        # keying constants would mis-classify every span and durably
-        # PUBLISH the wrong summary.
-        _read_span_meta(spark, store_path)
+        # The store read validates its keying BEFORE classifying — the
+        # batch's one sidecar read: without it, a store built under
+        # older keying constants would mis-classify every span and
+        # durably PUBLISH the wrong summary.
+        store = span_index_store(spark, store_path, int(batch_id))
         bstats = c4_kept_lines(batch_df, "text", "doc_id")
         rows = span_verdict_rows(
-            c4_spans_from(bstats, "doc_id"),
-            _span_store(spark, store_path, exclude_batch=int(batch_id)),
-            "doc_id",
+            c4_spans_from(bstats, "doc_id"), store, "doc_id"
         )
         with persisted(rows):
             publish_batch_partition(

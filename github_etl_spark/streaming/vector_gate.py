@@ -37,9 +37,9 @@ from ..multimodal.media import embed_text_vec
 from ..operators.curation import web_gate_expr
 from ..operators.similarity import (
     _int_cell_rank_expr,
-    _read_ivf_sidecar,
     ivf_assign,
     ivf_index_append,
+    ivf_index_centroids,
 )
 from ..session import eager_checkpoint, persisted
 from ..sinks.snapshot import publish_batch_partition
@@ -62,12 +62,7 @@ def make_vector_gate(spark: SparkSession, index_path: str, out_path: str):
     after the summary is already visible)."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        centroids, _build = _read_ivf_sidecar(spark, index_path)
-        if not centroids:
-            raise ValueError(
-                f"IVF index at {index_path!r} has no centroids — "
-                "build it from a seed corpus before streaming appends"
-            )
+        centroids, _build = ivf_index_centroids(spark, index_path)
         keep = batch_df.where(web_gate_expr(F.col("text")))
         n = F.count(F.lit(1)).cast("long")
         # Two consumers (summary + index append) of the encoder

@@ -14,6 +14,7 @@ from __future__ import annotations
 import pytest
 
 from github_etl_spark.operators.graph import connected_components, pagerank_fixed_point
+from github_etl_spark.operators.kmeans import kmeans_minibatch_merge
 from github_etl_spark.operators.pipeline import bpe_learn_merges
 from github_etl_spark.operators.wordpiece import wordpiece_learn
 
@@ -33,6 +34,11 @@ def _edges(spark):
     return spark.createDataFrame(pairs, "src long, dst long")
 
 
+def _vectors(spark):
+    rows = [(i, [float((i * 7 + j) % 11) for j in range(4)]) for i in range(30)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
 @pytest.mark.parametrize(
     "run, reads",
     [
@@ -48,8 +54,15 @@ def _edges(spark):
             ).collect(),
             1,  # the last rank snapshot
         ),
+        (
+            lambda spark: kmeans_minibatch_merge(_vectors(spark), k=3).collect(),
+            1,  # the quantized frame of the seed pass
+        ),
     ],
-    ids=["bpe_learn", "wordpiece_learn", "connected_components", "pagerank"],
+    ids=[
+        "bpe_learn", "wordpiece_learn", "connected_components", "pagerank",
+        "kmeans_minibatch_merge",
+    ],
 )
 def test_checkpoints_released(spark, run, reads):
     spark.catalog.clearCache()

@@ -274,26 +274,6 @@ def test_zero_vector_never_outranks_real_neighbors(spark):
     assert [r.rank for r in top] == [1, 2, 3]
 
 
-def test_ivf_arrow_matches_expression_path(spark):
-    """The Arrow (pandas-UDF matmul) and pure-expression centroid
-    scorers must produce identical assignments AND identical top-k."""
-    from github_etl_spark.operators.similarity import (
-        ivf_assign,
-        ivf_topk,
-        train_ivf_centroids,
-    )
-
-    emb, queries = _emb_tables(spark)
-    cents = train_ivf_centroids(emb, n_centroids=8, sample_size=256)
-    a = ivf_assign(emb, cents, arrow=True).select("neighbor_id", "cell")
-    b = ivf_assign(emb, cents, arrow=False).select("neighbor_id", "cell")
-    assert a.join(b, "neighbor_id").filter(a.cell != b.cell).count() == 0
-
-    ta = ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=3, arrow=True)
-    tb = ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=3, arrow=False)
-    assert ta.exceptAll(tb).count() == 0 and tb.exceptAll(ta).count() == 0
-
-
 def test_lsh_multi_table_recall_monotone(spark):
     """Band repetitions: more tables → candidate superset → recall of
     brute-force top-k never decreases."""
@@ -971,6 +951,48 @@ def test_ivf_index_append_matches_stale_inline_and_is_idempotent(
         ivf_index_append(
             spark, str(tmp_path / "nope"), batch, ingest_batch=1
         )
+
+
+def test_store_appends_refuse_the_build_batch(spark, sf_dir, tmp_path):
+    """Batch −1 holds a store's build rows, and an append dynamically
+    overwrites its batch's partition: the dedup index and the span
+    store refuse −1 the way `ivf_index_append` does, and keep every
+    build row."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from github_etl_spark.operators.curation import (
+        span_index_append,
+        span_index_build,
+    )
+    from github_etl_spark.operators.incremental import (
+        dedup_batch_rows,
+        dedup_index_append,
+        dedup_index_build,
+    )
+    from github_etl_spark.tables import load_tables
+
+    docs = load_tables(spark, sf_dir, register=False)["documents"]
+    seed = docs.where(F.col("doc_id") % 5 != 0)
+    batch = docs.where(F.col("doc_id") % 5 == 0)
+    index, spans = str(tmp_path / "index"), str(tmp_path / "spans")
+    dedup_index_build(seed, index)
+    span_index_build(seed, spans)
+
+    def rows(table):
+        return sorted(map(tuple, spark.read.parquet(table).collect()))
+
+    tables = [f"{index}/fingerprints", f"{index}/bands", f"{spans}/spans"]
+    before = [rows(t) for t in tables]
+    with _pytest.raises(ValueError, match="reserved"):
+        dedup_index_append(
+            spark, index, dedup_batch_rows(spark, index, batch), -1
+        )
+    with _pytest.raises(ValueError, match="reserved"):
+        span_index_append(
+            spark, spans, spark.createDataFrame([("k",)], "span_key string"), -1
+        )
+    assert [rows(t) for t in tables] == before
 
 
 def test_ivf_index_fold_preserves_queries_and_crash_guard(spark, tmp_path):

@@ -62,7 +62,9 @@ def test_append_survivors_then_recheck(spark, tmp_path):
     survivors = batch.join(
         F.broadcast(first.filter("verdict = 'new'").select("doc_id")), "doc_id"
     )
-    dedup_index_append(spark, path, dedup_batch_rows(spark, path, survivors))
+    dedup_index_append(
+        spark, path, dedup_batch_rows(spark, path, survivors), ingest_batch=0
+    )
     second = {r.doc_id: r.verdict for r in dedup_index_check(spark, path, batch).collect()}
     for i in new_ids:
         assert second[i] == "exact_dup", (i, second[i])
@@ -271,7 +273,7 @@ def test_gate_appends_equal_the_from_text_derivation(spark, tmp_path):
         )
 
     fps = appended("fingerprints")
-    assert fps == rows(_fingerprints(survivors, "text", "doc_id"))
+    assert fps == rows(_fingerprints(survivors))
     bands = appended("bands")
     assert bands == rows(
         minhash_band_buckets(

@@ -3,10 +3,9 @@
 The oracle replay itself is pinned by the driver contract
 (kmeans_lloyd_stats vs the generated unrolled-SQL oracle); these tests
 pin the engine-internal contracts the oracle can't see: the
-expression-vs-Arrow assignment parity (the representation switch at
-the 64-cell cliff), determinism across runs, the partition-of-corpus
-invariant, the integer-lattice mean formula, and the empty-input
-shape.
+expression-vs-Arrow assignment parity, determinism across runs, the
+partition-of-corpus invariant, the integer-lattice mean formula, and
+the empty-input shape.
 """
 
 from __future__ import annotations
@@ -47,15 +46,17 @@ def test_deterministic_across_runs(spark, emb):
     assert a == b
 
 
-def test_arrow_assignment_parity(spark, emb, monkeypatch):
-    """Force the inlined-expression form and assert the WHOLE fixed
-    point (trajectory, not just one assignment) is bit-identical to
-    the Arrow matmul form (the r13 default, _ARROW_ASSIGN_CELLS=0) —
-    same contract similarity's _top_cell_expr switch carries."""
-    arrow = sorted(map(tuple, kmeans_cell_stats(emb, k=6, iters=2).collect()))
-    monkeypatch.setattr(km, "_ARROW_ASSIGN_CELLS", 1_000_000)
-    expr = sorted(map(tuple, kmeans_cell_stats(emb, k=6, iters=2).collect()))
-    assert expr == arrow
+def test_arrow_assignment_parity(spark, emb):
+    """The Arrow matmul assignment (`_assignment`, every Lloyd step's)
+    is bit-identical, distance and cell, to the first element of the
+    inlined-expression ranking `_sq_dist_rank_expr` that plans/ext.py
+    probes with — on every row, lowest cell on ties."""
+    cents, q = lloyd_centroids(emb, k=6, iters=2)
+    a = km._assignment(F.col("qv"), cents)
+    e = km._sq_dist_rank_expr(F.col("qv"), cents)[0]
+    rows = q.select(a["d"], a["cell"], e["d"], e["cell"]).collect()
+    assert rows
+    assert all((r[0], r[1]) == (r[2], r[3]) for r in rows)
 
 
 def test_iters_zero_scores_seeds(spark, emb):

@@ -69,7 +69,7 @@ def test_span_append_then_recheck(spark, tmp_path):
     n_new_total = new_keys.count()
     assert n_new_total > 0
     first = _rows(span_index_check(spark, path, batch))
-    span_index_append(spark, path, new_keys)
+    span_index_append(spark, path, new_keys, ingest_batch=0)
     second = _rows(span_index_check(spark, path, batch))
     by_id_first = {r[0]: r for r in first}
     for r in second:
@@ -77,9 +77,9 @@ def test_span_append_then_recheck(spark, tmp_path):
         assert r[4] == 0 and r[5] == 0, r  # n_dup_batch, n_new
         assert r[3] == f[3] + f[4] + f[5], (r, f)  # absorbed
         assert r[1] == f[1] and r[2] == f[2]  # stats unchanged
-    # Append landed in the build partition (-1) with append semantics.
+    # Append landed in its own partition (0), beside the build rows.
     store_n = spark.read.parquet(f"{path}/spans")
-    assert store_n.where("ingest_batch = -1").count() == store_n.count()
+    assert store_n.where("ingest_batch = 0").count() == n_new_total
 
 
 def test_span_check_missing_meta_raises(spark, tmp_path):
@@ -202,7 +202,7 @@ def test_span_check_exclude_batch_is_partition_pruned(spark, tmp_path):
     import re
 
     from github_etl_spark.operators.curation import (
-        _span_store,
+        span_index_store,
         span_store_hits,
     )
 
@@ -215,7 +215,7 @@ def test_span_check_exclude_batch_is_partition_pruned(spark, tmp_path):
         .distinct()
     )
     plan = (
-        span_store_hits(_span_store(spark, store, exclude_batch=3), bkeys)
+        span_store_hits(span_index_store(spark, store, exclude_batch=3), bkeys)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
