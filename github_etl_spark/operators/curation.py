@@ -251,7 +251,7 @@ def _col_name(col) -> str:
     return name
 
 
-def kept_lines_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def kept_lines_frame(df: DataFrame) -> DataFrame:
     """LAZY per-document line-filter frame:
     (id, n_lines, kept_lines, n_kept, keep_doc). The line derivation
     is staged behind its own projection so the transform lambda builds
@@ -262,16 +262,16 @@ def kept_lines_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ``c4_kept_lines`` (the checkpointed form)."""
     return (
         df.select(
-            F.col(id_col),
-            derived_lines_expr(text_col).alias("__lns"),
+            F.col("doc_id"),
+            derived_lines_expr("text").alias("__lns"),
         ).select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.expr(f"filter(__lns, l -> {_c4_keep_sql('l')})").alias(
                 "kept_lines"
             ),
             F.expr("size(__lns)").alias("n_lines"),
         ).select(
-            id_col,
+            "doc_id",
             "n_lines",
             "kept_lines",
             F.expr("size(kept_lines)").alias("n_kept"),
@@ -282,7 +282,7 @@ def kept_lines_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def c4_kept_lines(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def c4_kept_lines(df: DataFrame) -> DataFrame:
     """Eager-checkpointed ``kept_lines_frame``. Checkpointed because
     it feeds multiple consumers (span explode, span-count rejoin,
     final stats) and the per-line regex cascade is the dominant map
@@ -293,17 +293,15 @@ def c4_kept_lines(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     from ..session import eager_checkpoint
     from .partitioning import ensure_parallelism
 
-    return eager_checkpoint(
-        kept_lines_frame(ensure_parallelism(df), text_col, id_col)
-    )
+    return eager_checkpoint(kept_lines_frame(ensure_parallelism(df)))
 
 
-def c4_spans_from(stats: DataFrame, id_col: str) -> DataFrame:
+def c4_spans_from(stats: DataFrame) -> DataFrame:
     """(id, pos, span_key) — every C4_SPAN_LINES-consecutive-kept-line
     span of a `c4_kept_lines` frame, keyed by md5. In-row expansion
     then one explode; the span payload never exceeds the key."""
     return stats.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.when(
                 F.col("n_kept") < C4_SPAN_LINES,
@@ -330,7 +328,7 @@ def c4_spans_from(stats: DataFrame, id_col: str) -> DataFrame:
             )
         ).alias("s"),
     ).select(
-        id_col, F.col("s.pos").alias("pos"), F.col("s.span_key").alias("span_key")
+        "doc_id", F.col("s.pos").alias("pos"), F.col("s.span_key").alias("span_key")
     )
 
 
@@ -352,9 +350,7 @@ def span_store_hits(store: DataFrame, batch_keys: DataFrame) -> DataFrame:
     )
 
 
-def span_incremental_verdicts(
-    corpus: DataFrame, batch: DataFrame, text_col: str, id_col: str
-) -> DataFrame:
+def span_incremental_verdicts(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental C4 span dedup: classify an ingest BATCH's
     three-sentence spans against the already-ingested CORPUS — the
     per-crawl form of `c4_clean`'s global span dedup (at 100 TB you
@@ -385,18 +381,14 @@ def span_incremental_verdicts(
     though the probed frame feeds two consumers (keeper + verdicts),
     and so no BroadcastExchange subtree contains the corpus scan at
     all — tests/test_plan_shapes.py asserts both properties."""
-    bstats = c4_kept_lines(batch, text_col, id_col)
-    bspans = c4_spans_from(bstats, id_col)
-    store = c4_spans_from(
-        c4_kept_lines(corpus, text_col, id_col), id_col
-    ).select("span_key")
-    rows = span_verdict_rows(bspans, store, id_col)
-    return _span_doc_summary(bstats, rows, id_col)
+    bstats = c4_kept_lines(batch)
+    bspans = c4_spans_from(bstats)
+    store = c4_spans_from(c4_kept_lines(corpus)).select("span_key")
+    rows = span_verdict_rows(bspans, store)
+    return _span_doc_summary(bstats, rows)
 
 
-def span_verdict_rows(
-    bspans: DataFrame, store: DataFrame, id_col: str
-) -> DataFrame:
+def span_verdict_rows(bspans: DataFrame, store: DataFrame) -> DataFrame:
     """Per-span verdict rows (id, pos, span_key, verdict) for a batch
     span frame probed against a span store — the shared classification
     core of the inline (`span_incremental_verdicts`) and materialized
@@ -417,7 +409,7 @@ def span_verdict_rows(
         "span_key",
         "left",
     ).select(
-        id_col,
+        "doc_id",
         "pos",
         "span_key",
         F.col("__hit").isNotNull().alias("in_corpus"),
@@ -425,15 +417,15 @@ def span_verdict_rows(
     keeper = (
         probed.where(~F.col("in_corpus"))
         .groupBy("span_key")
-        .agg(F.min(F.struct(F.col(id_col), F.col("pos"))).alias("keep_at"))
+        .agg(F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("keep_at"))
     )
     return probed.join(keeper, "span_key", "left").select(
-        id_col,
+        "doc_id",
         "pos",
         "span_key",
         F.when(F.col("in_corpus"), F.lit("dup_corpus"))
         .when(
-            (F.col(id_col) == F.col(f"keep_at.{id_col}"))
+            (F.col("doc_id") == F.col("keep_at.doc_id"))
             & (F.col("pos") == F.col("keep_at.pos")),
             F.lit("new"),
         )
@@ -442,19 +434,17 @@ def span_verdict_rows(
     )
 
 
-def _span_doc_summary(
-    bstats: DataFrame, verdict_rows: DataFrame, id_col: str
-) -> DataFrame:
+def _span_doc_summary(bstats: DataFrame, verdict_rows: DataFrame) -> DataFrame:
     """Per-doc (id, n_kept, keep_doc, n_dup_corpus, n_dup_batch,
     n_new) from a `span_verdict_rows` frame."""
-    counts = verdict_rows.groupBy(id_col).pivot(
+    counts = verdict_rows.groupBy("doc_id").pivot(
         "verdict", ["dup_corpus", "dup_batch", "new"]
     ).count()
     return (
-        bstats.select(id_col, "n_kept", "keep_doc")
-        .join(counts, id_col, "left")
+        bstats.select("doc_id", "n_kept", "keep_doc")
+        .join(counts, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_kept",
             "keep_doc",
             F.coalesce("dup_corpus", F.lit(0)).cast("long").alias("n_dup_corpus"),
@@ -497,7 +487,7 @@ def span_index_build(corpus: DataFrame, path: str) -> None:
     point of the incremental form."""
     write_sidecar(corpus.sparkSession, path, META, _span_meta())
     write_build(
-        c4_spans_from(c4_kept_lines(corpus, "text", "doc_id"), "doc_id")
+        c4_spans_from(c4_kept_lines(corpus))
         .select("span_key")
         .distinct(),
         f"{path}/spans",
@@ -544,10 +534,10 @@ def span_index_check(
     per-ingest cost is one store-parquet scan (span keys only, no
     text) plus batch-sized work."""
     store = span_index_store(spark, path, exclude_batch)
-    bstats = c4_kept_lines(batch, "text", "doc_id")
-    bspans = c4_spans_from(bstats, "doc_id")
-    rows = span_verdict_rows(bspans, store, "doc_id")
-    return _span_doc_summary(bstats, rows, "doc_id")
+    bstats = c4_kept_lines(batch)
+    bspans = c4_spans_from(bstats)
+    rows = span_verdict_rows(bspans, store)
+    return _span_doc_summary(bstats, rows)
 
 
 def span_index_fold(spark: SparkSession, path: str) -> int:
@@ -587,7 +577,7 @@ def span_index_append(
     append_batch(new_keys.select("span_key"), f"{path}/spans", ingest_batch)
 
 
-def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def c4_clean(df: DataFrame) -> DataFrame:
     """C4 cleaning summary per document: line filter + span dedup.
 
     Returns (id, n_lines, n_kept, keep_doc, n_spans, n_dup_spans):
@@ -609,22 +599,22 @@ def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     stats) and the per-line regex cascade is the query's dominant map
     cost, so recomputing it per consumer would triple the scan work.
     """
-    stats = c4_kept_lines(df, text_col, id_col)
-    spans = c4_spans_from(stats, id_col)
+    stats = c4_kept_lines(df)
+    spans = c4_spans_from(stats)
 
     keeper = spans.groupBy("span_key").agg(
-        F.min(F.struct(F.col(id_col), F.col("pos"))).alias("keep_at")
+        F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("keep_at")
     )
     dup_counts = (
         spans.join(keeper, "span_key")
         .select(
-            id_col,
+            "doc_id",
             (
-                (F.col(id_col) != F.col(f"keep_at.{id_col}"))
+                (F.col("doc_id") != F.col("keep_at.doc_id"))
                 | (F.col("pos") != F.col("keep_at.pos"))
             ).cast("long").alias("is_dup"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_spans"),
             F.sum("is_dup").alias("n_dup_spans"),
@@ -632,9 +622,9 @@ def c4_clean(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
     return (
         stats.drop("kept_lines")
-        .join(dup_counts, id_col, "left")
+        .join(dup_counts, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_lines",
             "n_kept",
             "keep_doc",
@@ -663,7 +653,7 @@ def web_gate_expr(text_col) -> Column:
     return F.expr(web_gate_sql(_col_name(text_col)))
 
 
-def gopher_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def gopher_gate(df: DataFrame) -> DataFrame:
     """Gopher quality rules (Rae et al. 2021, Table A1) as ONE map-only
     projection: word-count bounds, mean-word-length bounds,
     symbol-to-word ratio ('#' + '...' occurrences over words),
@@ -680,22 +670,20 @@ def gopher_gate(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     higher-order-function lambdas).
     """
     staged = df.select(
-        F.col(id_col),
-        F.expr(_words_sql(text_col)).alias("__ws"),
-        derived_lines_expr(text_col).alias("__lns"),
+        F.col("doc_id"),
+        F.expr(_words_sql("text")).alias("__ws"),
+        derived_lines_expr("text").alias("__lns"),
     )
     m = _gopher_metrics_sql("__ws", "__lns")
     out = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.expr(sql).alias(name) for name, sql in m.items()],
     )
     keep = _gopher_keep_sql({name: name for name in m})
     return out.select("*", F.expr(keep).alias("keep"))
 
 
-def ccnet_buckets(
-    df: DataFrame, text_col: str, id_col: str, lang_col: str
-) -> DataFrame:
+def ccnet_buckets(df: DataFrame) -> DataFrame:
     """CCNet head/middle/tail perplexity bucketing (Wenzek et al.
     2020): per-document corpus-self unigram LM score (shared rule with
     `text_unigram_logprob` — avg ln(count/total), 4-decimal rounded),
@@ -715,9 +703,9 @@ def ccnet_buckets(
     from ..session import eager_checkpoint
 
     toks = df.select(
-        F.col(id_col),
-        F.col(lang_col),
-        F.explode(F.expr(_words_sql(text_col))).alias("tok"),
+        F.col("doc_id"),
+        F.col("lang"),
+        F.explode(F.expr(_words_sql("text"))).alias("tok"),
     )
     freq = eager_checkpoint(
         toks.groupBy("tok").agg(F.count("*").alias("c"))
@@ -726,23 +714,23 @@ def ccnet_buckets(
     scored = (
         toks.join(freq, "tok")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col, lang_col)
+        .groupBy("doc_id", "lang")
         .agg(
             round_det(
                 F.avg(F.log(F.col("c") / F.col("n").cast("double"))), 4
             ).alias("avg_logprob")
         )
     )
-    cuts = scored.groupBy(lang_col).agg(
+    cuts = scored.groupBy("lang").agg(
         F.percentile("avg_logprob", [1.0 / 3.0, 2.0 / 3.0]).alias("cs")
     ).select(
-        lang_col,
+        "lang",
         round_det(F.element_at("cs", 1), 4).alias("c33"),
         round_det(F.element_at("cs", 2), 4).alias("c66"),
     )
-    return scored.join(F.broadcast(cuts), lang_col).select(
-        id_col,
-        lang_col,
+    return scored.join(F.broadcast(cuts), "lang").select(
+        "doc_id",
+        "lang",
         "avg_logprob",
         F.when(F.col("avg_logprob") > F.col("c66"), F.lit("head"))
         .when(F.col("avg_logprob") > F.col("c33"), F.lit("middle"))
@@ -757,9 +745,7 @@ def ccnet_buckets(
 BLOCKLIST_PHRASES = ("slow query", "big table", "merge join", "drop table")
 
 
-def blocklist_gate(
-    df: DataFrame, text_col: str, id_col: str,
-) -> DataFrame:
+def blocklist_gate(df: DataFrame) -> DataFrame:
     """Phrase-blocklist page filter (the C4 "bad words" gate shape):
     per document, total occurrence count across the pinned phrases on
     the whitespace-normalized lowercased text, and the keep verdict
@@ -777,10 +763,8 @@ def blocklist_gate(
     """
     from .partitioning import ensure_parallelism
 
-    norm = F.expr(
-        f"concat(' ', concat_ws(' ', {_words_sql(text_col)}), ' ')"
-    )
-    staged = ensure_parallelism(df).select(F.col(id_col), norm.alias("__norm"))
+    norm = F.expr(f"concat(' ', concat_ws(' ', {_words_sql('text')}), ' ')")
+    staged = ensure_parallelism(df).select(F.col("doc_id"), norm.alias("__norm"))
     terms = " + ".join(
         f"((length(__norm) - length(replace(__norm, ' {ph} ', '')))"
         f" / {len(ph) + 2})"
@@ -788,7 +772,7 @@ def blocklist_gate(
     )
     hits = F.expr(terms)
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         hits.cast("long").alias("n_hits"),
         (hits.cast("long") == 0).alias("keep"),
     )

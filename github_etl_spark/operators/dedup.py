@@ -28,7 +28,7 @@ from .partitioning import ensure_parallelism
 from ..functions.text import dedup_tokens_expr as tokens_expr  # noqa: E402
 
 
-def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
+def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:
     """Exact dedup keeping the lowest id per duplicate group.
 
     groupBy(min) rather than dropDuplicates: dropDuplicates keeps an
@@ -36,22 +36,22 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     reproducible pipeline and untestable against an oracle.
     """
     return df.groupBy(*cols).agg(
-        F.min(id_col).alias("keep_id"), F.count("*").alias("n_dupes")
+        F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dupes")
     )
 
 
-def fingerprint_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def fingerprint_dedup(df: DataFrame) -> DataFrame:
     """Near-exact dedup via a canonical fingerprint: md5 of the sorted
     distinct token set. Catches reorderings/casing/punctuation variants
     that exact dedup misses, at identical cost (one shuffle on the hash).
     """
     from ..functions.text import fingerprint_expr
 
-    fp = fingerprint_expr(F.col(text_col))
+    fp = fingerprint_expr(F.col("text"))
     return (
-        df.select(F.col(id_col), fp.alias("fingerprint"))
+        df.select(F.col("doc_id"), fp.alias("fingerprint"))
         .groupBy("fingerprint")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dupes"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_dupes"))
     )
 
 
@@ -104,8 +104,6 @@ def _shingles_sql(col: str, n: int) -> str:
 
 def minhash_signatures(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 32,
     shingle: int = 3,
     hash_family: str = "xxhash64",
@@ -134,8 +132,8 @@ def minhash_signatures(
     # Hash cost is shingles × num_hashes per row — widen a narrow scan
     # before it (no-op when the input already has enough partitions).
     exploded = ensure_parallelism(df).selectExpr(
-        id_col,
-        f"explode({_shingles_sql(text_col, shingle)}) AS shingle",
+        "doc_id",
+        f"explode({_shingles_sql('text', shingle)}) AS shingle",
     )
     if hash_family == "md5_portable":
         mins = ", ".join(
@@ -148,15 +146,11 @@ def minhash_signatures(
         )
     else:
         raise ValueError(f"unknown minhash family: {hash_family!r}")
-    return exploded.groupBy(id_col).agg(
-        F.expr(f"array({mins})").alias("signature")
-    )
+    return exploded.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("signature"))
 
 
 def minhash_band_buckets(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 32,
     bands: int = 8,
     shingle: int = 3,
@@ -172,12 +166,10 @@ def minhash_band_buckets(
     on the portable path the CONCATENATED hex strings ARE the key
     (exact, hash-free, and reproducible in SQL).
     """
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle, hash_family=hash_family
-    )
+    sigs = minhash_signatures(df, num_hashes, shingle, hash_family=hash_family)
     band_cols = _band_bucket_structs(num_hashes, bands, hash_family)
     return sigs.selectExpr(
-        f"{id_col} AS doc", "signature", f"explode({band_cols}) AS bb"
+        "doc_id AS doc", "signature", f"explode({band_cols}) AS bb"
     ).select("doc", "signature", "bb.band", "bb.bucket")
 
 
@@ -209,8 +201,6 @@ def _band_bucket_structs(num_hashes: int, bands: int, hash_family: str) -> str:
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     num_hashes: int = 32,
     bands: int = 8,
     max_bucket_size: int = 64,
@@ -258,14 +248,10 @@ def minhash_lsh_candidates(
     from ..session import eager_checkpoint
 
     max_bucket_size = max(2, int(max_bucket_size))
-    sigs = eager_checkpoint(
-        minhash_signatures(
-            df, text_col, id_col, num_hashes, hash_family=hash_family
-        )
-    )
+    sigs = eager_checkpoint(minhash_signatures(df, num_hashes, hash_family=hash_family))
     band_cols = _band_bucket_structs(num_hashes, bands, hash_family)
     buckets = sigs.selectExpr(
-        f"{id_col} AS doc", f"explode({band_cols}) AS bb"
+        "doc_id AS doc", f"explode({band_cols}) AS bb"
     ).select("doc", "bb")
     # Skew cap: deterministic first-N members per bucket BEFORE the
     # collect_list, so no single row ever materializes an unbounded
@@ -290,12 +276,8 @@ def minhash_lsh_candidates(
         .select("p.id_a", "p.id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    sa = sigs.select(
-        F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a")
-    )
-    sb = sigs.select(
-        F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b")
-    )
+    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("sig_b"))
     est = signature_agreement_expr("sig_a", "sig_b", num_hashes)
     return (
         pairs.join(sa, "id_a")
@@ -323,9 +305,7 @@ def signature_agreement_expr(sig_a, sig_b, num_hashes: int):
     ) / F.lit(float(num_hashes))
 
 
-def simhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, hash_family: str = "xxhash64"
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, hash_family: str = "xxhash64") -> DataFrame:
     """64-bit SimHash per document, pure DataFrame ops.
 
     Explode tokens, hash each to 64 bits, and for every bit position sum
@@ -342,11 +322,11 @@ def simhash_signatures(
       this); the vote/packing logic is identical for both sources.
     """
     toks = ensure_parallelism(df).select(
-        F.col(id_col), F.explode(tokens_expr(F.col(text_col))).alias("tok")
+        F.col("doc_id"), F.explode(tokens_expr(F.col("text"))).alias("tok")
     )
     bit_seq = F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit")
     if hash_family == "md5_portable":
-        hashed = toks.select(id_col, F.md5("tok").alias("hx"))
+        hashed = toks.select("doc_id", F.md5("tok").alias("hx"))
         # hex-digit value via instr on the digit alphabet — the one
         # spelling both engines share (no hex-literal casts needed).
         v = (
@@ -354,21 +334,21 @@ def simhash_signatures(
             " substring(hx, (bit div 4) + 1, 1)) - 1, bit % 4) & 1)"
             " * 2 - 1"
         )
-        bits = hashed.select(id_col, "hx", bit_seq).select(
-            id_col, "bit", F.expr(v).alias("v")
+        bits = hashed.select("doc_id", "hx", bit_seq).select(
+            "doc_id", "bit", F.expr(v).alias("v")
         )
     elif hash_family == "xxhash64":
-        hashed = toks.select(id_col, F.xxhash64("tok").alias("h"))
-        bits = hashed.select(id_col, "h", bit_seq).select(
-            id_col,
+        hashed = toks.select("doc_id", F.xxhash64("tok").alias("h"))
+        bits = hashed.select("doc_id", "h", bit_seq).select(
+            "doc_id",
             "bit",
             # shiftright with a column shift amount only exists in SQL form
             F.expr("CAST(shiftright(h, bit) & 1 AS INT) * 2 - 1").alias("v"),
         )
     else:
         raise ValueError(f"unknown simhash bit source: {hash_family!r}")
-    votes = bits.groupBy(id_col, "bit").agg(F.sum("v").alias("vote"))
-    return votes.groupBy(id_col).agg(
+    votes = bits.groupBy("doc_id", "bit").agg(F.sum("v").alias("vote"))
+    return votes.groupBy("doc_id").agg(
         F.sum(
             F.when(F.col("vote") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bit)")).otherwise(
                 F.lit(0).cast("long")
@@ -384,8 +364,6 @@ def hamming_distance(a, b):
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     block_cols: list[str],
     threshold: float = 0.5,
     shingle: int = 3,
@@ -440,12 +418,12 @@ def ngram_jaccard_pairs(
     again and survives executor loss (unlike persist/localCheckpoint
     blocks).
     """
-    grams = _shingles(F.col(text_col), shingle) if shingle > 1 else F.array_distinct(
-        tokens_expr(F.col(text_col))
+    grams = _shingles(F.col("text"), shingle) if shingle > 1 else F.array_distinct(
+        tokens_expr(F.col("text"))
     )
     df = ensure_parallelism(df)
     toks = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in block_cols],
         F.explode(grams).alias("tok"),
     )
@@ -463,22 +441,22 @@ def ngram_jaccard_pairs(
             .select(*block_cols, "tok")
         )
         toks = toks.join(F.broadcast(hot), [*block_cols, "tok"], "left_anti")
-    sizes = toks.groupBy(id_col).agg(F.count("*").alias("set_size"))
+    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("set_size"))
 
     a = toks.alias("a")
     b = toks.alias("b")
-    block_cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & (
+    block_cond = (F.col("a.doc_id") < F.col("b.doc_id")) & (
         F.col("a.tok") == F.col("b.tok")
     )
     for c in block_cols:
         block_cond = block_cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     inter = (
         a.join(b, block_cond)
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count("*").alias("n_inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("set_size").alias("size_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("set_size").alias("size_b"))
     jac = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")

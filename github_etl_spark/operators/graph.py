@@ -276,13 +276,12 @@ def _connected_components_run(
 def cluster_assignment(
     df: DataFrame,
     pairs: DataFrame,
-    id_col: str,
     broadcast_components: bool = True,
 ) -> DataFrame:
     """Canonical-document assignment for EVERY row of ``df`` given
     near-dup ``pairs``: docs in some pair get their component's min id,
     everything else is its own singleton component. Output columns:
-    (``id_col``, component_id, is_canonical) — downstream dedup keeps
+    (``doc_id``, component_id, is_canonical) — downstream dedup keeps
     ``is_canonical`` rows.
 
     The components frame is bounded by the number of docs that appear in
@@ -297,14 +296,14 @@ def cluster_assignment(
     executor-locally otherwise.
     """
     comp = connected_components(pairs, src="id_a", dst="id_b").withColumnRenamed(
-        "node", id_col
+        "node", "doc_id"
     )
     if broadcast_components:
         comp = F.broadcast(comp)
-    return df.join(comp, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).cast("long").alias("component_id"),
-        (F.coalesce(F.col("component"), F.col(id_col)) == F.col(id_col)).alias(
+    return df.join(comp, "doc_id", "left").select(
+        F.col("doc_id"),
+        F.coalesce(F.col("component"), F.col("doc_id")).cast("long").alias("component_id"),
+        (F.coalesce(F.col("component"), F.col("doc_id")) == F.col("doc_id")).alias(
             "is_canonical"
         ),
     )

@@ -95,7 +95,6 @@ def _verdicts(
     batch_bands: DataFrame,
     corpus_fp: DataFrame,
     corpus_bands: DataFrame,
-    id_col: str,
     num_hashes: int,
     threshold: float,
 ) -> DataFrame:
@@ -145,11 +144,11 @@ def _verdicts(
         .agg(F.count("*").alias("n_near"))
     )
     return (
-        batch.select(F.col(id_col))
-        .join(exact, F.col(id_col) == exact["doc"], "left")
-        .join(near, F.col(id_col) == near["batch_doc"], "left")
+        batch.select(F.col("doc_id"))
+        .join(exact, F.col("doc_id") == exact["doc"], "left")
+        .join(near, F.col("doc_id") == near["batch_doc"], "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.when(F.col("_exact"), F.lit("exact_dup"))
             .when(F.col("n_near") > 0, F.lit("near_dup"))
             .otherwise(F.lit("new"))
@@ -176,15 +175,11 @@ def incremental_dedup_verdicts(
     """
     corpus_fp = _fingerprints(corpus)
     batch_fp = _fingerprints(batch)
-    corpus_bands = minhash_band_buckets(
-        corpus, "text", "doc_id", hash_family=hash_family
-    )
-    batch_bands = minhash_band_buckets(
-        batch, "text", "doc_id", hash_family=hash_family
-    )
+    corpus_bands = minhash_band_buckets(corpus, hash_family=hash_family)
+    batch_bands = minhash_band_buckets(batch, hash_family=hash_family)
     return _verdicts(
         batch, batch_fp, batch_bands, corpus_fp, corpus_bands,
-        "doc_id", _DEFAULT_META["num_hashes"], threshold,
+        _DEFAULT_META["num_hashes"], threshold,
     )
 
 
@@ -223,7 +218,7 @@ def dedup_index_build(
     meta = {**_DEFAULT_META, "max_bucket_size": max_bucket_size}
     write_sidecar(corpus.sparkSession, path, META, meta)
     write_build(_fingerprints(corpus), f"{path}/fingerprints")
-    bands_df = minhash_band_buckets(corpus, "text", "doc_id")
+    bands_df = minhash_band_buckets(corpus)
     write_build(_capped_bands(bands_df, max_bucket_size), f"{path}/bands")
 
 
@@ -274,8 +269,7 @@ def dedup_batch_rows(
         meta,
         _fingerprints(batch),
         minhash_band_buckets(
-            batch, "text", "doc_id",
-            meta["num_hashes"], meta["bands"], meta["shingle"],
+            batch, meta["num_hashes"], meta["bands"], meta["shingle"],
             meta["hash_family"],
         ),
     )
@@ -305,7 +299,7 @@ def dedup_index_check(
         batch, rows.fingerprints, rows.bands,
         read_batches(spark, f"{path}/fingerprints", exclude_batch),
         read_batches(spark, f"{path}/bands", exclude_batch),
-        "doc_id", rows.meta["num_hashes"], 0.5,
+        rows.meta["num_hashes"], 0.5,
     )
 
 

@@ -149,7 +149,7 @@ def winnow_fingerprints_expr(text_col) -> Column:
     return F.array_sort(F.array_distinct(wins))
 
 
-def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Per-document average unigram log-probability under the corpus's
     own unigram model — the simplest member of the KenLM-style
     perplexity-gate family: gibberish and boilerplate-stuffed documents
@@ -165,7 +165,7 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     corpus would be re-tokenized for the frequency table, the total,
     AND the join side. Documents with zero tokens drop out (no model
     support)."""
-    toks = df.select(F.col(id_col), F.explode(words_expr(F.col(text_col))).alias("tok"))
+    toks = df.select(F.col("doc_id"), F.explode(words_expr(F.col("text"))).alias("tok"))
     freq = (
         toks.groupBy("tok").agg(F.count("*").alias("c")).localCheckpoint(eager=True)
     )
@@ -174,20 +174,16 @@ def unigram_logprob(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
         toks.join(freq, "tok")
         .crossJoin(F.broadcast(total))
         .select(
-            id_col, (F.log(F.col("c") / F.col("n").cast("double"))).alias("logp")
+            "doc_id", (F.log(F.col("c") / F.col("n").cast("double"))).alias("logp")
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         round_det(F.avg("logp"), 4).alias("avg_logprob"),
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame) -> DataFrame:
     """Per-document average INTERPOLATED bigram log-probability under
     the corpus's own n-gram model — one rung up the KenLM ladder from
     ``unigram_logprob``:
@@ -226,7 +222,7 @@ def bigram_logprob(
     from ..session import eager_checkpoint
 
     wf = eager_checkpoint(
-        df.select(F.col(id_col), words_expr(F.col(text_col)).alias("__w"))
+        df.select(F.col("doc_id"), words_expr(F.col("text")).alias("__w"))
     )
     words = F.col("__w")
     # bigram array: zip words[0..n-2] with words[1..n-1]
@@ -236,8 +232,8 @@ def bigram_logprob(
         lambda w1, w2: F.struct(w1.alias("w1"), w2.alias("w2")),
     )
     stream = wf.select(
-        F.col(id_col), F.explode(bigrams).alias("bg")
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        F.col("doc_id"), F.explode(bigrams).alias("bg")
+    ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
 
     toks = wf.select(F.explode(words).alias("tok"))
     uni = (
@@ -270,8 +266,8 @@ def bigram_logprob(
             ).alias("logp"),
         )
     )
-    scored = stream.join(bi_scored, ["w1", "w2"]).select(id_col, "logp")
-    return scored.groupBy(id_col).agg(
+    scored = stream.join(bi_scored, ["w1", "w2"]).select("doc_id", "logp")
+    return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
         round_det(F.avg("logp"), 4).alias("avg_logprob"),
     )
@@ -279,8 +275,6 @@ def bigram_logprob(
 
 def repetition_metrics(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     n: int = 2,
 ) -> DataFrame:
     """Gopher-style repetition quality signals per document.
@@ -297,7 +291,7 @@ def repetition_metrics(
     over the gram array — O(L log L) per document, all JVM-side, no
     exchange at any scale.
     """
-    grams = ngrams_expr(words_expr(F.col(text_col)), n)
+    grams = ngrams_expr(words_expr(F.col("text")), n)
     sorted_g = F.array_sort(grams)
     zero = F.struct(
         F.lit("").alias("prev"),
@@ -327,13 +321,13 @@ def repetition_metrics(
     stats = F.aggregate(sorted_g, zero, _step, _finish)
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size(sorted_g).alias("n_grams"),
             stats.alias("_st"),
         )
         .filter(F.col("n_grams") > 0)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_grams"),
             round_det(F.col("_st.top") / F.col("n_grams"), 4).alias("top_gram_frac"),
             round_det(F.col("_st.dup") / F.col("n_grams"), 4).alias("dup_gram_frac"),
@@ -344,8 +338,6 @@ def repetition_metrics(
 def contamination_overlap(
     train: DataFrame,
     bench: DataFrame,
-    text_col: str,
-    id_col: str,
     n: int = 3,
 ) -> DataFrame:
     """Benchmark-contamination check: per-document fraction of distinct
@@ -366,21 +358,21 @@ def contamination_overlap(
     map-side partial aggregation. Nothing materializes the cross
     product and no corpus-wide gram table is ever shuffled.
     """
-    grams = F.array_distinct(ngrams_expr(words_expr(F.col(text_col)), n))
+    grams = F.array_distinct(ngrams_expr(words_expr(F.col("text")), n))
     bench_grams = (
         bench.select(F.explode(grams).alias("g")).distinct()
         .withColumn("_hit", F.lit(True))
     )
-    exploded = train.select(F.col(id_col), F.explode(grams).alias("g"))
+    exploded = train.select(F.col("doc_id"), F.explode(grams).alias("g"))
     return (
         exploded.join(F.broadcast(bench_grams), "g", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
             F.count("_hit").alias("n_hit"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_grams"),
             F.col("n_hit"),
             round_det(F.col("n_hit") / F.col("n_grams"), 4).alias("overlap_frac"),
@@ -393,8 +385,6 @@ def contamination_overlap(
 
 def mixture_sample(
     df: DataFrame,
-    source_col: str,
-    id_col: str,
     rates: dict[str, float],
     default_rate: float = 0.0,
 ) -> DataFrame:
@@ -412,18 +402,16 @@ def mixture_sample(
     ``default_rate``.
     """
     n_buckets = 10_000
-    bucket = portable_hash_bucket(F.col(id_col), n_buckets)
+    bucket = portable_hash_bucket(F.col("doc_id"), n_buckets)
     cut = F.lit(int(max(0.0, min(1.0, default_rate)) * n_buckets))
     for src, rate in sorted(rates.items()):
         bound = int(max(0.0, min(1.0, rate)) * n_buckets)
-        cut = F.when(F.col(source_col) == src, F.lit(bound)).otherwise(cut)
+        cut = F.when(F.col("source") == src, F.lit(bound)).otherwise(cut)
     return df.filter(bucket < cut)
 
 
 def chunk_tokens(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     window: int = 32,
     stride: int = 24,
 ) -> DataFrame:
@@ -444,7 +432,7 @@ def chunk_tokens(
     """
     if stride <= 0 or window <= 0:
         raise ValueError("window and stride must be positive")
-    toks = words_expr(F.col(text_col))
+    toks = words_expr(F.col("text"))
     n_tok = F.size(toks)
     # 1 chunk for L ≤ window, then one more per stride step beyond.
     n_chunks = F.when(n_tok <= 0, F.lit(0)).otherwise(
@@ -458,7 +446,7 @@ def chunk_tokens(
         lambda i: F.slice(toks, i * stride + 1, window),
     )
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(chunks).alias("chunk_id", "_toks"),
     )
     # sequence(0, -1) is DESCENDING [0, -1] in Spark, not empty — an
@@ -466,7 +454,7 @@ def chunk_tokens(
     # holds ≥1 token (the last starts at (n_chunks-1)·stride+1 ≤ L),
     # so dropping empty slices removes exactly the ghosts.
     return out.filter(F.size("_toks") > 0).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id"),
         F.size("_toks").alias("n_chunk_tokens"),
         F.array_join("_toks", " ").alias("chunk_text"),
@@ -475,8 +463,6 @@ def chunk_tokens(
 
 def pack_greedy(
     df: DataFrame,
-    id_col: str,
-    size_col: str,
     capacity: int,
     n_shards: int = 32,
 ) -> DataFrame:
@@ -498,13 +484,13 @@ def pack_greedy(
     tail vs. global FFD — the price of parallelism; raise n_shards to
     match cluster cores, not data size.
     """
-    shard = portable_hash_bucket(F.col(id_col), n_shards)
+    shard = portable_hash_bucket(F.col("doc_id"), n_shards)
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         # NULL size (e.g. a NULL-text doc whose token count is NULL)
         # packs as zero tokens — it must not poison the shard's pandas
         # batch with NaN (ints become floats, the FFD loop crashes).
-        F.coalesce(F.col(size_col).cast("long"), F.lit(0)).alias("n_tokens"),
+        F.coalesce(F.col("n_tokens").cast("long"), F.lit(0)).alias("n_tokens"),
         shard.cast("int").alias("shard"),
     )
 
@@ -542,7 +528,6 @@ def stratified_sample(
     df: DataFrame,
     strata_cols: Sequence[str],
     fraction: float,
-    id_col: str,
 ) -> DataFrame:
     """Exact, deterministic stratified sample: ceil(n_s · fraction)
     rows from each stratum, chosen by portable-hash order.
@@ -558,8 +543,8 @@ def stratified_sample(
     threshold) — same semantics, no full sort. Fine for strata that
     fit an executor's spill budget.
     """
-    h = F.md5(F.col(id_col).cast("string"))
-    w = Window.partitionBy(*strata_cols).orderBy(h, F.col(id_col))
+    h = F.md5(F.col("doc_id").cast("string"))
+    w = Window.partitionBy(*strata_cols).orderBy(h, F.col("doc_id"))
     cnt = Window.partitionBy(*strata_cols)
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -571,8 +556,6 @@ def stratified_sample(
 
 def vocab_induce(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     k: int = 200,
     min_df: int = 2,
 ) -> DataFrame:
@@ -593,8 +576,8 @@ def vocab_induce(
     single-partition frame is bounded by k, never by data volume.
     """
     toks = df.select(
-        F.col(id_col).alias("__doc"),
-        F.explode(words_expr(F.col(text_col))).alias("tok"),
+        F.col("doc_id").alias("__doc"),
+        F.explode(words_expr(F.col("text"))).alias("tok"),
     )
     return _vocab_rank(toks, "__doc", k, min_df)
 
@@ -614,18 +597,18 @@ def _vocab_rank(toks: DataFrame, doc_col: str, k: int, min_df: int) -> DataFrame
     return top.withColumn("vocab_id", F.row_number().over(w).cast("long"))
 
 
-def _assemble_input_ids(toks: DataFrame, vocab: DataFrame, id_col: str) -> DataFrame:
+def _assemble_input_ids(toks: DataFrame, vocab: DataFrame) -> DataFrame:
     """Shared encode tail over a (id, pos, tok) frame: broadcast-join
     the ≤k vocab (OOV → id 0), reassemble per-document id arrays by
     in-array (pos, tid) sorting — one corpus-sized groupBy, no global
     sort. ONE definition shared by `tokenize_encode` and
     `bpe_tokenize_encode`."""
     enc = toks.join(F.broadcast(vocab), "tok", "left").select(
-        id_col,
+        "doc_id",
         "pos",
         F.coalesce(F.col("vocab_id"), F.lit(0)).cast("long").alias("tid"),
     )
-    return enc.groupBy(id_col).agg(
+    return enc.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "tid"))),
@@ -636,8 +619,6 @@ def _assemble_input_ids(toks: DataFrame, vocab: DataFrame, id_col: str) -> DataF
 
 def tokenize_encode(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     k: int = 200,
     min_df: int = 2,
 ) -> DataFrame:
@@ -659,20 +640,16 @@ def tokenize_encode(
     Documents with zero tokens produce no rows (nothing to encode) —
     same semantics as the oracle's group-over-exploded-tokens.
     """
-    vocab = vocab_induce(df, text_col, id_col, k=k, min_df=min_df).select(
-        "tok", "vocab_id"
-    )
+    vocab = vocab_induce(df, k=k, min_df=min_df).select("tok", "vocab_id")
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(words_expr(F.col(text_col))).alias("pos", "tok"),
+        F.col("doc_id"),
+        F.posexplode(words_expr(F.col("text"))).alias("pos", "tok"),
     )
-    return _assemble_input_ids(toks, vocab, id_col)
+    return _assemble_input_ids(toks, vocab)
 
 
 def tokenize_encode_stats(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     k: int = 200,
     min_df: int = 2,
 ) -> DataFrame:
@@ -692,18 +669,16 @@ def tokenize_encode_stats(
     away). Zero-token documents produce no rows — same semantics as
     ``tokenize_encode``.
     """
-    vocab = vocab_induce(df, text_col, id_col, k=k, min_df=min_df).select(
-        "tok", "vocab_id"
-    )
+    vocab = vocab_induce(df, k=k, min_df=min_df).select("tok", "vocab_id")
     toks = df.select(
-        F.col(id_col),
-        F.explode(words_expr(F.col(text_col))).alias("tok"),
+        F.col("doc_id"),
+        F.explode(words_expr(F.col("text"))).alias("tok"),
     )
     enc = toks.join(F.broadcast(vocab), "tok", "left").select(
-        id_col,
+        "doc_id",
         F.coalesce(F.col("vocab_id"), F.lit(0)).cast("long").alias("tid"),
     )
-    return enc.groupBy(id_col).agg(
+    return enc.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
         F.sum("tid").cast("long").alias("sum_tid"),
     )
@@ -744,7 +719,7 @@ def compression_ratio_col(text_col: str = "text") -> Column:
 # --------------------------------------------------------- BPE training
 
 
-def word_freq_table(df: DataFrame, text_col: str) -> DataFrame:
+def word_freq_table(df: DataFrame) -> DataFrame:
     """(word, freq) over the whitespace-tokenized corpus — the input
     every BPE/unigram trainer actually iterates on. This is THE scale
     trick of tokenizer training at 100 TB: the corpus is touched once
@@ -752,7 +727,7 @@ def word_freq_table(df: DataFrame, text_col: str) -> DataFrame:
     and every subsequent merge iteration runs on the vocabulary-sized
     table, never the corpus."""
     return (
-        df.select(F.explode(words_expr(F.col(text_col))).alias("word"))
+        df.select(F.explode(words_expr(F.col("text"))).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
@@ -789,7 +764,6 @@ def bpe_pair_counts(words: DataFrame) -> DataFrame:
 
 def bpe_learn_merges(
     df: DataFrame,
-    text_col: str,
     n_merges: int = 10,
     min_count: int = 2,
 ) -> DataFrame:
@@ -823,7 +797,7 @@ def bpe_learn_merges(
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     spark = df.sparkSession
     schema = "rank int, left string, right string, merged string, pair_count long"
-    vocab = word_freq_table(df, text_col).select(
+    vocab = word_freq_table(df).select(
         "freq",
         # sentinel spaces make every symbol boundary a literal ' ' so
         # the merge regex needs only a fixed-width lookaround
@@ -880,7 +854,6 @@ def bpe_learn_merges(
 
 def bpe_apply(
     df: DataFrame,
-    text_col: str,
     merges,
     out_col: str = "pieces",
 ) -> DataFrame:
@@ -932,13 +905,12 @@ def bpe_apply(
             symstr = F.regexp_replace(symstr, pattern, replacement)
         return F.split(F.trim(symstr), " ")
 
-    words = words_expr(F.col(text_col))
+    words = words_expr(F.col("text"))
     return df.withColumn(out_col, F.flatten(F.transform(words, pieces_of)))
 
 
 def bpe_apply_kernel(
     df: DataFrame,
-    text_col: str,
     merges,
     out_col: str = "pieces",
 ) -> DataFrame:
@@ -1015,13 +987,11 @@ def bpe_apply_kernel(
 
         return texts.map(enc)
 
-    return df.withColumn(out_col, _encode(F.col(text_col)))
+    return df.withColumn(out_col, _encode(F.col("text")))
 
 
 def bpe_tokenize_encode(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     merges,
     k: int = 200,
     min_df: int = 2,
@@ -1048,12 +1018,10 @@ def bpe_tokenize_encode(
     stream costs more at 100 TB than re-running the map-only encode,
     and in production the vocabulary is built once and reused, making
     the steady-state cost a single encode pass."""
-    enc = bpe_apply(df, text_col, merges, out_col="__pieces")
-    toks = enc.select(
-        F.col(id_col), F.posexplode("__pieces").alias("pos", "tok")
-    )
-    vocab = _vocab_rank(toks, id_col, k, min_df).select("tok", "vocab_id")
-    return _assemble_input_ids(toks, vocab, id_col)
+    enc = bpe_apply(df, merges, out_col="__pieces")
+    toks = enc.select(F.col("doc_id"), F.posexplode("__pieces").alias("pos", "tok"))
+    vocab = _vocab_rank(toks, "doc_id", k, min_df).select("tok", "vocab_id")
+    return _assemble_input_ids(toks, vocab)
 
 
 # --------------------------------------------------------------------- DSIR
@@ -1077,7 +1045,6 @@ def dsir_features_expr(text_col) -> Column:
 
 def dsir_bucket_frame(
     df: DataFrame,
-    text_col: str,
     n_buckets: int,
     id_col: str | None = None,
     target_col: str | None = None,
@@ -1100,7 +1067,7 @@ def dsir_bucket_frame(
         cols.append(F.col(target_col).cast("long").alias("__is_t"))
     cols.append(
         F.transform(
-            dsir_features_expr(F.col(text_col)),
+            dsir_features_expr(F.col("text")),
             lambda g: portable_hash_bucket(g, n_buckets),
         ).alias("__buckets")
     )
@@ -1109,7 +1076,6 @@ def dsir_bucket_frame(
 
 def dsir_gram_weights(
     df: DataFrame,
-    text_col: str,
     target_col: str,
     n_buckets: int = DSIR_BUCKETS,
 ) -> list[int]:
@@ -1143,7 +1109,7 @@ def dsir_gram_weights(
     weigh 0; they can never be probed when apply runs on the same
     tokenization).
     """
-    bf = dsir_bucket_frame(df, text_col, n_buckets, target_col=target_col)
+    bf = dsir_bucket_frame(df, n_buckets, target_col=target_col)
     return _dsir_weights_from_buckets(bf, n_buckets)
 
 
@@ -1185,8 +1151,6 @@ DSIR_EXPR_MAX_BUCKETS = 4096
 
 def dsir_doc_logweights(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     weights: list[int],
 ) -> DataFrame:
     """Apply pass: per-document integer log-importance under learned
@@ -1204,13 +1168,11 @@ def dsir_doc_logweights(
     kernel over a closure numpy array — w[buckets].sum() per document,
     vectorized, zero exchanges. Both regimes are integer-exact and
     pinned equal in pytest."""
-    bf = dsir_bucket_frame(df, text_col, len(weights), id_col=id_col)
-    return _dsir_logweights_from_buckets(bf, id_col, weights)
+    bf = dsir_bucket_frame(df, len(weights), id_col="doc_id")
+    return _dsir_logweights_from_buckets(bf, weights)
 
 
-def _dsir_logweights_from_buckets(
-    bf: DataFrame, id_col: str, weights: list[int]
-) -> DataFrame:
+def _dsir_logweights_from_buckets(bf: DataFrame, weights: list[int]) -> DataFrame:
     """Apply pass over a ``dsir_bucket_frame`` (needs the id +
     ``__buckets``): the regime-switched weight fold, map-only."""
     n_buckets = len(weights)
@@ -1219,7 +1181,7 @@ def _dsir_logweights_from_buckets(
         return (
             bf.where(F.size("__buckets") > 0)
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.size("__buckets").cast("long").alias("n_grams"),
                 F.aggregate(
                     "__buckets",
@@ -1236,7 +1198,7 @@ def _dsir_logweights_from_buckets(
     pre = (
         bf.where(F.size("__buckets") > 0)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("__buckets").cast("long").alias("n_grams"),
             F.col("__buckets"),
         )
@@ -1250,7 +1212,7 @@ def _dsir_logweights_from_buckets(
             ]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_grams": pdf["n_grams"],
                     "lw_bits": lw,
                 }
@@ -1259,16 +1221,12 @@ def _dsir_logweights_from_buckets(
     # Output schema derives the id type from the input — the regime
     # switch must not silently change the function's type contract
     # (a hardcoded `long` crashed Arrow conversion for string ids).
-    id_ddl = pre.schema[id_col].dataType.simpleString()
-    return pre.mapInPandas(
-        gather, f"`{id_col}` {id_ddl}, n_grams long, lw_bits long"
-    )
+    id_ddl = pre.schema["doc_id"].dataType.simpleString()
+    return pre.mapInPandas(gather, f"doc_id {id_ddl}, n_grams long, lw_bits long")
 
 
 def dsir_resample(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     target_col: str,
     temp: int = 4,
 ) -> DataFrame:
@@ -1297,22 +1255,20 @@ def dsir_resample(
     # r10 form tokenized twice — once per pass; md5-per-gram dominates
     # the per-row cost, so the second pass was nearly a full re-run).
     bf = eager_checkpoint(
-        dsir_bucket_frame(
-            df, text_col, DSIR_BUCKETS, id_col=id_col, target_col=target_col
-        )
+        dsir_bucket_frame(df, DSIR_BUCKETS, id_col="doc_id", target_col=target_col)
     )
     weights = _dsir_weights_from_buckets(bf, DSIR_BUCKETS)
     # Materialize the scored table once: the max_lw aggregate AND the
     # accept/reject tail both read it, and without a checkpoint each
     # would re-run the weight fold over the bucket frame. The frame is
     # (id, 2 longs) — a sliver of the corpus it summarizes.
-    lw = eager_checkpoint(_dsir_logweights_from_buckets(bf, id_col, weights))
+    lw = eager_checkpoint(_dsir_logweights_from_buckets(bf, weights))
     mx = lw.agg(F.max("lw_bits").alias("__max_lw"))
     e = F.floor(
         (F.col("lw_bits") - F.col("__max_lw")) / F.lit(float(temp))
     ).cast("int")
     draw = portable_hash_bucket(
-        F.concat(F.lit("dsir:"), F.col(id_col).cast("string")),
+        F.concat(F.lit("dsir:"), F.col("doc_id").cast("string")),
         1 << DSIR_DRAW_BITS,
     )
     threshold = F.when(e <= -DSIR_DRAW_BITS, F.lit(0).cast("long")).otherwise(
@@ -1323,7 +1279,7 @@ def dsir_resample(
     return (
         lw.crossJoin(F.broadcast(mx))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_grams"),
             F.col("lw_bits"),
             e.alias("accept_exp"),
@@ -1347,8 +1303,6 @@ HOT_BUCKET_ROWS = 1_000_000
 
 def budget_select(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     token_budget: int,
     hot_bucket_rows: int = HOT_BUCKET_ROWS,
 ) -> DataFrame:
@@ -1395,12 +1349,12 @@ def budget_select(
     # regex/lambda chains are the expensive part of this plan — same
     # reasoning (and measured win) as dsir_resample's checkpoint above.
     scored = eager_checkpoint(
-        df.where(F.col(text_col).isNotNull()).select(
-            F.col(id_col),
-            F.floor(model_quality_expr(F.col(text_col)) * 1000 + F.lit(0.5))
+        df.where(F.col("text").isNotNull()).select(
+            F.col("doc_id"),
+            F.floor(model_quality_expr(F.col("text")) * 1000 + F.lit(0.5))
             .cast("long")
             .alias("quality_pm"),
-            F.size(words_expr(F.col(text_col))).cast("long").alias("n_tokens"),
+            F.size(words_expr(F.col("text"))).cast("long").alias("n_tokens"),
         )
     )
     bstats = scored.groupBy("quality_pm").agg(
@@ -1425,7 +1379,7 @@ def budget_select(
 
     ww = (
         Window.partitionBy("quality_pm")
-        .orderBy(F.col(id_col).asc())
+        .orderBy(F.col("doc_id").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cold = scored
@@ -1434,14 +1388,12 @@ def budget_select(
     ranked = cold.withColumn("__r", F.sum("n_tokens").over(ww))
     if hot:
         ranked = ranked.unionByName(
-            _hot_bucket_running_sum(
-                scored.where(F.col("quality_pm").isin(hot)), id_col
-            )
+            _hot_bucket_running_sum(scored.where(F.col("quality_pm").isin(hot)))
         )
     return (
         ranked.join(F.broadcast(pre), "quality_pm")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("quality_pm"),
             F.col("n_tokens"),
             (F.col("__cum_before") + F.col("__r")).alias("cum_tokens"),
@@ -1450,7 +1402,7 @@ def budget_select(
     )
 
 
-def _hot_bucket_running_sum(hot_df: DataFrame, id_col: str) -> DataFrame:
+def _hot_bucket_running_sum(hot_df: DataFrame) -> DataFrame:
     """Within-bucket running token sum for HOT quality buckets —
     the surrogate-keys per-partition-offset idiom applied inside the
     bucket (see assign_surrogate_keys for the two-pass shape).
@@ -1470,8 +1422,8 @@ def _hot_bucket_running_sum(hot_df: DataFrame, id_col: str) -> DataFrame:
     from ..session import eager_checkpoint
 
     parts = hot_df.repartitionByRange(
-        F.col("quality_pm"), F.col(id_col)
-    ).sortWithinPartitions("quality_pm", id_col)
+        F.col("quality_pm"), F.col("doc_id")
+    ).sortWithinPartitions("quality_pm", "doc_id")
     parts = eager_checkpoint(parts)
     psums = (
         parts.select(

@@ -32,17 +32,16 @@ def scd2_apply(
     dim: DataFrame,
     updates: DataFrame,
     key: str,
-    ts_col: str,
     tracked: list[str],
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Apply an update batch to an SCD2 dimension.
 
     `dim` columns: key, tracked..., valid_from, valid_to, is_current.
-    `updates` columns: key, tracked..., ts_col (change time).
+    `updates` columns: key, tracked..., ts (change time).
 
     Semantics:
-    - multiple updates for one key in a batch apply in `ts_col` order
+    - multiple updates for one key in a batch apply in `ts` order
       (each non-final one becomes an already-closed history row);
     - an update whose `tracked` values equal the PRECEDING version's
       (the prior update in the batch, or the key's current dim row for
@@ -66,8 +65,8 @@ def scd2_apply(
     """
     # Order the batch per key (tracked columns break timestamp ties
     # deterministically); collapse exact duplicate rows first.
-    updates = updates.select(key, *tracked, ts_col).dropDuplicates()
-    ordered = updates.select(key, *tracked, F.col(ts_col).alias("valid_from"))
+    updates = updates.select(key, *tracked, "ts").dropDuplicates()
+    ordered = updates.select(key, *tracked, F.col("ts").alias("valid_from"))
     w = W.partitionBy(key).orderBy(F.col("valid_from"), *[F.col(c) for c in tracked])
 
     # Value-change detection BEFORE interval computation: compare each

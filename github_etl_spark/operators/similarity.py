@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import round_det
 from ..sinks.store import (
-    BUILD_BATCH,
     CENTROIDS,
     append_batch,
     batch_ids,
@@ -541,21 +540,10 @@ def ivf_build_index(
     assigned = ivf_assign(corpus, centroids, id_col, vec_col).withColumn(
         "build_id", F.lit(build_id)
     )
-    if centroids:
-        # Build rows live in ingest_batch −1 under their cell;
-        # `ivf_index_append` adds later vectors under their own batch
-        # partition (second level, so `cell` pruning is unchanged).
-        write_build(assigned, path, "cell")
-    else:
-        # Empty corpus → no centroids → no cell partitions: a
-        # partitioned write of a 0-row frame emits only _SUCCESS (no
-        # parquet footer) and a later read fails
-        # UNABLE_TO_INFER_SCHEMA. Unpartitioned, `cell` and
-        # `ingest_batch` stay (schema-bearing) data columns, so
-        # ivf_query_index still reads, filters and returns 0 rows.
-        assigned.withColumn(
-            "ingest_batch", F.lit(BUILD_BATCH).cast("long")
-        ).write.mode("overwrite").parquet(path)
+    # Build rows live in ingest_batch −1 under their cell;
+    # `ivf_index_append` adds later vectors under their own batch
+    # partition (second level, so `cell` pruning is unchanged).
+    write_build(assigned, path, "cell")
     return centroids
 
 
@@ -574,18 +562,32 @@ def _read_ivf_sidecar(spark, path: str) -> tuple[list, str]:
     return meta["centroids"], meta["build_id"]
 
 
-def ivf_index_centroids(spark, path: str) -> tuple[list, str]:
-    """(centroids, build_id) of an IVF index that can take appends:
-    `_read_ivf_sidecar`, plus a ValueError for an empty-corpus build,
-    whose index has no cell to assign a new vector to. A streaming gate
-    calls it before its first write."""
+def ivf_index_assign(
+    spark, path: str, vectors: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """``vectors`` assigned to the cells of the IVF index at ``path``
+    (its sidecar centroids, no retraining) and stamped with its build
+    fingerprint: the rows `ivf_index_publish` appends. Reads the
+    sidecar once, here and eagerly, so a streaming gate that calls this
+    before its first write fails before it publishes anything. Raises
+    ValueError for an empty-corpus build, whose index has no cell to
+    assign a new vector to."""
     centroids, build_id = _read_ivf_sidecar(spark, path)
     if not centroids:
         raise ValueError(
             f"IVF index at {path!r} has no centroids (empty-corpus "
             "build) — appends cannot be assigned; rebuild with data"
         )
-    return centroids, build_id
+    return ivf_assign(vectors, centroids, id_col, vec_col).withColumn(
+        "build_id", F.lit(build_id)
+    )
+
+
+def ivf_index_publish(assigned: DataFrame, path: str, ingest_batch: int) -> None:
+    """Append ``assigned`` (`ivf_index_assign` rows) to the index at
+    ``path`` as batch ``ingest_batch``: a dynamic overwrite of exactly
+    the touched ``(cell, ingest_batch=N)`` partitions."""
+    append_batch(assigned, path, ingest_batch, "cell")
 
 
 def ivf_index_append(
@@ -593,17 +595,16 @@ def ivf_index_append(
     path: str,
     new_vectors: DataFrame,
     ingest_batch: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
-    """Incremental IVF maintenance: assign NEW vectors to the
-    EXISTING index's cells (sidecar centroids — no retraining) and
-    dynamic-overwrite exactly the touched ``(cell, ingest_batch=N)``
-    partitions (`sinks.store.append_batch`, the append all three
-    stores share). A replayed/retried append republishes its own
-    partitions — idempotent under at-least-once delivery; `cell`-level
-    directory pruning in `ivf_query_index` is untouched (ingest_batch
-    is the SECOND partition level).
+    """Incremental IVF maintenance: assign NEW vectors (``vec_id``,
+    ``embedding``) to the EXISTING index's cells (sidecar centroids —
+    no retraining, `ivf_index_assign`) and dynamic-overwrite exactly
+    the touched ``(cell, ingest_batch=N)`` partitions
+    (`ivf_index_publish`, through the append all three stores share).
+    A replayed/retried append republishes its own partitions —
+    idempotent under at-least-once delivery; `cell`-level directory
+    pruning in `ivf_query_index` is untouched (ingest_batch is the
+    SECOND partition level).
 
     The appended rows carry the sidecar's build fingerprint, so the
     build-vs-assignment consistency probe keeps working across
@@ -620,14 +621,10 @@ def ivf_index_append(
     (centroid scoring is Arrow-batched, map-only) + a write touching
     ≤ min(|batch|, n_centroids) cell directories; the index is never
     rewritten and never shuffled."""
-    centroids, build_id = ivf_index_centroids(spark, path)
-    append_batch(
-        ivf_assign(new_vectors, centroids, id_col, vec_col).withColumn(
-            "build_id", F.lit(build_id)
-        ),
+    ivf_index_publish(
+        ivf_index_assign(spark, path, new_vectors, "vec_id", "embedding"),
         path,
         ingest_batch,
-        "cell",
     )
 
 
@@ -661,7 +658,7 @@ def ivf_index_fold(spark, path: str) -> int:
 
     centroids, _bid = _read_ivf_sidecar(spark, path)
     if not centroids:
-        return 0  # empty-corpus build: unpartitioned, nothing to fold
+        return 0  # empty-corpus build: no cell, nothing to fold
     marker = _ivf_fold_marker(path)
     if len(batch_ids(path)) <= 1 and not os.path.exists(marker):
         return 0

@@ -388,17 +388,15 @@ def grouped_sample_quantiles(
 SHARDED_SUMMARY_SCHEMA = "shard int, tok string, lower long, dsum long, nrows long"
 
 
-def mg_batch_fragments(
-    items: DataFrame, shard_col: str, tok_col: str
-) -> DataFrame:
+def mg_batch_fragments(items: DataFrame) -> DataFrame:
     """One micro-batch's EXACT per-shard counts in sharded-summary
     form: (shard, tok, count) token rows plus one (shard, NULL, nrows)
     stats row per shard — the fragment :func:`mg_fold_sharded` folds
     into the running state, exactly what one arriving micro-batch
     contributes in streaming/stateful._mg_update_fn."""
     toks = items.select(
-        F.col(shard_col).cast("int").alias("shard"),
-        F.col(tok_col).cast("string").alias("tok"),
+        F.col("shard").cast("int").alias("shard"),
+        F.col("tok").cast("string").alias("tok"),
     ).where(F.col("tok").isNotNull())
     counts = toks.groupBy("shard", "tok").agg(
         F.count(F.lit(1)).alias("lower"),

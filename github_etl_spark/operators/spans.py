@@ -38,12 +38,10 @@ from .partitioning import ensure_parallelism
 from .pipeline import ngrams_expr
 
 
-def _positioned_grams(
-    docs: DataFrame, text_col: str, id_col: str, k: int, hash_grams: bool
-) -> DataFrame:
-    toks = tokens_expr(F.col(text_col))
+def _positioned_grams(docs: DataFrame, k: int, hash_grams: bool) -> DataFrame:
+    toks = tokens_expr(F.col("text"))
     g = docs.select(
-        F.col(id_col).alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.posexplode(ngrams_expr(toks, k)).alias("pos", "gram"),
     )
     if hash_grams:
@@ -65,7 +63,7 @@ def duplicated_spans(
     (doc, pos) order — the Lee et al. policy (one copy survives);
     `False` flags every occurrence (strip boilerplate everywhere).
     """
-    grams = _positioned_grams(ensure_parallelism(docs), "text", "doc_id", k, hash_grams)
+    grams = _positioned_grams(ensure_parallelism(docs), k, hash_grams)
     # One gram-keyed window (shuffle + sort, ONE corpus pass). Two
     # measured-and-rejected alternatives at sf0.1: (a) groupBy gram
     # stats + join back re-executes the gram pipeline for both sides

@@ -123,10 +123,9 @@ def viterbi_segment(
 
 def unigram_segment_kernel(
     df: DataFrame,
-    text_col: str,
     vocab: list[tuple[str, int]] | None = None,
 ) -> DataFrame:
-    """Segment every token of ``text_col`` with the unigram Viterbi DP
+    """Segment every token of ``text`` with the unigram Viterbi DP
     and emit flat per-document stats:
 
     (doc_id, n_tokens, n_pieces, total_score, pieces_digest)
@@ -173,7 +172,7 @@ def unigram_segment_kernel(
             out = {k: [] for k in
                    ("doc_id", "n_tokens", "n_pieces", "total_score",
                     "pieces_digest")}
-            for did, text in zip(pdf["doc_id"], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower())
                         if t]
                 if not toks:
@@ -189,7 +188,7 @@ def unigram_segment_kernel(
                 )
             yield pd.DataFrame(out)
 
-    return df.select("doc_id", text_col).mapInPandas(run, schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema)
 
 
 def sql_vocab_values(vocab: list[tuple[str, int]] | None = None) -> str:
@@ -238,7 +237,6 @@ def bitlen_score(cnt: int, total_bitlen: int) -> int:
 
 def learn_vocab(
     df: DataFrame,
-    text_col: str,
     rounds: int = 3,
     max_piece_len: int = 4,
     min_count: int = 2,
@@ -280,7 +278,7 @@ def learn_vocab(
         df.select(
             F.explode(
                 F.filter(
-                    F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
+                    F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
                     lambda x: x != "",
                 )
             ).alias("token")
@@ -389,7 +387,6 @@ def learn_vocab(
 
 def unigram_learn(
     df: DataFrame,
-    text_col: str,
     rounds: int = 3,
     max_piece_len: int = 4,
     min_count: int = 2,
@@ -398,7 +395,7 @@ def unigram_learn(
     """``learn_vocab`` as a DataFrame: (piece, piece_len, cnt), counts
     descending (piece ascending on ties)."""
     vocab = learn_vocab(
-        df, text_col, rounds=rounds, max_piece_len=max_piece_len,
+        df, rounds=rounds, max_piece_len=max_piece_len,
         min_count=min_count, max_vocab=max_vocab,
     )
     rows = sorted(vocab.items(), key=lambda t: (-t[1], t[0]))
@@ -410,7 +407,6 @@ def unigram_learn(
 
 def unigram_tokenize_encode(
     df: DataFrame,
-    text_col: str,
     rounds: int = 3,
 ) -> DataFrame:
     """END-TO-END unigram tokenization — the unigram sibling of
@@ -430,7 +426,7 @@ def unigram_tokenize_encode(
     Scale shape = learn's (corpus never leaves the cluster; bounded
     vocab to the driver) + one extra Arrow-batched map-only encode
     pass with the vocab/ids as a closure."""
-    vocab = learn_vocab(df, text_col, rounds=rounds)
+    vocab = learn_vocab(df, rounds=rounds)
     total_bits = sum(vocab.values()).bit_length()
     scores = {p: bitlen_score(c, total_bits) for p, c in vocab.items()}
     ids = {
@@ -464,7 +460,7 @@ def unigram_tokenize_encode(
         for pdf in batches:
             out = {k: [] for k in
                    ("doc_id", "n_tokens", "n_pieces", "input_ids")}
-            for did, text in zip(pdf["doc_id"], pdf[text_col]):
+            for did, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = [t for t in _TOKEN_SPLIT.split((text or "").lower())
                         if t]
                 if not toks:
@@ -476,4 +472,4 @@ def unigram_tokenize_encode(
                 out["input_ids"].append(" ".join(s for s, _ in encoded))
             yield pd.DataFrame(out)
 
-    return df.select("doc_id", text_col).mapInPandas(run, schema)
+    return df.select("doc_id", "text").mapInPandas(run, schema)

@@ -111,7 +111,6 @@ def merged_symbol(left: str, right: str) -> str:
 
 def wordpiece_learn(
     df: DataFrame,
-    text_col: str,
     n_merges: int = 8,
     min_count: int = 2,
 ) -> DataFrame:
@@ -141,9 +140,7 @@ def wordpiece_learn(
     from ..session import eager_checkpoint as _ckpt, release
 
     vocab = _ckpt(
-        word_freq_table(df, text_col).select(
-            "freq", _wp_symstr(F.col("word")).alias("symstr")
-        )
+        word_freq_table(df).select("freq", _wp_symstr(F.col("word")).alias("symstr"))
     )
     merges: list[tuple] = []
     try:
@@ -242,7 +239,6 @@ def wordpiece_pieces(word: str, vocab: set[str]) -> list[str]:
 
 def wordpiece_encode_kernel(
     df: DataFrame,
-    text_col: str,
     vocab,
     out_col: str = "pieces",
 ) -> DataFrame:
@@ -284,15 +280,15 @@ def wordpiece_encode_kernel(
 
         return texts.map(enc)
 
-    return df.withColumn(out_col, _encode(F.col(text_col)))
+    return df.withColumn(out_col, _encode(F.col("text")))
 
 
-def corpus_alphabet(df: DataFrame, text_col: str) -> list[str]:
+def corpus_alphabet(df: DataFrame) -> list[str]:
     """Sorted distinct characters of the corpus's words — the
     WordPiece initial alphabet. Bounded by alphabet size (one
     distinct agg crosses to the driver)."""
     rows = (
-        word_freq_table(df, text_col)
+        word_freq_table(df)
         .select(
             F.explode(
                 F.transform(
@@ -309,8 +305,6 @@ def corpus_alphabet(df: DataFrame, text_col: str) -> list[str]:
 
 def wordpiece_tokenize_encode(
     df: DataFrame,
-    text_col: str,
-    id_col: str,
     n_merges: int = 8,
     min_count: int = 2,
     k: int = 200,
@@ -331,16 +325,14 @@ def wordpiece_tokenize_encode(
     and merge table are the only driver-side lists (both bounded);
     encode is map-only; the id tail is `_assemble_input_ids`' one
     corpus-sized groupBy with in-array (pos, id) sorting."""
-    merges = wordpiece_learn(df, text_col, n_merges, min_count)
+    merges = wordpiece_learn(df, n_merges, min_count)
     merged = [r["merged"] for r in merges.orderBy("rank").collect()]
-    chars = corpus_alphabet(df, text_col)
+    chars = corpus_alphabet(df)
     vocab = set(chars) | {CONT + c for c in chars} | set(merged)
 
     from .pipeline import _assemble_input_ids, _vocab_rank
 
-    enc = wordpiece_encode_kernel(df, text_col, vocab, out_col="__pieces")
-    toks = enc.select(
-        F.col(id_col), F.posexplode("__pieces").alias("pos", "tok")
-    )
-    ids = _vocab_rank(toks, id_col, k, min_df).select("tok", "vocab_id")
-    return _assemble_input_ids(toks, ids, id_col)
+    enc = wordpiece_encode_kernel(df, vocab, out_col="__pieces")
+    toks = enc.select(F.col("doc_id"), F.posexplode("__pieces").alias("pos", "tok"))
+    ids = _vocab_rank(toks, "doc_id", k, min_df).select("tok", "vocab_id")
+    return _assemble_input_ids(toks, ids)

@@ -132,7 +132,7 @@ def c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import c4_clean as op
 
     t = load_tables(spark, sf_dir)
-    return op(t["documents"], "text", "doc_id")
+    return op(t["documents"])
 
 
 @query(
@@ -175,7 +175,7 @@ def gopher_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import gopher_gate
 
     t = load_tables(spark, sf_dir)
-    return gopher_gate(t["documents"], "text", "doc_id")
+    return gopher_gate(t["documents"])
 
 
 @query(
@@ -215,7 +215,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import ccnet_buckets
 
     t = load_tables(spark, sf_dir)
-    return ccnet_buckets(t["documents"], "text", "doc_id", "lang")
+    return ccnet_buckets(t["documents"])
 
 
 @query(
@@ -301,9 +301,7 @@ def pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("doc_id"), F.min("lang").alias("lang")
         )
     )
-    bucketed = ccnet_buckets(dedup, "text", "doc_id", "lang").withColumnRenamed(
-        "bucket", "ppl_bucket"
-    )
+    bucketed = ccnet_buckets(dedup).withColumnRenamed("bucket", "ppl_bucket")
     head = bucketed.where(F.col("ppl_bucket") != "tail")
     return hash_split(head, "doc_id").select(
         "doc_id", "lang", "avg_logprob", "ppl_bucket", "split"
@@ -340,7 +338,7 @@ def blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import blocklist_gate
 
     t = load_tables(spark, sf_dir)
-    return blocklist_gate(t["documents"], "text", "doc_id")
+    return blocklist_gate(t["documents"])
 
 
 @query(
@@ -416,8 +414,6 @@ def span_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_incremental_verdicts(
         docs.where(F.col("doc_id") % 5 != 0),
         docs.where(F.col("doc_id") % 5 == 0),
-        "text",
-        "doc_id",
     )
 
 
@@ -581,9 +577,9 @@ def pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         gated.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     )
     pairs = minhash_lsh_candidates(
-        exact, "text", "doc_id", hash_family="md5_portable"
+        exact, hash_family="md5_portable"
     ).where(F.col("est_jaccard") >= 0.5)
-    labeled = cluster_assignment(exact.select("doc_id"), pairs, "doc_id")
+    labeled = cluster_assignment(exact.select("doc_id"), pairs)
     # cluster_assignment already marks the component's min-id row
     # (is_canonical) — a map-side filter, not another corpus-wide
     # groupBy on component_id (review-caught).
@@ -606,12 +602,10 @@ def pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assembly (the manifest never reads id ORDER; r13 optimization,
     # equivalence pinned in tests/test_pipeline_ops.py).
     enc = eager_checkpoint(
-        tokenize_encode_stats(kept, "text", "doc_id", k=200, min_df=2)
+        tokenize_encode_stats(kept, k=200, min_df=2)
         .join(kept.select("doc_id", "split"), "doc_id")
     )
-    packed = pack_greedy(
-        enc.select("doc_id", "n_tokens"), "doc_id", "n_tokens", capacity=256
-    )
+    packed = pack_greedy(enc.select("doc_id", "n_tokens"), capacity=256)
     return (
         packed.join(enc.select("doc_id", "split", "sum_tid"), "doc_id")
         .groupBy("split", "shard")

@@ -67,7 +67,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: exact dedup — deterministic keeper (min id), not
     dropDuplicates' arbitrary row."""
     t = load_tables(spark, sf_dir)
-    return exact_dedup(t["documents"], ["text"], "doc_id")
+    return exact_dedup(t["documents"], ["text"])
 
 
 @query(
@@ -84,7 +84,7 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: canonical-fingerprint dedup (md5 of sorted distinct token set
     — order/casing/punctuation-invariant)."""
     t = load_tables(spark, sf_dir)
-    return fingerprint_dedup(t["documents"], "text", "doc_id")
+    return fingerprint_dedup(t["documents"])
 
 
 def _url_dedup_oracle() -> str:
@@ -180,8 +180,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return ngram_jaccard_pairs(
         t["documents"],
-        "text",
-        "doc_id",
         block_cols=["lang"],
         threshold=0.5,
         shingle=3,
@@ -233,9 +231,9 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", block_cols=["lang"], threshold=0.5, shingle=3, max_df=100
+        docs, block_cols=["lang"], threshold=0.5, shingle=3, max_df=100
     )
-    return cluster_assignment(docs.select("doc_id"), pairs, "doc_id")
+    return cluster_assignment(docs.select("doc_id"), pairs)
 
 
 @query(
@@ -287,10 +285,10 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", block_cols=["lang"], threshold=0.5,
+        docs, block_cols=["lang"], threshold=0.5,
         shingle=3, max_df=100,
     )
-    labeled = cluster_assignment(docs.select("doc_id"), pairs, "doc_id")
+    labeled = cluster_assignment(docs.select("doc_id"), pairs)
     return hash_split(labeled, "component_id").select(
         "doc_id", "component_id", "split"
     )
@@ -301,7 +299,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: MinHash+LSH near-dup candidates (32 hashes, 8 bands × 4 rows).
     Recall vs exact Jaccard asserted in tests/test_dedup.py."""
     t = load_tables(spark, sf_dir)
-    return minhash_lsh_candidates(t["documents"], "text", "doc_id")
+    return minhash_lsh_candidates(t["documents"])
 
 
 # The FULL portable MinHash+LSH candidate pipeline as a shared CTE
@@ -374,9 +372,7 @@ def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the faster engine-specific xxhash64 family; only the hash
     differs between the two paths (same code, `hash_family=` switch)."""
     t = load_tables(spark, sf_dir)
-    return minhash_lsh_candidates(
-        t["documents"], "text", "doc_id", hash_family="md5_portable"
-    )
+    return minhash_lsh_candidates(t["documents"], hash_family="md5_portable")
 
 
 @query("dedup_incremental", headline=True, sibling="dedup_incremental_portable")  # xxhash64 → rows-only
@@ -505,7 +501,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the xxhash64 production default keeps its property tests in
     tests/test_dedup.py."""
     t = load_tables(spark, sf_dir)
-    return simhash_signatures(t["documents"], "text", "doc_id", hash_family="md5_portable")
+    return simhash_signatures(t["documents"], hash_family="md5_portable")
 
 
 @query(
@@ -2977,7 +2973,7 @@ def quality_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import budget_select
 
     t = load_tables(spark, sf_dir)
-    return budget_select(t["documents"], "text", "doc_id", 10000)
+    return budget_select(t["documents"], 10000)
 
 
 # Shared DSIR oracle CTEs (Xie et al. 2023 hashed n-gram importance
@@ -3045,9 +3041,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     weights = dsir_gram_weights(
-        docs.withColumn("__is_t", F.col("lang") == "en"), "text", "__is_t"
+        docs.withColumn("__is_t", F.col("lang") == "en"), "__is_t"
     )
-    return dsir_doc_logweights(docs, "text", "doc_id", weights)
+    return dsir_doc_logweights(docs, weights)
 
 
 @query(
@@ -3084,7 +3080,7 @@ def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"].withColumn("__is_t", F.col("lang") == "en")
-    return _resample(docs, "text", "doc_id", "__is_t")
+    return _resample(docs, "__is_t")
 
 
 @query(
@@ -4071,9 +4067,7 @@ def streaming_mg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     state = None
     for b in range(3):
-        frag = mg_batch_fragments(
-            toks.where(F.col("batch") == b), "shard", "tok"
-        )
+        frag = mg_batch_fragments(toks.where(F.col("batch") == b))
         parts = frag if state is None else state.unionByName(frag)
         # Materialize each round's summary (shards × counters rows):
         # exactly what the state store holds between micro-batches, and
@@ -4139,7 +4133,7 @@ def streaming_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/stateful.running_totals) replayed as a fixed
     three-ingest batch sequence — one row per (key, batch the key
     appears in) with that batch's count and the cumulative total, the
-    EXACT emission contract of _update_running_totals. The fold is a
+    EXACT emission contract of _running_totals_fn. The fold is a
     per-key sum (order-free), so the replay is one groupBy plus one
     keyed cumulative window — with this row, all three custom stateful
     operators (running totals, sharded MG, sharded bottom-k) have
@@ -4595,9 +4589,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join — without it the whole signature pipeline runs twice. It is
     # LSH-screen-bounded, so materializing it is cheap at any scale.
     pairs = (
-        minhash_lsh_candidates(
-            docs, "text", "doc_id", hash_family="md5_portable"
-        )
+        minhash_lsh_candidates(docs, hash_family="md5_portable")
         .select("id_a", "id_b", "est_jaccard")
         .localCheckpoint(eager=True)
     )
@@ -5855,7 +5847,7 @@ def pipeline_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
-    chunks = chunk_tokens(docs, "text", "doc_id", window=32, stride=24)
+    chunks = chunk_tokens(docs, window=32, stride=24)
     # Explicit width before the encoder pass: the chunk explode
     # inherits the parquet scan's split count (ONE partition at
     # catalog SFs), which would serialize the encoder pass on a

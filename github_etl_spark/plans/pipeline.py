@@ -59,7 +59,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-bigram fraction, duplicate-bigram fraction). Distributed
     explode + two keyed partial aggs — O(tokens), never O(len²)/row."""
     t = load_tables(spark, sf_dir)
-    return repetition_metrics(t["documents"], "text", "doc_id", n=2)
+    return repetition_metrics(t["documents"], n=2)
 
 
 @query(
@@ -98,7 +98,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(n·frac) rows per stratum in portable-hash order (reproducible,
     unlike Bernoulli sampleBy)."""
     t = load_tables(spark, sf_dir)
-    return stratified_sample(t["documents"], ["lang"], 0.1, "doc_id").select(
+    return stratified_sample(t["documents"], ["lang"], 0.1).select(
         "doc_id", "lang", "source"
     )
 
@@ -141,7 +141,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     return contamination_overlap(
-        docs.filter(~_bench_pred()), docs.filter(_bench_pred()), "text", "doc_id", n=3
+        docs.filter(~_bench_pred()), docs.filter(_bench_pred()), n=3
     )
 
 
@@ -176,9 +176,7 @@ def mixture_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates applied via a portable md5 bucket of doc_id (zero-shuffle,
     engine-portable, stable across runs — unlike Bernoulli sampleBy)."""
     t = load_tables(spark, sf_dir)
-    return mixture_sample(t["documents"], "source", "doc_id", _MIX_RATES).select(
-        "doc_id", "lang", "source"
-    )
+    return mixture_sample(t["documents"], _MIX_RATES).select("doc_id", "lang", "source")
 
 
 @query(
@@ -207,7 +205,7 @@ def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: context-window chunking — 32-token windows every 24 tokens
     (8-token overlap), per-row slices + explode, no shuffle/UDF."""
     t = load_tables(spark, sf_dir)
-    out = chunk_tokens(t["documents"], "text", "doc_id", window=32, stride=24)
+    out = chunk_tokens(t["documents"], window=32, stride=24)
     return out.select(
         "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
@@ -302,7 +300,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t["documents"].select(
         "doc_id", token_count_expr(F.col("text")).alias("n_tokens")
     )
-    return pack_greedy(docs, "doc_id", "n_tokens", capacity=256)
+    return pack_greedy(docs, capacity=256)
 
 
 @query(
@@ -451,7 +449,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import unigram_logprob
 
     t = load_tables(spark, sf_dir)
-    return unigram_logprob(t["documents"], "text", "doc_id")
+    return unigram_logprob(t["documents"])
 
 
 # Shared oracle fragment: the frequency-ranked top-k vocabulary
@@ -491,7 +489,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import vocab_induce
 
     t = load_tables(spark, sf_dir)
-    return vocab_induce(t["documents"], "text", "doc_id", k=200, min_df=2)
+    return vocab_induce(t["documents"], k=200, min_df=2)
 
 
 @query(
@@ -529,7 +527,7 @@ def tokenize_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import tokenize_encode
 
     t = load_tables(spark, sf_dir)
-    enc = tokenize_encode(t["documents"], "text", "doc_id", k=200, min_df=2)
+    enc = tokenize_encode(t["documents"], k=200, min_df=2)
     return enc.select(
         "doc_id",
         "n_tokens",
@@ -631,7 +629,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import bigram_logprob
 
     t = load_tables(spark, sf_dir)
-    return bigram_logprob(t["documents"], "text", "doc_id")
+    return bigram_logprob(t["documents"])
 
 
 @query(
@@ -795,7 +793,7 @@ def bpe_pair_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import bpe_pair_counts, word_freq_table
 
     t = load_tables(spark, sf_dir)
-    pc = bpe_pair_counts(word_freq_table(t["documents"], "text"))
+    pc = bpe_pair_counts(word_freq_table(t["documents"]))
     return pc.select(
         F.col("left").alias("sym_left"),
         F.col("right").alias("sym_right"),
@@ -853,7 +851,7 @@ def bpe_apply_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import bpe_apply
 
     t = load_tables(spark, sf_dir)
-    enc = bpe_apply(t["documents"], "text", _BPE_PINNED_MERGES, out_col="__pieces")
+    enc = bpe_apply(t["documents"], _BPE_PINNED_MERGES, out_col="__pieces")
     return enc.select(
         "doc_id",
         F.size("__pieces").cast("long").alias("n_pieces"),
@@ -877,9 +875,7 @@ def bpe_apply_kernel_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import bpe_apply_kernel
 
     t = load_tables(spark, sf_dir)
-    enc = bpe_apply_kernel(
-        t["documents"], "text", _BPE_PINNED_MERGES, out_col="__pieces"
-    )
+    enc = bpe_apply_kernel(t["documents"], _BPE_PINNED_MERGES, out_col="__pieces")
     return enc.select(
         "doc_id",
         F.size("__pieces").cast("long").alias("n_pieces"),
@@ -962,7 +958,7 @@ def bpe_learn_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import bpe_learn_merges
 
     t = load_tables(spark, sf_dir)
-    m = bpe_learn_merges(t["documents"], "text", n_merges=8, min_count=2)
+    m = bpe_learn_merges(t["documents"], n_merges=8, min_count=2)
     return m.select(
         "rank",
         F.col("left").alias("sym_left"),
@@ -1025,9 +1021,7 @@ def bpe_tokenize_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pipeline import bpe_tokenize_encode
 
     t = load_tables(spark, sf_dir)
-    enc = bpe_tokenize_encode(
-        t["documents"], "text", "doc_id", _BPE_PINNED_MERGES, k=200, min_df=2
-    )
+    enc = bpe_tokenize_encode(t["documents"], _BPE_PINNED_MERGES, k=200, min_df=2)
     return enc.select(
         "doc_id",
         "n_tokens",
@@ -1107,7 +1101,7 @@ def unigram_segment_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.unigram import unigram_segment_kernel
 
     t = load_tables(spark, sf_dir)
-    return unigram_segment_kernel(t["documents"], "text")
+    return unigram_segment_kernel(t["documents"])
 
 
 def _unigram_learn_ctes(
@@ -1300,7 +1294,7 @@ def unigram_learn_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.unigram import unigram_learn
 
     t = load_tables(spark, sf_dir)
-    return unigram_learn(t["documents"], "text")
+    return unigram_learn(t["documents"])
 
 
 @query("unigram_tokenize_encode", oracle=_unigram_encode_oracle())
@@ -1318,7 +1312,7 @@ def unigram_tokenize_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.unigram import unigram_tokenize_encode
 
     t = load_tables(spark, sf_dir)
-    return unigram_tokenize_encode(t["documents"], "text")
+    return unigram_tokenize_encode(t["documents"])
 
 
 # ------------------------------------------------------- WordPiece catalog
@@ -1546,7 +1540,7 @@ def wordpiece_learn_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.wordpiece import wordpiece_learn
 
     t = load_tables(spark, sf_dir)
-    m = wordpiece_learn(t["documents"], "text", n_merges=8, min_count=2)
+    m = wordpiece_learn(t["documents"], n_merges=8, min_count=2)
     return m.select(
         "rank",
         F.col("left").alias("sym_left"),
@@ -1575,9 +1569,7 @@ def wordpiece_encode_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.wordpiece import UNK, wordpiece_encode_kernel
 
     t = load_tables(spark, sf_dir)
-    enc = wordpiece_encode_kernel(
-        t["documents"], "text", _WP_PINNED_VOCAB, out_col="__pieces"
-    )
+    enc = wordpiece_encode_kernel(t["documents"], _WP_PINNED_VOCAB, out_col="__pieces")
     return enc.select(
         "doc_id",
         F.size("__pieces").cast("long").alias("n_pieces"),
@@ -1689,7 +1681,7 @@ def wordpiece_tokenize_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     enc = wordpiece_tokenize_encode(
-        t["documents"], "text", "doc_id", n_merges=8, min_count=2,
+        t["documents"], n_merges=8, min_count=2,
         k=200, min_df=2,
     )
     return enc.select(

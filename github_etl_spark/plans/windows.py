@@ -515,7 +515,7 @@ def scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     updates = changes.unionByName(noops).distinct()
-    return scd2_apply(dim, updates, "c_custkey", "ts", ["segment"])
+    return scd2_apply(dim, updates, "c_custkey", ["segment"])
 
 
 _AS_OF_TS = "1995-06-01 00:00:00"

@@ -127,19 +127,19 @@ def compact_partitions(
 def fold_partitions(
     spark: SparkSession,
     table_path: str,
-    part_col: str,
     into_value: int,
 ) -> list[dict]:
-    """Fold EVERY ``part_col`` value of a Hive-partitioned parquet
+    """Fold EVERY ``ingest_batch`` value of a Hive-partitioned parquet
     table into ONE fresh value — the PARTITION-COUNT maintenance op
     for per-ingest stores (sinks/store.fold), complementing
     `compact_partitions`' per-partition small-file rewrite: a
     streaming gate adds one ``ingest_batch=N`` directory per
     micro-batch, and after thousands of batches scan cost is dominated
     by directory listing and per-partition footers, not bytes.
-    ``part_col`` must be the last partition level; partition columns
-    above it (the IVF index's ``cell``) are kept, so each of their
-    values folds to its own ``(…, part_col=into_value)`` directory.
+    ``ingest_batch`` must be the last partition level; partition
+    columns above it (the IVF index's ``cell``) are kept, so each of
+    their values folds to its own ``(…, ingest_batch=into_value)``
+    directory.
     Returns the stats of the partitions folded (empty for a table with
     no partitions); a table with a single value is folded too — whether
     that is worth doing is the caller's decision.
@@ -169,14 +169,14 @@ def fold_partitions(
     if not stats:
         return []
     levels = list(stats[0]["partition"])
-    if levels[-1] != part_col or any(
+    if levels[-1] != "ingest_batch" or any(
         list(p["partition"]) != levels for p in stats
     ):
         raise ValueError(
-            f"fold_partitions expects {part_col!r} as the last partition "
+            "fold_partitions expects 'ingest_batch' as the last partition "
             f"level of every partition at {table_path!r}"
         )
-    if str(into_value) in {p["partition"][part_col] for p in stats}:
+    if str(into_value) in {p["partition"]["ingest_batch"] for p in stats}:
         raise ValueError(
             f"into_value {into_value} already exists at {table_path!r} — "
             "folding INTO a live partition is not crash-safe (a partial "
@@ -184,11 +184,11 @@ def fold_partitions(
         )
     df = spark.read.parquet(table_path)
     (
-        df.select(*[c for c in df.columns if c != part_col])
+        df.select(*[c for c in df.columns if c != "ingest_batch"])
         .distinct()
         .withColumn(
-            part_col,
-            F.lit(int(into_value)).cast(dict(df.dtypes)[part_col]),
+            "ingest_batch",
+            F.lit(int(into_value)).cast(dict(df.dtypes)["ingest_batch"]),
         )
         .write.mode("append")
         .partitionBy(*levels)
@@ -211,7 +211,7 @@ def fold_partitions(
     if failed:
         raise RuntimeError(
             f"fold_partitions: consolidated rows are written to "
-            f"{part_col}={into_value} but {len(failed)} source "
+            f"ingest_batch={into_value} but {len(failed)} source "
             f"partition(s) could not be deleted (table is a duplicated "
             f"superset; re-run to converge): " + "; ".join(failed)
         )

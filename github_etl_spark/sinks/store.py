@@ -86,13 +86,21 @@ def read_sidecar(spark: SparkSession, path: str, suffix: str, builder: str):
 
 def write_build(df: DataFrame, table: str, *partition_cols: str) -> None:
     """Replace ``table`` with ``df`` as the build rows: partitioned by
-    ``(*partition_cols, ingest_batch)``, all in batch −1."""
-    (
-        df.withColumn("ingest_batch", F.lit(BUILD_BATCH).cast("long"))
-        .write.mode("overwrite")
-        .partitionBy(*partition_cols, "ingest_batch")
-        .parquet(table)
-    )
+    ``(*partition_cols, ingest_batch)``, all in batch −1.
+
+    An empty ``df`` still leaves a table that reads as 0 rows and takes
+    appends: a partitioned write of no rows leaves only ``_SUCCESS``,
+    which a read cannot infer a schema from, so one empty parquet file
+    goes into the build partition. The other partition columns, which
+    have no value without rows, stay data columns of that file."""
+    rows = df.withColumn("ingest_batch", F.lit(BUILD_BATCH).cast("long"))
+    rows.write.mode("overwrite").partitionBy(
+        *partition_cols, "ingest_batch"
+    ).parquet(table)
+    if not partition_stats(table):
+        rows.drop("ingest_batch").limit(0).coalesce(1).write.parquet(
+            f"{table}/ingest_batch={BUILD_BATCH}"
+        )
 
 
 def read_batches(
@@ -145,6 +153,6 @@ def fold(spark: SparkSession, *tables: str) -> int:
     rows."""
     into = min(set().union(*map(batch_ids, tables)) | {BUILD_BATCH}) - 1
     return sum(
-        len(fold_partitions(spark, t, "ingest_batch", into_value=into))
+        len(fold_partitions(spark, t, into_value=into))
         for t in tables
     )

@@ -366,6 +366,30 @@ def _merge_session_fragments(frags: DataFrame, key: str) -> DataFrame:
     )
 
 
+def _require_listed(events: DataFrame, batch_col: str, batch_ids: list[int]):
+    """Raise `ValueError` when ``events`` holds a non-NULL batch id that
+    ``batch_ids`` does not list. The session and dedup replays fold one
+    round per LISTED batch, so an unlisted batch's rows would otherwise
+    drop out of the result without a word (the tumbling and interval
+    replays instead add observed ids to their spine)."""
+    unlisted = sorted(
+        r[0]
+        for r in events.where(
+            F.col(batch_col).isNotNull()
+            & ~F.col(batch_col).isin([int(b) for b in batch_ids])
+        )
+        .select(batch_col)
+        .distinct()
+        .limit(10)
+        .collect()
+    )
+    if unlisted:
+        raise ValueError(
+            f"{batch_col} holds batch ids {unlisted} that batch_ids "
+            f"{list(batch_ids)} does not list; list every micro-batch"
+        )
+
+
 def session_replay(
     events: DataFrame,
     batch_col: str,
@@ -396,7 +420,8 @@ def session_replay(
       (collapsed to one terminal flush id = max batch + 1); sessions
       it never passes stay open and emit nothing (emitted_batch NULL).
 
-    ``batch_ids`` is the ordered micro-batch sequence — the fold
+    ``batch_ids`` is the ordered micro-batch sequence (a non-NULL
+    batch id it does not list raises ValueError) — the fold
     unrolls one round per batch (the MG-replay idiom), each round's
     state eager-checkpointed so plan depth stays O(1). Scale shape:
     the watermark table is one bounded row per batch; each round is
@@ -407,6 +432,7 @@ def session_replay(
 
     from ..session import eager_checkpoint
 
+    _require_listed(events, batch_col, batch_ids)
     # Anchored on the SUPPLIED batch ids (empty batch → NULL-watermark
     # row, never an empty per-round frame that would wipe open-session
     # state); the terminal flush row likewise carries max(batch_ids)+1
@@ -526,7 +552,9 @@ def dedup_replay(
 
     Returns one row PER INPUT ROW: (key, ts, batch, verdict) with
     verdict ∈ emitted / dup_suppressed / late_dropped — keeps, drops
-    and suppressions are all hash-visible, not just the kept set.
+    and suppressions are all hash-visible, not just the kept set. A row
+    whose batch id is NULL belongs to no micro-batch and gets no row;
+    a non-NULL batch id missing from ``batch_ids`` raises ValueError.
 
     Scale shape: the watermark table is one bounded row per batch
     (broadcast everywhere); each round is one keyed anti/semi probe +
@@ -538,6 +566,7 @@ def dedup_replay(
 
     from ..session import eager_checkpoint
 
+    _require_listed(events, batch_col, batch_ids)
     # Anchor the watermark table on the SUPPLIED batch ids, not just
     # the observed ones: a batch id with zero rows must still yield a
     # (possibly NULL) watermark row, or the per-round

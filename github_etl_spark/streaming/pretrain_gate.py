@@ -73,7 +73,6 @@ def _compose_out(
     gated: DataFrame,
     fp_verdicts: DataFrame,
     span_summary: DataFrame,
-    id_col: str,
 ) -> DataFrame:
     """One row per INPUT batch document — the published schema shared
     by the live gate and the deterministic fold (so the pytest pin
@@ -82,14 +81,14 @@ def _compose_out(
     admitted survivors (NULL for everything else — the span probe
     never ran for them)."""
     return (
-        batch.select(id_col)
+        batch.select("doc_id")
         .join(
-            gated.select(id_col, F.lit(True).alias("__g")), id_col, "left"
+            gated.select("doc_id", F.lit(True).alias("__g")), "doc_id", "left"
         )
-        .join(fp_verdicts, id_col, "left")
-        .join(span_summary, id_col, "left")
+        .join(fp_verdicts, "doc_id", "left")
+        .join(span_summary, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("__g", F.lit(False)).alias("passed_gate"),
             F.coalesce("verdict", F.lit(GATED)).alias("verdict"),
             F.col("n_near").cast("long").alias("n_near"),
@@ -141,14 +140,12 @@ def make_pretrain_gate(
             ))
             new_ids = fp.where(F.col("verdict") == "new").select("doc_id")
             survivors = hold(gated.join(F.broadcast(new_ids), "doc_id"))
-            bstats = c4_kept_lines(survivors, "text", "doc_id")
+            bstats = c4_kept_lines(survivors)
             # summary + span append
-            spans = hold(span_verdict_rows(
-                c4_spans_from(bstats, "doc_id"), span_store, "doc_id"
-            ))
+            spans = hold(span_verdict_rows(c4_spans_from(bstats), span_store))
             out = _compose_out(
                 batch_df, gated, fp,
-                _span_doc_summary(bstats, spans, "doc_id"), "doc_id",
+                _span_doc_summary(bstats, spans),
             )
             publish_batch_partition(out, out_path, batch_id)
             # The store appends derive only from persisted frames and
@@ -228,13 +225,9 @@ def pretrain_fold_verdicts(
         survivors = eager_checkpoint(
             gated.select("doc_id", "text").join(F.broadcast(new_ids), "doc_id")
         )
-        summary = span_incremental_verdicts(
-            corpus, survivors, "text", "doc_id"
-        )
+        summary = span_incremental_verdicts(corpus, survivors)
         outs.append(
-            _compose_out(b, gated, fp, summary, "doc_id").select(
-                F.lit(tag).alias("ingest"), "*"
-            )
+            _compose_out(b, gated, fp, summary).select(F.lit(tag).alias("ingest"), "*")
         )
         corpus = corpus.unionByName(survivors)
     out = outs[0]

@@ -52,14 +52,10 @@ def make_span_gate(spark: SparkSession, store_path: str, out_path: str):
         # older keying constants would mis-classify every span and
         # durably PUBLISH the wrong summary.
         store = span_index_store(spark, store_path, int(batch_id))
-        bstats = c4_kept_lines(batch_df, "text", "doc_id")
-        rows = span_verdict_rows(
-            c4_spans_from(bstats, "doc_id"), store, "doc_id"
-        )
+        bstats = c4_kept_lines(batch_df)
+        rows = span_verdict_rows(c4_spans_from(bstats), store)
         with persisted(rows):
-            publish_batch_partition(
-                _span_doc_summary(bstats, rows, "doc_id"), out_path, batch_id
-            )
+            publish_batch_partition(_span_doc_summary(bstats, rows), out_path, batch_id)
             span_index_append(
                 spark,
                 store_path,

@@ -70,8 +70,23 @@ def _running_totals_fn(evict_ms: int | None):
     return update
 
 
-# Back-compat alias for the r12/r13 name (same update rule, eviction on).
-_update_running_totals = _running_totals_fn(IDLE_EVICT_MS)
+def _apply_with_state(
+    grouped, update, output_schema: str, state_schema: str,
+    idle_evict_ms: int | None,
+) -> DataFrame:
+    """``grouped.applyInPandasWithState(update)`` in append mode, with
+    the processing-time timeout that idle eviction needs when
+    ``idle_evict_ms`` is set and no timeout otherwise (why: the note
+    at IDLE_EVICT_MS)."""
+    return grouped.applyInPandasWithState(
+        update,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout
+        if idle_evict_ms is None
+        else GroupStateTimeout.ProcessingTimeTimeout,
+    )
 
 
 def running_totals(
@@ -90,15 +105,9 @@ def running_totals(
     IDLE_EVICT_MS above. Emitted rows are identical either way until
     an eviction actually fires.
     """
-    evict = idle_evict_ms is not None
-    return events.groupBy("user_id").applyInPandasWithState(
-        _running_totals_fn(idle_evict_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-        if evict
-        else GroupStateTimeout.NoTimeout,
+    return _apply_with_state(
+        events.groupBy("user_id"), _running_totals_fn(idle_evict_ms),
+        OUTPUT_SCHEMA, STATE_SCHEMA, idle_evict_ms,
     )
 
 
@@ -187,15 +196,9 @@ def streaming_heavy_hitters(
         F.pmod(F.xxhash64(F.col(col)), F.lit(shards)).cast("int").alias("shard"),
         F.col(col).cast("string").alias("tok"),
     )
-    evict = idle_evict_ms is not None
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _mg_update_fn(counters, idle_evict_ms),
-        outputStructType=MG_OUTPUT_SCHEMA,
-        stateStructType=MG_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-        if evict
-        else GroupStateTimeout.NoTimeout,
+    return _apply_with_state(
+        keyed.groupBy("shard"), _mg_update_fn(counters, idle_evict_ms),
+        MG_OUTPUT_SCHEMA, MG_STATE_SCHEMA, idle_evict_ms,
     )
 
 
@@ -255,16 +258,16 @@ def _bk_update_fn(k: int, evict_ms: int | None = IDLE_EVICT_MS):
 
 def streaming_bottomk_sample(
     rows: DataFrame,
-    value_col: str,
     id_col: str,
     k: int = 128,
     shards: int = 8,
     idle_evict_ms: int | None = None,
 ) -> DataFrame:
-    """Quantile-sketch maintenance over an unbounded stream: rows hash
-    onto ``shards`` independent bottom-k states (state = k (hash, id,
-    value) triples per shard, independent of stream length), and every
-    micro-batch emits each updated shard's current sample.
+    """Quantile-sketch maintenance over an unbounded stream: rows
+    (``id_col``, ``value``) hash onto ``shards`` independent bottom-k
+    states (state = k (hash, id, value) triples per shard, independent
+    of stream length), and every micro-batch emits each updated shard's
+    current sample.
 
     The union of shard samples is a SUPERSET of the global bottom-k —
     fold emitted fragments with ``operators/sketches.bottomk_merge``
@@ -293,15 +296,9 @@ def streaming_bottomk_sample(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards)).cast("int").alias("shard"),
         F.xxhash64(F.col(id_col)).alias("hkey"),
         F.col(id_col).cast("long").alias("rid"),
-        F.col(value_col).cast("double").alias("value"),
+        F.col("value").cast("double").alias("value"),
     )
-    evict = idle_evict_ms is not None
-    return keyed.groupBy("shard").applyInPandasWithState(
-        _bk_update_fn(k, idle_evict_ms),
-        outputStructType=BK_OUTPUT_SCHEMA,
-        stateStructType=BK_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
-        if evict
-        else GroupStateTimeout.NoTimeout,
+    return _apply_with_state(
+        keyed.groupBy("shard"), _bk_update_fn(k, idle_evict_ms),
+        BK_OUTPUT_SCHEMA, BK_STATE_SCHEMA, idle_evict_ms,
     )

@@ -9,9 +9,10 @@ filtered by the combined C4-page + Gopher gate
 (operators/curation.web_gate_expr), survivors are encoded by the
 frozen integer linear encoder (multimodal/media.embed_text_vec — the
 verified documents→embeddings derivation), and the derived vectors are
-appended to the materialized IVF index with
-operators/similarity.ivf_index_append — the stale-centroid regime
-whose recall price `sim_ivf_append_recall` pins.
+appended to the materialized IVF index with the two halves of
+operators/similarity.ivf_index_append (`ivf_index_assign`, then
+`ivf_index_publish`) — the stale-centroid regime whose recall price
+`sim_ivf_append_recall` pins.
 
 Runs on `streaming.pipeline.stream_files`, whose docstring holds the
 exactly-once argument. What differs here: per-batch verdicts depend on
@@ -37,9 +38,8 @@ from ..multimodal.media import embed_text_vec
 from ..operators.curation import web_gate_expr
 from ..operators.similarity import (
     _int_cell_rank_expr,
-    ivf_assign,
-    ivf_index_append,
-    ivf_index_centroids,
+    ivf_index_assign,
+    ivf_index_publish,
 )
 from ..session import eager_checkpoint, persisted
 from ..sinks.snapshot import publish_batch_partition
@@ -57,22 +57,20 @@ def make_vector_gate(spark: SparkSession, index_path: str, out_path: str):
     index's batch-N partitions. Calling it twice with the same batch
     id must be a no-op the second time (asserted in tests).
 
-    The sidecar is read BEFORE any publish (the span-gate lesson: a
-    missing/partial index must fail loudly before durable writes, not
-    after the summary is already visible)."""
+    The sidecar is read once per batch, BEFORE any publish (the
+    span-gate lesson: a missing/partial index must fail loudly before
+    durable writes, not after the summary is already visible), and the
+    vectors are assigned once: the summary and the append read the same
+    assigned rows."""
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
-        centroids, _build = ivf_index_centroids(spark, index_path)
         keep = batch_df.where(web_gate_expr(F.col("text")))
         n = F.count(F.lit(1)).cast("long")
-        # Two consumers (summary + index append) of the encoder
-        # output; batch-sized.
-        with persisted(embed_text_vec(keep, "text", "doc_id")) as vecs:
-            cells = (
-                ivf_assign(vecs, centroids, "doc_id", "vec")
-                .groupBy("cell")
-                .agg(n.alias("n_docs"))
-            )
+        # Each is read twice (summary + index append); batch-sized.
+        with persisted(embed_text_vec(keep)) as vecs, persisted(
+            ivf_index_assign(spark, index_path, vecs, "doc_id", "vec")
+        ) as assigned:
+            cells = assigned.groupBy("cell").agg(n.alias("n_docs"))
             # Rejected = batch rows the encoder never saw, counted
             # inside the summary write rather than by two side actions.
             rejected = batch_df.agg(n.alias("n_in")).crossJoin(
@@ -84,14 +82,7 @@ def make_vector_gate(spark: SparkSession, index_path: str, out_path: str):
             publish_batch_partition(
                 cells.unionByName(rejected), out_path, batch_id
             )
-            ivf_index_append(
-                spark,
-                index_path,
-                vecs,
-                ingest_batch=int(batch_id),
-                id_col="doc_id",
-                vec_col="vec",
-            )
+            ivf_index_publish(assigned, index_path, int(batch_id))
 
     return _gate
 

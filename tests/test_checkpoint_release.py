@@ -42,8 +42,8 @@ def _vectors(spark):
 @pytest.mark.parametrize(
     "run, reads",
     [
-        (lambda spark: bpe_learn_merges(_docs(spark), "text", n_merges=8).collect(), 0),
-        (lambda spark: wordpiece_learn(_docs(spark), "text", n_merges=8).collect(), 0),
+        (lambda spark: bpe_learn_merges(_docs(spark), n_merges=8).collect(), 0),
+        (lambda spark: wordpiece_learn(_docs(spark), n_merges=8).collect(), 0),
         (
             lambda spark: connected_components(_edges(spark), local_finish_edges=0).collect(),
             1,  # the final round's edge set

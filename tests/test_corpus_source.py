@@ -78,7 +78,7 @@ def test_corpus_to_training_pipeline_end_to_end(spark, tmp_path):
     docs, bad = read_jsonl_corpus(spark, str(tmp_path), SCHEMA)
     assert bad.count() == 2
 
-    keepers = exact_dedup(docs, ["text"], "doc_id")
+    keepers = exact_dedup(docs, ["text"])
     assert keepers.count() == 31  # 30 uniques + 1 keeper of the 5 dups
     # deterministic keeper: smallest doc_id of the duplicate group
     grp = keepers.where(F.col("text") == "duplicated body").head()

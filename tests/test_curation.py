@@ -70,7 +70,7 @@ def test_c4_keep_doc_threshold_and_line_rules(spark):
     long = " ".join(f"w{i}" for i in range(60))
     out = {
         r.doc_id: r
-        for r in c4_clean(_docs(spark, [short, long]), "text", "doc_id").collect()
+        for r in c4_clean(_docs(spark, [short, long])).collect()
     }
     assert out[0].n_lines == 1 and out[0].n_kept == 1
     assert not out[0].keep_doc and out[0].n_spans == 0
@@ -84,9 +84,7 @@ def test_c4_span_dedup_keeps_first_occurrence(spark):
     text = " ".join(f"w{i}" for i in range(60))
     out = {
         r.doc_id: r
-        for r in c4_clean(
-            _docs(spark, [text, text, "w0 w1"]), "text", "doc_id"
-        ).collect()
+        for r in c4_clean(_docs(spark, [text, text, "w0 w1"])).collect()
     }
     # Identical docs: the min doc_id owns every span; the copy's spans
     # are all duplicates; the unrelated doc contributes nothing.
@@ -106,8 +104,6 @@ def test_gopher_rules_fire_individually(spark):
         r.doc_id: r
         for r in gopher_gate(
             _docs(spark, [ok, too_short, long_words, no_stops]),
-            "text",
-            "doc_id",
         ).collect()
     }
     assert out[0].keep  # 50 words, short words, 2 distinct stopwords
@@ -125,7 +121,7 @@ def test_ccnet_bucket_ordering(spark):
         [(i, t, "en") for i, t in enumerate(texts)],
         "doc_id long, text string, lang string",
     )
-    rows = ccnet_buckets(df, "text", "doc_id", "lang").collect()
+    rows = ccnet_buckets(df).collect()
     by_lp = sorted(rows, key=lambda r: r.avg_logprob)
     assert [r.bucket for r in by_lp] == ["tail"] * 3 + ["middle"] * 3 + ["head"] * 3
     # monotone: every head logprob > every middle > every tail
@@ -155,9 +151,7 @@ def test_span_incremental_verdict_paths(spark):
     )
     out = {
         r.doc_id: r
-        for r in span_incremental_verdicts(
-            corpus, batch, "text", "doc_id"
-        ).collect()
+        for r in span_incremental_verdicts(corpus, batch).collect()
     }
     assert out[10].n_dup_corpus == out[10].n_kept - 2  # all spans known
     assert out[10].n_new == 0 and out[10].n_dup_batch == 0

@@ -58,7 +58,7 @@ def _true_jaccard(spark, df, a, b, shingle=3):
 
 def test_minhash_estimates_track_true_jaccard(spark):
     df = _docs(spark)
-    sigs = {r.doc_id: r.signature for r in minhash_signatures(df, "text", "doc_id", 64).collect()}
+    sigs = {r.doc_id: r.signature for r in minhash_signatures(df, 64).collect()}
     for a, b in [(0, 1), (0, 2), (3, 4), (0, 3)]:
         est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / 64.0
         true = _true_jaccard(spark, df, a, b)
@@ -68,7 +68,7 @@ def test_minhash_estimates_track_true_jaccard(spark):
 
 def test_minhash_identical_docs_identical_signatures(spark):
     df = _docs(spark)
-    sigs = {r.doc_id: r.signature for r in minhash_signatures(df, "text", "doc_id").collect()}
+    sigs = {r.doc_id: r.signature for r in minhash_signatures(df).collect()}
     assert sigs[3] == sigs[4]
 
 
@@ -77,13 +77,13 @@ def test_lsh_recall_of_exact_near_dups(spark):
     exact = {
         (r.id_a, r.id_b)
         for r in ngram_jaccard_pairs(
-            df.withColumn("blk", F.lit(1)), "text", "doc_id", ["blk"], threshold=0.6
+            df.withColumn("blk", F.lit(1)), ["blk"], threshold=0.6
         ).collect()
     }
     assert exact  # the families above must yield exact near-dup pairs
     cands = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_candidates(df, "text", "doc_id", 32, 8).collect()
+        for r in minhash_lsh_candidates(df, 32, 8).collect()
     }
     # Banded LSH (8 bands × 4 rows) catches every pair with j ≥ 0.6
     # on this corpus; collision prob at j=0.6 is 1-(1-0.6^4)^8 ≈ 0.70
@@ -94,14 +94,14 @@ def test_lsh_recall_of_exact_near_dups(spark):
 
 def test_lsh_no_candidates_across_unrelated_docs(spark):
     df = _docs(spark)
-    cands = minhash_lsh_candidates(df, "text", "doc_id", 32, 8)
+    cands = minhash_lsh_candidates(df, 32, 8)
     filler_pairs = cands.filter((F.col("id_a") >= 5) & (F.col("id_b") >= 5)).count()
     assert filler_pairs == 0  # no shared shingles → no shared buckets
 
 
 def test_simhash_orders_by_similarity(spark):
     df = _docs(spark)
-    sh = simhash_signatures(df, "text", "doc_id")
+    sh = simhash_signatures(df)
     sigs = {r.doc_id: r.simhash for r in sh.collect()}
     pairs = spark.createDataFrame(
         [(sigs[3], sigs[4]), (sigs[0], sigs[1]), (sigs[0], sigs[10])],
@@ -115,7 +115,7 @@ def test_simhash_orders_by_similarity(spark):
 @pytest.mark.parametrize("num_hashes,bands", [(32, 8), (64, 16)])
 def test_lsh_candidate_pairs_are_ordered_and_unique(spark, num_hashes, bands):
     df = _docs(spark)
-    rows = minhash_lsh_candidates(df, "text", "doc_id", num_hashes, bands).collect()
+    rows = minhash_lsh_candidates(df, num_hashes, bands).collect()
     seen = set()
     for r in rows:
         assert r.id_a < r.id_b
@@ -150,7 +150,7 @@ def test_lsh_bucket_cap_bounds_pair_explosion(spark):
     df = spark.createDataFrame(
         [(i, boiler) for i in range(120)], "doc_id long, text string"
     )
-    pairs = minhash_lsh_candidates(df, "text", "doc_id", 32, 8, max_bucket_size=16)
+    pairs = minhash_lsh_candidates(df, 32, 8, max_bucket_size=16)
     rows = pairs.collect()
     assert len(rows) == 16 * 15 // 2  # C(16,2), not C(120,2)=7140
     assert max(max(r.id_a, r.id_b) for r in rows) == 15  # first-N by doc id
@@ -163,11 +163,11 @@ def test_lsh_cap_does_not_change_small_buckets(spark):
     df = _docs(spark)
     capped = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_candidates(df, "text", "doc_id", 32, 8, max_bucket_size=64).collect()
+        for r in minhash_lsh_candidates(df, 32, 8, max_bucket_size=64).collect()
     }
     huge_cap = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_candidates(df, "text", "doc_id", 32, 8, max_bucket_size=10**6).collect()
+        for r in minhash_lsh_candidates(df, 32, 8, max_bucket_size=10**6).collect()
     }
     assert capped == huge_cap
 
@@ -178,7 +178,7 @@ def test_jaccard_hot_shingle_cap_drops_boilerplate_pairs(spark):
     distinctive docs still pair at jaccard 1.0."""
     df = _boilerplate_corpus(spark).withColumn("blk", F.lit(1))
     pairs = ngram_jaccard_pairs(
-        df, "text", "doc_id", ["blk"], threshold=0.5, shingle=3, max_df=5
+        df, ["blk"], threshold=0.5, shingle=3, max_df=5
     ).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(1000, 1001)}
     assert pairs[0].jaccard == 1.0
@@ -189,9 +189,7 @@ def test_jaccard_uncapped_boilerplate_pairs_exist(spark):
     DO pair (their shared prefix dominates the short unique tails) —
     i.e. the cap is what removed them, not the fixture."""
     df = _boilerplate_corpus(spark, n_boiler=12).withColumn("blk", F.lit(1))
-    pairs = ngram_jaccard_pairs(
-        df, "text", "doc_id", ["blk"], threshold=0.5, shingle=3, max_df=None
-    )
+    pairs = ngram_jaccard_pairs(df, ["blk"], threshold=0.5, shingle=3, max_df=None)
     boiler_pairs = pairs.filter((F.col("id_a") < 1000) & (F.col("id_b") < 1000)).count()
     assert boiler_pairs > 0
 
@@ -467,13 +465,11 @@ def test_jaccard_tokens_staging_table(spark, tmp_path):
     ].withColumn("blk", F.lit(1))
     plain = {
         (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(
-            docs, "text", "doc_id", ["blk"], threshold=0.5, max_df=100
-        ).collect()
+        for r in ngram_jaccard_pairs(docs, ["blk"], threshold=0.5, max_df=100).collect()
     }
     staged_path = str(tmp_path / "tokens_staging")
     staged_df = ngram_jaccard_pairs(
-        docs, "text", "doc_id", ["blk"], threshold=0.5, max_df=100,
+        docs, ["blk"], threshold=0.5, max_df=100,
         tokens_path=staged_path,
     )
     staged = {(r.id_a, r.id_b, r.jaccard) for r in staged_df.collect()}

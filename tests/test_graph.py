@@ -110,7 +110,7 @@ def test_cluster_assignment_covers_all_docs(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 5), (6, 7)], "id_a long, id_b long"
     )
-    out = cluster_assignment(docs, pairs, "doc_id")
+    out = cluster_assignment(docs, pairs)
     rows = {r["doc_id"]: (r["component_id"], r["is_canonical"]) for r in out.collect()}
     assert rows == {
         1: (1, True),
@@ -128,7 +128,7 @@ def test_cluster_assignment_covers_all_docs(spark):
 def test_cluster_assignment_no_broadcast_path(spark):
     docs = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
     pairs = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
-    out = cluster_assignment(docs, pairs, "doc_id", broadcast_components=False)
+    out = cluster_assignment(docs, pairs, broadcast_components=False)
     rows = {r["doc_id"]: r["component_id"] for r in out.collect()}
     assert rows == {1: 1, 2: 2, 3: 1, 4: 4}
 

@@ -277,8 +277,7 @@ def test_gate_appends_equal_the_from_text_derivation(spark, tmp_path):
     bands = appended("bands")
     assert bands == rows(
         minhash_band_buckets(
-            survivors, "text", "doc_id",
-            meta["num_hashes"], meta["bands"], meta["shingle"],
+            survivors, meta["num_hashes"], meta["bands"], meta["shingle"],
             meta["hash_family"],
         )
     )

@@ -1,19 +1,23 @@
-"""Every defaulted parameter of the library is set by some caller.
+"""Every parameter of the library is a choice some caller makes.
 
 A parameter with a default that no call in the tree ever passes is a
 configuration that no test or benchmark covers: the branch it selects
-is dead weight. This lint walks the AST (no Spark), collects every
-defaulted parameter of every function under ``github_etl_spark/``
-(outside ``plans/``, whose oracle queries are reference code), and
-every call under the library, ``perfbench/``, ``tools/``, ``tests/``,
-``bench.py`` and ``__spark_entry__.py``. A parameter counts as set when
-a call to a function of that name passes it by keyword, by position
-(methods offset by ``self``/``cls``), or through ``*args``/``**kwargs``.
-Names defined more than once are skipped: a call cannot be tied to one
-definition by name alone.
+is dead weight. A required column-name parameter (``*_col``) that every
+call fills with the same string literal is the same waste the other way
+round: the operator serves one schema, and each call site restates it.
+This lint walks the AST (no Spark), collects the parameters of every
+function under ``github_etl_spark/`` (outside ``plans/``, whose oracle
+queries are reference code), and every call under the library,
+``perfbench/``, ``tools/``, ``tests/``, ``bench.py`` and
+``__spark_entry__.py``. A call passes a parameter by keyword or by
+position (methods offset by ``self``/``cls``); a call through an import
+alias (``from m import f as g``) is a call to ``f``. Names defined more than
+once, and names some call reaches through ``*args``/``**kwargs``, are
+skipped: a call cannot be tied to one definition by name alone, nor a
+splatted argument to one parameter.
 
 Run ``python tests/test_options_in_use.py`` to print the counts and
-the offenders.
+the offenders of both scans.
 """
 
 from __future__ import annotations
@@ -93,6 +97,20 @@ def _defaulted(fn: ast.FunctionDef, method: bool):
     return out
 
 
+def _required_cols(fn: ast.FunctionDef, method: bool):
+    """(param, positional index or None) for each parameter without a
+    default whose name ends in ``_col``."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    skip = 1 if method and pos and pos[0].arg in ("self", "cls") else 0
+    out = [
+        (arg.arg, i - skip)
+        for i, arg in enumerate(pos[: len(pos) - len(a.defaults)])
+    ]
+    out += [(arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is None]
+    return [(p, i) for p, i in out if p.endswith("_col")]
+
+
 def _callee(call: ast.Call):
     f = call.func
     if isinstance(f, ast.Name):
@@ -102,50 +120,110 @@ def _callee(call: ast.Call):
     return None
 
 
-def scan():
-    """(defaulted parameter count, offenders): offenders are
-    ``(path:line, function, parameter)`` for each defaulted parameter
-    that no call passes and that is not allowlisted."""
+def _library_defs():
+    """function name -> [(path, def node, is_method)], outside plans/."""
     defs = defaultdict(list)
     for path in _py_files(LIB):
         if "plans" in path.relative_to(LIB).parts:
             continue
         for name, fn, method in _defs(_parse(path)):
             defs[name].append((path, fn, method))
+    return defs
 
-    kws = defaultdict(set)       # callee -> keyword names passed
-    npos = defaultdict(int)      # callee -> most positional args passed
-    splat = set()                # callee -> called with *args or **kwargs
+
+def _calls():
+    """(callee name -> [call nodes], callee names some call splats)."""
+    calls = defaultdict(list)
+    splat = set()
     for root in CALLER_PATHS:
         for path in _py_files(root):
-            for node in ast.walk(_parse(path)):
+            tree = _parse(path)
+            aliases = {
+                a.asname: a.name
+                for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom)
+                for a in node.names
+                if a.asname
+            }
+            for node in ast.walk(tree):
                 if not isinstance(node, ast.Call):
                     continue
                 name = _callee(node)
                 if name is None:
                     continue
-                for k in node.keywords:
-                    if k.arg is None:
-                        splat.add(name)
-                    else:
-                        kws[name].add(k.arg)
-                if any(isinstance(a, ast.Starred) for a in node.args):
+                name = aliases.get(name, name)
+                calls[name].append(node)
+                if any(k.arg is None for k in node.keywords) or any(
+                    isinstance(a, ast.Starred) for a in node.args
+                ):
                     splat.add(name)
-                npos[name] = max(npos[name], len(node.args))
+    return calls, splat
 
-    total, offenders = 0, []
+
+def _passed(call: ast.Call, param: str, idx):
+    """The argument node ``call`` passes for ``param``, or None."""
+    for k in call.keywords:
+        if k.arg == param:
+            return k.value
+    if idx is not None and idx < len(call.args):
+        return call.args[idx]
+    return None
+
+
+def _single_defs(defs, splat):
+    """(name, path, def node, is_method) for each name defined once and
+    never called through ``*args``/``**kwargs``."""
     for name, sites in defs.items():
-        for path, fn, method in sites:
-            total += len(_defaulted(fn, method))
-        if len(sites) > 1 or name in splat:
-            continue
-        path, fn, method = sites[0]
+        if len(sites) == 1 and name not in splat:
+            yield (name, *sites[0])
+
+
+def scan():
+    """(defaulted parameter count, offenders): offenders are
+    ``(path:line, function, parameter)`` for each defaulted parameter
+    that no call passes and that is not allowlisted."""
+    defs = _library_defs()
+    calls, splat = _calls()
+    total = sum(
+        len(_defaulted(fn, method))
+        for sites in defs.values()
+        for _, fn, method in sites
+    )
+    offenders = []
+    for name, path, fn, method in _single_defs(defs, splat):
         for param, idx in _defaulted(fn, method):
-            if param in kws[name] or (idx is not None and idx < npos[name]):
+            if any(_passed(c, param, idx) is not None for c in calls[name]):
                 continue
             if (name, param) in ALLOWED:
                 continue
             offenders.append((f"{path.relative_to(ROOT)}:{fn.lineno}", name, param))
+    return total, sorted(offenders)
+
+
+def scan_required_cols():
+    """(required ``*_col`` parameter count, offenders): offenders are
+    ``(path:line, function, parameter, literal)`` for each required
+    column-name parameter that some call passes and every call passes
+    as the same string literal."""
+    defs = _library_defs()
+    calls, splat = _calls()
+    total = sum(
+        len(_required_cols(fn, method))
+        for sites in defs.values()
+        for _, fn, method in sites
+    )
+    offenders = []
+    for name, path, fn, method in _single_defs(defs, splat):
+        for param, idx in _required_cols(fn, method):
+            values = {
+                v.value if isinstance(v, ast.Constant) and isinstance(v.value, str)
+                else None
+                for v in (_passed(c, param, idx) for c in calls[name])
+            }
+            if len(values) == 1 and None not in values:
+                offenders.append(
+                    (f"{path.relative_to(ROOT)}:{fn.lineno}", name, param, values.pop())
+                )
     return total, sorted(offenders)
 
 
@@ -165,8 +243,23 @@ def test_every_defaulted_parameter_is_passed_by_some_call():
     )
 
 
+def test_no_column_name_parameter_is_the_same_literal_at_every_call():
+    _, offenders = scan_required_cols()
+    assert not offenders, (
+        "required column-name parameters every call fills with one literal:\n"
+        + "\n".join(f"  {where} {fn}({param}={lit!r})" for where, fn, param, lit in offenders)
+    )
+
+
 if __name__ == "__main__":
     total, offenders = scan()
     for where, fn, param in offenders:
         print(f"{where} {fn}({param})")
     print(f"defaulted parameters: {total}; passed by no call: {len(offenders)}")
+    total, offenders = scan_required_cols()
+    for where, fn, param, lit in offenders:
+        print(f"{where} {fn}({param}={lit!r})")
+    print(
+        f"required *_col parameters: {total}; "
+        f"the same literal at every call: {len(offenders)}"
+    )

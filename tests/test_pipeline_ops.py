@@ -73,7 +73,7 @@ def test_repetition_metrics_hand_computed(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {r.doc_id: r for r in repetition_metrics(df, "text", "doc_id").collect()}
+    rows = {r.doc_id: r for r in repetition_metrics(df).collect()}
     assert set(rows) == {1, 2}
     assert rows[1].n_grams == 4
     assert rows[1].top_gram_frac == 0.5
@@ -84,7 +84,7 @@ def test_repetition_metrics_hand_computed(spark):
 
 
 def test_repetition_bounds_on_fixture(spark):
-    m = repetition_metrics(_docs(spark), "text", "doc_id")
+    m = repetition_metrics(_docs(spark))
     bad = m.filter(
         (F.col("top_gram_frac") > 1)
         | (F.col("top_gram_frac") <= 0)
@@ -110,7 +110,7 @@ def test_stratified_sample_exact_counts(spark):
     }
     got = {
         r["lang"]: r["count"]
-        for r in stratified_sample(docs, ["lang"], frac, "doc_id")
+        for r in stratified_sample(docs, ["lang"], frac)
         .groupBy("lang")
         .count()
         .collect()
@@ -120,8 +120,8 @@ def test_stratified_sample_exact_counts(spark):
 
 def test_stratified_sample_stable_under_repartition(spark):
     docs = _docs(spark)
-    a = stratified_sample(docs, ["lang"], 0.2, "doc_id").select("doc_id")
-    b = stratified_sample(docs.repartition(13), ["lang"], 0.2, "doc_id").select("doc_id")
+    a = stratified_sample(docs, ["lang"], 0.2).select("doc_id")
+    b = stratified_sample(docs.repartition(13), ["lang"], 0.2).select("doc_id")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -165,7 +165,7 @@ def test_contamination_flags_known_overlap(spark):
     )
     got = {
         r.doc_id: (r.n_grams, r.n_hit, r.contaminated)
-        for r in contamination_overlap(train, bench, "text", "doc_id", n=3).collect()
+        for r in contamination_overlap(train, bench, n=3).collect()
     }
     assert got == {1: (4, 1, False), 2: (3, 2, True), 3: (2, 0, False)}
 
@@ -176,7 +176,7 @@ def test_contamination_distinct_grams_counted_once(spark):
 
     bench = spark.createDataFrame([(9, "a b c")], ["doc_id", "text"])
     train = spark.createDataFrame([(1, "a b c a b c a b c")], ["doc_id", "text"])
-    [r] = contamination_overlap(train, bench, "text", "doc_id", n=3).collect()
+    [r] = contamination_overlap(train, bench, n=3).collect()
     # distinct grams: abc bca cab → only abc in bench
     assert (r.n_grams, r.n_hit) == (3, 1)
 
@@ -189,7 +189,7 @@ def test_mixture_sample_rates_and_determinism(spark):
 
     docs = _docs(spark)
     rates = {"src0": 1.0, "src1": 0.0}
-    out = mixture_sample(docs, "source", "doc_id", rates, default_rate=0.5)
+    out = mixture_sample(docs, rates, default_rate=0.5)
     per_src = dict(
         out.groupBy("source").count().rdd.map(lambda r: (r["source"], r["count"])).collect()
     )
@@ -202,9 +202,7 @@ def test_mixture_sample_rates_and_determinism(spark):
     total_default = sum(v for k, v in totals.items() if k not in rates)
     assert 0.3 < kept_default / total_default < 0.7  # ~0.5 at n≈450
     # Repartition-stable (deterministic hash, not Bernoulli)
-    again = mixture_sample(
-        docs.repartition(13), "source", "doc_id", rates, default_rate=0.5
-    )
+    again = mixture_sample(docs.repartition(13), rates, default_rate=0.5)
     assert out.exceptAll(again).count() == 0 and again.exceptAll(out).count() == 0
 
 
@@ -224,7 +222,7 @@ def test_chunk_tokens_edges(spark):
     )
     rows = {
         (r.doc_id, r.chunk_id): (r.n_chunk_tokens, r.chunk_text)
-        for r in chunk_tokens(df, "text", "doc_id", window=4, stride=2).collect()
+        for r in chunk_tokens(df, window=4, stride=2).collect()
     }
     assert rows == {
         (1, 0): (4, "t0 t1 t2 t3"),
@@ -240,7 +238,7 @@ def test_chunk_tokens_covers_every_token(spark):
     from github_etl_spark.operators.pipeline import chunk_tokens
 
     docs = _docs(spark)
-    out = chunk_tokens(docs, "text", "doc_id", window=32, stride=24)
+    out = chunk_tokens(docs, window=32, stride=24)
     agg = (
         out.groupBy("doc_id")
         .agg(
@@ -271,7 +269,7 @@ def test_pack_greedy_invariants(spark):
     docs = _docs(spark).select(
         "doc_id", F.size(F.split("text", r"\s+")).alias("n_tokens")
     )
-    packed = pack_greedy(docs, "doc_id", "n_tokens", capacity=256, n_shards=8)
+    packed = pack_greedy(docs, capacity=256, n_shards=8)
     packed.cache()
     n = docs.count()
     # Every doc exactly once
@@ -290,9 +288,7 @@ def test_pack_greedy_invariants(spark):
     alone = packed.join(of_packs, "pack_id").groupBy("pack_id").count()
     assert alone.filter(F.col("count") > 1).count() == 0
     # Deterministic under repartitioning
-    again = pack_greedy(
-        docs.repartition(17), "doc_id", "n_tokens", capacity=256, n_shards=8
-    )
+    again = pack_greedy(docs.repartition(17), capacity=256, n_shards=8)
     assert packed.exceptAll(again).count() == 0
     # Packing actually packs: fewer packs than docs, decent mean fill
     stats = (
@@ -313,7 +309,7 @@ def test_pack_greedy_oversize_flagged(spark):
     df = spark.createDataFrame(
         [(1, 300), (2, 100), (3, 100)], ["doc_id", "n_tokens"]
     )
-    rows = {r.doc_id: r for r in pack_greedy(df, "doc_id", "n_tokens", 256, 1).collect()}
+    rows = {r.doc_id: r for r in pack_greedy(df, 256, 1).collect()}
     assert rows[1].overflow and not rows[2].overflow
     assert rows[2].pack_id == rows[3].pack_id != rows[1].pack_id
 
@@ -323,7 +319,7 @@ def test_pack_greedy_all_docs_at_capacity(spark):
     from github_etl_spark.operators.pipeline import pack_greedy
 
     df = spark.createDataFrame([(i, 256) for i in range(40)], ["doc_id", "n_tokens"])
-    rows = pack_greedy(df, "doc_id", "n_tokens", capacity=256, n_shards=4).collect()
+    rows = pack_greedy(df, capacity=256, n_shards=4).collect()
     assert len(rows) == 40
     assert not any(r.overflow for r in rows)
     assert len({r.pack_id for r in rows}) == 40  # no two fit together
@@ -337,7 +333,7 @@ def test_pack_greedy_capacity_one(spark):
     df = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 0), (4, 0), (5, 2)], ["doc_id", "n_tokens"]
     )
-    rows = {r.doc_id: r for r in pack_greedy(df, "doc_id", "n_tokens", 1, 1).collect()}
+    rows = {r.doc_id: r for r in pack_greedy(df, 1, 1).collect()}
     assert rows[5].overflow and not rows[1].overflow
     assert rows[1].pack_id != rows[2].pack_id  # 1+1 > capacity
     # zero-size docs first-fit into the first bin with rem >= 0
@@ -351,7 +347,7 @@ def test_pack_greedy_singleton_shards(spark):
     from github_etl_spark.operators.pipeline import pack_greedy
 
     df = spark.createDataFrame([(i, 10) for i in range(5)], ["doc_id", "n_tokens"])
-    rows = pack_greedy(df, "doc_id", "n_tokens", capacity=256, n_shards=1000).collect()
+    rows = pack_greedy(df, capacity=256, n_shards=1000).collect()
     assert len(rows) == 5
     assert len({r.doc_id for r in rows}) == 5
     for r in rows:
@@ -373,11 +369,11 @@ def test_leakage_safe_split_keeps_neardups_together(spark):
         "documents"
     ]
     pairs = ngram_jaccard_pairs(
-        docs, "text", "doc_id", block_cols=["lang"], threshold=0.5,
+        docs, block_cols=["lang"], threshold=0.5,
         shingle=3, max_df=100,
     ).select("id_a", "id_b")
     assert pairs.count() > 0, "fixture must contain near-dups"
-    labeled = cluster_assignment(docs.select("doc_id"), pairs, "doc_id")
+    labeled = cluster_assignment(docs.select("doc_id"), pairs)
     safe = hash_split(labeled, "component_id").select("doc_id", "split")
 
     def straddlers(split_df):
@@ -459,7 +455,7 @@ def test_vocab_induce_rank_and_min_df(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {r.tok: r for r in vocab_induce(df, "text", "doc_id", k=10, min_df=2).collect()}
+    rows = {r.tok: r for r in vocab_induce(df, k=10, min_df=2).collect()}
     # cherry (df=1) and date (df=1) fall below min_df
     assert set(rows) == {"apple", "banana"}
     assert rows["apple"].term_count == 4 and rows["apple"].doc_count == 3
@@ -474,7 +470,7 @@ def test_vocab_induce_tie_break_lexicographic(spark):
     df = spark.createDataFrame(
         [(1, "zeta alpha"), (2, "zeta alpha")], ["doc_id", "text"]
     )
-    rows = {r.tok: r.vocab_id for r in vocab_induce(df, "text", "doc_id").collect()}
+    rows = {r.tok: r.vocab_id for r in vocab_induce(df).collect()}
     assert rows == {"alpha": 1, "zeta": 2}  # equal counts → lexicographic
 
 
@@ -484,9 +480,9 @@ def test_tokenize_encode_roundtrip(spark):
     docs = _docs(spark)
     vocab = {
         r.vocab_id: r.tok
-        for r in vocab_induce(docs, "text", "doc_id", k=200, min_df=2).collect()
+        for r in vocab_induce(docs, k=200, min_df=2).collect()
     }
-    enc = {r.doc_id: r for r in tokenize_encode(docs, "text", "doc_id").collect()}
+    enc = {r.doc_id: r for r in tokenize_encode(docs).collect()}
     sample = docs.limit(20).collect()
     assert sample
     for d in sample:
@@ -517,7 +513,7 @@ def test_tokenize_encode_stats_equivalence(spark):
     )
 
     docs = _docs(spark)
-    full = tokenize_encode(docs, "text", "doc_id", k=200, min_df=2).select(
+    full = tokenize_encode(docs, k=200, min_df=2).select(
         "doc_id",
         "n_tokens",
         F.expr(
@@ -525,7 +521,7 @@ def test_tokenize_encode_stats_equivalence(spark):
             " (a, x) -> a + x) AS BIGINT)"
         ).alias("sum_tid"),
     )
-    fast = tokenize_encode_stats(docs, "text", "doc_id", k=200, min_df=2)
+    fast = tokenize_encode_stats(docs, k=200, min_df=2)
     assert full.exceptAll(fast).count() == 0
     assert fast.exceptAll(full).count() == 0
     assert fast.count() > 0
@@ -535,8 +531,8 @@ def test_tokenize_encode_partitioning_invariant(spark):
     from github_etl_spark.operators.pipeline import tokenize_encode
 
     docs = _docs(spark)
-    a = tokenize_encode(docs, "text", "doc_id")
-    b = tokenize_encode(docs.repartition(13), "text", "doc_id")
+    a = tokenize_encode(docs)
+    b = tokenize_encode(docs.repartition(13))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -564,7 +560,7 @@ def test_bigram_logprob_hand_computed(spark):
     df = spark.createDataFrame(
         [(1, "a b"), (2, "a b"), (3, "a c"), (4, "solo")], ["doc_id", "text"]
     )
-    got = {r.doc_id: r for r in bigram_logprob(df, "text", "doc_id").collect()}
+    got = {r.doc_id: r for r in bigram_logprob(df).collect()}
     assert 4 not in got  # single-token doc has no bigrams
     # doc1/doc2: p(b|a) = .5*(2/3) + .5*(2/7) = 10/21
     assert got[1].n_bigrams == 1
@@ -632,7 +628,7 @@ def test_bpe_learn_merges_matches_reference(spark):
     df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
     got = [
         (r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in bpe_learn_merges(df, "text", n_merges=12).orderBy("rank").collect()
+        for r in bpe_learn_merges(df, n_merges=12).orderBy("rank").collect()
     ]
     assert got == _ref_bpe(texts, 12)
     assert len(got) > 6  # the corpus genuinely supports a deep merge chain
@@ -644,17 +640,17 @@ def test_bpe_stops_at_min_count_and_validates(spark):
     from github_etl_spark.operators.pipeline import bpe_learn_merges
 
     df = spark.createDataFrame([(1, "ab ab cd")], "id long, text string")
-    merges = bpe_learn_merges(df, "text", n_merges=10, min_count=2).collect()
+    merges = bpe_learn_merges(df, n_merges=10, min_count=2).collect()
     # only (a,b) reaches count 2; (c,d) stops the loop at min_count
     assert [(m["left"], m["right"]) for m in merges] == [("a", "b")]
-    assert bpe_learn_merges(df, "text", n_merges=0).count() == 0
+    assert bpe_learn_merges(df, n_merges=0).count() == 0
     with pytest.raises(ValueError, match="n_merges"):
-        bpe_learn_merges(df, "text", n_merges=-1)
+        bpe_learn_merges(df, n_merges=-1)
     with pytest.raises(ValueError, match="min_count"):
-        bpe_learn_merges(df, "text", min_count=0)
+        bpe_learn_merges(df, min_count=0)
     # empty corpus -> empty merge table with the declared schema
     empty = spark.createDataFrame([], "id long, text string")
-    out = bpe_learn_merges(empty, "text", n_merges=3)
+    out = bpe_learn_merges(empty, n_merges=3)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "rank", "left", "right", "merged", "pair_count",
@@ -670,7 +666,7 @@ def test_bpe_pair_counts_overlap_semantics(spark):
     df = spark.createDataFrame([(1, "aaa aaa")], "id long, text string")
     rows = {
         (r["left"], r["right"]): r["pair_count"]
-        for r in bpe_pair_counts(word_freq_table(df, "text")).collect()
+        for r in bpe_pair_counts(word_freq_table(df)).collect()
     }
     assert rows == {("a", "a"): 4}  # 2 overlapping pairs x freq 2
 
@@ -691,7 +687,7 @@ def test_bpe_apply_matches_reference_and_roundtrips(spark):
         "aaaa aaaa baa",
     ]
     df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
-    merges = bpe_learn_merges(df, "text", n_merges=10)
+    merges = bpe_learn_merges(df, n_merges=10)
     pairs = [(r["left"], r["right"]) for r in merges.orderBy("rank").collect()]
 
     def ref_apply(word):
@@ -710,7 +706,7 @@ def test_bpe_apply_matches_reference_and_roundtrips(spark):
 
     got = {
         r["id"]: r["pieces"]
-        for r in bpe_apply(df, "text", merges).select("id", "pieces").collect()
+        for r in bpe_apply(df, merges).select("id", "pieces").collect()
     }
     for i, t in enumerate(texts):
         want = [p for w in t.lower().split() for p in ref_apply(w)]
@@ -719,11 +715,11 @@ def test_bpe_apply_matches_reference_and_roundtrips(spark):
     # list-of-pairs form behaves identically to the DataFrame form
     got2 = {
         r["id"]: r["pieces"]
-        for r in bpe_apply(df, "text", pairs).select("id", "pieces").collect()
+        for r in bpe_apply(df, pairs).select("id", "pieces").collect()
     }
     assert got2 == got
     # zero merges -> pure character stream
-    chars = bpe_apply(df, "text", []).select("pieces").head()["pieces"]
+    chars = bpe_apply(df, []).select("pieces").head()["pieces"]
     assert chars == list(texts[0].lower().replace(" ", ""))
     del F
 
@@ -748,14 +744,14 @@ def test_bpe_apply_kernel_matches_regexp_chain(spark):
         None,
     ]
     df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
-    merges = bpe_learn_merges(df, "text", n_merges=12)
+    merges = bpe_learn_merges(df, n_merges=12)
     chain = {
         r["id"]: r["pieces"]
-        for r in bpe_apply(df, "text", merges).select("id", "pieces").collect()
+        for r in bpe_apply(df, merges).select("id", "pieces").collect()
     }
     kernel = {
         r["id"]: r["pieces"]
-        for r in bpe_apply_kernel(df, "text", merges)
+        for r in bpe_apply_kernel(df, merges)
         .select("id", "pieces")
         .collect()
     }
@@ -777,7 +773,7 @@ def test_bpe_apply_kernel_survives_past_the_chain_cliff(spark):
     )
     rows = {
         r["id"]: r["pieces"]
-        for r in bpe_apply_kernel(df, "text", pairs).collect()
+        for r in bpe_apply_kernel(df, pairs).collect()
     }
     assert all(isinstance(p, str) and p for ps in rows.values() for p in ps)
     assert "".join(rows[1]) == "thecliffisreal"
@@ -799,7 +795,7 @@ def test_bpe_learn_reliable_checkpoints_are_cleaned(spark, tmp_path):
         "id long, text string",
     )
     with scoped_checkpoint_dir(spark, ckpt):
-        merges = bpe_learn_merges(df, "text", n_merges=3).collect()
+        merges = bpe_learn_merges(df, n_merges=3).collect()
     assert len(merges) == 3
     leftovers = [
         os.path.join(root, d)
@@ -832,7 +828,7 @@ def test_dsir_weights_separate_target_from_raw(spark):
         (3, "spam junk the end", False),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, is_t boolean")
-    w = dsir_gram_weights(df, "text", "is_t", n_buckets=64)
+    w = dsir_gram_weights(df, "is_t", n_buckets=64)
     assert len(w) == 64 and all(isinstance(x, int) for x in w)
 
     def bucket(gram):
@@ -844,7 +840,7 @@ def test_dsir_weights_separate_target_from_raw(spark):
 
     lw = {
         r["doc_id"]: r["lw_bits"]
-        for r in dsir_doc_logweights(df, "text", "doc_id", w).collect()
+        for r in dsir_doc_logweights(df, w).collect()
     }
     # target-exclusive doc scores above the raw-exclusive one
     assert lw[0] > lw[2]
@@ -864,7 +860,7 @@ def test_dsir_apply_is_map_only(spark):
         [(0, "alpha beta gamma")], "doc_id long, text string"
     )
     plan = (
-        dsir_doc_logweights(df, "text", "doc_id", [0] * 1024)
+        dsir_doc_logweights(df, [0] * 1024)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -880,13 +876,13 @@ def test_dsir_resample_keeps_max_and_validates_temp(spark):
     rows = [(i, "good clean " * 5 + "the end", i % 2 == 0) for i in range(8)]
     rows += [(i + 8, "spam junk " * 5 + "the end", False) for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string, is_t boolean")
-    kept = dsir_resample(df, "text", "doc_id", "is_t").collect()
+    kept = dsir_resample(df, "is_t").collect()
     # every max-weight doc has accept_exp == 0 → p = 1 → always kept
     max_lw = max(r["lw_bits"] for r in kept)
     top_kept = {r["doc_id"] for r in kept if r["lw_bits"] == max_lw}
     assert {i for i in range(8)} <= top_kept
     with pytest.raises(ValueError, match="power of two"):
-        dsir_resample(df, "text", "doc_id", "is_t", temp=3)
+        dsir_resample(df, "is_t", temp=3)
 
 
 def test_dsir_empty_and_null_corpus(spark):
@@ -898,14 +894,14 @@ def test_dsir_empty_and_null_corpus(spark):
     empty = spark.createDataFrame(
         [], "doc_id long, text string, is_t boolean"
     )
-    w = dsir_gram_weights(empty, "text", "is_t", n_buckets=32)
+    w = dsir_gram_weights(empty, "is_t", n_buckets=32)
     assert w == [0] * 32
     nulls = spark.createDataFrame(
         [(0, None, True), (1, "one", False)],
         "doc_id long, text string, is_t boolean",
     )
     # NULL text drops; a single-token doc keeps its unigram feature
-    rows = dsir_doc_logweights(nulls, "text", "doc_id", w).collect()
+    rows = dsir_doc_logweights(nulls, w).collect()
     assert [(r["doc_id"], r["n_grams"]) for r in rows] == [(1, 1)]
 
 
@@ -916,7 +912,7 @@ def test_dsir_weights_survive_all_null_target(spark):
         [(0, "alpha beta alpha beta", None), (1, "gamma delta", None)],
         "doc_id long, text string, is_t boolean",
     )
-    w = dsir_gram_weights(df, "text", "is_t", n_buckets=32)
+    w = dsir_gram_weights(df, "is_t", n_buckets=32)
     assert len(w) == 32  # no TypeError; NULL target sums read as 0
 
 
@@ -929,7 +925,7 @@ def test_dsir_resample_rejects_temp_zero(spark):
         [(0, "a b c", True)], "doc_id long, text string, is_t boolean"
     )
     with pytest.raises(ValueError, match="power of two"):
-        dsir_resample(df, "text", "doc_id", "is_t", temp=0)
+        dsir_resample(df, "is_t", temp=0)
 
 
 def test_budget_select_prefix_semantics(spark):
@@ -949,7 +945,7 @@ def test_budget_select_prefix_semantics(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_tokens"], r["cum_tokens"])
-        for r in budget_select(df, "text", "doc_id", 75).collect()
+        for r in budget_select(df, 75).collect()
     }
     # docs 1 and 2 are 50 tokens each in the same quality bucket:
     # doc 1 fits (cum 50), doc 2 would reach 100 > 75 -> cut; doc 3's
@@ -957,14 +953,14 @@ def test_budget_select_prefix_semantics(spark):
     assert got == {1: (50, 50)}
     full = {
         r["doc_id"]: r["cum_tokens"]
-        for r in budget_select(df, "text", "doc_id", 10_000).collect()
+        for r in budget_select(df, 10_000).collect()
     }
     assert full == {1: 50, 2: 100, 3: 130}
 
     import pytest
 
     with pytest.raises(ValueError, match="positive"):
-        budget_select(df, "text", "doc_id", 0)
+        budget_select(df, 0)
 
 
 def test_dsir_apply_kernel_regime_matches_expression_path(spark):
@@ -990,7 +986,7 @@ def test_dsir_apply_kernel_regime_matches_expression_path(spark):
     wk = [((i * 37) % 13) - 6 for i in range(nk)]
     kern = {
         r["doc_id"]: (r["n_grams"], r["lw_bits"])
-        for r in dsir_doc_logweights(df, "text", "doc_id", wk).collect()
+        for r in dsir_doc_logweights(df, wk).collect()
     }
 
     def bucket(g, n):
@@ -1009,7 +1005,7 @@ def test_dsir_apply_kernel_regime_matches_expression_path(spark):
     we = [((i * 37) % 13) - 6 for i in range(ne)]
     expr = {
         r["doc_id"]: (r["n_grams"], r["lw_bits"])
-        for r in dsir_doc_logweights(df, "text", "doc_id", we).collect()
+        for r in dsir_doc_logweights(df, we).collect()
     }
     for did, text in texts:
         feats = feats_of(text)
@@ -1028,9 +1024,7 @@ def test_dsir_kernel_regime_preserves_id_type(spark):
         [("d-1", "alpha beta gamma"), ("d-2", "one two")],
         "doc_id string, text string",
     )
-    out = dsir_doc_logweights(
-        df, "text", "doc_id", [1] * (DSIR_EXPR_MAX_BUCKETS * 2)
-    )
+    out = dsir_doc_logweights(df, [1] * (DSIR_EXPR_MAX_BUCKETS * 2))
     assert dict(out.dtypes)["doc_id"] == "string"
     got = {r["doc_id"]: r["lw_bits"] for r in out.collect()}
     # all-ones weights: lw == n_feats (unigrams + bigrams)
@@ -1060,21 +1054,17 @@ def test_budget_select_hot_bucket_path_matches_window_path(spark):
         )
 
     for budget in (500, 10_000_000):
-        windowed = snap(budget_select(df, "text", "doc_id", budget))
-        offset = snap(
-            budget_select(df, "text", "doc_id", budget, hot_bucket_rows=0)
-        )
+        windowed = snap(budget_select(df, budget))
+        offset = snap(budget_select(df, budget, hot_bucket_rows=0))
         assert windowed == offset
         assert windowed  # non-degenerate: something is kept
     # mixed regime: only the 40-row bucket is hot
-    mixed = snap(
-        budget_select(df, "text", "doc_id", 10_000_000, hot_bucket_rows=10)
-    )
-    assert mixed == snap(budget_select(df, "text", "doc_id", 10_000_000))
+    mixed = snap(budget_select(df, 10_000_000, hot_bucket_rows=10))
+    assert mixed == snap(budget_select(df, 10_000_000))
 
 
 def test_budget_select_empty_corpus(spark):
     from github_etl_spark.operators.pipeline import budget_select
 
     empty = spark.createDataFrame([], "doc_id long, text string")
-    assert budget_select(empty, "text", "doc_id", 100).count() == 0
+    assert budget_select(empty, 100).count() == 0

@@ -382,11 +382,9 @@ def test_span_store_hits_broadcasts_batch_not_store(spark):
     docs = load_tables(spark, SF)["documents"]
     corpus = docs.where(F.col("doc_id") % 5 != 0)
     batch = docs.where(F.col("doc_id") % 5 == 0)
-    store = c4_spans_from(
-        kept_lines_frame(corpus, "text", "doc_id"), "doc_id"
-    ).select("span_key")
+    store = c4_spans_from(kept_lines_frame(corpus)).select("span_key")
     bkeys = (
-        c4_spans_from(kept_lines_frame(batch, "text", "doc_id"), "doc_id")
+        c4_spans_from(kept_lines_frame(batch))
         .select("span_key")
         .distinct()
     )

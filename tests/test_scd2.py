@@ -21,9 +21,7 @@ def _upd(spark, rows):
 
 
 def _apply(spark, dim_rows, upd_rows):
-    out = scd2_apply(
-        _dim(spark, dim_rows), _upd(spark, upd_rows), "k", "ts", ["v"]
-    ).collect()
+    out = scd2_apply(_dim(spark, dim_rows), _upd(spark, upd_rows), "k", ["v"]).collect()
     return sorted(
         ((r.k, r.v, r.valid_from, r.valid_to, r.is_current) for r in out),
         key=lambda t: (t[0], t[2]),
@@ -254,7 +252,6 @@ def test_reliable_checkpoint_identical_merge(spark, tmp_path):
         _dim(spark, dim_rows),
         _upd(spark, upd_rows),
         "k",
-        "ts",
         ["v"],
         checkpoint_dir=str(tmp_path / "scd_ckpt"),
     ).collect()

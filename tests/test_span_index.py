@@ -44,7 +44,7 @@ def test_span_index_check_matches_inline(spark, tmp_path):
     """The materialized store path must classify identically to the
     inline path — shared span_verdict_rows core, same store contents."""
     corpus, batch = _split(spark)
-    inline = _rows(span_incremental_verdicts(corpus, batch, "text", "doc_id"))
+    inline = _rows(span_incremental_verdicts(corpus, batch))
     path = str(tmp_path / "span_index")
     span_index_build(corpus, path)
     indexed = _rows(span_index_check(spark, path, batch))
@@ -62,9 +62,9 @@ def test_span_append_then_recheck(spark, tmp_path):
     corpus, batch = _split(spark)
     path = str(tmp_path / "span_index")
     span_index_build(corpus, path)
-    bspans = c4_spans_from(c4_kept_lines(batch, "text", "doc_id"), "doc_id")
+    bspans = c4_spans_from(c4_kept_lines(batch))
     store = spark.read.parquet(f"{path}/spans").select("span_key")
-    rows = span_verdict_rows(bspans, store, "doc_id")
+    rows = span_verdict_rows(bspans, store)
     new_keys = rows.where(F.col("verdict") == "new").select("span_key")
     n_new_total = new_keys.count()
     assert n_new_total > 0
@@ -210,7 +210,7 @@ def test_span_check_exclude_batch_is_partition_pruned(spark, tmp_path):
     store = str(tmp_path / "span_store")
     span_index_build(corpus, store)
     bkeys = (
-        c4_spans_from(c4_kept_lines(batch, "text", "doc_id"), "doc_id")
+        c4_spans_from(c4_kept_lines(batch))
         .select("span_key")
         .distinct()
     )
@@ -287,6 +287,4 @@ def test_fold_partitions_refuses_live_target(spark, tmp_path):
     store = str(tmp_path / "span_store")
     span_index_build(corpus, store)
     with pytest.raises(ValueError, match="crash-safe"):
-        fold_partitions(
-            spark, f"{store}/spans", "ingest_batch", into_value=-1
-        )
+        fold_partitions(spark, f"{store}/spans", into_value=-1)

@@ -561,7 +561,7 @@ def test_streaming_bottomk_recovers_batch_sample(spark, stream_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .json(str(stream_dir))
     )
-    out = streaming_bottomk_sample(stream, "value", "event_id", k=16, shards=4)
+    out = streaming_bottomk_sample(stream, "event_id", k=16, shards=4)
     _drain(out, "bk_stream_out", str(tmp_path / "ck_bk"))
 
     # fold the FINAL emission per shard, then global bottom-16
@@ -600,7 +600,7 @@ def test_streaming_bottomk_rejects_non_integral_id(spark):
 
     rows = spark.createDataFrame([("a", 1.0)], "doc string, value double")
     with pytest.raises(TypeError, match="integral id column"):
-        streaming_bottomk_sample(rows, "value", "doc", k=4)
+        streaming_bottomk_sample(rows, "doc", k=4)
 
 
 def test_mg_fold_sharded_equals_streaming_update_rule(spark):
@@ -656,7 +656,7 @@ def test_mg_fold_sharded_equals_streaming_update_rule(spark):
         df = spark.createDataFrame(
             [(0, t) for t in b], "shard int, tok string"
         )
-        frag = mg_batch_fragments(df, "shard", "tok")
+        frag = mg_batch_fragments(df)
         parts = frag if state is None else state.unionByName(frag)
         state = mg_fold_sharded(parts, counters=K)
     rows = state.collect()
@@ -681,11 +681,14 @@ def test_streaming_mg_replay_bounds_hold(spark):
 
 def test_running_totals_replay_equals_live_rule(spark):
     """streaming_totals_replay must emit exactly what the live
-    _update_running_totals emissions accumulate to over the same batch
+    running-totals update rule's emissions accumulate to over the same batch
     sequence — one row per (key, batch the key appears in), cumulative."""
     import pandas as pd
 
-    from github_etl_spark.streaming.stateful import _update_running_totals
+    from github_etl_spark.streaming.stateful import (
+        IDLE_EVICT_MS,
+        _running_totals_fn,
+    )
 
     class _FakeState:
         def __init__(self):
@@ -712,7 +715,7 @@ def test_running_totals_replay_equals_live_rule(spark):
     for b, users in batches.items():
         for uid in set(users):
             st = states.setdefault(uid, _FakeState())
-            (out,) = _update_running_totals(
+            (out,) = _running_totals_fn(IDLE_EVICT_MS)(
                 (uid,),
                 iter([pd.DataFrame({"user_id": [u for u in users if u == uid]})]),
                 st,
@@ -1325,6 +1328,40 @@ def test_session_replay_survives_trailing_empty_batch(spark):
     # state wipe: exactly one session row survives with both events
     assert len(out) == 1 and out[0].n_events == 2
     assert emitted == [] and out[0].emitted_batch is None
+
+
+def _rows_in_batches_0_1_5(spark):
+    from datetime import datetime
+
+    rows = [
+        (1, datetime(2026, 3, 1, 10, 0), 0),
+        (2, datetime(2026, 3, 1, 11, 0), 1),
+        (3, datetime(2026, 3, 1, 12, 0), 5),
+        (4, datetime(2026, 3, 1, 13, 0), None),
+    ]
+    return spark.createDataFrame(rows, "dk long, ts timestamp, batch int")
+
+
+def test_dedup_replay_refuses_an_unlisted_batch(spark):
+    """Batch 5 is not in batch_ids: its row would get no verdict row,
+    so the replay raises instead (a NULL batch id is no micro-batch and
+    is not refused)."""
+    from github_etl_spark.streaming.events import dedup_replay
+
+    df = _rows_in_batches_0_1_5(spark)
+    with pytest.raises(ValueError, match=r"\[5\]"):
+        dedup_replay(df, "batch", [0, 1], key="dk")
+    assert len(dedup_replay(df, "batch", [0, 1, 5], key="dk").collect()) == 3
+
+
+def test_session_replay_refuses_an_unlisted_batch(spark):
+    from github_etl_spark.streaming.events import session_replay
+
+    df = _rows_in_batches_0_1_5(spark)
+    with pytest.raises(ValueError, match=r"\[5\]"):
+        session_replay(df, "batch", [0, 1], key="dk")
+    out = session_replay(df, "batch", [0, 1, 5], key="dk").collect()
+    assert sum(r.n_events for r in out) == 3
 
 
 def test_tumbling_replay_empty_batch_advances_watermark(spark):

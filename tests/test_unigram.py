@@ -124,7 +124,7 @@ def test_kernel_document_contract(spark):
         "doc_id long, text string",
     )
     rows = {r["doc_id"]: r.asDict()
-            for r in unigram_segment_kernel(df, "text").collect()}
+            for r in unigram_segment_kernel(df).collect()}
     assert set(rows) == {1, 4}
     assert rows[1]["n_tokens"] == 2
     assert rows[1]["n_pieces"] == 4
@@ -138,7 +138,7 @@ def test_kernel_document_contract(spark):
 def test_kernel_rejects_duplicate_vocab(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError, match="duplicate"):
-        unigram_segment_kernel(df, "text", vocab=[("a", 1), ("a", 2)])
+        unigram_segment_kernel(df, vocab=[("a", 1), ("a", 2)])
 
 
 # ------------------------------------------------------------------ learn
@@ -153,7 +153,7 @@ def test_unigram_learn_tiny_corpus(spark):
         [(1, "abab abab ab"), (2, "abab ab")], "doc_id long, text string"
     )
     rows = {r["piece"]: r.asDict()
-            for r in unigram_learn(df, "text", rounds=2,
+            for r in unigram_learn(df, rounds=2,
                                    max_piece_len=4).collect()}
     # coverage: single chars always survive with count >= 1
     assert rows["a"]["cnt"] >= 1 and rows["b"]["cnt"] >= 1
@@ -172,9 +172,9 @@ def test_unigram_learn_em_moves_counts(spark):
         "doc_id long, text string",
     )
     seeded = {r["piece"]: r["cnt"]
-              for r in unigram_learn(df, "text", rounds=0).collect()}
+              for r in unigram_learn(df, rounds=0).collect()}
     learned = {r["piece"]: r["cnt"]
-               for r in unigram_learn(df, "text", rounds=2).collect()}
+               for r in unigram_learn(df, rounds=2).collect()}
     # seed counts are substring-multiplicity counts (overlap-inflated);
     # EM usage counts are disjoint — they must differ, and shrink
     assert seeded != learned
@@ -190,7 +190,7 @@ def test_unigram_learn_respects_min_count_and_cap(spark):
         [(1, "xy xy qq")], "doc_id long, text string"
     )
     rows = {r["piece"]: r["cnt"]
-            for r in unigram_learn(df, "text", rounds=1, min_count=2,
+            for r in unigram_learn(df, rounds=1, min_count=2,
                                    max_vocab=1).collect()}
     # only ONE multi-char piece can enter the seed vocab (cap=1):
     # 'xy' (cnt 2) beats 'qq' (cnt 1 < min_count anyway)
@@ -202,7 +202,7 @@ def test_unigram_learn_respects_min_count_and_cap(spark):
 
 def test_kernel_noncovering_vocab_raises_valueerror(spark):
     df = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    out = unigram_segment_kernel(df, "text", vocab=[("ab", 5)])
+    out = unigram_segment_kernel(df, vocab=[("ab", 5)])
     # the executor-side ValueError surfaces through PySpark's wrapper
     # exception; the usable message is the contract being pinned
     with pytest.raises(Exception, match="not segmentable"):
@@ -220,10 +220,10 @@ def test_tokenize_encode_end_to_end(spark):
         "doc_id long, text string",
     )
     rows = {r["doc_id"]: r.asDict()
-            for r in unigram_tokenize_encode(df, "text", rounds=2).collect()}
+            for r in unigram_tokenize_encode(df, rounds=2).collect()}
     # empty/NULL docs drop, same as BPE encode
     assert set(rows) == {1, 2}
-    vocab = learn_vocab(df, "text", rounds=2)
+    vocab = learn_vocab(df, rounds=2)
     ids = {p: i + 1 for i, (p, _) in enumerate(
         sorted(vocab.items(), key=lambda t: (-t[1], t[0])))}
     # both tokens segment as whole learned pieces
@@ -242,16 +242,16 @@ def test_tokenize_encode_ids_are_dense_and_deterministic(spark):
         "doc_id long, text string",
     )
     out1 = {r["doc_id"]: r["input_ids"]
-            for r in unigram_tokenize_encode(df, "text").collect()}
+            for r in unigram_tokenize_encode(df).collect()}
     out2 = {r["doc_id"]: r["input_ids"]
-            for r in unigram_tokenize_encode(df.repartition(3), "text").collect()}
+            for r in unigram_tokenize_encode(df.repartition(3)).collect()}
     assert out1 == out2
     # identical docs encode identically
     assert len(set(out1.values())) == 1
     # DENSE 1-based ids: everything used falls inside 1..|vocab|
     from github_etl_spark.operators.unigram import learn_vocab
 
-    n_vocab = len(learn_vocab(df, "text"))
+    n_vocab = len(learn_vocab(df))
     used = [int(x) for x in out1[0].split()]
     assert all(1 <= i <= n_vocab for i in used)
 

@@ -87,7 +87,7 @@ def test_learn_matches_scalar_reference(spark):
     df = spark.createDataFrame([(t,) for t in corpus], "text string")
     got = [
         tuple(r)
-        for r in wordpiece_learn(df, "text", n_merges=6, min_count=2)
+        for r in wordpiece_learn(df, n_merges=6, min_count=2)
         .orderBy("rank")
         .collect()
     ]
@@ -97,7 +97,7 @@ def test_learn_matches_scalar_reference(spark):
 def test_learn_min_count_early_stop(spark):
     df = spark.createDataFrame([("ab cd",)], "text string")
     # every pair occurs once -> below min_count=2 -> no merges
-    assert wordpiece_learn(df, "text", n_merges=5, min_count=2).count() == 0
+    assert wordpiece_learn(df, n_merges=5, min_count=2).count() == 0
 
 
 def test_merged_symbol_requires_continuation():
@@ -126,7 +126,7 @@ def test_encode_kernel_matches_scalar(spark):
     )
     got = {
         r.doc_id: r.pieces
-        for r in wordpiece_encode_kernel(df, "text", vocab).collect()
+        for r in wordpiece_encode_kernel(df, vocab).collect()
     }
     vs = set(vocab)
     for i, t in enumerate(texts):
@@ -177,7 +177,7 @@ def test_learn_hapax_pair_does_not_halt_training(spark):
     df = spark.createDataFrame([("xy aa aa aa",)], "text string")
     got = [
         (r["left"], r["right"], r["merged"])
-        for r in wordpiece_learn(df, "text", n_merges=2, min_count=2)
+        for r in wordpiece_learn(df, n_merges=2, min_count=2)
         .orderBy("rank")
         .collect()
     ]

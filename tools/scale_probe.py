@@ -109,26 +109,20 @@ def skew_probe(spark, docs):
 
     run(
         "LSH capped (64)",
-        lambda: minhash_lsh_candidates(skewed, "text", "doc_id", max_bucket_size=64),
+        lambda: minhash_lsh_candidates(skewed, max_bucket_size=64),
     )
     run(
         "LSH uncapped",
-        lambda: minhash_lsh_candidates(
-            skewed, "text", "doc_id", max_bucket_size=10**9
-        ),
+        lambda: minhash_lsh_candidates(skewed, max_bucket_size=10**9),
     )
     blk = skewed.withColumn("blk", F.lit(1))
     run(
         "Jaccard max_df=100",
-        lambda: ngram_jaccard_pairs(
-            blk, "text", "doc_id", ["blk"], threshold=0.5, max_df=100
-        ),
+        lambda: ngram_jaccard_pairs(blk, ["blk"], threshold=0.5, max_df=100),
     )
     run(
         "Jaccard uncapped",
-        lambda: ngram_jaccard_pairs(
-            blk, "text", "doc_id", ["blk"], threshold=0.5, max_df=None
-        ),
+        lambda: ngram_jaccard_pairs(blk, ["blk"], threshold=0.5, max_df=None),
     )
     return rows
 
@@ -424,9 +418,9 @@ def bpe_probe(spark, t, ks):
     for k in ks:
         d = replicate(t["documents"], "doc_id", k)
         n_docs = d.count()
-        n_words = word_freq_table(d, "text").count()
+        n_words = word_freq_table(d).count()
         t0 = time.perf_counter()
-        n_m = bpe_learn_merges(d, "text", n_merges=8, min_count=2).count()
+        n_m = bpe_learn_merges(d, n_merges=8, min_count=2).count()
         t_learn = time.perf_counter() - t0
         lines.append(
             f"| {k} | {n_docs} | {n_words} | {t_learn:.1f} "
@@ -443,7 +437,7 @@ def bpe_probe(spark, t, ks):
     d1 = t["documents"]
     for nm in (4, 8, 16, 32):
         t0 = time.perf_counter()
-        got = bpe_learn_merges(d1, "text", n_merges=nm, min_count=2).count()
+        got = bpe_learn_merges(d1, n_merges=nm, min_count=2).count()
         dt = time.perf_counter() - t0
         lines.append(f"| {nm} | {dt:.1f} | {dt / max(got, 1):.2f} |")
         print(lines[-1], flush=True)
@@ -466,7 +460,7 @@ def bpe_probe(spark, t, ks):
     for nm in (16, 64, 256, 1024):
         try:
             t0 = time.perf_counter()
-            out = bpe_apply(d1, "text", pairs_all[:nm])
+            out = bpe_apply(d1, pairs_all[:nm])
             agg = out.select(F.sum(F.size("pieces")).alias("n"))
             agg.schema  # force analysis
             t_plan = time.perf_counter() - t0
@@ -492,7 +486,7 @@ def bpe_probe(spark, t, ks):
     ]
     for nm in (256, 1024, 4096):
         t0 = time.perf_counter()
-        bpe_apply_kernel(d1, "text", pairs_all[:nm]).select(
+        bpe_apply_kernel(d1, pairs_all[:nm]).select(
             F.sum(F.size("pieces")).alias("n")
         ).collect()
         dt = time.perf_counter() - t0
@@ -744,12 +738,12 @@ def dsir_probe(spark) -> list[str]:
         "| n_buckets | learn sec | apply sec | nonzero weights |",
         "|---|---|---|---|",
     ]
-    dsir_gram_weights(docs, "text", "__is_t", 64)  # JVM warmup
+    dsir_gram_weights(docs, "__is_t", 64)  # JVM warmup
     for nb in (1024, 16384, 131072):
         t0 = _time.perf_counter()
-        w = dsir_gram_weights(docs, "text", "__is_t", nb)
+        w = dsir_gram_weights(docs, "__is_t", nb)
         t1 = _time.perf_counter()
-        dsir_doc_logweights(docs, "text", "doc_id", w).count()
+        dsir_doc_logweights(docs, w).count()
         t2 = _time.perf_counter()
         nz = sum(1 for x in w if x)
         lines.append(f"| {nb} | {t1-t0:.2f} | {t2-t1:.2f} | {nz} |")
@@ -869,13 +863,11 @@ def hot_bucket_probe(spark) -> list[str]:
         ("keyed window (forced, hot_bucket_rows=2^60)", 1 << 60, "**1**"),
         ("offset idiom (hot_bucket_rows=1e5)", 100_000, "range-partitioned"),
     ]:
-        budget_select(df, "text", "doc_id", 10**12, hot_bucket_rows=hb).count()
+        budget_select(df, 10**12, hot_bucket_rows=hb).count()
         ts = []
         for _ in range(3):
             t0 = _time.perf_counter()
-            rows[label] = budget_select(
-                df, "text", "doc_id", 10**12, hot_bucket_rows=hb
-            ).count()
+            rows[label] = budget_select(df, 10**12, hot_bucket_rows=hb).count()
             ts.append(_time.perf_counter() - t0)
         lines.append(f"| {label} | {sorted(ts)[1]:.2f} | {tasks} |")
     assert len(set(rows.values())) == 1, f"paths disagree: {rows}"
@@ -1186,7 +1178,7 @@ def main():
         d = replicate(docs, "doc_id", k)
         n_docs = d.count()
         t0 = time.perf_counter()
-        lsh_pairs = minhash_lsh_candidates(d, "text", "doc_id")
+        lsh_pairs = minhash_lsh_candidates(d)
         pairs = lsh_pairs.count()
         t_lsh = time.perf_counter() - t0
 
@@ -1196,7 +1188,7 @@ def main():
         from github_etl_spark.operators.graph import cluster_assignment
 
         t0 = time.perf_counter()
-        cluster_assignment(d, lsh_pairs, "doc_id").count()
+        cluster_assignment(d, lsh_pairs).count()
         t_cc = time.perf_counter() - t0
 
         e = replicate(emb, "vec_id", k)
