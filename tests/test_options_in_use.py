@@ -83,32 +83,30 @@ def _defs(tree: ast.Module):
     return out
 
 
-def _defaulted(fn: ast.FunctionDef, method: bool):
-    """(param, positional index or None) for each defaulted parameter."""
+def _params(fn: ast.FunctionDef, method: bool):
+    """(param, positional index or None, has a default) for each
+    parameter but ``*args``/``**kwargs``."""
     a = fn.args
     pos = a.posonlyargs + a.args
     skip = 1 if method and pos and pos[0].arg in ("self", "cls") else 0
-    out = []
-    for i, arg in enumerate(pos[len(pos) - len(a.defaults):], len(pos) - len(a.defaults)):
-        out.append((arg.arg, i - skip))
-    for arg, d in zip(a.kwonlyargs, a.kw_defaults):
-        if d is not None:
-            out.append((arg.arg, None))
+    first_default = len(pos) - len(a.defaults)
+    out = [(arg.arg, i - skip, i >= first_default) for i, arg in enumerate(pos)]
+    out += [(arg.arg, None, d is not None) for arg, d in zip(a.kwonlyargs, a.kw_defaults)]
     return out
+
+
+def _defaulted(fn: ast.FunctionDef, method: bool):
+    """(param, positional index or None) for each defaulted parameter."""
+    return [(p, i) for p, i, default in _params(fn, method) if default]
 
 
 def _required_cols(fn: ast.FunctionDef, method: bool):
     """(param, positional index or None) for each parameter without a
     default whose name ends in ``_col``."""
-    a = fn.args
-    pos = a.posonlyargs + a.args
-    skip = 1 if method and pos and pos[0].arg in ("self", "cls") else 0
-    out = [
-        (arg.arg, i - skip)
-        for i, arg in enumerate(pos[: len(pos) - len(a.defaults)])
+    return [
+        (p, i) for p, i, default in _params(fn, method)
+        if not default and p.endswith("_col")
     ]
-    out += [(arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is None]
-    return [(p, i) for p, i in out if p.endswith("_col")]
 
 
 def _callee(call: ast.Call):
