@@ -716,10 +716,10 @@ def mulaw_encode(samples: np.ndarray) -> np.ndarray:
     return (~(sign | (exponent << 4) | mantissa) & 0xFF).astype(np.uint8)
 
 
-def encode_wav_mulaw(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
+def encode_wav_mulaw(samples: np.ndarray) -> bytes:
     """Serialize int16 samples — (n,) mono or (n, channels) — as a
     REAL compressed WAV: G.711 mu-law companding (format tag 7, 8 bits
-    per sample, 2:1 vs PCM-16). Any telephony-grade WAV reader plays
+    per sample, 2:1 vs PCM-16) at G.711's 8 kHz. Any telephony-grade WAV reader plays
     the output; `decode_wav16` expands it back transparently."""
     import struct
 
@@ -734,8 +734,8 @@ def encode_wav_mulaw(samples: np.ndarray, sample_rate: int = 8000) -> bytes:
     header = struct.pack(
         "<4sI4s4sIHHIIHH4sI",
         b"RIFF", 36 + len(data), b"WAVE",
-        b"fmt ", 16, 7, ch, sample_rate,
-        sample_rate * block_align, block_align, 8,
+        b"fmt ", 16, 7, ch, 8000,
+        8000 * block_align, block_align, 8,
         b"data", len(data),
     )
     return header + data
@@ -756,7 +756,7 @@ def synthesize_mulaw_media(docs: DataFrame) -> DataFrame:
     return _synthesize(
         docs, ("doc_id", "text"),
         lambda mid, text: encode_wav_mulaw(
-            mulaw_decode(_tiled_text(text, mid % 50 + 10)), 8000
+            mulaw_decode(_tiled_text(text, mid % 50 + 10))
         ),
     )
 

@@ -9,12 +9,14 @@ All four families a 100 TB training-data pipeline needs:
 - SimHash:      64-bit signature whose hamming distance tracks cosine/jaccard
 - n-gram Jaccard: exact token-set similarity on (cheap) candidate pairs
 
-Everything except the SimHash bit-fold is pure DataFrame ops (JVM-side,
-codegen). xxhash64 is Spark's builtin 64-bit hash — seeded variants come
-from hashing (seed, value) tuples.
+Everything is pure DataFrame ops (JVM-side, codegen). MinHash and
+SimHash take their bits from md5, which DuckDB shares, so every
+signature, band bucket and SimHash has a value-for-value oracle.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
@@ -80,15 +82,10 @@ def _shingles(text_col, n: int = 3):
 # ---------------------------------------------------------------------------
 
 
-def _tokens_sql(col: str) -> str:
-    """functions.text.dedup_tokens_expr as Spark SQL text."""
-    return f"filter(split(lower({col}), '[^a-z0-9]+'), x -> x != '')"
-
-
-def _shingles_sql(col: str, n: int) -> str:
-    """_shingles (distinct word n-grams) as Spark SQL text — the same
-    zipped-slice construction, O(n·L) per row."""
-    toks = _tokens_sql(col)
+def _shingles_sql(n: int) -> str:
+    """_shingles (distinct word n-grams of ``text``) as Spark SQL text
+    — the same zipped-slice construction, O(n·L) per row."""
+    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     ng = f"(size({toks}) - {n - 1})"
     out = f"slice({toks}, 1, {ng})"
     for i in range(1, n):
@@ -102,51 +99,77 @@ def _shingles_sql(col: str, n: int) -> str:
     )
 
 
+# ---------------------------------------------------------------------------
+# The MinHash family — Broder's min-wise hashing over a universal family,
+# in fixed-width integers both engines compute identically. One md5 per
+# shingle gives x = (its first 15 hex digits as a long) mod P, and
+# h_i(x) = (a_i·x + b_i) mod P with P = 2^31 − 1. a_i, x < 2^31, so
+# a_i·x + b_i < 2^62 never overflows a BIGINT. The coefficients are
+# derived here once, from md5 of their index, and reach the Spark SQL
+# and the DuckDB oracles (plans/ext.minhash_band_ctes) as literals.
+# ---------------------------------------------------------------------------
+
+MINHASH_P = 2**31 - 1
+# The name a dedup index's sidecar records for this family
+# (operators/incremental.py refuses an index built with any other).
+MINHASH_FAMILY = "md5_universal_p31"
+
+
+def md5_long_sql(expr: str) -> str:
+    """The first 15 hex digits (60 bits) of ``md5(expr)`` as a
+    non-negative long, in Spark SQL — the engine-portable integer hash
+    behind the MinHash family and the bottom-k sample. DuckDB spells it
+    ``CAST(concat('0x', substr(md5(expr), 1, 15)) AS BIGINT)``."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def minhash_mins_sql(num_hashes: int) -> str:
+    """``min(h_i(x))`` for i < ``num_hashes``, comma-separated, over a
+    column ``x`` — the same text in Spark SQL and DuckDB. a_i is in
+    [1, P) and b_i in [0, P), each from md5 of ``"a:i"`` / ``"b:i"``."""
+
+    def coef(tag: str, i: int, lo: int) -> int:
+        digest = hashlib.md5(f"{tag}:{i}".encode()).hexdigest()
+        return lo + int(digest[:15], 16) % (MINHASH_P - lo)
+
+    return ", ".join(
+        f"min(({coef('a', i, 1)} * x + {coef('b', i, 0)}) % {MINHASH_P})"
+        for i in range(num_hashes)
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     num_hashes: int = 32,
     shingle: int = 3,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """One row per doc with a minhash signature array<long>[num_hashes].
+    """One row per doc with a minhash signature array<bigint>[num_hashes].
 
-    Each hash family member h_i(s) = xxhash64(i, s); the signature entry
-    is min over the doc's shingles, computed with explode + groupBy(min).
-    Map-side partial aggregation folds each doc's shingles to 32 longs
-    BEFORE the shuffle (a doc's shingles are row-local, so the exchange
-    moves docs × num_hashes longs — the size of the output — regardless
-    of document length). Measured against per-row higher-order-function
-    variants (array_min(transform) and aggregate/zip_with) this is
-    2-4× faster: those keep a `size(shingles) > 0` filter that pushes
-    below the widening exchange and serializes a full shingle pass on a
-    narrow scan, and their interpreted lambda towers evaluate off the
-    codegen path. Docs with fewer tokens than the shingle width have no
+    Entry i is min over the doc's shingles of h_i (the family above),
+    computed with explode + groupBy(min). Map-side partial aggregation
+    folds each doc's shingles to num_hashes longs BEFORE the shuffle (a
+    doc's shingles are row-local, so the exchange moves docs ×
+    num_hashes longs — the size of the output — regardless of document
+    length). Measured against per-row higher-order-function variants
+    (array_min(transform) and aggregate/zip_with) this is 2-4× faster:
+    those keep a `size(shingles) > 0` filter that pushes below the
+    widening exchange and serializes a full shingle pass on a narrow
+    scan, and their interpreted lambda towers evaluate off the codegen
+    path. Docs with fewer tokens than the shingle width have no
     shingles and drop out (they can't near-dup under this family).
-
-    ``hash_family``: ``xxhash64`` (default, fastest, engine-specific →
-    property-tested) or ``md5_portable`` (h_i = md5 prefix of
-    ``"{i}:" + shingle`` as a hex STRING, min = lexicographic — shared
-    with DuckDB so the whole signature pipeline is oracle-checkable;
-    signature becomes array<string>).
     """
-    # Hash cost is shingles × num_hashes per row — widen a narrow scan
-    # before it (no-op when the input already has enough partitions).
-    exploded = ensure_parallelism(df).selectExpr(
-        "doc_id",
-        f"explode({_shingles_sql('text', shingle)}) AS shingle",
+    # Hash cost is one md5 per shingle plus num_hashes multiply-adds —
+    # widen a narrow scan before it (no-op when the input already has
+    # enough partitions).
+    shingles = ensure_parallelism(df).selectExpr(
+        "doc_id", f"explode({_shingles_sql(shingle)}) AS shingle"
     )
-    if hash_family == "md5_portable":
-        mins = ", ".join(
-            f"min(substring(md5(concat('{i}:', shingle)), 1, 16))"
-            for i in range(num_hashes)
-        )
-    elif hash_family == "xxhash64":
-        mins = ", ".join(
-            f"min(xxhash64({i}, shingle))" for i in range(num_hashes)
-        )
-    else:
-        raise ValueError(f"unknown minhash family: {hash_family!r}")
-    return exploded.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("signature"))
+    xs = shingles.selectExpr(
+        "doc_id", f"{md5_long_sql('shingle')} % {MINHASH_P} AS x"
+    )
+    return xs.groupBy("doc_id").agg(
+        F.expr(f"array({minhash_mins_sql(num_hashes)})").alias("signature")
+    )
 
 
 def minhash_band_buckets(
@@ -154,46 +177,33 @@ def minhash_band_buckets(
     num_hashes: int = 32,
     bands: int = 8,
     shingle: int = 3,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """(doc, signature, band, bucket) — one row per document × band.
 
     The LSH bucket relation both the batch self-dedup
     (`minhash_lsh_candidates`) and the incremental batch-vs-index check
     (operators/incremental.py) are built from; extracting it keeps the
-    two paths' bucket assignment definitionally identical. Bucket key
-    per band: xxhash64 of the band's signature slice on the fast path;
-    on the portable path the CONCATENATED hex strings ARE the key
-    (exact, hash-free, and reproducible in SQL).
-    """
-    sigs = minhash_signatures(df, num_hashes, shingle, hash_family=hash_family)
-    band_cols = _band_bucket_structs(num_hashes, bands, hash_family)
+    two paths' bucket assignment definitionally identical."""
+    sigs = minhash_signatures(df, num_hashes, shingle)
+    band_cols = _band_bucket_structs(num_hashes, bands)
     return sigs.selectExpr(
         "doc_id AS doc", "signature", f"explode({band_cols}) AS bb"
     ).select("doc", "signature", "bb.band", "bb.bucket")
 
 
-def _band_bucket_structs(num_hashes: int, bands: int, hash_family: str) -> str:
+def _band_bucket_structs(num_hashes: int, bands: int) -> str:
     """SQL for the per-band (band, bucket) struct array over a
     ``signature`` column — THE band/bucket definition, shared by the
     signature-carrying bucket relation (``minhash_band_buckets``) and
     the narrow bucket relation inside ``minhash_lsh_candidates`` so
-    the two can never assign different buckets."""
+    the two can never assign different buckets. A band's bucket key is
+    its slice of the signature itself: exact, hash-free, and the same
+    list in DuckDB."""
     rows_per_band = num_hashes // bands
-
-    def _band_slice(b: int) -> str:
-        return ", ".join(
-            f"element_at(signature, {b * rows_per_band + r + 1})"
-            for r in range(rows_per_band)
-        )
-
-    if hash_family == "md5_portable":
-        bucket_of = lambda b: f"concat_ws('', {_band_slice(b)})"  # noqa: E731
-    else:
-        bucket_of = lambda b: f"xxhash64({b}, {_band_slice(b)})"  # noqa: E731
     return "array({})".format(
         ", ".join(
-            f"named_struct('band', {b}, 'bucket', {bucket_of(b)})"
+            f"named_struct('band', {b}, 'bucket',"
+            f" slice(signature, {b * rows_per_band + 1}, {rows_per_band}))"
             for b in range(bands)
         )
     )
@@ -204,7 +214,6 @@ def minhash_lsh_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     max_bucket_size: int = 64,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded LSH over minhash sigs.
 
@@ -219,8 +228,8 @@ def minhash_lsh_candidates(
     carries ONLY (doc, band, bucket) — the window exchange, the
     bucket groupBy and the cross-band pair dedup never move signature
     bytes (pre-r14 every one of those rows dragged the full signature:
-    ~0.5 KB/row for the md5 family × bands copies per doc, and each
-    deduped pair carried BOTH signatures; interleaved A/B at sf0.1:
+    ~0.5 KB/row for the then md5-hex signatures × bands copies per
+    doc, and each deduped pair carried BOTH signatures; interleaved A/B at sf0.1:
     2.09 → 1.60 s, identical 256 pairs). The deduped (id_a, id_b)
     pairs — the only rows that still need signatures — re-attach them
     with two keyed joins against the checkpointed frame (pair-sized,
@@ -248,8 +257,8 @@ def minhash_lsh_candidates(
     from ..session import eager_checkpoint
 
     max_bucket_size = max(2, int(max_bucket_size))
-    sigs = eager_checkpoint(minhash_signatures(df, num_hashes, hash_family=hash_family))
-    band_cols = _band_bucket_structs(num_hashes, bands, hash_family)
+    sigs = eager_checkpoint(minhash_signatures(df, num_hashes))
+    band_cols = _band_bucket_structs(num_hashes, bands)
     buckets = sigs.selectExpr(
         "doc_id AS doc", f"explode({band_cols}) AS bb"
     ).select("doc", "bb")
@@ -305,48 +314,31 @@ def signature_agreement_expr(sig_a, sig_b, num_hashes: int):
     ) / F.lit(float(num_hashes))
 
 
-def simhash_signatures(df: DataFrame, hash_family: str = "xxhash64") -> DataFrame:
+def simhash_signatures(df: DataFrame) -> DataFrame:
     """64-bit SimHash per document, pure DataFrame ops.
 
     Explode tokens, hash each to 64 bits, and for every bit position sum
     (+1 / −1); the signature bit is 1 where the sum is positive. The
-    bit unpacking stays JVM-side via shiftright/bitwise-and over a
-    posexploded 0..63 sequence — no Python in the loop.
-
-    ``hash_family`` selects the per-token bit source:
-    - ``xxhash64`` (default): fastest, JVM-native — but engine-specific,
-      so signatures are verifiable only by property tests;
-    - ``md5_portable``: bit i = bit (i mod 4) of hex digit (i div 4) of
-      md5(token). md5 is shared with DuckDB, so the ENTIRE bit-vote
-      pipeline is oracle-checkable cross-engine (the catalog query uses
-      this); the vote/packing logic is identical for both sources.
+    bit unpacking stays JVM-side via a posexploded 0..63 sequence — no
+    Python in the loop. Bit i of a token is bit (i mod 4) of hex digit
+    (i div 4) of md5(token); md5 is shared with DuckDB, so the whole
+    bit-vote pipeline is oracle-checkable cross-engine.
     """
     toks = ensure_parallelism(df).select(
         F.col("doc_id"), F.explode(tokens_expr(F.col("text"))).alias("tok")
     )
     bit_seq = F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit")
-    if hash_family == "md5_portable":
-        hashed = toks.select("doc_id", F.md5("tok").alias("hx"))
-        # hex-digit value via instr on the digit alphabet — the one
-        # spelling both engines share (no hex-literal casts needed).
-        v = (
-            "(shiftright(instr('0123456789abcdef',"
-            " substring(hx, (bit div 4) + 1, 1)) - 1, bit % 4) & 1)"
-            " * 2 - 1"
-        )
-        bits = hashed.select("doc_id", "hx", bit_seq).select(
-            "doc_id", "bit", F.expr(v).alias("v")
-        )
-    elif hash_family == "xxhash64":
-        hashed = toks.select("doc_id", F.xxhash64("tok").alias("h"))
-        bits = hashed.select("doc_id", "h", bit_seq).select(
-            "doc_id",
-            "bit",
-            # shiftright with a column shift amount only exists in SQL form
-            F.expr("CAST(shiftright(h, bit) & 1 AS INT) * 2 - 1").alias("v"),
-        )
-    else:
-        raise ValueError(f"unknown simhash bit source: {hash_family!r}")
+    hashed = toks.select("doc_id", F.md5("tok").alias("hx"))
+    # hex-digit value via instr on the digit alphabet — the one
+    # spelling both engines share (no hex-literal casts needed).
+    v = (
+        "(shiftright(instr('0123456789abcdef',"
+        " substring(hx, (bit div 4) + 1, 1)) - 1, bit % 4) & 1)"
+        " * 2 - 1"
+    )
+    bits = hashed.select("doc_id", "hx", bit_seq).select(
+        "doc_id", "bit", F.expr(v).alias("v")
+    )
     votes = bits.groupBy("doc_id", "bit").agg(F.sum("v").alias("vote"))
     return votes.groupBy("doc_id").agg(
         F.sum(

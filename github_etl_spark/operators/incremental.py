@@ -29,19 +29,22 @@ Verdicts per batch document:
   shingles: they can't near-dup under the MinHash family, mirroring
   `minhash_signatures`).
 
-With ``hash_family="md5_portable"`` every step is replayable in SQL,
-so the whole batch-vs-corpus check is oracle-verified value-for-value
-(`dedup_incremental` in plans/ext.py). Skew: the probe side of both
-joins is the (small) batch, so a hot bucket costs store_bucket_size ×
+The MinHash family (operators/dedup.py) is md5-based, so every step
+is replayable in SQL and the whole batch-vs-corpus check is
+oracle-verified value-for-value (`dedup_incremental` in
+plans/ext.py). Skew: the probe side of both joins is the (small) batch, so a hot bucket costs store_bucket_size ×
 batch_bucket_size rows — bounded by the batch; the build path
 additionally applies the same deterministic `max_bucket_size` cap as
 `minhash_lsh_candidates` so no store bucket is unbounded either.
 
 Crash consistency: both stores live in the ingest-batch layout of
 `sinks/store.py`. `dedup_index_build` writes the JSON meta sidecar
-(hash parameters) first and the build rows into batch −1;
-`dedup_index_check`/`dedup_index_append` reuse the sidecar, so
-check-time parameters cannot drift from build-time. Every append
+(hash parameters and the MinHash family's name) first and the build
+rows into batch −1; `dedup_index_check`/`dedup_index_append` reuse
+the sidecar, so check-time parameters cannot drift from build-time.
+An index whose sidecar names another family, or none (one built
+before the family had a name), holds buckets the current hashes never
+match: reading its parameters raises ValueError. Every append
 carries its micro-batch id and DYNAMIC-OVERWRITES exactly partition
 `ingest_batch=N` of each store — replaying a crashed batch rewrites
 its own store partition instead of double-appending, and
@@ -71,13 +74,13 @@ from ..sinks.store import (
     write_build,
     write_sidecar,
 )
-from .dedup import minhash_band_buckets, signature_agreement_expr
+from .dedup import MINHASH_FAMILY, minhash_band_buckets, signature_agreement_expr
 
 _DEFAULT_META = {
     "num_hashes": 32,
     "bands": 8,
     "shingle": 3,
-    "hash_family": "xxhash64",
+    "hash_family": MINHASH_FAMILY,
     "max_bucket_size": 64,
 }
 
@@ -162,7 +165,6 @@ def incremental_dedup_verdicts(
     corpus: DataFrame,
     batch: DataFrame,
     threshold: float = 0.5,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Inline batch-vs-corpus dedup check (corpus relations computed on
     the fly). One row per batch document: (id, verdict, n_near).
@@ -175,8 +177,8 @@ def incremental_dedup_verdicts(
     """
     corpus_fp = _fingerprints(corpus)
     batch_fp = _fingerprints(batch)
-    corpus_bands = minhash_band_buckets(corpus, hash_family=hash_family)
-    batch_bands = minhash_band_buckets(batch, hash_family=hash_family)
+    corpus_bands = minhash_band_buckets(corpus)
+    batch_bands = minhash_band_buckets(batch)
     return _verdicts(
         batch, batch_fp, batch_bands, corpus_fp, corpus_bands,
         _DEFAULT_META["num_hashes"], threshold,
@@ -223,10 +225,18 @@ def dedup_index_build(
 
 
 def _read_meta(spark: SparkSession, path: str) -> dict:
-    return {
-        **_DEFAULT_META,
-        **read_sidecar(spark, path, META, "dedup_index_build"),
-    }
+    """The index's hash parameters; raises ValueError naming
+    `dedup_index_build` when the sidecar records another MinHash family
+    than the one this code hashes with, or none."""
+    meta = read_sidecar(spark, path, META, "dedup_index_build")
+    family = meta.get("hash_family")
+    if family != MINHASH_FAMILY:
+        raise ValueError(
+            f"dedup index at {path!r} was built with MinHash family "
+            f"{family!r}, not {MINHASH_FAMILY!r}: its band buckets cannot "
+            "match this code's signatures. Rebuild it with dedup_index_build."
+        )
+    return {**_DEFAULT_META, **meta}
 
 
 class BatchRows(NamedTuple):
@@ -269,8 +279,7 @@ def dedup_batch_rows(
         meta,
         _fingerprints(batch),
         minhash_band_buckets(
-            batch, meta["num_hashes"], meta["bands"], meta["shingle"],
-            meta["hash_family"],
+            batch, meta["num_hashes"], meta["bands"], meta["shingle"]
         ),
     )
 

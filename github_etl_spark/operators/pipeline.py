@@ -76,7 +76,7 @@ def hash_split(
     if len(weights) != len(names):
         raise ValueError("weights and names must align")
     total = float(sum(weights))
-    bucket = portable_hash_bucket(F.col(id_col), 100)
+    bucket = portable_hash_bucket(F.col(id_col))
     cum = 0.0
     expr = F.lit(names[-1])
     bounds: list[tuple[str, int]] = []

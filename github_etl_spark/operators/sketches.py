@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import md5_long_sql
+
 
 class HeavyHitterBoundError(ValueError):
     """The measured screening error exceeds the requested threshold —
@@ -231,16 +233,10 @@ def mg_estimate(summary: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sample_hash(id_col: str, hash_family: str):
-    if hash_family == "xxhash64":
-        return F.xxhash64(F.col(id_col))
-    if hash_family == "md5_portable":
-        # 60 bits of md5 (15 hex digits fit a signed long) — engine-
-        # portable, so DuckDB replays the SAME sample row-for-row.
-        return F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-        ).cast("long")
-    raise ValueError(f"unknown hash family: {hash_family!r}")
+def _sample_hash(id_col: str):
+    """60 bits of md5 of the id's string form — engine-portable, so
+    DuckDB replays the same sample row for row."""
+    return F.expr(md5_long_sql(f"CAST({id_col} AS STRING)"))
 
 
 def bottomk_sample(
@@ -248,7 +244,6 @@ def bottomk_sample(
     value_col: str,
     id_col: str,
     k: int,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic uniform row sample of size ≤ k: the rows whose
     hashed ids are globally smallest. Returns (hkey, ``id_col``,
@@ -264,12 +259,12 @@ def bottomk_sample(
 
     Scale shape: ``orderBy(h).limit(k)`` plans as
     TakeOrderedAndProject — per-partition top-k heaps merged on the
-    driver, no global sort, no shuffle of non-surviving rows. The
-    ``md5_portable`` family makes the sample itself replayable in SQL
-    (the catalog query's DuckDB oracle re-derives the identical sample
-    and quantiles).
+    driver, no global sort, no shuffle of non-surviving rows. The md5
+    hash makes the sample itself replayable in SQL (the catalog
+    query's DuckDB oracle re-derives the identical sample and
+    quantiles).
     """
-    h = _sample_hash(id_col, hash_family)
+    h = _sample_hash(id_col)
     return (
         df.where(F.col(value_col).isNotNull() & F.col(id_col).isNotNull())
         .select(h.alias("hkey"), F.col(id_col), F.col(value_col))
@@ -323,7 +318,6 @@ def bottomk_sample_grouped(
     id_col: str,
     group_cols: list[str],
     k: int,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Per-group bottom-k samples: for every combination of
     ``group_cols``, the k rows with smallest hashed ids — the grouped
@@ -337,7 +331,7 @@ def bottomk_sample_grouped(
     """
     from pyspark.sql import Window as W
 
-    h = _sample_hash(id_col, hash_family)
+    h = _sample_hash(id_col)
     w = W.partitionBy(*group_cols).orderBy("hkey", id_col)
     return (
         df.where(F.col(value_col).isNotNull() & F.col(id_col).isNotNull())

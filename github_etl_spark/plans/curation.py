@@ -544,7 +544,7 @@ def pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     → per-(split, shard) training-shards manifest.
 
     Every stage is individually oracle-verified elsewhere
-    (pipeline_web_curation, dedup_minhash_lsh_portable,
+    (pipeline_web_curation, dedup_minhash_lsh,
     split_leakage_safe, tokenize_encode, pack_sequences,
     shards_manifest); this query pins their ORDER and the population
     each stage sees — the vocabulary, the split proportions and the
@@ -576,9 +576,7 @@ def pipeline_pretraining_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = eager_checkpoint(
         gated.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     )
-    pairs = minhash_lsh_candidates(
-        exact, hash_family="md5_portable"
-    ).where(F.col("est_jaccard") >= 0.5)
+    pairs = minhash_lsh_candidates(exact).where(F.col("est_jaccard") >= 0.5)
     labeled = cluster_assignment(exact.select("doc_id"), pairs)
     # cluster_assignment already marks the component's min-id row
     # (is_canonical) — a map-side filter, not another corpus-wide
@@ -787,10 +785,10 @@ def pretrain_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the grown fingerprint corpus, and their admitted
     survivors' spans probe the grown span store — survivors then JOIN
     both membership relations for the next round, exactly the two
-    store appends. md5-portable hash family so every fingerprint,
-    signature, band bucket and span key replays in DuckDB
-    value-for-value. Per-round shape: stores scanned never shuffled,
-    batch broadcast on both probes, survivors eager-checkpointed."""
+    store appends. Every fingerprint, signature, band bucket and span
+    key replays in DuckDB value-for-value. Per-round shape: stores
+    scanned never shuffled, batch broadcast on both probes, survivors
+    eager-checkpointed."""
     from ..streaming.pretrain_gate import pretrain_fold_verdicts
 
     docs = load_tables(spark, sf_dir)["documents"]
@@ -799,9 +797,7 @@ def pretrain_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         (tag, docs.where(F.col("doc_id") % 4 == i))
         for i, tag in enumerate(("A", "B", "C"))
     ]
-    return pretrain_fold_verdicts(
-        seed, batches, hash_family="md5_portable"
-    )
+    return pretrain_fold_verdicts(seed, batches)
 
 
 # ------------------------------------- streaming vector-ingest gate

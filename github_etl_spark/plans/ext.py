@@ -3,9 +3,10 @@
 Where the computation is SQL-expressible, the DuckDB oracle mirrors the
 Spark expression exactly (same tokenization regex, same hash function
 where both engines share one — md5 — and integer/exact arithmetic so
-value hashes match bit-for-bit). MinHash/SimHash/LSH use Spark-side
-xxhash64, which DuckDB lacks → rows-only checks + property tests in
-tests/test_dedup.py.
+value hashes match bit-for-bit). MinHash and SimHash take their bits
+from md5, so their oracles replay them value-for-value; their
+statistical contracts (estimator accuracy, LSH recall) are property
+tests in tests/test_dedup.py.
 """
 
 from __future__ import annotations
@@ -23,9 +24,11 @@ from ..functions.text import (
     token_count_expr,
 )
 from ..operators.dedup import (
+    MINHASH_P,
     exact_dedup,
     fingerprint_dedup,
     minhash_lsh_candidates,
+    minhash_mins_sql,
     ngram_jaccard_pairs,
     simhash_signatures,
 )
@@ -294,47 +297,52 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("dedup_minhash_lsh", headline=True, sibling="minhash_estimate_error")  # xxhash64 → rows-only; sibling pins sketch accuracy
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: MinHash+LSH near-dup candidates (32 hashes, 8 bands × 4 rows).
-    Recall vs exact Jaccard asserted in tests/test_dedup.py."""
-    t = load_tables(spark, sf_dir)
-    return minhash_lsh_candidates(t["documents"])
+# The MinHash oracle relations as ONE shared CTE text (tokens ->
+# distinct 3-word shingles -> signatures under operators/dedup's family
+# -> 8 bands of 4): every MinHash oracle embeds it — the candidate
+# pairs (dedup_minhash_lsh, minhash_estimate_error, the pretraining e2e
+# composite over its curated survivor relation) and the gate rounds
+# (dedup_incremental, dedup_gate_replay, pretrain_gate_replay) — so the
+# pinned parameters (hash coefficients, band count, shingle width)
+# cannot drift between the oracles.
 
 
-# The FULL portable MinHash+LSH candidate pipeline as a shared CTE
-# chain (shingles -> 32 md5 minima -> 8 bands -> 64-cap -> pairs):
-# ONE text used by dedup_minhash_lsh_portable, minhash_estimate_error
-# AND the pretraining e2e composite (over its curated survivor
-# relation), so the pinned parameters (skew cap, band count, prefix
-# width, shingle width) cannot drift between the oracles.
-
-
-def minhash_pair_ctes(rel: str = "documents", prefix: str = "") -> str:
-    """The portable MinHash pair CTE chain over relation ``rel``
-    (columns doc_id, text), CTE names prefixed so a composite can
-    embed it without name collisions. The final CTE is
-    ``{prefix}pairs`` with (id_a, id_b, sa, sb)."""
+def minhash_band_ctes(rel: str = "documents", prefix: str = "") -> str:
+    """CTEs over relation ``rel`` (columns doc_id, text), names
+    prefixed so a composite can embed them without collisions:
+    ``{prefix}sh`` (doc_id, s) — one row per distinct shingle — and
+    ``{prefix}bands`` (doc_id, sig, band, bucket), one row per document
+    × band, the bucket being the band's 4-value slice of the signature
+    (operators/dedup.minhash_band_buckets)."""
     p = prefix
-    return f"""{p}toks AS (SELECT doc_id, {_SQL_TOKS} AS w FROM {rel}),
+    return f"""{p}toks AS MATERIALIZED (SELECT doc_id, {_SQL_TOKS} AS w FROM {rel}),
     {p}sh AS (
       SELECT doc_id, unnest(list_distinct(list_transform(
                range(1, greatest(len(w) - 2, 0) + 1),
                i -> array_to_string(w[i:i+2], ' ')))) AS s
       FROM {p}toks
     ),
-    {p}hm AS (
-      SELECT doc_id, i.i AS i,
-             MIN(substr(md5(CAST(i.i AS VARCHAR) || ':' || s), 1, 16)) AS mh
-      FROM {p}sh CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-      GROUP BY doc_id, i.i
+    {p}sig AS (
+      SELECT doc_id, [{minhash_mins_sql(32)}] AS sig
+      FROM (SELECT doc_id,
+                   CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT)
+                     % {MINHASH_P} AS x
+            FROM {p}sh)
+      GROUP BY doc_id
     ),
-    {p}sig AS (SELECT doc_id, list(mh ORDER BY i) AS sig FROM {p}hm GROUP BY doc_id),
-    {p}bands AS (
-      SELECT doc_id, sig, b.b AS band,
-             array_to_string(sig[b.b*4+1 : b.b*4+4], '') AS bucket
+    {p}bands AS MATERIALIZED (
+      SELECT doc_id, sig, b.b AS band, sig[b.b*4+1 : b.b*4+4] AS bucket
       FROM {p}sig CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) b
-    ),
+    )"""
+
+
+def minhash_pair_ctes(rel: str = "documents", prefix: str = "") -> str:
+    """`minhash_band_ctes` plus the candidate pairs of
+    `operators.dedup.minhash_lsh_candidates`: the deterministic
+    64-member cap per bucket and ``{prefix}pairs`` with
+    (id_a, id_b, sa, sb)."""
+    p = prefix
+    return f"""{minhash_band_ctes(rel, prefix)},
     {p}capped AS (
       SELECT *,
              row_number() OVER (PARTITION BY band, bucket ORDER BY doc_id) AS rn
@@ -351,9 +359,60 @@ def minhash_pair_ctes(rel: str = "documents", prefix: str = "") -> str:
 
 _SQL_MINHASH_PAIR_CTES = minhash_pair_ctes()
 
+# The gate rounds' relations: the bands plus each document's exact
+# fingerprint (operators/incremental._fingerprints).
+_SQL_MINHASH_CTES = f"""
+    {minhash_band_ctes()},
+    fp AS MATERIALIZED (
+      SELECT doc_id,
+             md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fingerprint
+      FROM toks
+    )
+"""
+
+
+def _gate_round_sql(batch_cte: str, corpus_cte: str, tag: str) -> str:
+    """One gate round as CTEs: candidates, agreement screen, exact
+    fingerprint probe, verdict CASE — verdicts for ``batch_cte``
+    against ``corpus_cte``."""
+    return f"""
+    cand_{tag} AS (
+      SELECT DISTINCT n.doc_id AS batch_doc, o.doc_id AS corpus_doc,
+                      n.sig AS sn, o.sig AS so
+      FROM bands n
+      JOIN {batch_cte} bb ON bb.doc_id = n.doc_id
+      JOIN bands o ON n.band = o.band AND n.bucket = o.bucket
+      JOIN {corpus_cte} cc ON cc.doc_id = o.doc_id
+    ),
+    near_{tag} AS (
+      SELECT batch_doc, COUNT(*) AS n_near
+      FROM cand_{tag}
+      WHERE len(list_filter(range(1, 33), i -> sn[i] = so[i])) / 32.0 >= 0.5
+      GROUP BY batch_doc
+    ),
+    exact_{tag} AS (
+      SELECT DISTINCT nf.doc_id
+      FROM fp nf
+      JOIN {batch_cte} bb ON bb.doc_id = nf.doc_id
+      JOIN fp cf ON nf.fingerprint = cf.fingerprint
+      JOIN {corpus_cte} cc ON cc.doc_id = cf.doc_id
+    ),
+    v_{tag} AS (
+      SELECT bb.doc_id,
+             CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
+                  WHEN COALESCE(nr.n_near, 0) > 0 THEN 'near_dup'
+                  ELSE 'new' END AS verdict,
+             CAST(COALESCE(nr.n_near, 0) AS BIGINT) AS n_near
+      FROM {batch_cte} bb
+      LEFT JOIN exact_{tag} e ON e.doc_id = bb.doc_id
+      LEFT JOIN near_{tag} nr ON nr.batch_doc = bb.doc_id
+    )
+    """
+
 
 @query(
-    "dedup_minhash_lsh_portable",
+    "dedup_minhash_lsh",
+    headline=True,
     oracle=f"""
     WITH {_SQL_MINHASH_PAIR_CTES}
     SELECT id_a, id_b,
@@ -362,28 +421,38 @@ _SQL_MINHASH_PAIR_CTES = minhash_pair_ctes()
     FROM pairs
     """,
 )
-def dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: the FULL MinHash+LSH candidate pipeline — shingling, 32
     permutation minima, 8-band bucketing, deterministic 64-member skew
     cap, in-row pair expansion, signature-agreement jaccard estimate —
-    verified value-for-value against DuckDB via the md5-portable hash
-    family (h_i = md5 prefix of "i:"+shingle, lexicographic minima,
-    band key = concatenated hex slice). The headline dedup_minhash_lsh
-    keeps the faster engine-specific xxhash64 family; only the hash
-    differs between the two paths (same code, `hash_family=` switch)."""
+    verified value-for-value against DuckDB (operators/dedup's
+    md5-based family computes the same integers in both engines).
+    Recall vs exact Jaccard asserted in tests/test_dedup.py."""
     t = load_tables(spark, sf_dir)
-    return minhash_lsh_candidates(t["documents"], hash_family="md5_portable")
+    return minhash_lsh_candidates(t["documents"])
 
 
-@query("dedup_incremental", headline=True, sibling="dedup_incremental_portable")  # xxhash64 → rows-only
+@query(
+    "dedup_incremental",
+    headline=True,
+    oracle=f"""
+    WITH {_SQL_MINHASH_CTES.strip()},
+    inb AS (SELECT doc_id FROM documents WHERE doc_id % 5 = 0),
+    corp AS (SELECT doc_id FROM documents WHERE doc_id % 5 <> 0),
+    {_gate_round_sql("inb", "corp", "i").strip()}
+    SELECT doc_id, verdict, n_near FROM v_i
+    """,
+)
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: incremental batch-vs-corpus dedup on the fast xxhash64
-    family (production default; the band-bucket values are
-    engine-specific, so the driver checks rows/schema only). The
-    md5-portable sibling `dedup_incremental_portable` oracle-checks the
-    full verdict pipeline value-for-value, and
-    tests/test_incremental.py pins that the two families agree on
-    every family-independent verdict (exact_dup)."""
+    """EXT: incremental batch-vs-corpus dedup — the 100 TB crawl-ingest
+    shape (operators/incremental.py). Documents split into a corpus
+    (doc_id % 5 != 0) and an ingest batch (doc_id % 5 == 0); each batch
+    doc is classified exact_dup (fingerprint already in corpus),
+    near_dup (MinHash LSH candidate vs a corpus doc with signature
+    agreement >= 0.5) or new. The oracle replays fingerprinting,
+    signatures, banding, the candidate join and the verdict CASE
+    value-for-value. The corpus side is scanned, never shuffled (batch
+    broadcast on both probe joins)."""
     from ..operators.incremental import incremental_dedup_verdicts
 
     t = load_tables(spark, sf_dir)
@@ -391,84 +460,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     return incremental_dedup_verdicts(corpus, batch, threshold=0.5)
-
-
-@query(
-    "dedup_incremental_portable",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, {_SQL_TOKS} AS w FROM documents),
-    fp AS (
-      SELECT doc_id,
-             md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fingerprint
-      FROM toks
-    ),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' ')))) AS s
-      FROM toks
-    ),
-    hm AS (
-      SELECT doc_id, i.i AS i,
-             MIN(substr(md5(CAST(i.i AS VARCHAR) || ':' || s), 1, 16)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-      GROUP BY doc_id, i.i
-    ),
-    sig AS (SELECT doc_id, list(mh ORDER BY i) AS sig FROM hm GROUP BY doc_id),
-    bands AS (
-      SELECT doc_id, sig, b.b AS band,
-             array_to_string(sig[b.b*4+1 : b.b*4+4], '') AS bucket
-      FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) b
-    ),
-    cand AS (
-      SELECT DISTINCT n.doc_id AS batch_doc, o.doc_id AS corpus_doc,
-                      n.sig AS sn, o.sig AS so
-      FROM bands n JOIN bands o
-        ON n.band = o.band AND n.bucket = o.bucket
-       AND n.doc_id % 5 = 0 AND o.doc_id % 5 <> 0
-    ),
-    near AS (
-      SELECT batch_doc, COUNT(*) AS n_near
-      FROM cand
-      WHERE len(list_filter(range(1, 33), i -> sn[i] = so[i])) / 32.0 >= 0.5
-      GROUP BY batch_doc
-    ),
-    exact AS (
-      SELECT DISTINCT nf.doc_id
-      FROM fp nf JOIN fp cf
-        ON nf.fingerprint = cf.fingerprint
-       AND nf.doc_id % 5 = 0 AND cf.doc_id % 5 <> 0
-    )
-    SELECT d.doc_id,
-           CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
-                WHEN COALESCE(nr.n_near, 0) > 0 THEN 'near_dup'
-                ELSE 'new' END AS verdict,
-           CAST(COALESCE(nr.n_near, 0) AS BIGINT) AS n_near
-    FROM documents d
-    LEFT JOIN exact e ON e.doc_id = d.doc_id
-    LEFT JOIN near nr ON nr.batch_doc = d.doc_id
-    WHERE d.doc_id % 5 = 0
-    """,
-)
-def dedup_incremental_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: incremental batch-vs-corpus dedup — the 100 TB crawl-ingest
-    shape (operators/incremental.py). Documents split into a corpus
-    (doc_id % 5 != 0) and an ingest batch (doc_id % 5 == 0); each batch
-    doc is classified exact_dup (fingerprint already in corpus),
-    near_dup (MinHash LSH candidate vs a corpus doc with signature
-    agreement >= 0.5) or new. md5-portable hash family, so the oracle
-    replays fingerprinting, signatures, banding, the candidate join and
-    the verdict CASE value-for-value. The corpus side is scanned, never
-    shuffled (batch broadcast on both probe joins)."""
-    from ..operators.incremental import incremental_dedup_verdicts
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"]
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    return incremental_dedup_verdicts(
-        corpus, batch, threshold=0.5, hash_family="md5_portable"
-    )
 
 
 @query(
@@ -495,13 +486,12 @@ def dedup_incremental_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: 64-bit SimHash signatures (near-dup = small hamming
-    distance). The catalog query uses the md5-portable bit source so
-    the full bit-vote pipeline — per-bit ±1 votes, majority, packing
-    (bit 63 is the sign bit in both engines) — is oracle-checked;
-    the xxhash64 production default keeps its property tests in
-    tests/test_dedup.py."""
+    distance). The bits come from md5, so the full bit-vote pipeline —
+    per-bit ±1 votes, majority, packing (bit 63 is the sign bit in both
+    engines) — is oracle-checked; its similarity ordering is a
+    property test in tests/test_dedup.py."""
     t = load_tables(spark, sf_dir)
-    return simhash_signatures(t["documents"], hash_family="md5_portable")
+    return simhash_signatures(t["documents"])
 
 
 @query(
@@ -3230,10 +3220,7 @@ def quantile_sketch_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import bottomk_sample, sample_quantiles
 
     t = load_tables(spark, sf_dir)
-    sample = bottomk_sample(
-        t["orders"], "o_totalprice", "o_orderkey", k=500,
-        hash_family="md5_portable",
-    )
+    sample = bottomk_sample(t["orders"], "o_totalprice", "o_orderkey", k=500)
     return sample_quantiles(sample, "o_totalprice", [0.10, 0.50, 0.90, 0.99])
 
 
@@ -3288,8 +3275,7 @@ def quantile_sketch_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["customer"], F.col("o_custkey") == F.col("c_custkey")
     )
     sample = bottomk_sample_grouped(
-        joined, "o_totalprice", "o_orderkey", ["c_mktsegment"], k=200,
-        hash_family="md5_portable",
+        joined, "o_totalprice", "o_orderkey", ["c_mktsegment"], k=200
     )
     return grouped_sample_quantiles(
         sample, "o_totalprice", ["c_mktsegment"], [0.50, 0.90]
@@ -3498,8 +3484,7 @@ def quantile_sketch_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sample = bottomk_sample_grouped(
-        joined, "o_totalprice", "o_orderkey", ["c_mktsegment"], k=200,
-        hash_family="md5_portable",
+        joined, "o_totalprice", "o_orderkey", ["c_mktsegment"], k=200
     )
     sr = (
         sample.select("c_mktsegment", cents.alias("v"))
@@ -3808,76 +3793,6 @@ def mm_features_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- streaming gate, replayed
 
-# Shared signature/banding CTE prefix (md5-portable family, 32 hashes,
-# 8 bands, 3-word shingles) — the same relations the
-# dedup_incremental_portable oracle builds inline.
-_SQL_MINHASH_CTES = f"""
-    toks AS MATERIALIZED (SELECT doc_id, {_SQL_TOKS} AS w FROM documents),
-    fp AS MATERIALIZED (
-      SELECT doc_id,
-             md5(array_to_string(list_sort(list_distinct(w)), ' ')) AS fingerprint
-      FROM toks
-    ),
-    sh AS (
-      SELECT doc_id, unnest(list_distinct(list_transform(
-               range(1, greatest(len(w) - 2, 0) + 1),
-               i -> array_to_string(w[i:i+2], ' ')))) AS s
-      FROM toks
-    ),
-    hm AS (
-      SELECT doc_id, i.i AS i,
-             MIN(substr(md5(CAST(i.i AS VARCHAR) || ':' || s), 1, 16)) AS mh
-      FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS i) i
-      GROUP BY doc_id, i.i
-    ),
-    sig AS (SELECT doc_id, list(mh ORDER BY i) AS sig FROM hm GROUP BY doc_id),
-    bands AS MATERIALIZED (
-      SELECT doc_id, sig, b.b AS band,
-             array_to_string(sig[b.b*4+1 : b.b*4+4], '') AS bucket
-      FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS b) b
-    )
-"""
-
-
-def _gate_round_sql(batch_cte: str, corpus_cte: str, tag: str) -> str:
-    """One gate round as CTEs: candidates, agreement screen, exact
-    fingerprint probe, verdict CASE — verdicts for ``batch_cte``
-    against ``corpus_cte``."""
-    return f"""
-    cand_{tag} AS (
-      SELECT DISTINCT n.doc_id AS batch_doc, o.doc_id AS corpus_doc,
-                      n.sig AS sn, o.sig AS so
-      FROM bands n
-      JOIN {batch_cte} bb ON bb.doc_id = n.doc_id
-      JOIN bands o ON n.band = o.band AND n.bucket = o.bucket
-      JOIN {corpus_cte} cc ON cc.doc_id = o.doc_id
-    ),
-    near_{tag} AS (
-      SELECT batch_doc, COUNT(*) AS n_near
-      FROM cand_{tag}
-      WHERE len(list_filter(range(1, 33), i -> sn[i] = so[i])) / 32.0 >= 0.5
-      GROUP BY batch_doc
-    ),
-    exact_{tag} AS (
-      SELECT DISTINCT nf.doc_id
-      FROM fp nf
-      JOIN {batch_cte} bb ON bb.doc_id = nf.doc_id
-      JOIN fp cf ON nf.fingerprint = cf.fingerprint
-      JOIN {corpus_cte} cc ON cc.doc_id = cf.doc_id
-    ),
-    v_{tag} AS (
-      SELECT bb.doc_id,
-             CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
-                  WHEN COALESCE(nr.n_near, 0) > 0 THEN 'near_dup'
-                  ELSE 'new' END AS verdict,
-             CAST(COALESCE(nr.n_near, 0) AS BIGINT) AS n_near
-      FROM {batch_cte} bb
-      LEFT JOIN exact_{tag} e ON e.doc_id = bb.doc_id
-      LEFT JOIN near_{tag} nr ON nr.batch_doc = bb.doc_id
-    )
-    """
-
-
 @query(
     "dedup_gate_replay",
     oracle=f"""
@@ -3908,9 +3823,9 @@ def dedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate's admit step — and ingest B (doc_id%5==1) is classified
     against the grown corpus. Same `_verdicts` core as the live gate
     (operators/incremental.py — the inline/materialized equality is
-    pinned by the index roundtrip test), md5-portable hash family so
-    fingerprints, signatures, banding, both candidate joins and both
-    verdict CASEs replay in DuckDB value-for-value. Per-round shape:
+    pinned by the index roundtrip test); fingerprints, signatures,
+    banding, both candidate joins and both verdict CASEs replay in
+    DuckDB value-for-value. Per-round shape:
     corpus scanned never shuffled, batch broadcast on both probes."""
     from ..operators.incremental import incremental_dedup_verdicts
 
@@ -3919,9 +3834,7 @@ def dedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = docs.filter(~(F.col("doc_id") % 5).isin(0, 1))
     ing_a = docs.filter(F.col("doc_id") % 5 == 0)
     ing_b = docs.filter(F.col("doc_id") % 5 == 1)
-    va = incremental_dedup_verdicts(
-        seed, ing_a, threshold=0.5, hash_family="md5_portable"
-    )
+    va = incremental_dedup_verdicts(seed, ing_a, threshold=0.5)
     survivors_a = ing_a.join(
         F.broadcast(
             va.filter(F.col("verdict") == "new").select("doc_id")
@@ -3929,10 +3842,7 @@ def dedup_gate_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     vb = incremental_dedup_verdicts(
-        seed.unionByName(survivors_a),
-        ing_b,
-        threshold=0.5,
-        hash_family="md5_portable",
+        seed.unionByName(survivors_a), ing_b, threshold=0.5
     )
     return va.select(
         F.lit("A").alias("ingest"), "doc_id", "verdict", "n_near"
@@ -4203,7 +4113,7 @@ def streaming_bottomk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash_bucket(F.col("o_orderkey"), _BK_SHARDS)
         .cast("int")
         .alias("shard"),
-        _sample_hash("o_orderkey", "md5_portable").alias("hkey"),
+        _sample_hash("o_orderkey").alias("hkey"),
         F.col("o_orderkey").alias("rid"),
         F.col("o_totalprice").alias("value"),
     )
@@ -4589,7 +4499,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join — without it the whole signature pipeline runs twice. It is
     # LSH-screen-bounded, so materializing it is cheap at any scale.
     pairs = (
-        minhash_lsh_candidates(docs, hash_family="md5_portable")
+        minhash_lsh_candidates(docs)
         .select("id_a", "id_b", "est_jaccard")
         .localCheckpoint(eager=True)
     )

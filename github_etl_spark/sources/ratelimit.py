@@ -58,13 +58,13 @@ class TokenBucket:
         )
         self._last = now
 
-    def try_acquire(self, n: int = 1) -> float:
+    def try_acquire(self) -> float:
         with self._lock:
             self._refill()
-            if self._tokens >= n:
-                self._tokens -= n
+            if self._tokens >= 1:
+                self._tokens -= 1
                 return 0.0
-            return (n - self._tokens) / self.rate
+            return (1 - self._tokens) / self.rate
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -87,7 +87,7 @@ class _Handler(BaseHTTPRequestHandler):
             self.send_response(403)
             self.end_headers()
             return
-        wait = self.bucket.try_acquire(1)  # bound subclass's bucket
+        wait = self.bucket.try_acquire()  # bound subclass's bucket
         body = json.dumps({"wait": wait}).encode()
         self.send_response(200)
         self.send_header("Content-Type", "application/json")

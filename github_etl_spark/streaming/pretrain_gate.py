@@ -190,7 +190,6 @@ def stream_pretrain_gated(
 def pretrain_fold_verdicts(
     seed: DataFrame,
     batches: list[tuple[str, DataFrame]],
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Deterministic replay of the streaming composite as an N-ingest
     batch fold with INLINE store derivation — verdict-identical to
@@ -220,7 +219,7 @@ def pretrain_fold_verdicts(
     corpus = seed.select("doc_id", "text")
     for tag, b in batches:
         gated = b.where(web_gate_expr(F.col("text")))
-        fp = incremental_dedup_verdicts(corpus, gated, hash_family=hash_family)
+        fp = incremental_dedup_verdicts(corpus, gated)
         new_ids = fp.where(F.col("verdict") == "new").select("doc_id")
         survivors = eager_checkpoint(
             gated.select("doc_id", "text").join(F.broadcast(new_ids), "doc_id")

@@ -1,10 +1,9 @@
 """Property tests for the approximate dedup/similarity operators.
 
-The xxhash64-based operators (minhash, simhash, LSH) have no DuckDB
-oracle (different hash function), so the driver only row-count-checks
-them. These tests pin the *statistical* contracts instead: estimator
-accuracy against exactly-computed ground truth, and candidate recall
-against the exact operators.
+The DuckDB oracles pin the MinHash/SimHash/LSH operators' values.
+These tests pin their *statistical* contracts: estimator accuracy
+against exactly-computed ground truth, and candidate recall against
+the exact operators.
 """
 
 from __future__ import annotations

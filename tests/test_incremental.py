@@ -115,26 +115,6 @@ def test_short_docs_are_new_not_crash(spark, tmp_path):
     assert out == {9001: "new", 9002: "new"}
 
 
-def test_hash_families_agree_on_exact_dups(spark):
-    """exact_dup verdicts come from the md5 fingerprint store, which is
-    hash-family-independent — the xxhash64 production family and the
-    md5-portable (oracle) family must flag the identical doc set. The
-    near-dup sets may differ (different LSH band keys) but both must
-    classify every batch doc."""
-    corpus, batch = _split(spark)
-    fast = {r.doc_id: r.verdict for r in incremental_dedup_verdicts(corpus, batch).collect()}
-    portable = {
-        r.doc_id: r.verdict
-        for r in incremental_dedup_verdicts(
-            corpus, batch, hash_family="md5_portable"
-        ).collect()
-    }
-    assert set(fast) == set(portable)
-    assert {i for i, v in fast.items() if v == "exact_dup"} == {
-        i for i, v in portable.items() if v == "exact_dup"
-    }
-
-
 def _write_docs_json(path, rows):
     import json as _json
     import os
@@ -277,9 +257,53 @@ def test_gate_appends_equal_the_from_text_derivation(spark, tmp_path):
     bands = appended("bands")
     assert bands == rows(
         minhash_band_buckets(
-            survivors, meta["num_hashes"], meta["bands"], meta["shingle"],
-            meta["hash_family"],
+            survivors, meta["num_hashes"], meta["bands"], meta["shingle"]
         )
     )
     assert 9001 in {r[0] for r in fps}
     assert 9001 not in {r[2] for r in bands}  # sorted columns: band, bucket, doc, signature
+
+
+@pytest.mark.parametrize("family", ["xxhash64", None])
+def test_index_of_another_minhash_family_is_refused(spark, tmp_path, family):
+    """An index whose sidecar names another MinHash family (the
+    xxhash64 of earlier builds), or none, holds band buckets the
+    current signatures never match: checking against it, directly or
+    through a pretrain-gate micro-batch, raises ValueError naming
+    dedup_index_build, and the gate publishes nothing."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from github_etl_spark.operators.curation import span_index_build
+    from github_etl_spark.sinks.store import META, read_sidecar, write_sidecar
+    from github_etl_spark.streaming.pretrain_gate import stream_pretrain_gated
+
+    corpus, batch = _split(spark)
+    index = str(tmp_path / "index")
+    dedup_index_build(corpus, index)
+    span_index_build(corpus, str(tmp_path / "spans"))
+    meta = read_sidecar(spark, index, META, "dedup_index_build")
+    if family is None:
+        del meta["hash_family"]
+    else:
+        meta["hash_family"] = family
+    write_sidecar(spark, index, META, meta)
+
+    with pytest.raises(ValueError, match="dedup_index_build"):
+        dedup_index_check(spark, index, batch)
+    with pytest.raises(ValueError, match="dedup_index_build"):
+        dedup_batch_rows(spark, index, batch)
+
+    land = str(tmp_path / "landing")
+    _write_docs_json(land, [(9001, "a brand new document about tidal kite surveys in the fjord")])
+    out = str(tmp_path / "published")
+    q = stream_pretrain_gated(
+        spark, land, index, str(tmp_path / "spans"), out,
+        str(tmp_path / "ckpt"), max_files_per_trigger=1,
+    )
+    with pytest.raises(StreamingQueryException, match="dedup_index_build"):
+        q.awaitTermination(120)
+    q.stop()
+    published = [f for _, _, fs in os.walk(out) for f in fs if f.endswith(".parquet")]
+    assert published == []

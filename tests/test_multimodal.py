@@ -871,7 +871,7 @@ def test_mulaw_wav_container_roundtrip():
 
     rng = np.random.default_rng(3)
     s = rng.integers(-32768, 32768, (200, 2)).astype(np.int16)
-    wav = encode_wav_mulaw(s, 8000)
+    wav = encode_wav_mulaw(s)
     assert len(wav) < len(encode_wav16(s, 8000)) * 0.6  # real 2:1 compression
     out, rate = decode_wav16(wav)
     assert rate == 8000 and out.shape == (200, 2)
@@ -897,7 +897,7 @@ def test_mulaw_wav_flows_through_audio_operators(spark):
 
     s = mulaw_decode(mulaw_encode(np.arange(-4000, 4000, 40, dtype=np.int16)))
     media = spark.createDataFrame(
-        [(1, bytearray(encode_wav_mulaw(s, 8000)))], "media_id long, content binary"
+        [(1, bytearray(encode_wav_mulaw(s)))], "media_id long, content binary"
     )
     row = wav_decode_stats(media).head()
     assert row["decode_error"] is None
@@ -915,7 +915,7 @@ def test_mulaw_malformed_variants_raise():
 
     from github_etl_spark.multimodal.media import decode_wav16, encode_wav_mulaw
 
-    good = bytearray(encode_wav_mulaw(np.arange(8, dtype=np.int16), 8000))
+    good = bytearray(encode_wav_mulaw(np.arange(8, dtype=np.int16)))
     bad_bits = bytearray(good)
     bad_bits[34:36] = (16).to_bytes(2, "little")  # tag 7 + 16 bits
     with pytest.raises(ValueError, match="unsupported WAV variant"):
@@ -925,7 +925,7 @@ def test_mulaw_malformed_variants_raise():
     with pytest.raises(ValueError, match="unsupported WAV variant"):
         decode_wav16(bytes(bad_tag))
     # trailing partial frame for a stereo mu-law file
-    stereo = bytearray(encode_wav_mulaw(np.zeros((4, 2), dtype=np.int16), 8000))
+    stereo = bytearray(encode_wav_mulaw(np.zeros((4, 2), dtype=np.int16)))
     stereo[40:44] = (7).to_bytes(4, "little")  # data size not % channels
     with pytest.raises(ValueError, match="partial frame|truncated"):
         decode_wav16(bytes(stereo))
@@ -2059,7 +2059,7 @@ def test_transcode_audio_normalizes_mixed_corpus(spark):
     media = spark.createDataFrame(
         [
             (1, bytearray(encode_wav16(pcm, 8000))),
-            (2, bytearray(encode_wav_mulaw(mu, 8000))),
+            (2, bytearray(encode_wav_mulaw(mu))),
             (3, bytearray(encode_flac(pcm, 16000))),
             (4, bytearray(encode_flac(st, 8000))),
             (5, bytearray(b"\x00garbage")),

@@ -11,7 +11,8 @@ queries are reference code), and every call under the library,
 ``perfbench/``, ``tools/``, ``tests/``, ``bench.py`` and
 ``__spark_entry__.py``. A call passes a parameter by keyword or by
 position (methods offset by ``self``/``cls``); a call through an import
-alias (``from m import f as g``) is a call to ``f``. Names defined more than
+alias (``from m import f as g``) is a call to ``f``, and
+``functools.partial(f, a, k=v)`` is the call ``f(a, k=v)``. Names defined more than
 once, and names some call reaches through ``*args``/``**kwargs``, are
 skipped: a call cannot be tied to one definition by name alone, nor a
 splatted argument to one parameter.
@@ -129,32 +130,45 @@ def _library_defs():
     return defs
 
 
-def _calls():
-    """(callee name -> [call nodes], callee names some call splats)."""
+def _partial_target(call: ast.Call):
+    """For ``functools.partial(f, a, k=v)`` or ``partial(f, ...)``, the
+    call it stands for: ``f(a, k=v)``; otherwise ``call`` itself."""
+    if _callee(call) != "partial" or not call.args:
+        return call
+    return ast.Call(func=call.args[0], args=call.args[1:], keywords=call.keywords)
+
+
+def _calls(sources=None):
+    """(callee name -> [call nodes], callee names some call splats),
+    over the caller paths, or over ``sources`` (source strings) when
+    given. A ``partial`` counts as a call to the function it wraps."""
+    if sources is None:
+        trees = [_parse(path) for root in CALLER_PATHS for path in _py_files(root)]
+    else:
+        trees = [ast.parse(src) for src in sources]
     calls = defaultdict(list)
     splat = set()
-    for root in CALLER_PATHS:
-        for path in _py_files(root):
-            tree = _parse(path)
-            aliases = {
-                a.asname: a.name
-                for node in ast.walk(tree)
-                if isinstance(node, ast.ImportFrom)
-                for a in node.names
-                if a.asname
-            }
-            for node in ast.walk(tree):
-                if not isinstance(node, ast.Call):
-                    continue
-                name = _callee(node)
-                if name is None:
-                    continue
-                name = aliases.get(name, name)
-                calls[name].append(node)
-                if any(k.arg is None for k in node.keywords) or any(
-                    isinstance(a, ast.Starred) for a in node.args
-                ):
-                    splat.add(name)
+    for tree in trees:
+        aliases = {
+            a.asname: a.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.asname
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            node = _partial_target(node)
+            name = _callee(node)
+            if name is None:
+                continue
+            name = aliases.get(name, name)
+            calls[name].append(node)
+            if any(k.arg is None for k in node.keywords) or any(
+                isinstance(a, ast.Starred) for a in node.args
+            ):
+                splat.add(name)
     return calls, splat
 
 
@@ -239,6 +253,23 @@ def test_every_defaulted_parameter_is_passed_by_some_call():
     assert not offenders, "defaulted parameters no call passes:\n" + "\n".join(
         f"  {where} {fn}({param})" for where, fn, param in offenders
     )
+
+
+def test_partial_counts_as_a_call_to_the_wrapped_function():
+    calls, splat = _calls([
+        "import functools\n"
+        "from functools import partial\n"
+        "functools.partial(append, rows, 'fp', ingest_batch=3)\n"
+        "partial(m.fold, spark, 'bands')\n"
+        "partial(splatted, *args)\n"
+    ])
+    (append,) = calls["append"]
+    assert _passed(append, "ingest_batch", None).value == 3
+    assert _passed(append, "table", 1).value == "fp"
+    (fold,) = calls["fold"]
+    assert _passed(fold, "table", 1).value == "bands"
+    assert _passed(fold, "batch", 2) is None
+    assert "splatted" in splat
 
 
 def test_no_column_name_parameter_is_the_same_literal_at_every_call():

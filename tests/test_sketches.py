@@ -187,20 +187,6 @@ def test_bottomk_quantile_accuracy(spark):
     assert abs(row.q_50 - 5000) < 800  # O(1/sqrt(k)) tolerance
 
 
-def test_bottomk_portable_matches_xxhash_size(spark):
-    from github_etl_spark.operators.sketches import bottomk_sample
-
-    df = spark.range(0, 1000).select(
-        F.col("id").alias("rid"), F.col("id").cast("double").alias("v")
-    )
-    for fam in ("xxhash64", "md5_portable"):
-        assert bottomk_sample(df, "v", "rid", 100, hash_family=fam).count() == 100
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="hash family"):
-        bottomk_sample(df, "v", "rid", 100, hash_family="nope")
-
-
 def test_grouped_bottomk_merge_equals_whole(spark):
     from github_etl_spark.operators.sketches import bottomk_sample_grouped
 
