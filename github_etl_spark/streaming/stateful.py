@@ -271,9 +271,11 @@ def streaming_bottomk_sample(
 
     The union of shard samples is a SUPERSET of the global bottom-k —
     fold emitted fragments with ``operators/sketches.bottomk_merge``
-    (re-take the k smallest) to recover EXACTLY the sample the batch
-    operator would compute over the whole stream so far; quantiles
-    then come from ``sample_quantiles`` unchanged. The streaming
+    (re-take the k smallest) to recover EXACTLY the whole stream's
+    bottom-k by ``xxhash64(id)`` so far; quantiles then come from
+    ``sample_quantiles`` unchanged. (The batch ``bottomk_sample`` ranks
+    by an md5 prefix instead, so it draws a different, equally uniform
+    sample.) The streaming
     triplet (MG heavy hitters, bottom-k quantiles, plus the built-in
     HLL/approx aggregates under windowed aggregation) keeps every
     sketch the batch layer maintains ALSO maintainable on the stream.

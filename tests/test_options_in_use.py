@@ -12,10 +12,10 @@ queries are reference code), and every call under the library,
 ``__spark_entry__.py``. A call passes a parameter by keyword or by
 position (methods offset by ``self``/``cls``); a call through an import
 alias (``from m import f as g``) is a call to ``f``, and
-``functools.partial(f, a, k=v)`` is the call ``f(a, k=v)``. Names defined more than
-once, and names some call reaches through ``*args``/``**kwargs``, are
-skipped: a call cannot be tied to one definition by name alone, nor a
-splatted argument to one parameter.
+``functools.partial(f, a, k=v)`` is the call ``f(a, k=v)``. Names
+defined more than once, and names some call reaches through
+``*args``/``**kwargs``, are skipped: a call cannot be tied to one
+definition by name alone, nor a splatted argument to one parameter.
 
 Run ``python tests/test_options_in_use.py`` to print the counts and
 the offenders of both scans.
