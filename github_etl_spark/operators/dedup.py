@@ -57,8 +57,19 @@ def fingerprint_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def _shingles(text_col, n: int = 3):
-    """Word n-gram shingles as a distinct array column.
+# ---------------------------------------------------------------------------
+# Spark SQL text builders (r13 OPTIMIZATION). A Column-API builder
+# constructs its tree through py4j one call per node (~1.8 ms RTT each);
+# `minhash_lsh_candidates` built that way cost ~1.0-1.6 s per CALL — over
+# half of dedup_minhash_lsh's total bench time. Each builder below renders
+# its expression tree as one SQL string parsed in a single call. The
+# DuckDB oracle mirrors live in plans/ext.py; change one, change both.
+# ---------------------------------------------------------------------------
+
+
+def _shingles_sql(n: int) -> str:
+    """Word n-gram shingles of ``text`` as a distinct array, in Spark
+    SQL text.
 
     Documents shorter than n tokens yield an EMPTY shingle set (matches
     the oracle's range() semantics) rather than a padded partial gram.
@@ -66,25 +77,6 @@ def _shingles(text_col, n: int = 3):
     `transform(sequence, i -> slice(toks, i, n))` form is O(L²)
     (measured 5× slower on the sf0.1 corpus, see operators/pipeline.py).
     """
-    from .pipeline import ngrams_expr
-
-    return F.array_distinct(ngrams_expr(tokens_expr(text_col), n))
-
-
-# ---------------------------------------------------------------------------
-# Spark-SQL string twins (r13 OPTIMIZATION). The Column-API builders above
-# construct their trees through py4j one call at a time (~1.8 ms RTT in
-# this sandbox); `minhash_lsh_candidates` alone cost ~1.0-1.6 s per CALL
-# to construct — over half of dedup_minhash_lsh's total bench time. Each
-# builder below renders the IDENTICAL expression tree as one SQL string
-# parsed in a single call. The DuckDB oracle mirrors live in plans/ext.py;
-# change one, change both.
-# ---------------------------------------------------------------------------
-
-
-def _shingles_sql(n: int) -> str:
-    """_shingles (distinct word n-grams of ``text``) as Spark SQL text
-    — the same zipped-slice construction, O(n·L) per row."""
     toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     ng = f"(size({toks}) - {n - 1})"
     out = f"slice({toks}, 1, {ng})"
@@ -118,9 +110,13 @@ MINHASH_FAMILY = "md5_universal_p31"
 def md5_long_sql(expr: str) -> str:
     """The first 15 hex digits (60 bits) of ``md5(expr)`` as a
     non-negative long, in Spark SQL — the engine-portable integer hash
-    behind the MinHash family and the bottom-k sample. DuckDB spells it
-    ``CAST(concat('0x', substr(md5(expr), 1, 15)) AS BIGINT)``."""
+    behind the MinHash family and the bottom-k sample."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def sql_md5_long(expr: str) -> str:
+    """`md5_long_sql`'s long as DuckDB SQL text (oracle lockstep)."""
+    return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 def minhash_mins_sql(num_hashes: int) -> str:
@@ -295,23 +291,16 @@ def minhash_lsh_candidates(
     )
 
 
-def signature_agreement_expr(sig_a, sig_b, num_hashes: int):
-    """Estimated jaccard = fraction of agreeing minhash positions.
-    Exact k/num_hashes ratios (binary fractions for power-of-two
-    num_hashes), so threshold comparisons replay exactly in SQL.
-    Accepts column NAMES (single-parse SQL construction) or Columns."""
-    if isinstance(sig_a, str) and isinstance(sig_b, str):
-        return F.expr(
-            f"size(filter(zip_with({sig_a}, {sig_b},"
-            " (x, y) -> CAST(x = y AS INT)), v -> v = 1))"
-            f" / CAST({num_hashes} AS DOUBLE)"
-        )
-    return F.size(
-        F.filter(
-            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ) / F.lit(float(num_hashes))
+def signature_agreement_expr(sig_a: str, sig_b: str, num_hashes: int):
+    """Estimated jaccard = fraction of agreeing minhash positions of
+    the signature columns named ``sig_a`` and ``sig_b``. Exact
+    k/num_hashes ratios (binary fractions for power-of-two
+    num_hashes), so threshold comparisons replay exactly in SQL."""
+    return F.expr(
+        f"size(filter(zip_with({sig_a}, {sig_b},"
+        " (x, y) -> CAST(x = y AS INT)), v -> v = 1))"
+        f" / CAST({num_hashes} AS DOUBLE)"
+    )
 
 
 def simhash_signatures(df: DataFrame) -> DataFrame:
@@ -410,7 +399,7 @@ def ngram_jaccard_pairs(
     again and survives executor loss (unlike persist/localCheckpoint
     blocks).
     """
-    grams = _shingles(F.col("text"), shingle) if shingle > 1 else F.array_distinct(
+    grams = F.expr(_shingles_sql(shingle)) if shingle > 1 else F.array_distinct(
         tokens_expr(F.col("text"))
     )
     df = ensure_parallelism(df)

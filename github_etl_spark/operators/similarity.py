@@ -3,9 +3,10 @@
 Brute-force cosine top-k is the correctness baseline: broadcast the
 (small) query set against the corpus, dot products via higher-order
 functions (zip_with/aggregate — JVM-side, no Python), rank with a
-window. The scale path buckets the corpus with random-hyperplane LSH so
-each query only scans matching buckets — the same candidate-generation
-idea as MinHash LSH but for cosine space.
+window. The scale path buckets the corpus with hyperplane LSH (integer
+planes from md5, so DuckDB replays the buckets) and each query only
+scans matching buckets — the same candidate-generation idea as MinHash
+LSH but for cosine space.
 """
 
 from __future__ import annotations
@@ -105,50 +106,17 @@ def brute_force_topk(
     return _topk_per_query(scored, k)
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit-free hyperplanes.
-
-    A tiny xorshift-style LCG keeps this dependency-free and stable
-    across runs/engines (no RNG state from numpy needed driver-side).
-    """
-    planes: list[list[float]] = []
-    state = seed & 0x7FFFFFFF or 1
-    for _ in range(n_planes):
-        v = []
-        for _ in range(dim):
-            state = (1103515245 * state + 12345) % (1 << 31)
-            v.append((state / float(1 << 31)) * 2.0 - 1.0)
-        planes.append(v)
-    return planes
-
-
-def signs_expr(vec, planes: list[list[float]]):
-    """LSH bucket id: sign bits of the vector against each hyperplane."""
-    bits = [
-        F.when(dot_expr(vec, F.array(*[F.lit(x) for x in p])) >= 0, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        * (1 << i)
-        for i, p in enumerate(planes)
-    ]
-    total = bits[0]
-    for b in bits[1:]:
-        total = total + b
-    return total.cast("long")
-
-
 def md5_int_planes(
     dim: int, n_planes: int, table: int = 0
 ) -> list[list[int]]:
-    """Integer hyperplane components derived from md5 — the portable
-    sibling of `random_hyperplanes`.
+    """Integer hyperplane components derived from md5.
 
     Component (p, i) = first 4 hex digits of md5("lsh:{table}:{p}:{i}")
     as an int, recentered to [-32768, 32767]. md5 is the one hash Spark,
     DuckDB and Python's hashlib all share, so an oracle can inline the
     SAME constants (or re-derive them in SQL) and replay bucket
-    assignment bit-for-bit — the trick the MinHash/SimHash portable
-    variants use (see operators/dedup.py), applied to cosine LSH.
+    assignment bit-for-bit — the trick the MinHash and SimHash
+    families use (see operators/dedup.py), applied to cosine LSH.
     """
     import hashlib
 
@@ -165,19 +133,16 @@ def md5_int_planes(
 def portable_bucket_expr(vec, planes: list[list[int]]):
     """Cross-engine-exact LSH bucket id.
 
-    The float-hyperplane path (`signs_expr`) is unverifiable across
-    engines: a dot product near zero can flip sign under a different
-    float summation order, silently moving a vector to another bucket.
-    This path quantizes the vector to integers (floor(v*1000 + 0.5) —
-    one double multiply + add, bit-identical under IEEE in any engine)
-    and dots it against INTEGER plane components, so the sign decision
-    is exact integer arithmetic: associativity-free, overflow-safe
-    (|component| < 2^15, |qv_i| ~ 1000, dims ~ 10^2 → sums ≪ 2^63),
-    and reproducible in plain SQL.
+    Float hyperplanes would be unverifiable across engines: a dot
+    product near zero can flip sign under a different float summation
+    order, silently moving a vector to another bucket. This quantizes
+    the vector to integers (`quantize_expr`) and dots it against
+    INTEGER plane components, so the sign decision is exact integer
+    arithmetic: associativity-free, overflow-safe (|component| < 2^15,
+    |qv_i| ~ 1000, dims ~ 10^2 → sums ≪ 2^63), and reproducible in
+    plain SQL.
     """
-    qv = F.transform(
-        vec, lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5))
-    )
+    qv = quantize_expr(vec)
     bits = []
     for p_idx, p in enumerate(planes):
         dot = F.aggregate(
@@ -198,7 +163,6 @@ def lsh_bucketed_topk(
     k: int = 5,
     n_planes: int = 4,
     n_tables: int = 1,
-    hash_family: str = "lcg",
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors sharing a query's LSH
     bucket are scored. 2^n_planes buckets → expected candidate fraction
@@ -213,37 +177,21 @@ def lsh_bucketed_topk(
     so each pair is scored once (no union + distinct pass), and the
     query side stays a single broadcast.
 
-    ``hash_family``: ``lcg`` (default) keeps the float hyperplanes from
-    `random_hyperplanes` — engine-specific, so only property-testable.
-    ``md5_portable`` derives INTEGER plane components from md5 and
-    quantizes vectors to integers (`portable_bucket_expr`), making
-    bucket assignment exact and replayable in DuckDB — the catalog's
-    `sim_lsh_topk_portable` oracle-checks the full bucket → candidate
-    → cosine → top-k pipeline value-for-value. The portable path drops
-    NULL/empty vectors on both sides (they have no meaningful bucket;
-    same contract as `ivf_topk`), the default path keeps its historical
-    bucket-0 placement for them.
+    Buckets come from md5-derived INTEGER plane components over
+    integer-quantized vectors (`portable_bucket_expr`), so bucket
+    assignment is exact and DuckDB replays the whole bucket →
+    candidate → cosine → top-k pipeline value-for-value (the catalog's
+    `sim_lsh_topk`). NULL/empty vectors are dropped on both sides:
+    they have no meaningful bucket (same contract as `ivf_topk`).
     """
-    if hash_family == "md5_portable":
-        int_tables = [
-            md5_int_planes(64, n_planes, table=t) for t in range(n_tables)
-        ]
-        bucket_arr = lambda vec: F.array(  # noqa: E731
-            *[portable_bucket_expr(vec, planes) for planes in int_tables]
-        )
-        valid = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
-        corpus = corpus.where(valid)
-        queries = queries.where(valid)
-    elif hash_family == "lcg":
-        tables = [
-            random_hyperplanes(64, n_planes, 42 + 7919 * t)
-            for t in range(n_tables)
-        ]
-        bucket_arr = lambda vec: F.array(  # noqa: E731
-            *[signs_expr(vec, planes) for planes in tables]
-        )
-    else:
-        raise ValueError(f"unknown LSH hash family: {hash_family!r}")
+    tables = [md5_int_planes(64, n_planes, table=t) for t in range(n_tables)]
+
+    def bucket_arr(vec):
+        return F.array(*[portable_bucket_expr(vec, planes) for planes in tables])
+
+    valid = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
+    corpus = corpus.where(valid)
+    queries = queries.where(valid)
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         _as_double(F.col("embedding")).alias("q_vec"),

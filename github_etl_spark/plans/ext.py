@@ -31,8 +31,10 @@ from ..operators.dedup import (
     minhash_mins_sql,
     ngram_jaccard_pairs,
     simhash_signatures,
+    sql_md5_long,
 )
 from ..functions.rounding import round_det
+from ..operators.pipeline import sql_hash_bucket
 from ..operators.similarity import brute_force_topk, lsh_bucketed_topk
 from ..tables import load_tables
 from .registry import query
@@ -269,8 +271,8 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents d LEFT JOIN comp c USING (doc_id)
     )
     SELECT doc_id, component_id,
-           CASE WHEN (CAST(concat('0x', substr(md5(CAST(component_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100) < 80 THEN 'train'
-                WHEN (CAST(concat('0x', substr(md5(CAST(component_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100) < 90 THEN 'val'
+           CASE WHEN {sql_hash_bucket("component_id")} < 80 THEN 'train'
+                WHEN {sql_hash_bucket("component_id")} < 90 THEN 'val'
                 ELSE 'test' END AS split
     FROM labeled
     """,
@@ -325,8 +327,7 @@ def minhash_band_ctes(rel: str = "documents", prefix: str = "") -> str:
     {p}sig AS (
       SELECT doc_id, [{minhash_mins_sql(32)}] AS sig
       FROM (SELECT doc_id,
-                   CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT)
-                     % {MINHASH_P} AS x
+                   {sql_md5_long("s")} % {MINHASH_P} AS x
             FROM {p}sh)
       GROUP BY doc_id
     ),
@@ -649,13 +650,11 @@ def zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "shards_manifest",
     headline=True,
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                 AS BIGINT) % 8) AS shard,
+           {sql_hash_bucket("doc_id", 8)} AS shard,
            CAST(row_number() OVER (
-             PARTITION BY (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                                AS BIGINT) % 8)
+             PARTITION BY {sql_hash_bucket("doc_id", 8)}
              ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS pos
     FROM documents
     """,
@@ -824,7 +823,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM toks
     ),
     hs AS (
-      SELECT doc_id, list_transform(g, x -> substr(md5(x), 1, 16)) AS h
+      SELECT doc_id, list_transform(g, x -> left(md5(x), 16)) AS h
       FROM grams
     ),
     wins AS (
@@ -1039,18 +1038,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("rank", F.col("rank").cast("int"))
 
 
-@query("sim_lsh_topk", sibling="sim_lsh_topk_portable")  # approximate — recall asserted in tests + sibling
-def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: LSH-bucketed ANN (random hyperplane signs, 16 buckets) — the
-    scale path: each query scans ~1/16 of the corpus."""
-    t = load_tables(spark, sf_dir)
-    emb = t["embeddings"]
-    return lsh_bucketed_topk(
-        corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5, n_planes=4
-    )
-
-
-def _lsh_portable_bucket_sql(planes: list[list[int]]) -> str:
+def _lsh_bucket_sql(planes: list[list[int]]) -> str:
     """DuckDB expression for `portable_bucket_expr` over a `qv` column
     (the quantized integer vector): per plane, exact integer dot
     product sign → bit, bits packed into the bucket id. The plane
@@ -1067,10 +1055,10 @@ def _lsh_portable_bucket_sql(planes: list[list[int]]) -> str:
     return " + ".join(terms)
 
 
-def _sim_lsh_portable_oracle() -> str:
+def _sim_lsh_oracle() -> str:
     from ..operators.similarity import md5_int_planes
 
-    bucket = _lsh_portable_bucket_sql(md5_int_planes(dim=64, n_planes=4, table=0))
+    bucket = _lsh_bucket_sql(md5_int_planes(dim=64, n_planes=4, table=0))
     return f"""
     WITH emb_q AS (
       SELECT vec_id, embedding,
@@ -1108,22 +1096,17 @@ def _sim_lsh_portable_oracle() -> str:
     """
 
 
-@query("sim_lsh_topk_portable", oracle=_sim_lsh_portable_oracle())
-def sim_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: LSH ANN with the md5-portable integer hash family — DuckDB
-    replays bucket assignment (exact integer dot-product signs over
-    quantized vectors), candidate generation, cosine scoring and the
-    top-k window value-for-value, closing the verification gap on the
-    retrieval path (the headline sim_lsh_topk keeps the faster float
-    family; only the bucket-bit source differs)."""
+@query("sim_lsh_topk", oracle=_sim_lsh_oracle())
+def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXT: LSH-bucketed ANN (4 integer hyperplanes, 16 buckets) — the
+    scale path: each query scans ~1/16 of the corpus. DuckDB replays
+    bucket assignment (exact integer dot-product signs over quantized
+    vectors), candidate generation, cosine scoring and the top-k
+    window value-for-value."""
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     return lsh_bucketed_topk(
-        corpus=emb,
-        queries=emb.filter(F.col("vec_id") < 10),
-        k=5,
-        n_planes=4,
-        hash_family="md5_portable",
+        corpus=emb, queries=emb.filter(F.col("vec_id") < 10), k=5, n_planes=4
     ).withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -2665,9 +2648,9 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sim_lsh_recall", oracle=_recall_oracle(_sim_lsh_portable_oracle()))
+@query("sim_lsh_recall", oracle=_recall_oracle(_sim_lsh_oracle()))
 def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: recall@5 of the portable-hash LSH retrieval (4 hyperplanes,
+    """EXT: recall@5 of the LSH retrieval (4 integer hyperplanes,
     16 buckets) against exact brute force, per query — the same
     approximation-quality contract as sim_ivf_recall for the
     bucket-pruned path. LSH recall is expected to be the lossier of
@@ -2678,9 +2661,7 @@ def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_bruteforce(
         spark,
         sf_dir,
-        lambda emb, q: lsh_bucketed_topk(
-            corpus=emb, queries=q, k=5, n_planes=4, hash_family="md5_portable"
-        ),
+        lambda emb, q: lsh_bucketed_topk(corpus=emb, queries=q, k=5, n_planes=4),
     )
 
 
@@ -2809,13 +2790,12 @@ def search_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_quota_cap",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                         AS BIGINT) % 100000), doc_id
+               ORDER BY {sql_hash_bucket("doc_id", 100000)}, doc_id
              ) AS rn
       FROM documents
     )
@@ -2887,8 +2867,7 @@ _SQL_MODEL_SCORE_CTES = f"""
       SELECT doc_id, model_score,
              (floor(least(exp(4.0 * (model_score - 0.5)), 1.0) * 10000 + 0.5)
               / 10000) AS p_accept,
-             (CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-               AS BIGINT) % 10000) AS draw
+             {sql_hash_bucket("doc_id", 10000)} AS draw
       FROM scored
     )
     SELECT doc_id, model_score, p_accept
@@ -2974,8 +2953,7 @@ _SQL_DSIR_CTES = f"""
     dsir_toks AS (SELECT doc_id, lang, {_SQL_TOKS} AS ts FROM documents),
     dsir_grams AS (
       SELECT doc_id, lang,
-             (CAST(concat('0x', substr(md5(CAST(gram AS VARCHAR)), 1, 8))
-               AS BIGINT) % 1024) AS bucket
+             {sql_hash_bucket("gram", 1024)} AS bucket
       FROM (SELECT doc_id, lang, unnest(ts) AS gram FROM dsir_toks
             UNION ALL
             SELECT doc_id, lang,
@@ -3046,8 +3024,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT d.doc_id, d.n_grams, d.lw_bits,
              CAST(floor((d.lw_bits - m.max_lw) / 4.0) AS INTEGER)
                AS accept_exp,
-             (CAST(concat('0x', substr(md5('dsir:' ||
-                CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 65536)
+             {sql_hash_bucket("'dsir:' || CAST(d.doc_id AS VARCHAR)", 65536)}
                AS draw
       FROM dsir_doclw d CROSS JOIN dsir_mx m
     )
@@ -3178,11 +3155,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "quantile_sketch_bottomk",
     headline=True,
-    oracle="""
+    oracle=f"""
     WITH sample AS (
       SELECT o_totalprice FROM (
-        SELECT CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))
-                 AS BIGINT) AS hkey,
+        SELECT {sql_md5_long("CAST(o_orderkey AS VARCHAR)")} AS hkey,
                o_orderkey, o_totalprice
         FROM orders
         WHERE o_totalprice IS NOT NULL AND o_orderkey IS NOT NULL
@@ -3226,17 +3202,16 @@ def quantile_sketch_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quantile_sketch_grouped",
-    oracle="""
+    oracle=f"""
     WITH sample AS (
       SELECT c_mktsegment, o_totalprice FROM (
         SELECT c.c_mktsegment,
-               CAST(concat('0x', substr(md5(CAST(o.o_orderkey AS VARCHAR)), 1, 15))
-                 AS BIGINT) AS hkey,
+               {sql_md5_long("CAST(o.o_orderkey AS VARCHAR)")} AS hkey,
                o.o_orderkey, o.o_totalprice,
                row_number() OVER (
                  PARTITION BY c.c_mktsegment
-                 ORDER BY CAST(concat('0x', substr(md5(CAST(o.o_orderkey AS VARCHAR)), 1, 15))
-                            AS BIGINT), o.o_orderkey
+                 ORDER BY {sql_md5_long("CAST(o.o_orderkey AS VARCHAR)")},
+                          o.o_orderkey
                ) AS rn
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         WHERE o.o_totalprice IS NOT NULL AND o.o_orderkey IS NOT NULL
@@ -3354,9 +3329,8 @@ def _qse_exact_q_sql(q: int) -> str:
         SELECT c_mktsegment, o_orderkey, o_totalprice,
                row_number() OVER (
                  PARTITION BY c_mktsegment
-                 ORDER BY CAST(concat('0x',
-                   substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))
-                   AS BIGINT), o_orderkey
+                 ORDER BY {sql_md5_long("CAST(o_orderkey AS VARCHAR)")},
+                          o_orderkey
                ) AS rn
         FROM qse_joined
       ) WHERE rn <= 200
@@ -3913,8 +3887,7 @@ def _mg_replay_round_sql(prev: str, b: int, rnd: str) -> str:
     oracle=f"""
     WITH mg_toks AS (
       SELECT CAST(doc_id % 3 AS INTEGER) AS batch,
-             CAST((CAST(concat('0x', substr(md5(CAST(tok AS VARCHAR)), 1, 8))
-               AS BIGINT) % {_MG_SHARDS}) AS INTEGER) AS shard,
+             CAST({sql_hash_bucket("tok", _MG_SHARDS)} AS INTEGER) AS shard,
              tok
       FROM (SELECT doc_id, unnest({_SQL_TOKS}) AS tok FROM documents)
     ),
@@ -3946,10 +3919,9 @@ def streaming_mg_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/stateful.streaming_heavy_hitters (pass(T) covers the
     applyInPandasWithState machinery; THIS row value-checks the fold
     those emissions carry). Documents' tokens shard onto
-    {_MG_SHARDS} portable-hash Misra-Gries states (md5 family so
-    DuckDB replays sharding exactly; the live operator's xxhash64 only
-    changes which shard a token lands on, not the fold semantics);
-    each ingest folds via operators/sketches.mg_fold_sharded — the
+    {_MG_SHARDS} Misra-Gries states by the live operator's own md5
+    bucket (``portable_hash_bucket``), so DuckDB replays sharding
+    exactly; each ingest folds via operators/sketches.mg_fold_sharded — the
     PRECISE per-micro-batch rule of _mg_update_fn (sum, then one
     excess-th-smallest prune). counters={_MG_K} forces real pruning on
     the fixture (dsum > 0). Output: each surviving counter with its
@@ -4079,8 +4051,7 @@ _BK_SHARDS = 4
     "streaming_bottomk_replay",
     oracle=f"""
     SELECT hkey, rid, value FROM (
-      SELECT CAST(concat('0x', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))
-               AS BIGINT) AS hkey,
+      SELECT {sql_md5_long("CAST(o_orderkey AS VARCHAR)")} AS hkey,
              o_orderkey AS rid, o_totalprice AS value
       FROM orders
     ) ORDER BY hkey ASC, rid ASC LIMIT {_BK_K}
@@ -4092,9 +4063,9 @@ def streaming_bottomk_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle-visible sibling of
     streaming/stateful.streaming_bottomk_sample. Orders arrive in
     three micro-batches, each fold keeps the {_BK_K} hash-smallest
-    rows PER SHARD ({_BK_SHARDS} portable-hash shards — md5 family so
-    the oracle replays the draw; the live operator's xxhash64 only
-    permutes which rows are 'smallest'), and the emitted shard
+    rows PER SHARD ({_BK_SHARDS} shards; shard and rank come from the
+    live operator's own md5 hashes, so the oracle replays the draw),
+    and the emitted shard
     fragments merge by re-taking the global {_BK_K} smallest
     (operators/sketches.bottomk_merge). The PINNED property: that
     sequential per-shard fold recovers EXACTLY the whole-stream batch
@@ -4491,7 +4462,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame broadcast downstream — the pair list, the pair-doc shingle
     sizes — is pair-bounded too, never corpus-bounded) — never
     all-pairs."""
-    from ..operators.dedup import _shingles, minhash_lsh_candidates
+    from ..operators.dedup import _shingles_sql, minhash_lsh_candidates
 
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
@@ -4508,9 +4479,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    sh = docs.select(
-        "doc_id", F.explode(_shingles(F.col("text"), 3)).alias("s")
-    )
+    sh = docs.select("doc_id", F.explode(F.expr(_shingles_sql(3))).alias("s"))
     # Shingles of PAIR DOCS only: the corpus-wide shingle frame is
     # map-only to recompute, but anything grouped/broadcast from here
     # must be pair-bounded (a full-corpus per-doc size table broadcast
@@ -5057,7 +5026,6 @@ def _embed_vec_ctes(
     and query encoders (``prefix`` keeps the two instantiations'
     CTE names disjoint in one statement)."""
     from ..multimodal.media import EMBED_DIM, EMBED_FEATURES, embed_weight
-    from ..operators.pipeline import sql_hash_bucket
 
     b = sql_hash_bucket("w", EMBED_FEATURES)
     words = _SQL_WORDS.replace("lower(text)", f"lower({text_col})")

@@ -170,9 +170,11 @@ def streaming_heavy_hitters(
     idle_evict_ms: int | None = None,
 ) -> DataFrame:
     """Heavy-hitter tracking over an unbounded token stream: tokens are
-    consistently hashed onto ``shards`` independent Misra-Gries states
-    (one shuffle to co-locate a shard's tokens; each shard's state is
-    ≤ ``counters`` entries regardless of vocabulary), and every
+    consistently hashed (``portable_hash_bucket``, the md5 bucket the
+    oracle-checked ``streaming_mg_replay`` replays) onto ``shards``
+    independent Misra-Gries states (one shuffle to co-locate a shard's
+    tokens; each shard's state is ≤ ``counters`` entries regardless of
+    vocabulary), and every
     micro-batch emits each updated shard's current summary with its
     certified error terms.
 
@@ -192,8 +194,10 @@ def streaming_heavy_hitters(
     """
     import pyspark.sql.functions as F
 
+    from ..operators.pipeline import portable_hash_bucket
+
     keyed = tokens.select(
-        F.pmod(F.xxhash64(F.col(col)), F.lit(shards)).cast("int").alias("shard"),
+        portable_hash_bucket(F.col(col), shards).cast("int").alias("shard"),
         F.col(col).cast("string").alias("tok"),
     )
     return _apply_with_state(
@@ -271,32 +275,35 @@ def streaming_bottomk_sample(
 
     The union of shard samples is a SUPERSET of the global bottom-k —
     fold emitted fragments with ``operators/sketches.bottomk_merge``
-    (re-take the k smallest) to recover EXACTLY the whole stream's
-    bottom-k by ``xxhash64(id)`` so far; quantiles then come from
-    ``sample_quantiles`` unchanged. (The batch ``bottomk_sample`` ranks
-    by an md5 prefix instead, so it draws a different, equally uniform
-    sample.) The streaming
-    triplet (MG heavy hitters, bottom-k quantiles, plus the built-in
-    HLL/approx aggregates under windowed aggregation) keeps every
+    (re-take the k smallest) to recover EXACTLY the batch
+    ``bottomk_sample`` of the whole stream so far: both rank by the
+    same md5 prefix of the id (``sketches._sample_hash``), and shards
+    come from ``portable_hash_bucket``, so DuckDB replays the draw too.
+    Quantiles then come from ``sample_quantiles`` unchanged. The
+    streaming triplet (MG heavy hitters, bottom-k quantiles, plus the
+    built-in HLL/approx aggregates under windowed aggregation) keeps every
     sketch the batch layer maintains ALSO maintainable on the stream.
 
     ``id_col`` must be integral: the fixed state/output schemas carry
     the id as a long, and a silent cast of e.g. a string id would NULL
-    every row and emit empty samples with no error. Hash non-integer
-    ids through ``xxhash64`` upstream (the batch ``bottomk_sample``
-    keeps the original id column, so it has no such restriction).
+    every row and emit empty samples with no error. Map non-integer
+    ids to a long upstream (the batch ``bottomk_sample`` keeps the
+    original id column, so it has no such restriction).
     """
     import pyspark.sql.functions as F
+
+    from ..operators.pipeline import portable_hash_bucket
+    from ..operators.sketches import _sample_hash
 
     id_type = {f.name: f.dataType.typeName() for f in rows.schema.fields}.get(id_col)
     if id_type not in {"byte", "short", "integer", "long"}:
         raise TypeError(
             f"streaming_bottomk_sample needs an integral id column, got "
-            f"{id_col}: {id_type}; map it through xxhash64(...) first"
+            f"{id_col}: {id_type}; map it to a long first"
         )
     keyed = rows.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards)).cast("int").alias("shard"),
-        F.xxhash64(F.col(id_col)).alias("hkey"),
+        portable_hash_bucket(F.col(id_col), shards).cast("int").alias("shard"),
+        _sample_hash(id_col).alias("hkey"),
         F.col(id_col).cast("long").alias("rid"),
         F.col("value").cast("double").alias("value"),
     )

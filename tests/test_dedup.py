@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from github_etl_spark.operators.dedup import (
-    _shingles,
+    _shingles_sql,
     hamming_distance,
     minhash_lsh_candidates,
     minhash_signatures,
@@ -48,7 +48,7 @@ def _docs(spark):
 
 
 def _true_jaccard(spark, df, a, b, shingle=3):
-    sh = df.select("doc_id", _shingles(F.col("text"), shingle).alias("sh"))
+    sh = df.select("doc_id", F.expr(_shingles_sql(shingle)).alias("sh"))
     rows = {r.doc_id: set(r.sh) for r in sh.collect()}
     inter = len(rows[a] & rows[b])
     union = len(rows[a] | rows[b])
@@ -291,8 +291,8 @@ def test_lsh_multi_table_recall_monotone(spark):
         }
         return len(exact & got) / len(exact)
 
-    # Measured sweep on this fixture (planes=2): L=1→0.26, L=2→0.62,
-    # L=4→0.94, L=8→1.0 — the (1-(1-p)^L) shape.
+    # Measured sweep on this fixture (planes=2): L=1→0.32, L=2→0.60,
+    # L=4→0.90, L=8→1.0 — the (1-(1-p)^L) shape.
     r1, r4 = recall(1), recall(4)
     assert r1 <= r4
     assert r4 >= 0.8, (r1, r4)
@@ -399,18 +399,16 @@ def test_ivf_index_missing_sidecar_raises(spark, tmp_path):
 
 
 def test_lsh_portable_family_contract(spark):
-    """md5_portable LSH: ≤k rows per query, decent recall vs brute
-    force (same bar as the float family), and NULL/empty vectors are
-    dropped on both sides rather than bucketed or crashed."""
+    """Integer-plane LSH: ≤k rows per query, decent recall vs brute
+    force, and NULL/empty vectors are dropped on both sides rather than
+    bucketed or crashed."""
     from github_etl_spark.operators.similarity import (
         brute_force_topk,
         lsh_bucketed_topk,
     )
 
     emb, queries = _emb_tables(spark)
-    got = lsh_bucketed_topk(
-        emb, queries, k=5, n_planes=4, hash_family="md5_portable"
-    ).collect()
+    got = lsh_bucketed_topk(emb, queries, k=5, n_planes=4).collect()
     per_q = {}
     for r in got:
         per_q.setdefault(r.query_id, []).append(r)
@@ -438,18 +436,9 @@ def test_lsh_portable_family_contract(spark):
         queries.unionByName(bad, allowMissingColumns=True),
         k=5,
         n_planes=4,
-        hash_family="md5_portable",
     ).collect()
     ids = {r.query_id for r in got2} | {r.neighbor_id for r in got2}
     assert not ids & {10_000_000, 10_000_001}
-
-
-def test_lsh_unknown_family_raises(spark):
-    from github_etl_spark.operators.similarity import lsh_bucketed_topk
-
-    emb, queries = _emb_tables(spark)
-    with pytest.raises(ValueError, match="hash family"):
-        lsh_bucketed_topk(emb, queries, hash_family="sha9000")
 
 
 def test_jaccard_tokens_staging_table(spark, tmp_path):

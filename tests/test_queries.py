@@ -12,12 +12,13 @@ from github_etl_spark.plans import QUERIES
 from .oracle_harness import compare, duckdb_conn
 
 ORACLE_NAMES = sorted(n for n, q in QUERIES.items() if q.oracle)
-# The two headline MinHash queries keep the plain run-and-schema check
-# next to their oracle comparison: it fails on its own, with the query's
-# name, when the Spark side breaks before any DuckDB replay is involved.
+# The two headline MinHash queries and the LSH top-k keep the plain
+# run-and-schema check next to their oracle comparison: it fails on its
+# own, with the query's name, when the Spark side breaks before any
+# DuckDB replay is involved.
 ROWS_ONLY_NAMES = sorted(
     [n for n, q in QUERIES.items() if not q.oracle]
-    + ["dedup_incremental", "dedup_minhash_lsh"]
+    + ["dedup_incremental", "dedup_minhash_lsh", "sim_lsh_topk"]
 )
 
 _conns = {}

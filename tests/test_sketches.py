@@ -43,8 +43,12 @@ def test_matches_exact_groupby_zipf(spark):
 
 
 def test_bound_error_when_counters_too_small(spark):
-    # near-uniform data + tiny counter budget → bound cannot hold
-    items = spark.range(0, 20000).select((F.col("id") % 5000).alias("item"))
+    # near-uniform data + tiny counter budget → bound cannot hold. The
+    # certified bound sums the per-partition error terms, so the input's
+    # partition count is fixed rather than left to the session's cores.
+    items = spark.range(0, 20000, numPartitions=8).select(
+        (F.col("id") % 5000).alias("item")
+    )
     with pytest.raises(HeavyHitterBoundError, match="increase counters"):
         heavy_hitters(items, "item", 0.0004, counters=8)
 

@@ -537,6 +537,38 @@ def test_streaming_heavy_hitters_state_and_bounds(spark, stream_dir, tmp_path):
     assert seen_hot, "dominant token must survive MG state across batches"
 
 
+def test_streaming_heavy_hitters_shard_by_portable_bucket(
+    spark, stream_dir, tmp_path
+):
+    """Every token's live shard is its md5 bucket, the shard the
+    oracle-checked streaming_mg_replay assigns it."""
+    from github_etl_spark.operators.pipeline import portable_hash_bucket
+    from github_etl_spark.streaming.stateful import streaming_heavy_hitters
+
+    toks = [f"w{i}" for i in range(40)]
+    _write_file(
+        stream_dir / "s1.json",
+        [{"event_id": i, "user_id": 0, "ts": "2026-03-01T10:00:00Z", "event_type": w}
+         for i, w in enumerate(toks)],
+        time.time(),
+    )
+    stream = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .json(str(stream_dir))
+        .select(F.col("event_type").alias("tok"))
+    )
+    out = streaming_heavy_hitters(stream, "tok", counters=64, shards=5)
+    _drain(out, "hh_shard_out", str(tmp_path / "ck_hh_shard"))
+    live = {(r.tok, r.shard) for r in spark.sql("SELECT * FROM hh_shard_out").collect()}
+    want = {
+        (r.tok, r.shard)
+        for r in spark.createDataFrame([(t,) for t in toks], "tok string")
+        .select("tok", portable_hash_bucket(F.col("tok"), 5).cast("int").alias("shard"))
+        .collect()
+    }
+    assert live == want
+
+
 def test_streaming_bottomk_recovers_batch_sample(spark, stream_dir, tmp_path):
     from github_etl_spark.streaming.stateful import streaming_bottomk_sample
 
@@ -574,17 +606,15 @@ def test_streaming_bottomk_recovers_batch_sample(spark, stream_dir, tmp_path):
         seen[(r.shard, r.rid)] = (r.hkey, r.rid, r.value)
     folded = sorted(seen.values())[:16]
 
-    # ground truth: batch bottom-16 over all rows
-    from pyspark.sql import functions as F2
+    # ground truth: the batch operator's bottom-16 over all rows
+    from github_etl_spark.operators.sketches import bottomk_sample
 
     all_rows = spark.createDataFrame(
         [(r["event_id"], r["value"]) for r in rows1 + rows2], "event_id long, value double"
     )
     want = sorted(
-        (r.h, r.event_id, r.value)
-        for r in all_rows.select(
-            F2.xxhash64("event_id").alias("h"), "event_id", "value"
-        ).orderBy("h", "event_id").limit(16).collect()
+        (r.hkey, r.event_id, r.value)
+        for r in bottomk_sample(all_rows, "value", "event_id", 16).collect()
     )
     assert folded == want
 
