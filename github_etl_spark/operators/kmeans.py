@@ -3,10 +3,10 @@ SURVEY.md §2.11).
 
 The second fixed-point iterative algorithm in the engine (after
 PageRank, operators/graph.py) and the one a 100 TB vector pipeline
-actually needs: the IVF coarse quantizer today trains driver-side on a
-bounded sample (similarity.train_ivf_centroids — the FAISS recipe);
-this operator runs Lloyd iterations over the FULL corpus with the
-classic "small model, big data" Spark shape:
+actually needs: the IVF coarse quantizer is the raw md5 integer seeds
+(similarity.ivf_portable_seed_centroids); this operator runs Lloyd
+iterations from those seeds over the FULL corpus with the classic
+"small model, big data" Spark shape:
 
 - the model (k × dim integers) lives on the driver and is inlined into
   the assignment expression as literals — NO join, NO broadcast frame;
@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..session import eager_checkpoint, release
 from .partitioning import ensure_parallelism
-from .similarity import quantize_expr
+from .similarity import ivf_portable_seed_centroids, quantize_expr
 
 def _sq_dist_rank_expr(qv, centroids: list[list[int]]):
     """array<struct<d:long, cell:int>> sorted ascending — cells ranked
@@ -186,15 +186,10 @@ def lloyd_centroids(
     # wide and this is a no-op (guide §2.5 input-skew rule, the same
     # ensure_parallelism guard the minhash/similarity operators use).
     q = eager_checkpoint(ensure_parallelism(q))
-    # Portable md5-ordered seeds over the ALREADY-quantized frame (the
-    # same selection ivf_portable_seed_centroids makes, minus the
-    # re-quantization): discrete, bounded at k rows, SQL-re-derivable.
-    seeds = (
-        q.orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
-        .limit(k)
-        .collect()
-    )
-    cents = [list(r.qv) for r in seeds]
+    # The IVF seeds over the ALREADY-quantized frame (`qv` is
+    # integral, so it is taken as it is): discrete, bounded at k rows,
+    # SQL-re-derivable.
+    cents = ivf_portable_seed_centroids(q, "i", "qv", k)
     if not cents:
         return [], q
     dim = len(cents[0])

@@ -1144,8 +1144,7 @@ def _dsir_weights_from_buckets(bf: DataFrame, n_buckets: int) -> list[int]:
 # array literal and the whole fold stays in codegen; past it the
 # literal's per-row cost explodes (1.7 s → 133 s at 131072 buckets,
 # sf0.1) and the Arrow gather kernel takes over. Same
-# expression-vs-kernel switch as similarity._top_cell_expr and the
-# BPE apply chain.
+# expression-vs-kernel switch as the BPE apply chain.
 DSIR_EXPR_MAX_BUCKETS = 4096
 
 

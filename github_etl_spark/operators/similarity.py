@@ -6,7 +6,11 @@ functions (zip_with/aggregate — JVM-side, no Python), rank with a
 window. The scale path buckets the corpus with hyperplane LSH (integer
 planes from md5, so DuckDB replays the buckets) and each query only
 scans matching buckets — the same candidate-generation idea as MinHash
-LSH but for cosine space.
+LSH but for cosine space. IVF has one coarse quantizer, the md5-ordered
+integer seed vectors (`ivf_portable_seed_centroids`), and one cell
+kernel (`ivf_cells`, an Arrow int64 matmul), shared by the inline and
+materialized indexes, semantic dedup, IVF-PQ and the streaming vector
+gate — so every IVF path replays in DuckDB.
 """
 
 from __future__ import annotations
@@ -17,6 +21,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import IntegralType
 
 from ..functions.rounding import round_det
 from ..sinks.store import (
@@ -224,120 +230,123 @@ def lsh_bucketed_topk(
     return _topk_per_query(scored, k)
 
 
-def train_ivf_centroids(
+# ---------------------------------------------------------------------------
+# IVF: one coarse quantizer (md5 integer seeds), one cell kernel
+# ---------------------------------------------------------------------------
+
+
+def quantize_expr(vec):
+    """vec → array<long>: floor(v*1000 + 0.5) per component. One double
+    multiply + add then floor — bit-identical under IEEE in any engine,
+    so integer arithmetic downstream is exactly replayable in SQL
+    (`sql_quantize` is the DuckDB spelling)."""
+    return F.transform(
+        vec, lambda x: F.floor(x.cast("double") * 1000 + F.lit(0.5))
+    )
+
+
+def sql_quantize(expr: str) -> str:
+    """`quantize_expr` as DuckDB SQL text over a list column (oracle
+    lockstep)."""
+    return (
+        f"list_transform({expr}, "
+        "v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT))"
+    )
+
+
+def _int_vec(df: DataFrame, vec_col: str):
+    """``vec_col`` of ``df`` as the integer vector the IVF quantizer
+    works in: an integral column as it is (already-integer encoder or
+    pre-quantized output), any other one through `quantize_expr`."""
+    if isinstance(df.schema[vec_col].dataType.elementType, IntegralType):
+        return F.col(vec_col)
+    return quantize_expr(F.col(vec_col))
+
+
+def ivf_portable_seed_centroids(
     corpus: DataFrame,
+    id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int = 16,
-    sample_size: int = 4096,
-) -> list[list[float]]:
-    """Coarse quantizer for IVF: k-means over a bounded, deterministic
-    corpus sample, run driver-side with numpy.
+) -> list[list[int]]:
+    """The IVF coarse quantizer: the `n_centroids` corpus vectors
+    ranked first by ``(md5(cast(id as string)), id)``, as integer
+    vectors (`_int_vec`).
 
-    The sample is hash-selected (orderBy xxhash64 + limit → planned as
-    a distributed top-k, not a full sort), so it's stable across runs
-    and partitionings, and the driver transfer is bounded at
-    `sample_size` rows no matter the corpus size — one corpus scan to
-    train, which is what makes this viable at 100 TB (FAISS trains IVF
-    on a sample the same way). Empty-cell centroids are re-seeded from
-    the farthest points (standard k-means repair).
+    No Lloyd iterations and no normalization — the whole selection is
+    discrete (md5 hex ordering + integer quantization), so DuckDB can
+    re-derive the SAME centroids from the same table with
+    ``ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT n`` and replay cell
+    assignment exactly (`sim_ivf_topk` in plans/ext.py) — the same bar
+    `portable_bucket_expr` sets for LSH. Lloyd rounds from these seeds
+    are operators/kmeans.py.
+
+    orderBy+limit plans as a distributed top-k (no full sort); the
+    driver transfer is bounded at `n_centroids` rows.
     """
-    import numpy as np
-
-    sample = (
-        corpus.select(_as_double(F.col(vec_col)).alias("v"))
-        .where(F.size("v") > 0)
-        # xxhash64 hashes arrays natively — 3× faster than hashing a
-        # stringified copy, same stable-sample property.
-        .orderBy(F.xxhash64(F.col("v")))
-        .limit(sample_size)
+    rows = (
+        corpus.where(
+            F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
+        )
+        .select(F.col(id_col).alias("i"), _int_vec(corpus, vec_col).alias("qv"))
+        .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
+        .limit(n_centroids)
         .collect()
     )
-    if not sample:
-        # Empty (or all-degenerate) corpus: no cells to train. Callers
-        # treat [] as "no index" and produce empty, correctly-typed
-        # results rather than crashing on a 0-row matmul.
-        return []
-    x = np.array([r.v for r in sample], dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = x / np.where(norms == 0, 1.0, norms)
-    # Farthest-first init (deterministic kmeans++ flavor): start from
-    # the first hash-ordered point, then greedily take the point least
-    # similar to any chosen centroid. No RNG → stable across runs AND
-    # across sample orderings' rng states; spreads seeds better than a
-    # uniform draw, which matters for probe recall at small nprobe.
-    k_eff = min(n_centroids, len(x))
-    chosen = [0]
-    best_sim = x @ x[0]
-    for _ in range(1, k_eff):
-        nxt = int(best_sim.argmin())
-        chosen.append(nxt)
-        best_sim = np.maximum(best_sim, x @ x[nxt])
-    cent = x[chosen].copy()
-    for _ in range(8):
-        sims = x @ cent.T
-        assign = sims.argmax(axis=1)
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                n = np.linalg.norm(m)
-                cent[c] = m / (n or 1.0)
-            else:
-                # K-th farthest point per empty cell — distinct seeds
-                # (one shared farthest point would leave twin centroids
-                # and a dead cell).
-                order = np.argsort(sims.max(axis=1))
-                empties = [i for i in range(len(cent)) if not (assign == i).any()]
-                cent[c] = x[order[empties.index(c) % len(x)]]
-    return cent.tolist()
+    return [list(r.qv) for r in rows]
 
 
-def _nearest_cells_udf(centroids: list[list[float]], nprobe: int | None):
-    """Arrow-batched centroid scoring: rows × centroids as ONE numpy
-    matmul per batch (a per-centroid `aggregate(zip_with(...))`
-    expression tower is interpreted, off the codegen path, and measured
-    ~10× slower at 16×64; matrix work is the textbook Pandas-UDF case).
-    Centroids are unit vectors, so dot(vec, centroid) ranks cells the
-    same as cosine for a fixed vec. Ties resolve to the lowest cell id
-    (np argmax / stable argsort).
-    ``nprobe=None`` → int cell per row; else array of nprobe cells.
+def ivf_cells(df: DataFrame, vec_col: str, centroids: list[list[int]], n: int):
+    """array<int>: per row of ``df``, the ``n`` cells whose centroids
+    have the largest EXACT integer dot product with the row's integer
+    vector (`_int_vec`), best first, ties to the LOWEST cell — the one
+    cell kernel of every IVF path: assignment takes element 0 of n=1,
+    probes explode n=nprobe.
+
+    One Arrow-batched int64 matmul per batch and a stable argsort of
+    −dot: the (cells × dim) matrix ships once per task instead of being
+    inlined as cells·dim literals into generated code, so the cost
+    stays flat in cell count (the 100 TB sizing rule, cells ∝ corpus).
+    Exact: |qv_i|, |c_i| ~ 10³ and dim ~ 10² keep |dot| ≪ 2⁶³, so DuckDB
+    replays the ranking with ``ORDER BY dot DESC, cell``.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray(centroids, dtype=np.float64)
-
-    if nprobe is None:
-
-        @pandas_udf("int")
-        def nearest(v: pd.Series) -> pd.Series:
-            x = np.asarray(v.tolist(), dtype=np.float64)
-            return pd.Series((x @ mat.T).argmax(axis=1).astype("int32"))
-
-        return nearest
+    cmat = np.asarray(centroids, dtype=np.int64)
 
     @pandas_udf("array<int>")
-    def nearest_n(v: pd.Series) -> pd.Series:
-        x = np.asarray(v.tolist(), dtype=np.float64)
-        order = np.argsort(-(x @ mat.T), axis=1, kind="stable")[:, :nprobe]
-        return pd.Series(list(order.astype("int32")))
+    def top(batch: pd.Series) -> pd.Series:
+        if batch.empty:
+            return pd.Series([], dtype=object)
+        m = np.stack(batch.to_numpy()).astype(np.int64, copy=False)
+        order = np.argsort(-(m @ cmat.T), axis=1, kind="stable")[:, :n]
+        return pd.Series(list(order.astype(np.int32)))
 
-    return nearest_n
+    return top(_int_vec(df, vec_col))
+
+
+def _require_int_centroids(centroids: list, where: str) -> None:
+    """Refuse float centroids: the cell kernel is int64, so a float
+    index (one trained before the quantizer became the integer seeds)
+    would be silently truncated rather than probed as built."""
+    if not all(isinstance(x, int) for c in centroids for x in c):
+        raise ValueError(
+            f"non-integer IVF centroids in {where}: the quantizer is the "
+            "integer md5 seeds (ivf_portable_seed_centroids); rebuild "
+            "the index with ivf_build_index."
+        )
 
 
 def ivf_assign(
     corpus: DataFrame,
-    centroids: list[list[float]],
+    centroids: list[list[int]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign every corpus vector to its nearest-centroid cell (the IVF
-    "inverted list" id). At scale, write the result partitioned /
-    bucketed BY CELL so probes prune to nprobe directories and the
-    probe join needs no corpus shuffle.
-
-    Rows×centroids are scored as one numpy matmul per Arrow batch
-    (`_nearest_cells_udf`). Vectors must be fixed-dimension (the
-    embeddings contract); NULL / empty ones are dropped.
+    "inverted list" id, `ivf_cells` n=1). At scale, write the result
+    partitioned / bucketed BY CELL so probes prune to nprobe
+    directories and the probe join needs no corpus shuffle. Vectors
+    must be fixed-dimension (the embeddings contract); NULL / empty
+    ones are dropped.
     """
     if not centroids:
         return corpus.select(
@@ -353,9 +362,7 @@ def ivf_assign(
     return corpus.select(
         F.col(id_col).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("c_vec"),
-        _nearest_cells_udf(centroids, None)(
-            _as_double(F.col(vec_col))
-        ).alias("cell"),
+        ivf_cells(corpus, vec_col, centroids, 1)[0].alias("cell"),
     )
 
 
@@ -370,20 +377,21 @@ def ivf_topk(
     """IVF approximate top-k cosine: score only corpus vectors whose
     cell is among the query's `nprobe` closest centroids.
 
-    ``train_on`` (default: the corpus) restricts centroid TRAINING to
+    Every branch before the cosine (centroid selection, cell
+    assignment, probe ranking) is exact integer / hash arithmetic a SQL
+    oracle replays (`sim_ivf_topk`); only the final cosine scores are
+    floats, rounded to 4 decimals by the shared `_topk_per_query` tail.
+
+    ``train_on`` (default: the corpus) restricts centroid selection to
     a sub-frame while still assigning/scoring the full corpus — the
     inline form of querying an index built before later appends
-    arrived (`ivf_index_append`'s stale-centroid regime), used by the
-    equivalence pin in tests/test_similarity.py.
+    arrived (`ivf_index_append`'s stale-centroid regime,
+    `sim_ivf_append_recall`).
 
     Cost per query ≈ (nprobe / n_centroids) of the corpus vs brute
     force; recall rises with nprobe (asserted in tests). The probed
     query set (query_id × nprobe cells) is broadcast, so the only wide
-    operation is the final per-query top-k window. Centroid training is
-    sample-bounded; assignment is one corpus pass. Centroid scoring is
-    an Arrow-batched matmul (see ivf_assign); candidate scoring stays a
-    JVM expression (cosine_expr's NULL-for-zero-norm ranking
-    semantics).
+    operation is the final per-query top-k window.
 
     Degenerate vectors (NULL / empty array) are silently dropped on
     BOTH sides: a corpus row without a vector can't be assigned a cell
@@ -391,16 +399,16 @@ def ivf_topk(
     are simply absent from the result (fewer groups, not an error).
     Pre-filter and fail upstream if that should be a hard error.
     """
-    centroids = train_ivf_centroids(
+    cents = ivf_portable_seed_centroids(
         corpus if train_on is None else train_on, n_centroids=n_centroids
     )
-    assigned = ivf_assign(corpus, centroids)
-    q = _probed_queries(queries, centroids, nprobe)
-    return _score_probed(assigned, q, k)
+    return _score_probed(
+        ivf_assign(corpus, cents), _probed_queries(queries, cents, nprobe), k
+    )
 
 
 def _probed_queries(
-    queries: DataFrame, centroids: list[list[float]], nprobe: int
+    queries: DataFrame, centroids: list[list[int]], nprobe: int
 ) -> DataFrame:
     """(query_id, q_vec, cell) — one row per query × probed cell.
 
@@ -422,7 +430,9 @@ def _probed_queries(
     return queries.select(
         F.col("vec_id").alias("query_id"),
         vec.alias("q_vec"),
-        F.explode(_nearest_cells_udf(centroids, nprobe)(vec)).alias("cell"),
+        F.explode(ivf_cells(queries, "embedding", centroids, nprobe)).alias(
+            "cell"
+        ),
     )
 
 
@@ -445,22 +455,25 @@ def ivf_build_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int = 16,
-    centroids: list[list[float]] | None = None,
-) -> list[list[float]]:
+    centroids: list[list[int]] | None = None,
+) -> list[list[int]]:
     """Materialize the IVF index `ivf_topk` computes inline: cell
     assignments written as parquet PARTITIONED BY cell, centroids as a
     one-line text sidecar at ``<path>_centroids``.
 
-    ``centroids`` overrides the k-means training with caller-supplied
-    cells (e.g. the portable md5 seeds, so an oracle or a fold sibling
-    can re-derive the index's assignment — streaming/vector_gate.py).
+    The centroids are the corpus' md5 integer seeds
+    (`ivf_portable_seed_centroids`); ``centroids`` overrides them with
+    caller-supplied integer cells (e.g. seeds drawn from another
+    frame — streaming/vector_gate.py). Float centroids raise
+    ValueError: the cell kernel is integer.
 
-    This is the 100 TB shape of the design note on `ivf_assign`: train
-    once (sample-bounded), assign once (one corpus pass), write once —
-    then every query batch reads only its probed cell directories
-    (static partition pruning, see `ivf_query_index`) instead of
-    re-scoring the corpus. Both artifacts go through Spark writers, so
-    the layout works on any supported filesystem, not just local disk.
+    This is the 100 TB shape of the design note on `ivf_assign`: select
+    the seeds once (one bounded top-k), assign once (one corpus pass),
+    write once — then every query batch reads only its probed cell
+    directories (static partition pruning, see `ivf_query_index`)
+    instead of re-scoring the corpus. Both artifacts go through Spark
+    writers, so the layout works on any supported filesystem, not just
+    local disk.
 
     The two artifacts are stitched by a build fingerprint (md5 of the
     centroid list) embedded in BOTH: a `build_id` column in the
@@ -470,14 +483,16 @@ def ivf_build_index(
     writes (or a rebuild racing a reader) surfaces as a clear error
     instead of silently probing the wrong cells. Degenerate corpus
     vectors (NULL / empty) are dropped before assignment — they cannot
-    be placed in a cell (see `ivf_assign`). Returns the trained
-    centroids.
+    be placed in a cell (see `ivf_assign`). Returns the centroids.
     """
     import hashlib
     import json
 
     if centroids is None:
-        centroids = train_ivf_centroids(corpus, vec_col, n_centroids)
+        centroids = ivf_portable_seed_centroids(
+            corpus, id_col, vec_col, n_centroids
+        )
+    _require_int_centroids(centroids, "the centroids= argument")
     build_id = hashlib.md5(
         json.dumps(centroids).encode("utf-8")
     ).hexdigest()
@@ -499,7 +514,8 @@ def _read_ivf_sidecar(spark, path: str) -> tuple[list, str]:
     """(centroids, build_id) from the `ivf_build_index` sidecar —
     shared by the query, append and fold paths so a missing/partial
     build fails identically everywhere (`sinks.store.StoreMissing`, a
-    FileNotFoundError naming the sidecar)."""
+    FileNotFoundError naming the sidecar), and so does an index with
+    float centroids (ValueError naming ivf_build_index)."""
     meta = read_sidecar(spark, path, CENTROIDS, "ivf_build_index")
     if not (isinstance(meta, dict) and {"build_id", "centroids"} <= meta.keys()):
         raise ValueError(
@@ -507,6 +523,7 @@ def _read_ivf_sidecar(spark, path: str) -> tuple[list, str]:
             "{build_id, centroids} object — not written by "
             "ivf_build_index; rebuild the index."
         )
+    _require_int_centroids(meta["centroids"], f"the sidecar of {path!r}")
     return meta["centroids"], meta["build_id"]
 
 
@@ -685,188 +702,6 @@ def ivf_query_index(
     return _score_probed(assigned, q, k)
 
 
-# ---------------------------------------------------------------------------
-# Portable (cross-engine-exact) IVF variant
-# ---------------------------------------------------------------------------
-
-
-def quantize_expr(vec, quant: int = 1000):
-    """vec → array<long>: floor(v*quant + 0.5) per component. One double
-    multiply + add then floor — bit-identical under IEEE in any engine,
-    so integer arithmetic downstream is exactly replayable in SQL (the
-    same quantization `portable_bucket_expr` uses)."""
-    return F.transform(
-        vec, lambda x: F.floor(x.cast("double") * quant + F.lit(0.5))
-    )
-
-
-def ivf_portable_seed_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    quant: int = 1000,
-) -> list[list[int]]:
-    """Deterministic, cross-engine-replayable coarse-quantizer seeds:
-    the `n_centroids` corpus vectors ranked first by
-    ``(md5(cast(id as string)), id)``, quantized to integers.
-
-    No Lloyd iterations and no normalization — the whole selection is
-    discrete (md5 hex ordering + integer quantization), so DuckDB can
-    re-derive the SAME centroids from the same table with
-    ``ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT n`` and replay cell
-    assignment exactly (`sim_ivf_topk_portable` in plans/ext.py). The
-    headline `ivf_topk` keeps the k-means quantizer; this variant
-    trades cell quality for bit-for-bit verifiability of the IVF
-    retrieval pipeline (assignment → probe → score → top-k), the same
-    bar `portable_bucket_expr` sets for LSH.
-
-    orderBy+limit plans as a distributed top-k (no full sort); the
-    driver transfer is bounded at `n_centroids` rows.
-    """
-    rows = (
-        corpus.where(
-            F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0)
-        )
-        .select(
-            F.col(id_col).alias("i"),
-            quantize_expr(F.col(vec_col), quant).alias("qv"),
-        )
-        .orderBy(F.md5(F.col("i").cast("string")), F.col("i"))
-        .limit(n_centroids)
-        .collect()
-    )
-    return [list(r.qv) for r in rows]
-
-
-def _int_cell_rank_expr(qv, centroids: list[list[int]]):
-    """array<struct<neg_dot:long, cell:int>> sorted ascending — i.e.
-    cells ranked by EXACT integer dot product desc, lowest cell on
-    ties. Overflow-safe: |qv_i| ~ quant, |cv_i| ~ quant, dims ~ 10^2 →
-    |dot| ≪ 2^63."""
-    sims = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    qv, F.array(*[F.lit(c) for c in cent]), lambda a, b: a * b
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            for cent in centroids
-        ]
-    )
-    return F.array_sort(
-        F.transform(
-            sims,
-            lambda s, i: F.struct(
-                (-s).alias("neg_dot"), i.cast("int").alias("cell")
-            ),
-        )
-    )
-
-
-# Above this cell count the per-ROW cost and generated-code size of the
-# literal-expression assignment (O(cells·dim) literals inlined into the
-# plan) dominate: measured at 512 cells it OOM'd a 32-thread local JVM
-# on a 64k-vector corpus, while the Arrow matmul form runs in seconds.
-_ARROW_ASSIGN_CELLS = 64
-
-
-def _int_cell_assign_arrow(qv, centroids: list[list[int]]):
-    """cell = argmax_c (qv · centroid_c), ties → LOWEST cell — the same
-    top cell `_int_cell_rank_expr(...)[0]["cell"]` yields, computed as
-    one Arrow-batched int64 matrix multiply instead of an inlined
-    literal expression tree.
-
-    Both forms are EXACT integer arithmetic (|dot| ≪ 2^63), so they are
-    bit-identical — asserted against each other in tests — and numpy's
-    argmax picks the first (lowest-index) maximum, matching the
-    expression form's (neg_dot, cell) ascending sort. The expression
-    form inlines cells·dim literals into the generated code, which is
-    fine for a 16-cell oracle-checked quantizer but explodes at the
-    100 TB sizing rule (cells ∝ corpus); this form ships one (cells ×
-    dim) int64 matrix to each task and pays a BLAS-shaped batch matmul
-    per Arrow batch.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    cmat = np.asarray(centroids, dtype=np.int64)
-
-    @pandas_udf("int")
-    def assign(batch: pd.Series) -> pd.Series:
-        if batch.empty:
-            return pd.Series([], dtype="int32")
-        m = np.stack(batch.to_numpy()).astype(np.int64, copy=False)
-        return pd.Series(np.argmax(m @ cmat.T, axis=1).astype(np.int32))
-
-    return assign(qv)
-
-
-def _top_cell_expr(qv, centroids: list[list[int]]):
-    """Top-cell assignment, auto-switching representation: the
-    inlined-literal expression below `_ARROW_ASSIGN_CELLS` cells (pure
-    JVM, oracle-replayable at catalog sizes), the Arrow int64 matmul
-    above it (identical values, scales in cell count)."""
-    if len(centroids) > _ARROW_ASSIGN_CELLS:
-        return _int_cell_assign_arrow(qv, centroids)
-    return _int_cell_rank_expr(qv, centroids)[0]["cell"]
-
-
-def ivf_topk_portable(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    quant: int = 1000,
-    train_on: DataFrame | None = None,
-) -> DataFrame:
-    """IVF top-k with the portable seed quantizer: every branch of the
-    pipeline (centroid selection, cell assignment, probe ranking) is
-    exact integer / hash arithmetic a SQL oracle can replay, and only
-    the final cosine scores are floats (rounded to 4 decimals by the
-    shared `_topk_per_query` tail, same as every sim query).
-
-    Same plan shape as `ivf_topk`: one corpus pass to assign, probed
-    queries broadcast, per-query top-k window — so verifying THIS
-    variant value-for-value also exercises the join/score/rank tail the
-    headline k-means variant shares (`_score_probed`).
-    """
-    cents = ivf_portable_seed_centroids(
-        corpus if train_on is None else train_on,
-        n_centroids=n_centroids, quant=quant,
-    )
-    if not cents:
-        return ivf_assign(corpus, []).select(
-            F.col("neighbor_id").alias("query_id"),
-            "neighbor_id",
-            F.lit(0).alias("rank"),
-            F.lit(None).cast("double").alias("cosine"),
-        )
-    live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
-    ranked = _int_cell_rank_expr(
-        quantize_expr(F.col("embedding"), quant), cents
-    )
-    assigned = corpus.where(live).select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("c_vec"),
-        _top_cell_expr(quantize_expr(F.col("embedding"), quant), cents).alias(
-            "cell"
-        ),
-    )
-    q = queries.where(live).select(
-        F.col("vec_id").alias("query_id"),
-        _as_double(F.col("embedding")).alias("q_vec"),
-        F.explode(
-            F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
-        ).alias("cell"),
-    )
-    return _score_probed(assigned, q, k)
-
-
 def semantic_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,
@@ -909,12 +744,11 @@ def semantic_neardup_pairs(
     # the whole screen on one core. Widening the probe side spread it
     # over the cluster: measured 4.4 s → 2.8 s at sf0.1, identical
     # rows; no-op when the input is already wide (the 100 TB case).
-    assigned = ensure_parallelism(corpus.where(live)).select(
+    wide = ensure_parallelism(corpus.where(live))
+    assigned = wide.select(
         F.col("vec_id").alias("vid"),
         _as_double(F.col("embedding")).alias("v"),
-        _top_cell_expr(quantize_expr(F.col("embedding")), cents).alias(
-            "cell"
-        ),
+        ivf_cells(wide, "embedding", cents, 1)[0].alias("cell"),
     ).withColumn("nrm", norm_expr(F.col("v")))
     a = assigned.select(
         F.col("vid").alias("id_a"), F.col("v").alias("va"),
@@ -1152,13 +986,12 @@ def pq_train_codebooks(
     corpus: DataFrame,
     ksub: int = 16,
 ) -> list[list[list[float]]]:
-    """Production PQ codebooks: per-subspace L2 k-means over the same
-    bounded, hash-selected corpus sample `train_ivf_centroids` uses
-    (one corpus top-k, driver transfer ≤ 4096 rows), with the
-    deterministic farthest-first init — no RNG anywhere. Returns FLOAT
+    """Production PQ codebooks: per-subspace L2 k-means over a bounded,
+    hash-selected corpus sample (one corpus top-k, driver transfer
+    ≤ 4096 rows), with the deterministic farthest-first init — no RNG
+    anywhere. Returns FLOAT
     codewords; `pq_encode`/`pq_topk` accept either family (trained
-    floats for recall, portable ints for oracle replay — same split as
-    the IVF quantizer)."""
+    floats for recall, portable ints for oracle replay)."""
     import numpy as np
 
     sample = (
@@ -1241,10 +1074,10 @@ def ivfpq_topk(
     Per-query cost ≈ (nprobe/n_centroids) × corpus CODE rows (4-byte
     payloads, not 256-byte vectors) + R full-vector reads when
     reranking — the shape that serves billions of vectors. Cell
-    assignment and probe ranking reuse the portable seed quantizer
-    verbatim (`_int_cell_rank_expr`), so with the default portable
+    assignment and probe ranking are the IVF seed quantizer and cell
+    kernel verbatim (`ivf_cells`), so with the default portable
     codebooks every discrete branch is the one the oracle-checked
-    sim_ivf_topk_portable / sim_pq_topk queries already verify; with
+    sim_ivf_topk / sim_pq_topk queries already verify; with
     nprobe == n_centroids this reduces exactly to `pq_topk` (asserted
     in tests).
     """
@@ -1259,18 +1092,17 @@ def ivfpq_topk(
             F.lit(None).cast("double").alias("score"),
         )
     live = F.col("embedding").isNotNull() & (F.size(F.col("embedding")) > 0)
-    ranked = _int_cell_rank_expr(quantize_expr(F.col("embedding")), cents)
     codes = pq_encode(
         corpus, codebooks,
-        extra={"cell": ranked[0]["cell"]},
+        extra={"cell": ivf_cells(corpus, "embedding", cents, 1)[0]},
     )
     qf = _as_double(F.col("embedding"))
     q = queries.where(live).select(
         F.col("vec_id").alias("query_id"),
         qf.alias("__qf"),
-        F.explode(
-            F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cell"])
-        ).alias("cell"),
+        F.explode(ivf_cells(queries, "embedding", cents, nprobe)).alias(
+            "cell"
+        ),
     ).select(
         "query_id",
         F.expr(_pq_lut_sql(codebooks, 1000)).alias("lut"),
@@ -1337,10 +1169,7 @@ def rp_distortion(emb: DataFrame) -> DataFrame:
     s_total = sum(c * c for p in planes for c in p)
     dim = len(planes[0])
 
-    qv = F.transform(
-        F.col("embedding"),
-        lambda v: F.floor(v.cast("double") * 1000 + F.lit(0.5)).cast("long"),
-    )
+    qv = quantize_expr(F.col("embedding"))
     base = emb.where(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     ).select(F.col("vec_id"), qv.alias("qv"))

@@ -35,7 +35,11 @@ from ..operators.dedup import (
 )
 from ..functions.rounding import round_det
 from ..operators.pipeline import sql_hash_bucket
-from ..operators.similarity import brute_force_topk, lsh_bucketed_topk
+from ..operators.similarity import (
+    brute_force_topk,
+    lsh_bucketed_topk,
+    sql_quantize,
+)
 from ..tables import load_tables
 from .registry import query
 
@@ -1062,8 +1066,7 @@ def _sim_lsh_oracle() -> str:
     return f"""
     WITH emb_q AS (
       SELECT vec_id, embedding,
-             list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+             {sql_quantize("embedding")} AS qv
       FROM embeddings
       WHERE embedding IS NOT NULL AND len(embedding) > 0
     ),
@@ -1153,10 +1156,9 @@ def sim_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_CTES = """    WITH emb_q AS (
+_PQ_CTES = f"""    WITH emb_q AS (
       SELECT vec_id, embedding,
-             list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+             {sql_quantize("embedding")} AS qv
       FROM embeddings
       WHERE embedding IS NOT NULL AND len(embedding) > 0
     ),
@@ -1290,11 +1292,10 @@ def sim_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_semantic",
     headline=True,
-    oracle="""
+    oracle=f"""
     WITH emb_q AS (
       SELECT vec_id, embedding,
-             list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+             {sql_quantize("embedding")} AS qv
       FROM embeddings
       WHERE embedding IS NOT NULL AND len(embedding) > 0
     ),
@@ -1341,7 +1342,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: SemDeDup — embedding-space near-duplicate pairs blocked by
     quantizer cell (supervision-free, unlike sim_cosine_neardup's
     label blocking): candidate volume is Σ cell_size², never corpus².
-    The portable seed quantizer makes centroid selection and cell
+    The IVF seed quantizer makes centroid selection and cell
     assignment exact integer arithmetic, so the oracle replays the
     whole screen. See operators/similarity.semantic_neardup_pairs."""
     from ..operators.similarity import semantic_neardup_pairs
@@ -2487,27 +2488,16 @@ def mm_mulaw_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("sim_ivf_topk", headline=True, sibling="sim_ivf_topk_portable")  # approximate — recall asserted in tests + sibling
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: IVF ANN — sample-trained coarse quantizer (16 cells), probe
-    the 4 closest cells per query (~1/4 of the corpus scored). The
-    FAISS-IVF shape on DataFrames; see operators/similarity.ivf_topk."""
-    from ..operators.similarity import ivf_topk
-
-    t = load_tables(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.orderBy("vec_id").limit(10)
-    return ivf_topk(emb, queries, k=5, n_centroids=16, nprobe=4)
-
-
-# Template: `train_where` restricts which vectors are eligible as
-# portable seed centroids (empty = all, the classic row; a predicate =
-# the stale-centroid appended-index regime of sim_ivf_append_recall).
-_SIM_IVF_PORTABLE_ORACLE_TMPL = """
+def _sim_ivf_oracle(train_where: str = "") -> str:
+    """Oracle for sim_ivf_topk: the md5 integer seed centroids, exact
+    integer-dot cell assignment and nprobe=4 probe ranking (ties to the
+    lowest cell), then cosine top-5. ``train_where`` restricts which
+    vectors are eligible as seeds (empty = all; a predicate = the
+    stale-centroid appended-index regime of sim_ivf_append_recall)."""
+    return f"""
 WITH emb_q AS (
   SELECT vec_id, embedding,
-         list_transform(embedding,
-           v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+         {sql_quantize("embedding")} AS qv
   FROM embeddings
   WHERE embedding IS NOT NULL AND len(embedding) > 0
 ),
@@ -2562,24 +2552,24 @@ SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
 FROM ranked WHERE rank <= 5
 """
 
-_SIM_IVF_PORTABLE_ORACLE = _SIM_IVF_PORTABLE_ORACLE_TMPL.format(train_where="")
+
+_SIM_IVF_ORACLE = _sim_ivf_oracle()
 
 
-@query("sim_ivf_topk_portable", oracle=_SIM_IVF_PORTABLE_ORACLE)
-def sim_ivf_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: IVF ANN with the portable seed quantizer — centroid
-    selection is an md5-ordered top-K (discrete), cell assignment and
-    probe ranking are exact integer dot products over quantized
-    vectors, so DuckDB re-derives the centroids from the same table and
-    replays assignment → probe → cosine → top-k value-for-value. This
-    closes the cross-engine check on the IVF retrieval pipeline; the
-    headline sim_ivf_topk keeps the k-means-trained quantizer (recall
-    asserted in tests) and shares the scoring tail verified here."""
-    from ..operators.similarity import ivf_topk_portable
+@query("sim_ivf_topk", headline=True, oracle=_SIM_IVF_ORACLE)
+def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXT: IVF ANN — the FAISS-IVF shape on DataFrames: 16 coarse
+    cells, probe the 4 closest per query (~1/4 of the corpus scored).
+    Centroid selection is an md5-ordered top-K (discrete), cell
+    assignment and probe ranking are exact integer dot products over
+    quantized vectors, so DuckDB re-derives the centroids from the same
+    table and replays assignment → probe → cosine → top-k
+    value-for-value. See operators/similarity.ivf_topk."""
+    from ..operators.similarity import ivf_topk
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
-    return ivf_topk_portable(
+    return ivf_topk(
         emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=16, nprobe=4
     ).withColumn("rank", F.col("rank").cast("int"))
 
@@ -2628,23 +2618,21 @@ def _recall_vs_bruteforce(spark, sf_dir, approx_builder) -> DataFrame:
     )
 
 
-@query("sim_ivf_recall", oracle=_recall_oracle(_SIM_IVF_PORTABLE_ORACLE))
+@query("sim_ivf_recall", oracle=_recall_oracle(_SIM_IVF_ORACLE))
 def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT: recall@5 of the portable IVF retrieval (nprobe=4 of 16
+    """EXT: recall@5 of the IVF retrieval (nprobe=4 of 16
     cells) against exact brute force, PER QUERY — the
     approximation-quality contract for the ANN scale path, as an
     oracle-checked catalog row rather than a test-only assertion. Both
     pipelines are the already-pinned catalog queries; this measures the
     thing a 100 TB user actually tunes (nprobe vs recall) and pins that
     the measurement itself is engine-independent."""
-    from ..operators.similarity import ivf_topk_portable
+    from ..operators.similarity import ivf_topk
 
     return _recall_vs_bruteforce(
         spark,
         sf_dir,
-        lambda emb, q: ivf_topk_portable(
-            emb, q, k=5, n_centroids=16, nprobe=4
-        ),
+        lambda emb, q: ivf_topk(emb, q, k=5, n_centroids=16, nprobe=4),
     )
 
 
@@ -3650,8 +3638,8 @@ def _features_ann_oracle() -> str:
     """Oracle for mm_features_ann_topk: replay the closed-form feature
     vectors from FEATURE_PAIRS (integer quantization verified safe
     against the real float32 kernel — see the constant's docstring),
-    then the portable IVF pipeline over exact integers, sharing the
-    _SIM_IVF_PORTABLE_ORACLE shape with quant=1."""
+    then the IVF pipeline over those integers as they are, sharing the
+    _SIM_IVF_ORACLE shape."""
     from ..multimodal.media import FEATURE_PAIRS
 
     pa = "[" + ", ".join(str(a) for a, _ in FEATURE_PAIRS) + "]"
@@ -3732,10 +3720,10 @@ def mm_features_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixed-format image corpus (BMP/PNG/QOI/JPEG rotated per doc,
     synthesize_feature_image_media) → sniffed decode + luma-bucket
     featurization (image_features, the real float32 kernel) → integer
-    quantization → portable-IVF top-k (ivf_topk_portable, quant=1:
-    the vectors are already integers, so centroid selection, cell
-    assignment, probing and the cosine tail are all exact arithmetic
-    DuckDB replays value-for-value). Previously tested piecewise; this
+    quantization → IVF top-k (ivf_topk, which takes the integral
+    vectors as they are, so centroid selection, cell assignment,
+    probing and the cosine tail are all exact arithmetic DuckDB
+    replays value-for-value). Previously tested piecewise; this
     row pins the COMPOSITION end-to-end, including that a JPEG-carried
     page and a BMP-carried page of the same pixels land in the same
     cell with the same features. Map-only until the ANN tail's
@@ -3744,7 +3732,7 @@ def mm_features_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_features,
         synthesize_feature_image_media,
     )
-    from ..operators.similarity import ivf_topk_portable, quantize_expr
+    from ..operators.similarity import ivf_topk, quantize_expr
 
     t = load_tables(spark, sf_dir)
     media = synthesize_feature_image_media(t["documents"])
@@ -3753,15 +3741,10 @@ def mm_features_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qdf = feats.select(
         F.col("media_id").alias("vec_id"),
-        quantize_expr(F.col("features"), 1000).alias("embedding"),
+        quantize_expr(F.col("features")).alias("embedding"),
     )
-    return ivf_topk_portable(
-        qdf,
-        qdf.filter(F.col("vec_id") < 10),
-        k=5,
-        n_centroids=16,
-        nprobe=4,
-        quant=1,
+    return ivf_topk(
+        qdf, qdf.filter(F.col("vec_id") < 10), k=5, n_centroids=16, nprobe=4
     ).withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -4958,8 +4941,7 @@ def _rp_distortion_oracle(n_planes: int = 16, table: int = 7) -> str:
     return f"""
     WITH rp_q AS (
       SELECT vec_id,
-             list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
+             {sql_quantize("embedding")} AS qv
       FROM embeddings
       WHERE embedding IS NOT NULL AND len(embedding) > 0
     ),
@@ -5086,14 +5068,12 @@ def mm_embed_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _append_recall_oracle() -> str:
-    """Oracle for sim_ivf_append_recall: the portable IVF pipeline
+    """Oracle for sim_ivf_append_recall: the IVF pipeline
     twice — once with centroids drawn ONLY from the pre-append corpus
     (vec_id % 5 <> 0: the stale-centroid regime an `ivf_index_append`ed
     index runs in) and once trained fresh on everything — each scored
     for recall@5 against the exact brute-force top-5."""
-    stale = _SIM_IVF_PORTABLE_ORACLE_TMPL.format(
-        train_where="WHERE vec_id % 5 <> 0"
-    )
+    stale = _sim_ivf_oracle("WHERE vec_id % 5 <> 0")
 
     def hits(cte: str, out: str) -> str:
         return f"""
@@ -5107,7 +5087,7 @@ def _append_recall_oracle() -> str:
     return f"""
     WITH bf AS ({_SIM_ORACLE}),
     st AS ({stale}),
-    fr AS ({_SIM_IVF_PORTABLE_ORACLE}),
+    fr AS ({_SIM_IVF_ORACLE}),
     hs AS ({hits("st", "n_hits_stale")}),
     hf AS ({hits("fr", "n_hits_fresh")})
     SELECT hs.query_id, hs.n_hits_stale,
@@ -5136,7 +5116,7 @@ def sim_ivf_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py) vs the fresh rebuild, both against
     exact brute force. The tuning signal a 100 TB operator watches to
     schedule re-trains."""
-    from ..operators.similarity import brute_force_topk, ivf_topk_portable
+    from ..operators.similarity import brute_force_topk, ivf_topk
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
@@ -5155,11 +5135,11 @@ def sim_ivf_append_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    stale = ivf_topk_portable(
+    stale = ivf_topk(
         emb, q, k=5, n_centroids=16, nprobe=4,
         train_on=emb.filter(F.col("vec_id") % 5 != 0),
     )
-    fresh = ivf_topk_portable(emb, q, k=5, n_centroids=16, nprobe=4)
+    fresh = ivf_topk(emb, q, k=5, n_centroids=16, nprobe=4)
     hs = hits(stale, "n_hits_stale")
     hf = hits(fresh, "n_hits_fresh")
     return hs.join(hf, "query_id").select(
@@ -5278,8 +5258,7 @@ def mm_embed_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------- distributed Lloyd's k-means
 
 def _kmeans_ctes(k: int = 8, iters: int = 3, dim: int = 64,
-                 quant: int = 1000, prefix: str = "",
-                 include_q: bool = True) -> list[str]:
+                 prefix: str = "", include_q: bool = True) -> list[str]:
     """The trained-quantizer CTE chain, shared by the kmeans_lloyd_
     stats oracle, the sim_ivf_lloyd_topk retrieval oracle, and (with
     per-k prefixes over ONE shared ``q``) the kmeans_elbow_curve
@@ -5306,9 +5285,7 @@ def _kmeans_ctes(k: int = 8, iters: int = 3, dim: int = 64,
     ctes = []
     if include_q:
         ctes.append(f"""q AS MATERIALIZED (
-      SELECT vec_id, list_transform(embedding,
-               v -> CAST(floor(CAST(v AS DOUBLE) * {quant} + 0.5)
-                         AS BIGINT)) AS qv
+      SELECT vec_id, {sql_quantize("embedding")} AS qv
       FROM embeddings
       WHERE embedding IS NOT NULL AND len(embedding) > 0)""")
     ctes.append(f"""{p}c0 AS MATERIALIZED (
@@ -5352,11 +5329,10 @@ def _kmeans_ctes(k: int = 8, iters: int = 3, dim: int = 64,
     return ctes
 
 
-def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64,
-                   quant: int = 1000) -> str:
+def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64) -> str:
     """Oracle for kmeans_lloyd_stats: the shared trained-quantizer
     chain (`_kmeans_ctes`) plus the final-centroid cell stats."""
-    ctes = _kmeans_ctes(k, iters, dim, quant) + [
+    ctes = _kmeans_ctes(k, iters, dim) + [
         """st AS (
       SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_members,
              CAST(SUM(d) AS BIGINT) AS inertia
@@ -5375,7 +5351,7 @@ def _kmeans_oracle(k: int = 8, iters: int = 3, dim: int = 64,
 
 
 def _ivf_lloyd_oracle(k: int = 8, iters: int = 3, dim: int = 64,
-                      quant: int = 1000, nprobe: int = 3) -> str:
+                      nprobe: int = 3) -> str:
     """Oracle for sim_ivf_lloyd_topk: the SAME trained-quantizer CTE
     chain as kmeans_lloyd_stats (train → final corpus assignment
     `af`), then the IVF probe/score/rank tail — queries probe their
@@ -5383,12 +5359,12 @@ def _ivf_lloyd_oracle(k: int = 8, iters: int = 3, dim: int = 64,
     score by exact integer cosine over the quantized vectors (dots ≪
     2^53, so the float division replays bit-for-bit), rank on the raw
     cosine with neighbor-id ties, top-5, 4 dp output rounding — the
-    sim_ivf_topk_portable contract with a TRAINED quantizer."""
+    sim_ivf_topk contract with a TRAINED quantizer."""
     dist = (
         "(SELECT SUM((x.a - x.b) * (x.a - x.b)) "
         "FROM (SELECT UNNEST(v.qv) AS a, UNNEST(c.m) AS b) x)"
     )
-    ctes = _kmeans_ctes(k, iters, dim, quant) + [
+    ctes = _kmeans_ctes(k, iters, dim) + [
         f"""qp AS (
       SELECT query_id, cell FROM (
         SELECT v.vec_id AS query_id, c.cell,
@@ -5436,8 +5412,8 @@ def kmeans_lloyd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: DISTRIBUTED Lloyd's k-means over the full embeddings
     corpus (operators/kmeans.py) — the engine's second oracle-checked
     fixed-point iterative algorithm (after PageRank) and the training
-    step behind the IVF coarse quantizer, which today trains on a
-    bounded sample (FAISS-style); at 100 TB you run exactly this:
+    step the IVF coarse quantizer would add to its raw md5 seeds; at
+    100 TB you run exactly this:
     k=8 / 3 Lloyd rounds, each ONE map-only argmin scan into a k-cell
     groupBy of per-dim partial sums (shuffle payload k·(dim+1) longs
     per partition, driver crossing exactly k rows per round, model
@@ -5460,9 +5436,8 @@ def sim_ivf_lloyd_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     train → assign → probe → score → rank loop in one oracle-checked
     row, sharing the training CTE chain with kmeans_lloyd_stats
     verbatim (`_kmeans_ctes`) so the trainer row and the retrieval
-    row cannot drift. The portable-seed variant
-    (sim_ivf_topk_portable) verifies the retrieval tail with RAW md5
-    seeds; this row closes the loop with centroids the engine
+    row cannot drift. sim_ivf_topk verifies the retrieval tail with RAW
+    md5 seeds; this row closes the loop with centroids the engine
     actually TRAINED (3 full-corpus Lloyd rounds), the quantizer a
     100 TB deployment would serve. Queries probe their nprobe=3
     nearest trained cells by integer squared-L2; candidates score by

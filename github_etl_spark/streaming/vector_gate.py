@@ -37,9 +37,10 @@ from pyspark.sql import functions as F
 from ..multimodal.media import embed_text_vec
 from ..operators.curation import web_gate_expr
 from ..operators.similarity import (
-    _int_cell_rank_expr,
+    ivf_cells,
     ivf_index_assign,
     ivf_index_publish,
+    ivf_portable_seed_centroids,
 )
 from ..session import eager_checkpoint, persisted
 from ..sinks.snapshot import publish_batch_partition
@@ -103,33 +104,14 @@ def stream_vector_gated(
     )
 
 
-def portable_vector_seeds(
-    seed_vecs: DataFrame,
-    id_col: str = "doc_id",
-    vec_col: str = "vec",
-    n_centroids: int = 8,
-) -> list[list[int]]:
-    """md5-ordered first-k DERIVED vectors as integer centroids — the
-    `ivf_portable_seed_centroids` selection rule applied to
-    already-integer encoder output (no quantization step needed), so
-    DuckDB re-derives the same centroids from the same derivation."""
-    rows = (
-        seed_vecs.orderBy(
-            F.md5(F.col(id_col).cast("string")), F.col(id_col)
-        )
-        .limit(n_centroids)
-        .collect()
-    )
-    return [list(r[vec_col]) for r in rows]
-
-
 def vector_fold_verdicts(docs: DataFrame) -> DataFrame:
     """DETERMINISTIC fold of the gate chain, no disk: seed corpus =
     gated `id % 4 == 0` documents, centroids = the portable md5 seeds
     over the seed corpus' DERIVED vectors (the frozen-centroid regime
     a built index runs in); ingest batches 1..3 = `id % 4 == b`. Per
     batch: web gate → encode → integer-dot argmax cell (ties → lowest
-    cell, `_int_cell_rank_expr`), rejected documents land in cell −1.
+    cell, `ivf_cells` — the kernel the live gate's `ivf_index_assign`
+    runs), rejected documents land in cell −1.
     Emits (ingest_batch, cell, n_docs) — the same per-batch summaries
     the live gate publishes, derived as two map-only branch scans
     (kept → encode+assign, rejected → cell −1) into one bounded
@@ -142,7 +124,7 @@ def vector_fold_verdicts(docs: DataFrame) -> DataFrame:
         & web_gate_expr(F.col("text"))
     )
     sv = eager_checkpoint(embed_text_vec(seed))
-    cents = portable_vector_seeds(sv)
+    cents = ivf_portable_seed_centroids(sv, "doc_id", "vec", 8)
     empty = "ingest_batch long, cell int, n_docs long"
     if not cents:
         return spark.createDataFrame([], empty)
@@ -151,7 +133,7 @@ def vector_fold_verdicts(docs: DataFrame) -> DataFrame:
     kv = eager_checkpoint(embed_text_vec(kept))
     assigned = kv.select(
         F.pmod(F.col("doc_id"), F.lit(4)).cast("long").alias("ingest_batch"),
-        _int_cell_rank_expr(F.col("vec"), cents)[0]["cell"].alias("cell"),
+        ivf_cells(kv, "vec", cents, 1)[0].alias("cell"),
     )
     rej = ing.where(~web_gate_expr(F.col("text"))).select(
         F.pmod(F.col("doc_id"), F.lit(4)).cast("long").alias("ingest_batch"),

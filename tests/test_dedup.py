@@ -8,6 +8,8 @@ the exact operators.
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -243,10 +245,13 @@ def test_ivf_nprobe_monotone_recall(spark):
 
 
 def test_ivf_assign_covers_all_rows(spark):
-    from github_etl_spark.operators.similarity import ivf_assign, train_ivf_centroids
+    from github_etl_spark.operators.similarity import (
+        ivf_assign,
+        ivf_portable_seed_centroids,
+    )
 
     emb, _ = _emb_tables(spark)
-    cents = train_ivf_centroids(emb, n_centroids=8, sample_size=256)
+    cents = ivf_portable_seed_centroids(emb, n_centroids=8)
     assert len(cents) == 8
     assigned = ivf_assign(emb, cents)
     assert assigned.count() == emb.count()
@@ -487,7 +492,7 @@ def test_ivf_portable_seed_centroids_deterministic(spark):
 def test_ivf_portable_recall_vs_brute_force(spark):
     from github_etl_spark.operators.similarity import (
         brute_force_topk,
-        ivf_topk_portable,
+        ivf_topk,
     )
 
     emb, queries = _emb_tables(spark)
@@ -497,7 +502,7 @@ def test_ivf_portable_recall_vs_brute_force(spark):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ivf_topk_portable(
+        for r in ivf_topk(
             emb, queries, k=5, n_centroids=16, nprobe=4
         ).collect()
     }
@@ -515,7 +520,7 @@ def test_ivf_portable_full_probe_equals_brute_force(spark):
     candidates."""
     from github_etl_spark.operators.similarity import (
         brute_force_topk,
-        ivf_topk_portable,
+        ivf_topk,
     )
 
     emb, queries = _emb_tables(spark)
@@ -525,7 +530,7 @@ def test_ivf_portable_full_probe_equals_brute_force(spark):
     )
     full = sorted(
         (r.query_id, r.neighbor_id, r.rank)
-        for r in ivf_topk_portable(
+        for r in ivf_topk(
             emb, queries, k=5, n_centroids=8, nprobe=8
         ).collect()
     )
@@ -693,52 +698,47 @@ def test_ivfpq_trained_rerank_recall(spark):
 
 
 def test_arrow_cell_assignment_matches_expression(spark):
-    """The Arrow int64-matmul top-cell assignment (used above
-    _ARROW_ASSIGN_CELLS) is bit-identical to the inlined-expression
-    form — both are exact integer arithmetic with ties to the lowest
-    cell."""
+    """The Arrow cell kernel (`ivf_cells`) ranks cells exactly as a
+    pure-Python reference over the collected rows does: exact integer
+    dot product, best first, lowest cell on ties — for assignment (n=1)
+    and probes (n=4), at 16 and 96 cells, and with one constructed tie
+    (a centroid repeated under a higher cell id)."""
     from github_etl_spark.operators.similarity import (
-        _int_cell_assign_arrow,
-        _int_cell_rank_expr,
+        ivf_cells,
         ivf_portable_seed_centroids,
-        quantize_expr,
     )
     from github_etl_spark.tables import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"]
-    cents = ivf_portable_seed_centroids(emb, "vec_id", "embedding", 96, 1000)
-    assert len(cents) == 96  # forces the Arrow path in production code
-    qv = quantize_expr(F.col("embedding"), 1000)
-    live = F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-    both = emb.where(live).select(
-        "vec_id",
-        _int_cell_rank_expr(qv, cents)[0]["cell"].alias("cell_expr"),
-        _int_cell_assign_arrow(qv, cents).alias("cell_arrow"),
-    )
-    assert both.where(F.col("cell_expr") != F.col("cell_arrow")).count() == 0
-    assert both.count() > 0
+    live = emb.where(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
+    rows = {
+        r.vec_id: [int(math.floor(float(v) * 1000 + 0.5)) for v in r.embedding]
+        for r in live.select("vec_id", "embedding").collect()
+    }
+    assert rows
 
+    def reference(qv, cents, n):
+        dots = [sum(a * b for a, b in zip(qv, c)) for c in cents]
+        return sorted(range(len(cents)), key=lambda j: (-dots[j], j))[:n]
 
-def test_semantic_pairs_arrow_threshold_consistency(spark):
-    """semantic_neardup_pairs emits the same pairs whether the cell
-    count sits below or above the Arrow switch, when the quantizer is
-    held fixed by construction (centroids are the md5-ranked seeds, so
-    n_centroids=17 vs 65 differ; instead compare the SAME n_centroids
-    run against a monkey-lowered switch)."""
-    import github_etl_spark.operators.similarity as sim
-    from github_etl_spark.tables import load_tables
-
-    emb = load_tables(spark, "/root/testdata/sf0.001")["embeddings"]
-    base = sim.semantic_neardup_pairs(emb, threshold=0.0, n_centroids=16)
-    old = sim._ARROW_ASSIGN_CELLS
-    try:
-        sim._ARROW_ASSIGN_CELLS = 1  # force Arrow path at 16 cells
-        forced = sim.semantic_neardup_pairs(emb, threshold=0.0, n_centroids=16)
-        assert base.exceptAll(forced).count() == 0
-        assert forced.exceptAll(base).count() == 0
-        assert base.count() > 0
-    finally:
-        sim._ARROW_ASSIGN_CELLS = old
+    for n_cells in (16, 96):
+        cents = ivf_portable_seed_centroids(emb, n_centroids=n_cells)
+        assert len(cents) == n_cells
+        # Cell n_cells ties cell 0 on every row; the kernel must rank
+        # cell 0 first.
+        cents = cents + [cents[0]]
+        for n in (1, 4):
+            got = {
+                r.vec_id: list(r.cells)
+                for r in live.select(
+                    "vec_id", ivf_cells(live, "embedding", cents, n).alias("cells")
+                ).collect()
+            }
+            want = {i: reference(qv, cents, n) for i, qv in rows.items()}
+            assert got == want, (n_cells, n)
+            # The tie is live: some row ranks cell 0 (and so its twin)
+            # among its top n.
+            assert any(0 in c for c in got.values()), (n_cells, n)
 
 
 # ------------------------------------------------- URL canonical dedup

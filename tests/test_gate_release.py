@@ -15,15 +15,15 @@ from pyspark.sql import functions as F
 from github_etl_spark.multimodal.media import embed_text_vec
 from github_etl_spark.operators.curation import span_index_build, web_gate_expr
 from github_etl_spark.operators.incremental import dedup_index_build
-from github_etl_spark.operators.similarity import ivf_build_index
+from github_etl_spark.operators.similarity import (
+    ivf_build_index,
+    ivf_portable_seed_centroids,
+)
 from github_etl_spark.streaming.dedup_gate import make_dedup_gate
 from github_etl_spark.streaming.pipeline import _persisting
 from github_etl_spark.streaming.pretrain_gate import make_pretrain_gate
 from github_etl_spark.streaming.span_gate import make_span_gate
-from github_etl_spark.streaming.vector_gate import (
-    make_vector_gate,
-    portable_vector_seeds,
-)
+from github_etl_spark.streaming.vector_gate import make_vector_gate
 from github_etl_spark.tables import load_tables
 
 
@@ -50,7 +50,7 @@ def _vector(spark, seed, d, out, build):
         )
         ivf_build_index(
             vecs, f"{d}/index", id_col="doc_id", vec_col="vec",
-            centroids=portable_vector_seeds(vecs),
+            centroids=ivf_portable_seed_centroids(vecs, "doc_id", "vec", 8),
         )
     return make_vector_gate(spark, f"{d}/index", out)
 

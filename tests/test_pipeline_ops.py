@@ -967,7 +967,7 @@ def test_dsir_apply_kernel_regime_matches_expression_path(spark):
     """The two apply regimes (inlined array literal vs Arrow gather
     kernel) must produce BIT-IDENTICAL (n_grams, lw_bits) for the same
     vocabulary of weights — the DSIR sibling of the BPE chain/kernel
-    and the _top_cell_expr pins."""
+    pin."""
     import hashlib
 
     from github_etl_spark.operators.pipeline import (

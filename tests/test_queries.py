@@ -12,13 +12,13 @@ from github_etl_spark.plans import QUERIES
 from .oracle_harness import compare, duckdb_conn
 
 ORACLE_NAMES = sorted(n for n, q in QUERIES.items() if q.oracle)
-# The two headline MinHash queries and the LSH top-k keep the plain
+# The two headline MinHash queries and the LSH and IVF top-k keep the plain
 # run-and-schema check next to their oracle comparison: it fails on its
 # own, with the query's name, when the Spark side breaks before any
 # DuckDB replay is involved.
 ROWS_ONLY_NAMES = sorted(
     [n for n, q in QUERIES.items() if not q.oracle]
-    + ["dedup_incremental", "dedup_minhash_lsh", "sim_lsh_topk"]
+    + ["dedup_incremental", "dedup_minhash_lsh", "sim_ivf_topk", "sim_lsh_topk"]
 )
 
 _conns = {}

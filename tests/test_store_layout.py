@@ -118,17 +118,16 @@ def test_vector_gate_reads_the_ivf_sidecar_once_per_batch(
 ):
     from github_etl_spark.multimodal.media import embed_text_vec
     from github_etl_spark.operators import similarity
-    from github_etl_spark.streaming.vector_gate import (
-        make_vector_gate,
-        portable_vector_seeds,
-    )
+    from github_etl_spark.streaming.vector_gate import make_vector_gate
 
     docs = _documents(spark)
     seed = embed_text_vec(docs.where(F.col("doc_id") % 4 == 0))
     index = str(tmp_path / "ivf")
     similarity.ivf_build_index(
         seed, index, id_col="doc_id", vec_col="vec",
-        centroids=portable_vector_seeds(seed),
+        centroids=similarity.ivf_portable_seed_centroids(
+            seed, "doc_id", "vec", 8
+        ),
     )
     reads = []
     read_sidecar = similarity.read_sidecar

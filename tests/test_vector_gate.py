@@ -16,10 +16,12 @@ from pyspark.sql import functions as F
 
 from github_etl_spark.multimodal.media import embed_text_vec
 from github_etl_spark.operators.curation import web_gate_expr
-from github_etl_spark.operators.similarity import ivf_build_index
+from github_etl_spark.operators.similarity import (
+    ivf_build_index,
+    ivf_portable_seed_centroids,
+)
 from github_etl_spark.streaming.vector_gate import (
     make_vector_gate,
-    portable_vector_seeds,
     stream_vector_gated,
     vector_fold_verdicts,
 )
@@ -43,7 +45,7 @@ def _build_seed_index(spark, docs, index):
         & web_gate_expr(F.col("text"))
     )
     sv = embed_text_vec(seed, "text", "doc_id")
-    cents = portable_vector_seeds(sv, "doc_id", "vec", 8)
+    cents = ivf_portable_seed_centroids(sv, "doc_id", "vec", 8)
     ivf_build_index(
         sv, index, id_col="doc_id", vec_col="vec", centroids=cents
     )
