@@ -15,11 +15,11 @@ leaves every other `(repo, date)` untouched. No delete step, no race
 window, and re-running a failed load converges to the same state
 (exactly-once per partition).
 
-At 100 TB: the layout keeps per-partition file counts bounded by
-repartitioning on the partition key before the write (one shuffle whose
-output IS the final file layout — no small-files problem), and reads
-with a partition predicate prune to the single partition
-(`PartitionFilters` in the scan, zero data read outside it).
+At 100 TB: each load writes one `(repo, date)` partition through a
+single writer, so a partition directory holds one file per table (no
+small-files problem), and reads with a partition predicate prune to
+the single partition (`PartitionFilters` in the scan, zero data read
+outside it).
 """
 
 from __future__ import annotations
@@ -66,14 +66,15 @@ def write_snapshot(df: DataFrame, table_path: str) -> None:
     `df` are replaced; all other partitions survive. `partitionOverwriteMode`
     is passed as a per-write option so the session conf is untouched.
 
-    The repartition on the partition key is deliberate: it makes each
-    final partition directory be written by the tasks that own that key,
-    so file count per partition ≈ one per shuffle partition with data,
-    not (input partitions × touched partitions) — the classic
-    small-files blowup at scale.
+    The rows are coalesced into one writer task, with no shuffle, so
+    each partition directory gets one file rather than one per input
+    partition (the small-files blowup of a multi-page scan). Every
+    caller stamps one `(repo, date)` per call, so the single writer
+    costs no parallelism: a repartition on the partition key would
+    send every row to one reducer too, for one shuffle job more.
     """
     (
-        df.repartition(*[F.col(c) for c in PARTITION_COLS])
+        df.coalesce(1)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*PARTITION_COLS)
@@ -178,10 +179,10 @@ class SnapshotSink:
         load of the same `(repo, date)`. If a write fails, the others
         still finish and the first failure in table order is raised;
         a re-run replaces the partial snapshot. API concurrency: a
-        table whose plan reads an unpersisted GitHub scan re-runs that
-        scan, now alongside the other tables' writes, so callers
-        persist the scan first (`streaming.pipeline.run_batch` does);
-        the writes then make no API call.
+        table whose plan reads an unmaterialized GitHub scan re-runs
+        that scan, now alongside the other tables' writes, so callers
+        materialize the scan first (`streaming.pipeline.run_batch`
+        checkpoints it); the writes then make no API call.
         """
         from .locking import PartitionLock
 

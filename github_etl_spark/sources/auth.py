@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import base64
 import json
+import threading
 import time
 import urllib.request
 from dataclasses import dataclass, field
@@ -35,6 +36,13 @@ except ImportError:  # pragma: no cover
 JWT_IAT_BACKDATE_S = 60  # clock-skew absorption (reference main.py:57)
 JWT_TTL_S = 540  # 9 min; GitHub max is 10 (reference main.py:58)
 TOKEN_REFRESH_MARGIN_S = 60  # refresh 60 s before expiry (reference main.py:120)
+
+# Serializes the check-and-mint of `InstallationAuth.token`: a scan
+# task fetches children on several threads, and each would otherwise
+# mint its own token. Module-level, not an attribute, so the provider
+# stays picklable into read tasks; mints are rare, so one lock for
+# every installation costs nothing.
+_TOKEN_LOCK = threading.Lock()
 
 
 def _b64url(data: bytes) -> str:
@@ -114,6 +122,10 @@ class InstallationAuth:
         return self._installation_id
 
     def token(self) -> str:
+        with _TOKEN_LOCK:
+            return self._token_locked()
+
+    def _token_locked(self) -> str:
         now = self.clock()
         if self._token is not None and self._expires_at > now + TOKEN_REFRESH_MARGIN_S:
             return self._token

@@ -22,6 +22,10 @@ Spark-first re-expression:
 - **Child pagination.** commits/reviews/comments follow their own
   `next` links; the reference fetches one page and silently truncates
   at GitHub's default 30 (§4.1 hazard, fixed).
+- **Concurrent child fetches.** The reference enriches PRs one after
+  another (main.py:274-377); here a page's PRs are enriched on up to
+  `CHILD_FETCH_WIDTH` threads inside its scan task, rows still emitted
+  in listing order.
 - **Rate budget at scale.** Each partition self-throttles on the
   response headers — primary limits (403 + remaining 0 → sleep to
   reset) AND secondary/abuse limits (403/429 with `Retry-After` →
@@ -49,7 +53,8 @@ import time
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -63,6 +68,11 @@ from ..etl.transform import RAW_PR_SCHEMA
 DEFAULT_API_URL = "https://api.github.com"
 USER_AGENT = "github-etl-spark/0.1"
 MAX_TRANSIENT_RETRIES = 4
+# PRs of one page (or one stream batch) whose children are fetched at
+# once. GitHub's secondary limit is 100 concurrent requests per token,
+# so running scan tasks × this width must stay under it; 8 measured no
+# faster than 4 against the seeded mock API.
+CHILD_FETCH_WIDTH = 4
 
 # Driver-side token-bucket servers, keyed by (rate, bind) and REUSED
 # across reader constructions — one token means one budget, and reuse
@@ -321,12 +331,37 @@ class GithubPullsReader(DataSourceReader):
         c = self.client_for(partition.repo)
         params = {**self._list_params(), "page": partition.page}
         prs, _ = c.get(f"/repos/{partition.repo}/pulls", params)
-        for pr in prs:
-            number = pr.get("number")
-            if number is None:
-                continue  # F3: un-enrichable row (reference hazard main.py:228-230)
-            commits, reviews, comments = self.children(partition.repo, number)
-            yield self._to_row(pr, commits, reviews, comments)
+        return self.enrich(partition.repo, prs)
+
+    def enrich(self, repo: str, prs: Iterable[dict]) -> Iterator[tuple]:
+        """RAW_PR_SCHEMA rows of ``prs`` in listing order, each PR's
+        `children` fetched on a pool of `CHILD_FETCH_WIDTH` threads.
+
+        A failing fetch cancels the fetches not yet started. The pool
+        starts fetches in listing order, so those all come after the
+        failing PR, and the iteration raises the failure when it
+        reaches that PR. Retries, budget permits and the 404 degrade
+        live in `get`/`children`, so they apply per request as in a
+        serial walk."""
+        # F3: un-enrichable rows dropped (reference hazard main.py:228-230).
+        prs = [pr for pr in prs if pr.get("number") is not None]
+        if not prs:
+            return
+        pool = ThreadPoolExecutor(max_workers=min(CHILD_FETCH_WIDTH, len(prs)))
+        try:
+            futures = [pool.submit(self.children, repo, pr["number"]) for pr in prs]
+
+            def cancel_rest(done) -> None:
+                if not done.cancelled() and done.exception() is not None:
+                    for f in futures:
+                        f.cancel()
+
+            for f in futures:
+                f.add_done_callback(cancel_rest)
+            for pr, f in zip(prs, futures):
+                yield self._to_row(pr, *f.result())
+        finally:
+            pool.shutdown(wait=True, cancel_futures=True)
 
     def children(self, repo: str, number: int) -> tuple[list, list, list]:
         """Fetch (commits, reviews, comments) for one PR, with the F1/F2
@@ -517,18 +552,13 @@ class GithubStreamReader(SimpleDataSourceStreamReader):
         # iter() over a materialized list: the prefetcher calls next()
         # (so it needs a real iterator) and caches the consumed rows
         # driver-side (so every row must be picklable — plain tuples).
-        return iter(list(self._enrich(prs))), {"last_number": max_seen}
+        return iter(list(self.batch.enrich(self.repo, prs))), {"last_number": max_seen}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         prs = self._list_newer_than(
             int(start.get("last_number", 0)), int(end.get("last_number", 0))
         )
-        return iter(list(self._enrich(prs)))
-
-    def _enrich(self, prs):
-        for pr in prs:
-            commits, reviews, comments = self.batch.children(self.repo, pr["number"])
-            yield GithubPullsReader._to_row(pr, commits, reviews, comments)
+        return iter(list(self.batch.enrich(self.repo, prs)))
 
 
 class GithubDataSource(DataSource):

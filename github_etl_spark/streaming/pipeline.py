@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..etl.transform import RAW_PR_SCHEMA, transform
-from ..session import persisted, run_concurrently
+from ..session import eager_checkpoint, persisted, release, run_concurrently
 from ..sinks.snapshot import (
     PARTITION_COLS,
     SnapshotSink,
@@ -61,17 +61,22 @@ def run_batch(
     snapshot already exists unless `force` — with dynamic partition
     overwrite the skip is an optimization, not a correctness need.
 
-    Concurrency: the repos' chains (skip probe → API scan → persist +
-    count → transform → `SnapshotSink.load` → unpersist) are
+    Concurrency: the repos' chains (skip probe → API scan → eager
+    checkpoint → transform → `SnapshotSink.load` → release) are
     independent, so they run through `session.run_concurrently`, at
     most ``sc.defaultParallelism`` at a time. At this scale each chain
-    is a handful of small fixed-cost jobs, and overlapping them keeps
-    the task slots busy where the reference's serial loop idles them.
-    The API concurrency bound is unchanged: page and child fetches run
-    inside scan tasks, so at most one scan task per task slot is in
-    flight however many chains run — the same bound one multi-page
-    repo's page-parallel scan already has — plus each running chain's
-    one first-page probe when its scan is planned on the driver.
+    is a handful of small fixed-cost jobs (five for a repo that is
+    not skipped: the checkpoint and the four table writes), and
+    overlapping them keeps the task slots busy where the reference's
+    serial loop idles them.
+
+    API concurrency: page and child fetches run inside scan tasks,
+    each with up to `sources.github.CHILD_FETCH_WIDTH` requests in
+    flight, so at most task slots × that width requests run however
+    many chains run — plus each running chain's one first-page probe
+    when its scan is planned on the driver. GitHub documents a
+    secondary limit of 100 concurrent requests, so keep slots × width
+    under it; ``requests_per_hour`` still governs the rate.
 
     Failure semantics: every repo's chain runs to the end even if
     another fails, and then the first failure in ``repos`` order is
@@ -99,13 +104,17 @@ def run_batch(
         )
         if token:
             reader = reader.option("token", token)
-        # One API scan feeds all four tables: without the persist, each
-        # table's take(1) + write re-executes the whole custom-source
-        # read (~8 scans), racing upstream changes into inconsistent
-        # tables and multiplying the rate-limit spend.
-        with persisted(reader.load()) as prs:
-            prs.count()  # materialize the scan once
+        # One API scan feeds all four tables: without the checkpoint,
+        # each table's write re-executes the whole custom-source read,
+        # racing upstream changes into inconsistent tables and
+        # multiplying the rate-limit spend. One job materializes it,
+        # and with a session checkpoint dir it is reliable, so a lost
+        # executor never re-calls the API.
+        prs = eager_checkpoint(reader.load())
+        try:
             sink.load(transform(prs, repo), repo, snapshot_date)
+        finally:
+            release(prs)
 
     run_concurrently(
         [functools.partial(chain, repo) for repo in repos],

@@ -9,6 +9,12 @@ rate-limit headers, and scriptable fault injection:
 - first request to commit detail sha "pr3-c0" → one 500 before
   succeeding.
 
+`MockGithub(delay_s=...)` holds every request that long before
+answering, `peak_inflight` is the most requests it has had in flight
+at once — together they show whether a client's requests overlap, and
+by how much — and `served` lists every requested path in arrival
+order.
+
 Dataset (seedless, closed-form): N_PRS PRs; PR i has 2 commits × 2
 files, reviews on odd i (one APPROVED, one COMMENTED), comments
 referencing the first review id (or an unmatched id on even i).
@@ -102,9 +108,30 @@ class _Handler(BaseHTTPRequestHandler):
     gone_prs: set[int] = set()
     # Commit shas whose detail endpoint 404s (gc'd after force-push).
     gone_shas: set[str] = set()
+    # PR numbers whose commit listing answers 403 (no rate-limit or
+    # Retry-After header, so the client does not retry).
+    forbidden_prs: set[int] = set()
+    served: list[str] = []
+    # Seconds every request is held before it is answered.
+    delay_s = 0.0
+    inflight = 0
+    peak_inflight = 0
 
     def log_message(self, *args):  # quiet
         pass
+
+    def do_GET(self):
+        with _Handler.fault_lock:
+            _Handler.inflight += 1
+            _Handler.served.append(urlparse(self.path).path)
+            _Handler.peak_inflight = max(_Handler.peak_inflight, _Handler.inflight)
+        try:
+            if _Handler.delay_s:
+                time.sleep(_Handler.delay_s)
+            self._route()
+        finally:
+            with _Handler.fault_lock:
+                _Handler.inflight -= 1
 
     def _send(self, obj, status=200, extra_headers=None):
         body = json.dumps(obj).encode()
@@ -124,7 +151,7 @@ class _Handler(BaseHTTPRequestHandler):
                 return True
         return False
 
-    def do_GET(self):
+    def _route(self):
         parsed = urlparse(self.path)
         q = {k: v[0] for k, v in parse_qs(parsed.query).items()}
         parts = parsed.path.strip("/").split("/")
@@ -138,6 +165,8 @@ class _Handler(BaseHTTPRequestHandler):
                 n = int(parts[4])
                 if n in _Handler.gone_prs:  # vanished PR: children 404
                     return self._send({"message": "Not Found"}, status=404)
+                if n in _Handler.forbidden_prs:
+                    return self._send({"message": "Forbidden"}, status=403)
                 return self._send(_commit_list(n))
             if sub == "pulls" and len(parts) == 6 and parts[5] == "reviews":
                 n = int(parts[4])
@@ -191,7 +220,19 @@ class _Handler(BaseHTTPRequestHandler):
 
 
 class MockGithub:
-    """Context manager: serves on an ephemeral localhost port."""
+    """Context manager: serves on an ephemeral localhost port, holding
+    each request ``delay_s`` seconds before it answers."""
+
+    def __init__(self, delay_s: float = 0.0):
+        self.delay_s = delay_s
+
+    @property
+    def peak_inflight(self) -> int:
+        return _Handler.peak_inflight
+
+    @property
+    def served(self) -> list[str]:
+        return list(_Handler.served)
 
     def add_pr(self, number: int) -> None:
         _Handler.extra_prs.append(number)
@@ -202,11 +243,19 @@ class MockGithub:
     def mark_sha_gone(self, sha: str) -> None:
         _Handler.gone_shas.add(sha)
 
+    def mark_forbidden(self, number: int) -> None:
+        _Handler.forbidden_prs.add(number)
+
     def __enter__(self):
         _Handler.faults = {}
         _Handler.extra_prs = []
         _Handler.gone_prs = set()
         _Handler.gone_shas = set()
+        _Handler.forbidden_prs = set()
+        _Handler.served = []
+        _Handler.delay_s = self.delay_s
+        _Handler.inflight = 0
+        _Handler.peak_inflight = 0
         self.server = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
         self.thread = threading.Thread(target=self.server.serve_forever, daemon=True)
         self.thread.start()

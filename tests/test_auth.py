@@ -115,3 +115,42 @@ def test_headers_shape(keypair):
     api = _FakeApi()
     auth, _ = _auth(api, pem, 1768482000 - 3600)
     assert auth.headers() == {"Authorization": "Bearer tok-1"}
+
+
+def test_concurrent_token_calls_mint_once(keypair):
+    """Threads fetching children in one task share the provider: while
+    one mints, the others wait for its token instead of minting their
+    own."""
+    import sys
+    import threading
+    import time
+
+    _, pem = keypair
+    api = _FakeApi()
+
+    def slow_post(url, jwt_token):
+        time.sleep(0.2)
+        return api.post_json(url, jwt_token)
+
+    auth, _ = _auth(api, pem, 1768482000 - 3600)
+    auth.http_post_json = slow_post
+    start = threading.Barrier(8)
+    got = []
+
+    def call():
+        start.wait()
+        got.append(auth.token())
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == ["tok-1"] * 8
+    assert (api.gets, api.posts) == (1, 1)

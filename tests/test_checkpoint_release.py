@@ -1,4 +1,5 @@
-"""Iterative operators free the checkpoints they are done with.
+"""Iterative operators and the snapshot job free the checkpoints they
+are done with.
 
 ``DataFrame.unpersist()`` does nothing for an eager checkpoint: the
 CacheManager holds no entry for it, so its blocks stay registered in
@@ -17,6 +18,8 @@ from github_etl_spark.operators.graph import connected_components, pagerank_fixe
 from github_etl_spark.operators.kmeans import kmeans_minibatch_merge
 from github_etl_spark.operators.pipeline import bpe_learn_merges
 from github_etl_spark.operators.wordpiece import wordpiece_learn
+from github_etl_spark.streaming import pipeline
+from tests.mock_github_server import MockGithub
 
 
 def _persistent_rdds(spark) -> set[int]:
@@ -70,3 +73,40 @@ def test_checkpoints_released(spark, run, reads):
     assert run(spark)
     left = len(_persistent_rdds(spark) - before)
     assert left <= reads, f"{left} persistent RDDs left, the result reads {reads}"
+
+
+@pytest.mark.parametrize(
+    "repos",
+    [["acme/widgets"], ["acme", "acme/widgets"]],
+    ids=["lands", "failing_repo"],
+)
+def test_run_batch_releases_its_scans(spark, tmp_path, repos):
+    """``run_batch`` frees every repo's checkpointed scan once its load
+    has run, also when another repo's chain fails (``acme`` 404s when
+    its scan is planned)."""
+    before = _persistent_rdds(spark)
+    with MockGithub() as mock:
+        run = lambda: pipeline.run_batch(  # noqa: E731
+            spark, repos, mock.url, str(tmp_path / "wh"), "2026-01-15", per_page=3
+        )
+        if len(repos) > 1:
+            with pytest.raises(Exception, match="404"):
+                run()
+        else:
+            run()
+    assert not _persistent_rdds(spark) - before
+
+
+def test_run_batch_releases_the_scan_when_its_load_fails(spark, tmp_path, monkeypatch):
+    """A chain that fails after its scan is checkpointed still frees it."""
+
+    def broken_transform(prs, repo):
+        raise RuntimeError("transform failed")
+
+    monkeypatch.setattr(pipeline, "transform", broken_transform)
+    before = _persistent_rdds(spark)
+    with MockGithub() as mock, pytest.raises(RuntimeError, match="transform failed"):
+        pipeline.run_batch(
+            spark, ["acme/widgets"], mock.url, str(tmp_path / "wh"), "2026-01-15", per_page=3
+        )
+    assert not _persistent_rdds(spark) - before

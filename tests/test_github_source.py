@@ -13,6 +13,7 @@ import pytest
 
 from github_etl_spark.etl.transform import transform
 from github_etl_spark.sources.github import (
+    CHILD_FETCH_WIDTH,
     GithubClient,
     GithubHttpError,
     GithubPullsReader,
@@ -99,6 +100,57 @@ def test_reader_enrichment_wiring(mock_api):
     # comments: empty-body comment dropped (F2) → 1 of 2 survives.
     comments = pr3[9]
     assert len(comments) == 1 and comments[0][4] == 1003
+
+
+def test_concurrent_read_matches_serial_children():
+    """A page's PRs are enriched concurrently, but read() yields the
+    rows a serial children() walk builds, in listing order — with the
+    pr3-c0 500 retried inside read() and a vanished PR degraded."""
+    with MockGithub() as mock:
+        mock.mark_gone(4)
+        r = GithubPullsReader(
+            {"repo": "acme/widgets", "url": mock.url, "per_page": "100"}
+        )
+        [part] = r.partitions()
+        rows = list(r.read(part))
+        # read() got the one 500 and retried it.
+        assert mock.served.count("/repos/acme/widgets/commits/pr3-c0") == 2
+        prs, _ = r.client.get("/repos/acme/widgets/pulls", {**r._list_params(), "page": 1})
+        serial = [
+            GithubPullsReader._to_row(pr, *r.children("acme/widgets", pr["number"]))
+            for pr in prs
+        ]
+        assert rows == serial
+        assert [row[0] for row in rows] == list(range(1, N_PRS + 1))
+        assert rows[3][7] == [] and rows[2][7] != []
+
+
+def test_child_error_fails_read_and_cancels_the_page():
+    """A child error other than 404 fails read() with GithubHttpError,
+    and the fetches not yet started are cancelled: the last PR's
+    children are never requested."""
+    with MockGithub(delay_s=0.05) as mock:
+        mock.mark_forbidden(1)
+        r = GithubPullsReader(
+            {"repo": "acme/widgets", "url": mock.url, "per_page": "100"}
+        )
+        [part] = r.partitions()
+        with pytest.raises(GithubHttpError) as ei:
+            list(r.read(part))
+        assert ei.value.status == 403
+        assert not any(f"/{N_PRS}/" in p for p in mock.served)
+
+
+def test_child_fetches_overlap_within_width():
+    """Both sides of the API-concurrency contract of one scan task:
+    its child fetches overlap, and never exceed CHILD_FETCH_WIDTH."""
+    with MockGithub(delay_s=0.02) as mock:
+        r = GithubPullsReader(
+            {"repo": "acme/widgets", "url": mock.url, "per_page": "100"}
+        )
+        [part] = r.partitions()
+        assert len(list(r.read(part))) == N_PRS
+        assert 2 <= mock.peak_inflight <= CHILD_FETCH_WIDTH
 
 
 # ------------------------------------------------------------- DataFrame-level

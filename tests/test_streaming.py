@@ -208,6 +208,33 @@ def test_run_batch_failing_repo_still_lands_the_others(spark, tmp_path):
     assert cm.isEmpty(), "a failed run_batch left a persisted scan behind"
 
 
+def test_run_batch_lands_a_repo_in_five_jobs(spark, tmp_path):
+    """A repo's chain runs the scan's eager checkpoint and one job per
+    table write: no cache-fill and count jobs, no shuffle before a
+    write. A multi-page scan still lands one parquet file per
+    (repo, date) directory of each table."""
+    sc = spark.sparkContext
+    with MockGithub() as mock:
+        sc.setJobGroup("one-repo-run", "one repo")
+        try:
+            sink = run_batch(
+                spark, ["acme/widgets"], mock.url, str(tmp_path / "wh"), "2026-01-15",
+                per_page=3,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("one-repo-run")
+    assert 0 < len(jobs) <= 5, f"{len(jobs)} Spark jobs for one repo"
+    for t in SNAPSHOT_TABLES:
+        dirs = {}
+        for root, _dirs, files in os.walk(sink.path(t)):
+            n = sum(f.endswith(".parquet") for f in files)
+            if n:
+                dirs[os.path.relpath(root, sink.path(t))] = n
+        assert dirs == {"target_repository=acme%2Fwidgets/snapshot_date=2026-01-15": 1}, t
+
+
 def test_stream_landing_incremental(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
